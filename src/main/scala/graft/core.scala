@@ -96,39 +96,141 @@ object Tables {
   }
 }
 
-/** Staging discipline shared by the operators that persist a derived
-  * index under /tmp/graft_q (ANN codebooks/codes, inverted-index
-  * postings, BM25 postings): content-fingerprinted freshness
-  * ([[Tables.stagingKey]]), build-in-temp + swap publish, a recorded
-  * source per staged dir, and retention (vacuum) of dead dirs.
+/** Stage-once discipline for every derived artifact the engine persists
+  * under [[Staging.Base]]: ANN codebooks, inverted and BM25 postings,
+  * pair graphs, BPE models, MoR/OCC stores and streaming-sink
+  * checkpoints. Each artifact lives at `<Base>/<kind><dirKey>[_tag]`,
+  * where `dirKey` is the first source table's [[Tables.stagingKey]]
+  * path key, and carries a format marker `fmt|fp1|fp2…`: the caller's
+  * hand-bumped format string plus the content fingerprint of every
+  * source table. A root is served only while its marker matches
+  * exactly — a bumped `fmt` or a regenerated table fails closed into a
+  * rebuild, and so does a root with no marker at all (a build that
+  * died before its last step). The check is driver-side file metadata
+  * only: no Spark job and no lock on a warm hit.
   *
-  * Publish: builders write every part into a private temp dir and
-  * [[publish]] swaps it into the final path — a crashed build never
-  * leaves a half-written index at the served location, and the
-  * torn-read window shrinks from the whole training run to the swap
-  * itself. (True multi-writer atomicity would version the published
-  * dirs and flip a pointer; the sequential driver doesn't need it and
-  * retention keeps the simpler layout.)
+  * Entry points (same freshness check, same retention record):
+  *  - [[once]] builds into a private temp dir, writes the marker there
+  *    and swaps the finished tree into place ([[publish]]): a crashed
+  *    build never leaves a half-written index at the served location.
+  *  - [[inPlace]] clears the final root, builds there and writes the
+  *    marker last. It exists for artifacts that embed their own
+  *    absolute path and so cannot be moved once built — streaming
+  *    checkpoints and `_spark_metadata` logs, store manifests. Its
+  *    `onHit` runs on every warm call (a stream's no-op restart).
   *
-  * Retention: every published dir records its source dataset + table +
-  * content fingerprint. [[vacuum]] deletes dirs whose dataset is gone
-  * or whose fingerprint no longer matches the current files — the
-  * io_vacuum rule applied to the engine's own staging. Builders call
-  * it on every staging miss (cold builds are already paying a corpus
-  * pass; the vacuum walk is driver-side file metadata only).
+  * Lock: a miss takes a JVM monitor plus an exclusive `FileChannel`
+  * lock on one file under [[Base]], re-checks the marker, and only then
+  * vacuums, builds and publishes — one builder per artifact across
+  * threads and JVMs. The lock is re-entrant within a thread (the hybrid
+  * build stages the lexical and ANN indexes it reads).
+  *
+  * Retention: every published root records its source dataset + table +
+  * fingerprint. [[vacuum]] deletes roots of a registered kind whose
+  * dataset is gone or whose fingerprint no longer matches; it runs on
+  * every miss (cold builds already pay a corpus pass).
   */
 object Staging {
   val Base = "/tmp/graft_q"
-  /** Prefixes of content-fingerprinted stage-once dirs (the per-query
-    * tmp() scratch dirs have their own lifecycle and are not walked).
+  /** Prefixes of the stage-once dirs; both entry points refuse any
+    * other, so a new site cannot leak dirs [[vacuum]] never reaps.
     * private[graft]: the crypto-parity spec walks the same list. */
-  private[graft] val Kinds = Seq("ann_", "annb_", "annr_", "lex_", "index_", "mm_", "pairs_", "epairs_", "nbrs_", "ssink_", "rbdata_", "mordata_", "srestart_", "hyb_", "cpdata_", "pidata_", "occdata_", "bpe_", "gsink_")
+  private[graft] val Kinds = Seq("ann_", "annb_", "annr_", "lex_", "index_", "mm_", "pairs_",
+    "epairs_", "nbrs_", "ssink_", "rbdata_", "mordata_", "srestart_", "hyb_", "cpdata_",
+    "pidata_", "occdata_", "bpe_", "gsink_", "cardstore_", "gsnap_", "gsrc_", "txnsink_")
   private val SourceFile = "staging_source.txt"
+  private val FormatFile = "staging_format.txt"
+  private val LockFile = ".staging.lock"
 
-  /** Spec instrumentation: dirs deleted by the last vacuum. */
-  private[graft] val lastVacuumed = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** Per-query scratch dir, keyed on the dataset's basename: rewritten
+    * by every call, outside the stage-once lifecycle. */
+  def scratch(name: String, d: String): String =
+    s"$Base/${name}_${new java.io.File(d).getName}"
 
-  def tempBuildDir(): java.io.File = {
+  /** True iff `root` carries the format marker `fmt`. */
+  def isCurrent(root: String, fmt: String): Boolean = {
+    val marker = java.nio.file.Paths.get(root, FormatFile)
+    java.nio.file.Files.exists(marker) &&
+      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt
+  }
+
+  /** Write `root`'s format marker — last, once everything it vouches
+    * for is on disk. */
+  def mark(root: String, fmt: String): Unit = {
+    java.nio.file.Files.write(java.nio.file.Paths.get(root, FormatFile), fmt.getBytes("UTF-8"))
+    ()
+  }
+
+  /** Serve `<kind><dirKey>[_tag]` if current, else build it in a temp
+    * dir via `build` and publish it. `tables` are the source tables
+    * (first = path key + retention record); returns the root. */
+  def once(kind: String, d: String, tables: Seq[String], fmt: String, tag: String = "")
+      (build: java.io.File => Unit): String =
+    stage(kind, d, tables, fmt, tag) { (root, marker) =>
+      val tmp = tempBuildDir()
+      build(tmp)
+      mark(tmp.getPath, marker)
+      publish(tmp, root)
+    }._1
+
+  /** Serve `<kind><dirKey>` if current (running `onHit` on it), else
+    * clear it, `build` at the final path and write the marker last. */
+  def inPlace(kind: String, d: String, tables: Seq[String], fmt: String,
+      onHit: String => Unit = _ => ())(build: String => Unit): String = {
+    val (root, built) = stage(kind, d, tables, fmt, tag = "") { (root, marker) =>
+      rmTree(new java.io.File(root))
+      new java.io.File(root).mkdirs()
+      build(root)
+      mark(root, marker)
+    }
+    if (!built) onHit(root)
+    root
+  }
+
+  /** The shared decision: (root, whether this call built it). */
+  private def stage(kind: String, d: String, tables: Seq[String], fmt: String, tag: String)
+      (build: (String, String) => Unit): (String, Boolean) = {
+    require(Kinds.contains(kind), s"unregistered staging kind '$kind': add it to Staging.Kinds")
+    val keys = tables.map(Tables.stagingKey(d, _))
+    val root = s"$Base/$kind${keys.head._1}${if (tag.isEmpty) "" else s"_$tag"}"
+    val marker = (fmt +: keys.map(_._2)).mkString("|")
+    def served(): Boolean = isCurrent(root, marker) && {
+      // backfill the record of roots staged before retention existed
+      if (!new java.io.File(root, SourceFile).exists()) recordSource(root, d, tables.head, keys.head._2)
+      true
+    }
+    if (served()) (root, false)
+    else exclusive {
+      if (served()) (root, false)
+      else {
+        vacuum()
+        build(root, marker)
+        recordSource(root, d, tables.head, keys.head._2)
+        (root, true)
+      }
+    }
+  }
+
+  private var lockDepth = 0
+  private var fileLock: java.nio.channels.FileLock = _
+
+  /** Run `body` holding the JVM monitor and the cross-JVM file lock
+    * (re-entrant: nested builds share the outermost acquisition). */
+  private def exclusive[T](body: => T): T = synchronized {
+    if (lockDepth == 0) {
+      new java.io.File(Base).mkdirs()
+      fileLock = java.nio.channels.FileChannel.open(java.nio.file.Paths.get(Base, LockFile),
+        java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE).lock()
+    }
+    lockDepth += 1
+    try body
+    finally {
+      lockDepth -= 1
+      if (lockDepth == 0) { fileLock.channel.close(); fileLock = null }
+    }
+  }
+
+  private def tempBuildDir(): java.io.File = {
     val f = new java.io.File(Base, s".build_${java.util.UUID.randomUUID}")
     f.mkdirs()
     f
@@ -139,19 +241,18 @@ object Staging {
     f.delete(); ()
   }
 
-  /** Swap a fully-built temp dir into the final root (replacing any
-    * stale version), then record its source for retention. */
-  def publish(temp: java.io.File, root: String,
-      d: String, table: String, fp: String): Unit = {
+  /** Swap a fully-built temp dir into the final root, replacing any
+    * stale version. */
+  private def publish(temp: java.io.File, root: String): Unit = {
     val dst = new java.io.File(root)
     if (dst.exists()) rmTree(dst)
     java.nio.file.Files.move(temp.toPath, dst.toPath)
-    recordSource(root, d, table, fp)
+    ()
   }
 
-  /** Record (or backfill, on a warm hit from an older layout) where a
-    * staged dir came from — what vacuum() needs to decide liveness. */
-  def recordSource(root: String, d: String, table: String, fp: String): Unit = {
+  /** Record where a staged dir came from — what vacuum() needs to
+    * decide liveness. */
+  private[graft] def recordSource(root: String, d: String, table: String, fp: String): Unit = {
     val abs = new java.io.File(d).getAbsolutePath
     java.nio.file.Files.write(
       java.nio.file.Paths.get(root, SourceFile),
@@ -159,12 +260,12 @@ object Staging {
     ()
   }
 
-  /** Delete staged index dirs that can never be served again: their
-    * recorded dataset no longer exists, or its current content
-    * fingerprint no longer matches the one staged. Dirs without a
-    * source record (older layouts, foreign dirs) are left alone.
+  /** Delete staged dirs that can never be served again: their recorded
+    * dataset no longer exists, or its current content fingerprint no
+    * longer matches the one staged. Dirs without a source record (older
+    * layouts, foreign dirs, half-built in-place roots) are left alone.
     * Also reaps crashed temp builds older than an hour. */
-  def vacuum(): Int = {
+  def vacuum(): Int = exclusive {
     val dirs = Option(new java.io.File(Base).listFiles()).getOrElse(Array.empty)
     var removed = 0
     dirs.foreach { dir =>
@@ -187,7 +288,6 @@ object Staging {
         }
       }
     }
-    lastVacuumed.set(removed)
     removed
   }
 }

@@ -438,34 +438,20 @@ object Corpus {
     * and a regenerated dataset at the same path restages instead of
     * silently serving a stale index. */
   private[graft] def indexRoot(s: SparkSession, d: String): String = {
-    val (dirKey, fp) = Tables.stagingKey(d, "documents")
-    val root = s"/tmp/graft_q/index_$dirKey"
-    val marker = java.nio.file.Paths.get(root, "staging_format.txt")
-    val fmt = s"v2-postings-df|$fp"
-    if (java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt) {
-      if (!new java.io.File(root, "staging_source.txt").exists())
-        Staging.recordSource(root, d, "documents", fp)
-      return root
+    Staging.once("index_", d, Seq("documents"), "v2-postings-df") { tmp =>
+      val docs = Tables.documents(s, d)
+      // Churn-insert ids are doc_id + InsertOffset; a corpus whose ids
+      // reach the offset would alias an insert onto an existing doc and
+      // split one doc_id's postings across two sources — fail loudly at
+      // staging time instead (the oracle replays the same static offset).
+      val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
+      require(maxId + InsertOffset > 0 && maxId < InsertOffset,
+        s"corpus max doc_id $maxId must stay below the churn insert offset $InsertOffset")
+      val p = postingsOf(docs)
+      p.write.mode("overwrite").parquet(s"$tmp/postings")
+      p.groupBy(col("tok")).agg(count(lit(1)).as("df"))
+        .write.mode("overwrite").parquet(s"$tmp/df")
     }
-    Staging.vacuum()
-    val docs = Tables.documents(s, d)
-    // Churn-insert ids are doc_id + InsertOffset; a corpus whose ids
-    // reach the offset would alias an insert onto an existing doc and
-    // split one doc_id's postings across two sources — fail loudly at
-    // staging time instead (the oracle replays the same static offset).
-    val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
-    require(maxId + InsertOffset > 0 && maxId < InsertOffset,
-      s"corpus max doc_id $maxId must stay below the churn insert offset $InsertOffset")
-    val p = postingsOf(docs)
-    val tmp = Staging.tempBuildDir()
-    p.write.mode("overwrite").parquet(s"$tmp/postings")
-    p.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-      .write.mode("overwrite").parquet(s"$tmp/df")
-    java.nio.file.Files.write(tmp.toPath.resolve("staging_format.txt"),
-      fmt.getBytes("UTF-8"))
-    Staging.publish(tmp, root, d, "documents", fp)
-    root
   }
 
   private def indexIncremental(s: SparkSession, d: String): DataFrame = {
@@ -625,26 +611,12 @@ object Corpus {
     * every encode job loads it. Vocab-sized (31 words here, millions at
     * web scale) — dictionary-sized against a 100 TB corpus either way. */
   private[graft] def bpeModelRoot(s: SparkSession, d: String): String = {
-    val (dirKey, fp) = Tables.stagingKey(d, "documents")
-    val root = s"/tmp/graft_q/bpe_$dirKey"
-    val marker = java.nio.file.Paths.get(root, "staging_format.txt")
-    val fmt = s"v1-bpe-merges+state|$fp"
-    if (java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt) {
-      if (!new java.io.File(root, "staging_source.txt").exists())
-        Staging.recordSource(root, d, "documents", fp)
-      return root
+    Staging.once("bpe_", d, Seq("documents"), "v1-bpe-merges+state") { tmp =>
+      bpeTrainRuns.incrementAndGet()
+      val (merges, state) = bpeTrainLoop(s, d)
+      merges.write.mode("overwrite").parquet(s"$tmp/merges")
+      state.write.mode("overwrite").parquet(s"$tmp/state")
     }
-    bpeTrainRuns.incrementAndGet()
-    Staging.vacuum()
-    val (merges, state) = bpeTrainLoop(s, d)
-    val tmp = Staging.tempBuildDir()
-    merges.write.mode("overwrite").parquet(s"$tmp/merges")
-    state.write.mode("overwrite").parquet(s"$tmp/state")
-    java.nio.file.Files.write(tmp.toPath.resolve("staging_format.txt"),
-      fmt.getBytes("UTF-8"))
-    Staging.publish(tmp, root, d, "documents", fp)
-    root
   }
 
   /** Staged-model accessors: (merge table, final per-word segmentation).

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Staging, Tables}
 import graft.OracleMath._
 import graft.crypto._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -15,14 +15,10 @@ import org.apache.spark.sql.functions._
   */
 object CryptoQueries {
 
-  /** Deterministic scratch dir per (query, sf) so re-runs overwrite. */
-  private def tmp(name: String, sfDir: String): String =
-    s"/tmp/graft_q/${name}_${new java.io.File(sfDir).getName}"
-
   // -- 1: plain parquet write→read round trip ------------------------------
   private def ioRoundtrip(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = tmp("io_parquet_roundtrip", d)
+    val out = Staging.scratch("io_parquet_roundtrip", d)
     Tables.lineitem(s, d)
       .select($"l_orderkey", $"l_linenumber", $"l_extendedprice", $"l_returnflag")
       .write.mode("overwrite").parquet(out)
@@ -71,7 +67,7 @@ object CryptoQueries {
   // -- 4: full encrypt→write→read→decrypt round trip -----------------------
   private def roundtripFull(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = tmp("crypto_roundtrip_full", d)
+    val out = Staging.scratch("crypto_roundtrip_full", d)
     val cfg = CryptoConfig("master-rt",
       Seq(ColumnPolicy("c_name", explicitKey = Some("0123456789abcdef")),
         ColumnPolicy("c_acctbal", explicitKey = Some("abcdef0123456789")),
@@ -93,7 +89,7 @@ object CryptoQueries {
   // -- 5: selective decrypt; unrequested columns stay [ENCRYPTED] ----------
   private def selectiveDecrypt(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = tmp("crypto_selective_decrypt", d)
+    val out = Staging.scratch("crypto_selective_decrypt", d)
     val cfg = CryptoConfig("master-sel",
       Seq(ColumnPolicy("c_name", explicitKey = Some("0123456789abcdef")),
         ColumnPolicy("c_mktsegment", explicitKey = Some("abcdef0123456789"))))
@@ -110,7 +106,7 @@ object CryptoQueries {
   // -- 6: KMS envelope encryption (wrapped DEKs in the manifest) -----------
   private def kmsEnvelope(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = tmp("crypto_kms_envelope", d)
+    val out = Staging.scratch("crypto_kms_envelope", d)
     val cfg = CryptoConfig("master-env",
       Seq(ColumnPolicy("s_name", kmsMasterKeyId = Some("mk-sup-name")),
         ColumnPolicy("s_acctbal", kmsMasterKeyId = Some("mk-sup-bal"))))
@@ -134,7 +130,7 @@ object CryptoQueries {
   // compare against the plain table.
   private def keyRotation(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = tmp("crypto_key_rotation", d)
+    val out = Staging.scratch("crypto_key_rotation", d)
     val cfg = CryptoConfig("master-rot-old",
       Seq(ColumnPolicy("s_name", kmsMasterKeyId = Some("mk-rot-name")),
         ColumnPolicy("s_acctbal", kmsMasterKeyId = Some("mk-rot-bal"))))
@@ -152,7 +148,7 @@ object CryptoQueries {
 
   // -- 7: distributed round-trip validation (anti-join, no collect) --------
   private def validate(s: SparkSession, d: String): DataFrame = {
-    val out = tmp("crypto_validate", d)
+    val out = Staging.scratch("crypto_validate", d)
     val cfg = CryptoConfig("master-val",
       Seq(ColumnPolicy("c_name", kmsMasterKeyId = Some("mk-val")),
         ColumnPolicy("c_acctbal", explicitKey = Some("0123456789abcdef"))))
@@ -207,7 +203,7 @@ object CryptoQueries {
   // -- 10: native Parquet Modular Encryption -------------------------------
   private def modularParquet(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = tmp("crypto_modular_parquet", d)
+    val out = Staging.scratch("crypto_modular_parquet", d)
     ModularEncryption.writeEncrypted(Tables.part(s, d), out,
       columnKeys = Map("mk-part-cols" -> Seq("p_name", "p_retailprice")),
       footerKeyId = "mk-part-footer")
@@ -231,7 +227,7 @@ object CryptoQueries {
 
   private def cryptoShred(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = tmp("crypto_shred", d)
+    val root = Staging.scratch("crypto_shred", d)
     TenantShred.stage(s, Tables.customer(s, d), "c_nationkey", "c_name", root)
     TenantShred.shred(s, root, ShreddedTenant)
     TenantShred.read(s, root, "c_name")
@@ -259,7 +255,7 @@ object CryptoQueries {
   // the wrong person's value.
   private def aadBinding(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = tmp("crypto_aad_binding", d)
+    val out = Staging.scratch("crypto_aad_binding", d)
     val key = "0123456789abcdef".getBytes("UTF-8")
     Tables.customer(s, d)
       .select($"c_custkey", $"c_nationkey",
@@ -291,7 +287,7 @@ object CryptoQueries {
   // fails the round — the gate can only pass by failing closed.
   private def footerTamper(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = tmp("crypto_footer_tamper", d)
+    val out = Staging.scratch("crypto_footer_tamper", d)
     val cfg = CryptoConfig("master-tamper",
       Seq(ColumnPolicy("c_name", kmsMasterKeyId = Some("mk-tamper")),
         ColumnPolicy("c_acctbal", explicitKey = Some("0123456789abcdef"))))
@@ -335,7 +331,7 @@ object CryptoQueries {
   // three resolution paths actually open the data.
   private def fallbackChain(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = tmp("crypto_fallback_chain", d)
+    val out = Staging.scratch("crypto_fallback_chain", d)
     val cfg = CryptoConfig("master-fb",
       Seq(ColumnPolicy("c_name", explicitKey = Some("0123456789abcdef")),
         ColumnPolicy("c_mktsegment", explicitKey = Some("tooshort!"),
@@ -374,7 +370,7 @@ object CryptoQueries {
   // value-checked against an oracle replaying the same sparsification.
   private def nullsRoundtrip(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = tmp("crypto_nulls_roundtrip", d)
+    val out = Staging.scratch("crypto_nulls_roundtrip", d)
     val sparse = Tables.customer(s, d)
       .withColumn("c_name",
         when($"c_custkey" % 5 === 0, lit(null)).otherwise($"c_name"))

@@ -601,24 +601,10 @@ object Dedup {
     * consumer's DuckDB oracle can keep replaying the pipeline from the
     * raw corpus. */
   private[graft] def pairsRoot(s: SparkSession, d: String): String = {
-    val (dirKey, fp) = Tables.stagingKey(d, "documents")
-    val root = s"/tmp/graft_q/pairs_$dirKey"
-    val marker = java.nio.file.Paths.get(root, "staging_format.txt")
-    val fmt = s"v1-minhash-pairs|$fp"
-    if (java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt) {
-      if (!new java.io.File(root, "staging_source.txt").exists())
-        graft.Staging.recordSource(root, d, "documents", fp)
-      return root
+    graft.Staging.once("pairs_", d, Seq("documents"), "v1-minhash-pairs") { tmp =>
+      pairStageRuns.incrementAndGet()
+      minhashPairs(s, d).write.mode("overwrite").parquet(s"$tmp/pairs")
     }
-    pairStageRuns.incrementAndGet()
-    graft.Staging.vacuum()
-    val tmp = graft.Staging.tempBuildDir()
-    minhashPairs(s, d).write.mode("overwrite").parquet(s"$tmp/pairs")
-    java.nio.file.Files.write(tmp.toPath.resolve("staging_format.txt"),
-      fmt.getBytes("UTF-8"))
-    graft.Staging.publish(tmp, root, d, "documents", fp)
-    root
   }
 
   /** The verified J ≥ 0.8 pair set served from the staged parquet —

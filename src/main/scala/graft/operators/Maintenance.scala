@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Staging, Tables}
 import graft.OracleMath._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,9 +11,6 @@ import org.apache.spark.sql.functions._
   * oracle-checkable (the maintenance must not change the answers).
   */
 object Maintenance {
-
-  private def tmp(name: String, sfDir: String): String =
-    s"/tmp/graft_q/${name}_${new java.io.File(sfDir).getName}"
 
   /** Engine-exact 2dp rounding of the snapshot rewrite's 1.1× price:
     * floor(x·100 + 0.5) / 100 on BOTH engines. `round(x, 2)` is NOT
@@ -40,7 +37,7 @@ object Maintenance {
   // arithmetic itself.
   private def incrementalAgg(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = tmp("q_incremental_agg", d)
+    val out = Staging.scratch("q_incremental_agg", d)
     val ev = Tables.events(s, d)
       .select($"event_type", $"value", $"event_id")
     val dec = $"value".cast("decimal(18,6)")
@@ -84,7 +81,7 @@ object Maintenance {
   // delta-proportional rows against a key-partitioned base.
   private def incrementalJoin(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = tmp("q_incremental_join", d)
+    val out = Staging.scratch("q_incremental_join", d)
     val cents = floor($"l_extendedprice" * (lit(1.0) - $"l_discount") * 100
       + 0.5).cast("long")
     val o = Tables.orders(s, d).select($"o_orderkey", $"o_orderpriority",
@@ -189,29 +186,18 @@ object Maintenance {
     * itself runs per call. */
   private def fragData(s: SparkSession, d: String): String = {
     import s.implicits._
-    val (dirKey, fp) = Tables.stagingKey(d, "lineitem")
-    val root = s"/tmp/graft_q/cpdata_$dirKey"
-    val marker = java.nio.file.Paths.get(root, "staging_format.txt")
-    val fmt = s"v1-compaction-frag|$fp"
-    if (java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt)
-      return root
-    graft.Staging.vacuum()
-    val tmpDir = graft.Staging.tempBuildDir()
-    Tables.lineitem(s, d)
-      .select($"l_orderkey", $"l_returnflag", $"l_extendedprice")
-      .repartition(64)
-      .write.mode("overwrite").parquet(s"$tmpDir/frag")
-    java.nio.file.Files.write(tmpDir.toPath.resolve("staging_format.txt"),
-      fmt.getBytes("UTF-8"))
-    graft.Staging.publish(tmpDir, root, d, "lineitem", fp)
-    root
+    Staging.once("cpdata_", d, Seq("lineitem"), "v1-compaction-frag") { tmpDir =>
+        Tables.lineitem(s, d)
+          .select($"l_orderkey", $"l_returnflag", $"l_extendedprice")
+          .repartition(64)
+          .write.mode("overwrite").parquet(s"$tmpDir/frag")
+    }
   }
 
   /** Fragmented + compacted layouts for the spec; returns (frag, compacted). */
   def compactionDirs(s: SparkSession, d: String): (String, String) = {
     val frag = s"${fragData(s, d)}/frag"
-    val compacted = tmp("io_compaction_out", d)
+    val compacted = Staging.scratch("io_compaction_out", d)
     compact(s, frag, compacted, files = 4, sortKey = "l_orderkey")
     (frag, compacted)
   }
@@ -634,10 +620,7 @@ object Maintenance {
   /** True iff the layout was staged by THIS code version, every
     * manifest exists, and every path each manifest lists does. */
   private def snapshotIntact(root: String): Boolean = {
-    val marker = java.nio.file.Paths.get(root, "staging_format.txt")
-    if (!java.nio.file.Files.exists(marker) ||
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") != SnapshotFormat)
-      return false
+    if (!Staging.isCurrent(root, SnapshotFormat)) return false
     val vs = manifestVersions(root)
     vs.length >= 2 && vs.forall(v =>
       manifestPaths(root, v).forall(p => new java.io.File(p).exists))
@@ -645,7 +628,7 @@ object Maintenance {
 
   def snapshotRoot(s: SparkSession, d: String): String = {
     import s.implicits._
-    val root = tmp("snapshots", d)
+    val root = Staging.scratch("snapshots", d)
     // staging is deterministic — reuse an intact layout instead of
     // rewriting the whole table on every call (three queries × N bench
     // reps would each pay the full staging write inside the measured
@@ -665,9 +648,7 @@ object Maintenance {
     manifest(1, (0 to 3).map(g => s"$root/base/g=$g"))
     manifest(2, s"$root/rewrite_g0_v2" +: (1 to 3).map(g => s"$root/base/g=$g"))
     // marker LAST: a crash mid-staging leaves no marker → restage
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root, "staging_format.txt"),
-      SnapshotFormat.getBytes("UTF-8"))
+    Staging.mark(root, SnapshotFormat)
     root
   }
   /** Time-travel read: the snapshot a version's manifest pins. */
@@ -926,47 +907,36 @@ object Maintenance {
   // the property that makes OCC viable on a 100 TB store.
   def occDataRoot(s: SparkSession, d: String): String = {
     import s.implicits._
-    val (dirKey, fp) = Tables.stagingKey(d, "orders")
-    val root = s"/tmp/graft_q/occdata_$dirKey"
-    val marker = java.nio.file.Paths.get(root, "staging_format.txt")
     // v2: the staged root also records the groups' file schema (r18)
-    val fmt = s"v2-occ|$fp"
-    if (java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt)
-      return root
-    graft.Staging.vacuum()
-    val tmpDir = graft.Staging.tempBuildDir()
-    Tables.orders(s, d).withColumn("g", ($"o_orderkey" % 4).cast("int"))
-      .write.mode("overwrite").partitionBy("g").parquet(s"$tmpDir/base")
-    def rewrite(g: Int, mod: Int, out: String): Unit =
-      s.read.parquet(s"$tmpDir/base/g=$g")
-        .withColumn("o_totalprice",
-          when($"o_orderkey" % 40 === mod, bumpedPrice($"o_totalprice"))
-            .otherwise($"o_totalprice"))
-        .write.mode("overwrite").parquet(s"$tmpDir/$out")
-    rewrite(0, 0, "rw_a_g0")  // writer A: g0, keys ≡ 0 (mod 40)
-    rewrite(0, 20, "rw_b_g0") // writer B: the SAME group — the conflict
-    rewrite(2, 2, "rw_c_g2")  // writer C: disjoint g2, keys ≡ 2 (mod 40)
-    // record the groups' FILE schema once at staging time (r18): every
-    // occRun seeds its store's schema log from this, so no store
-    // resolve ever runs the read.parquet(...).schema footer-inference
-    // job again (io_dsv2_write alone resolved ~14 times per
-    // invocation, each a scheduler job). One footer read here, at the
-    // content-keyed staging build, replaces all of them — and it IS
-    // the inferred schema, nullability included, so resolution is
-    // bit-identical to the fallback path it short-circuits.
-    java.nio.file.Files.write(tmpDir.toPath.resolve("schema.json"),
-      s.read.parquet(s"$tmpDir/base/g=0").schema.json.getBytes("UTF-8"))
-    java.nio.file.Files.write(tmpDir.toPath.resolve("staging_format.txt"),
-      fmt.getBytes("UTF-8"))
-    graft.Staging.publish(tmpDir, root, d, "orders", fp)
-    root
+    Staging.once("occdata_", d, Seq("orders"), "v2-occ") { tmpDir =>
+      Tables.orders(s, d).withColumn("g", ($"o_orderkey" % 4).cast("int"))
+        .write.mode("overwrite").partitionBy("g").parquet(s"$tmpDir/base")
+      def rewrite(g: Int, mod: Int, out: String): Unit =
+        s.read.parquet(s"$tmpDir/base/g=$g")
+          .withColumn("o_totalprice",
+            when($"o_orderkey" % 40 === mod, bumpedPrice($"o_totalprice"))
+              .otherwise($"o_totalprice"))
+          .write.mode("overwrite").parquet(s"$tmpDir/$out")
+      rewrite(0, 0, "rw_a_g0")  // writer A: g0, keys ≡ 0 (mod 40)
+      rewrite(0, 20, "rw_b_g0") // writer B: the SAME group — the conflict
+      rewrite(2, 2, "rw_c_g2")  // writer C: disjoint g2, keys ≡ 2 (mod 40)
+      // record the groups' FILE schema once at staging time (r18): every
+      // occRun seeds its store's schema log from this, so no store
+      // resolve ever runs the read.parquet(...).schema footer-inference
+      // job again (io_dsv2_write alone resolved ~14 times per
+      // invocation, each a scheduler job). One footer read here, at the
+      // content-keyed staging build, replaces all of them — and it IS
+      // the inferred schema, nullability included, so resolution is
+      // bit-identical to the fallback path it short-circuits.
+      java.nio.file.Files.write(tmpDir.toPath.resolve("schema.json"),
+        s.read.parquet(s"$tmpDir/base/g=0").schema.json.getBytes("UTF-8"))
+    }
   }
   /** Replays the 3-writer race in a fresh run dir; returns it (for the
     * spec's post-mortem of the manifest files the race left behind). */
   def occRun(s: SparkSession, d: String, name: String = "io_occ_run"): String = {
     val data = occDataRoot(s, d)
-    val run = tmp(name, d)
+    val run = Staging.scratch(name, d)
     graft.Staging.rmTree(new java.io.File(run))
     new java.io.File(run).mkdirs()
     java.nio.file.Files.write(java.nio.file.Paths.get(run, "manifest_v1.txt"),
@@ -1085,7 +1055,7 @@ object Maintenance {
     import s.implicits._
     val run = occRun(s, d, name = "io_sql_insert_run")
     s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", "/tmp/graft_q")
+    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
     val name = new java.io.File(run).getName
     val cols = s.read.format("graft").option("versionAsOf", 1).load(run)
       .columns.toSeq
@@ -1135,7 +1105,7 @@ object Maintenance {
   private def qEncryptedManifest(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val data = occDataRoot(s, d)
-    val run = tmp("io_enc_manifest", d)
+    val run = Staging.scratch("io_enc_manifest", d)
     graft.Staging.rmTree(new java.io.File(run))
     new java.io.File(run).mkdirs()
     java.nio.file.Files.write(java.nio.file.Paths.get(run, "manifest_v1.txt"),
@@ -1158,7 +1128,7 @@ object Maintenance {
         .select(lit(stage).as("stage"), $"n_rows", $"sum_price",
           lit(encAtRest).as("encrypted_at_rest"), lit(true).as("fail_closed"))
     // scratch clone for the two attacks (the live store must stay intact)
-    val bad = tmp("io_enc_manifest_bad", d)
+    val bad = Staging.scratch("io_enc_manifest_bad", d)
     graft.Staging.rmTree(new java.io.File(bad))
     new java.io.File(bad).mkdirs()
     for (f <- new java.io.File(run).listFiles() if f.isFile)
@@ -1221,7 +1191,7 @@ object Maintenance {
   // flipped ciphertext byte.
   private def qEncryptedData(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = tmp("io_enc_data", d)
+    val root = Staging.scratch("io_enc_data", d)
     graft.Staging.rmTree(new java.io.File(root))
     val orders = Tables.orders(s, d)
     createStore(root, orders.schema)
@@ -1229,7 +1199,7 @@ object Maintenance {
     orders.filter($"o_orderkey" % 20 === 7)
       .write.format("graft").mode("append").save(root) // v2: encrypted group
     s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", "/tmp/graft_q")
+    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
     val name = new java.io.File(root).getName
     s.sql(s"DELETE FROM graft.`$name` WHERE o_orderpriority = '1-URGENT'") // v3
     // ciphertext at rest: every parquet artifact carries the PARE magic
@@ -1246,7 +1216,7 @@ object Maintenance {
     val hasDv = manifestPaths(root, 3).exists(_.startsWith("dv:"))
     rotateStoreKek(root, "store-dk-2") // O(1); data files pin their key id
     // fail-closure: flip one ciphertext byte in a scratch clone
-    val bad = tmp("io_enc_data_bad", d)
+    val bad = Staging.scratch("io_enc_data_bad", d)
     graft.Staging.rmTree(new java.io.File(bad))
     def copyTree(src: java.io.File, dst: java.io.File): Unit = {
       if (src.isDirectory) {
@@ -1594,7 +1564,7 @@ object Maintenance {
   private def qCompactStore(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val data = morData(s, d)
-    val root = tmp("io_compact_store", d)
+    val root = Staging.scratch("io_compact_store", d)
     graft.Staging.rmTree(new java.io.File(root))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
     java.nio.file.Files.write(
@@ -1669,7 +1639,7 @@ object Maintenance {
     import s.implicits._
     val data = morData(s, d)
     def freshStore(name: String): String = {
-      val root = tmp(name, d)
+      val root = Staging.scratch(name, d)
       graft.Staging.rmTree(new java.io.File(root))
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
       java.nio.file.Files.write(
@@ -1807,7 +1777,7 @@ object Maintenance {
     import s.implicits._
     val run = occRun(s, d, name = "io_sql_delete_run")
     s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", "/tmp/graft_q")
+    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
     val name = new java.io.File(run).getName
     s.sql(s"DELETE FROM graft.`$name` WHERE o_orderpriority = '1-URGENT'") // -> v2
     // the replayed DELETE finds every position already deleted: no-op
@@ -1847,7 +1817,7 @@ object Maintenance {
   // over- OR under-pruning bug fails the value compare itself.
   private def qPartitionedStore(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = tmp("io_partitioned_store", d)
+    val root = Staging.scratch("io_partitioned_store", d)
     graft.Staging.rmTree(new java.io.File(root))
     val orders = Tables.orders(s, d)
     createStore(root, orders.schema, Seq("o_orderpriority"))
@@ -1896,8 +1866,8 @@ object Maintenance {
   private def qSqlDdl(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", "/tmp/graft_q")
-    val root = tmp("io_sql_ddl", d)
+    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
+    val root = Staging.scratch("io_sql_ddl", d)
     graft.Staging.rmTree(new java.io.File(root))
     val name = new java.io.File(root).getName
     s.sql(s"""CREATE TABLE graft.`$name` (
@@ -1951,8 +1921,8 @@ object Maintenance {
   private def qSqlAlter(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", "/tmp/graft_q")
-    val root = tmp("io_sql_alter", d)
+    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
+    val root = Staging.scratch("io_sql_alter", d)
     graft.Staging.rmTree(new java.io.File(root))
     val name = new java.io.File(root).getName
     s.sql(s"""CREATE TABLE graft.`$name` (
@@ -2029,8 +1999,8 @@ object Maintenance {
   private def qSqlMaintenance(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", "/tmp/graft_q")
-    val root = tmp("io_sql_maintenance", d)
+    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
+    val root = Staging.scratch("io_sql_maintenance", d)
     graft.Staging.rmTree(new java.io.File(root))
     val name = new java.io.File(root).getName
     val orders = Tables.orders(s, d)
@@ -2114,7 +2084,7 @@ object Maintenance {
   // through the oracle — that no value moved.
   private def qBinPackStore(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = tmp("io_binpack_store", d)
+    val root = Staging.scratch("io_binpack_store", d)
     graft.Staging.rmTree(new java.io.File(root))
     val orders = Tables.orders(s, d)
       .select($"o_orderkey", $"o_orderpriority", $"o_totalprice")
@@ -2159,7 +2129,7 @@ object Maintenance {
   // table's values are unchanged by the rewrite.
   private def qClusterStore(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = tmp("io_cluster_store", d)
+    val root = Staging.scratch("io_cluster_store", d)
     graft.Staging.rmTree(new java.io.File(root))
     val orders = Tables.orders(s, d)
     Maintenance.createStore(root, orders.schema)
@@ -2167,7 +2137,7 @@ object Maintenance {
       orders.filter($"o_orderkey" % 4 === r)
         .write.format("graft").mode("append").save(root) // v2..v5
     s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", "/tmp/graft_q")
+    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
     val name = new java.io.File(root).getName
     s.sql(s"DELETE FROM graft.`$name` WHERE o_orderkey % 20 = 7") // v6: dv
     val maxKey = orders.agg(max($"o_orderkey")).head().getLong(0)
@@ -2225,7 +2195,7 @@ object Maintenance {
     import s.implicits._
     val run = occRun(s, d, name = "io_sql_update_run")
     s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", "/tmp/graft_q")
+    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
     val name = new java.io.File(run).getName
     s.sql(s"""UPDATE graft.`$name`
               |SET o_totalprice = $bumpedPriceSql
@@ -2267,7 +2237,7 @@ object Maintenance {
     import s.implicits._
     val run = occRun(s, d, name = "io_sql_merge_run")
     s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", "/tmp/graft_q")
+    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
     val name = new java.io.File(run).getName
     val cols = s.read.format("graft").option("versionAsOf", 1).load(run)
       .columns.toSeq
@@ -2326,7 +2296,7 @@ object Maintenance {
     import s.implicits._
     val run = occRun(s, d, name = "io_sql_merge_full_run")
     s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", "/tmp/graft_q")
+    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
     val name = new java.io.File(run).getName
     val cols = s.read.format("graft").option("versionAsOf", 1).load(run)
       .columns.toSeq
@@ -2390,7 +2360,7 @@ object Maintenance {
     import s.implicits._
     val root = governedStoreRoot(s, d)
     s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", "/tmp/graft_q")
+    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
     val name = new java.io.File(root).getName
     s.sql(s"SELECT * FROM graft.`$name$$history`")
       .orderBy($"version")
@@ -2423,29 +2393,20 @@ object Maintenance {
   private[graft] def governedStoreRoot(s: SparkSession, d: String): String = {
     import s.implicits._
     val data = morData(s, d)
-    val (dirKey, fp) = Tables.stagingKey(d, "orders")
-    val root = s"/tmp/graft_q/cardstore_$dirKey"
-    val marker = java.nio.file.Paths.get(root, "staging_format.txt")
-    val fmt = s"v2-card-store|$fp" // v2: seeded schema log (r18)
-    if (java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt)
-      return root
-    graft.Staging.rmTree(new java.io.File(root))
-    new java.io.File(root).mkdirs()
-    java.nio.file.Files.write(java.nio.file.Paths.get(root, "manifest_v1.txt"),
-      (0 to 3).map(g => s"$data/base/g=$g").mkString("\n").getBytes("UTF-8"))
-    seedMorSchema(data, root)
-    val v2 = commitSnapshot(root, 1, Seq.empty, Seq(s"$data/newfile", morDvLine(data, "dv")))
-    commitSnapshot(root, v2, Seq.empty, Seq(s"$data/newfile2", morDvLine(data, "dv2")))
-    val cols = s.read.format("graft").option("versionAsOf", 1).load(root).columns.toSeq
-    Tables.orders(s, d).filter($"o_orderkey" % 100 === 1)
-      .select(cols.map(col): _*)
-      .write.format("graft").mode("append").save(root) // v4, with zone: lines
-    java.nio.file.Files.write(java.nio.file.Paths.get(root, "commits_ts.txt"),
-      CardCommitEpochs.map { case (v, t) => s"$v=$t" }.mkString("\n").getBytes("UTF-8"))
-    java.nio.file.Files.write(marker, fmt.getBytes("UTF-8"))
-    graft.Staging.recordSource(root, d, "orders", fp)
-    root
+    // v2: seeded schema log (r18)
+    Staging.inPlace("cardstore_", d, Seq("orders"), "v2-card-store") { root =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(root, "manifest_v1.txt"),
+        (0 to 3).map(g => s"$data/base/g=$g").mkString("\n").getBytes("UTF-8"))
+      seedMorSchema(data, root)
+      val v2 = commitSnapshot(root, 1, Seq.empty, Seq(s"$data/newfile", morDvLine(data, "dv")))
+      commitSnapshot(root, v2, Seq.empty, Seq(s"$data/newfile2", morDvLine(data, "dv2")))
+      val cols = s.read.format("graft").option("versionAsOf", 1).load(root).columns.toSeq
+      Tables.orders(s, d).filter($"o_orderkey" % 100 === 1)
+        .select(cols.map(col): _*)
+        .write.format("graft").mode("append").save(root) // v4, with zone: lines
+      java.nio.file.Files.write(java.nio.file.Paths.get(root, "commits_ts.txt"),
+        CardCommitEpochs.map { case (v, t) => s"$v=$t" }.mkString("\n").getBytes("UTF-8"))
+    }
   }
 
   private def qSnapshotRead(s: SparkSession, d: String): DataFrame = {
@@ -2543,7 +2504,7 @@ object Maintenance {
     val root = snapshotRoot(s, d)
     ensureCommitLog(root)
     s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", "/tmp/graft_q")
+    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
     val name = new java.io.File(root).getName
     def leg(probe: String, suffix: String) =
       s"""SELECT '$probe' AS probe, COUNT(*) AS n,
@@ -2698,12 +2659,9 @@ object Maintenance {
   // the value compare itself, not just a spec.
   private[graft] def zonemapRoot(s: SparkSession, d: String): String = {
     import s.implicits._
-    val root = tmp("zonemap", d)
-    val marker = java.nio.file.Paths.get(root, "staging_format.txt")
+    val root = Staging.scratch("zonemap", d)
     val fmt = "v3-year-groups+counts+col" // v3: zones_col.txt for the DSv2 scan
-    if (java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt)
-      return root
+    if (Staging.isCurrent(root, fmt)) return root
     val base = Tables.orders(s, d).withColumn("y", year($"o_orderdate"))
     base.write.mode("overwrite").partitionBy("y").parquet(s"$root/data")
     // O(groups) stats rows — the same aggregate a lake writer folds into
@@ -2724,7 +2682,7 @@ object Maintenance {
     // pushed-filter group pruning (GraftScan.zoneBounds)
     java.nio.file.Files.write(java.nio.file.Paths.get(root, "zones_col.txt"),
       "o_orderdate".getBytes("UTF-8"))
-    java.nio.file.Files.write(marker, fmt.getBytes("UTF-8"))
+    Staging.mark(root, fmt)
     root
   }
 
@@ -2806,7 +2764,7 @@ object Maintenance {
   // vectorized, still pruned.
   private def qSchemaEvolution(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = tmp("schema_evo", d)
+    val out = Staging.scratch("schema_evo", d)
     val base = Tables.orders(s, d)
     base.filter($"o_orderkey" % 2 === 0)
       .select($"o_orderkey", $"o_totalprice")
@@ -2862,7 +2820,7 @@ object Maintenance {
     * returns (root, data). */
   def columnMappingStore(s: SparkSession, d: String): (String, String) = {
     val data = morData(s, d)
-    val root = tmp("io_column_mapping", d)
+    val root = Staging.scratch("io_column_mapping", d)
     graft.Staging.rmTree(new java.io.File(root))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
     java.nio.file.Files.write(
@@ -2930,7 +2888,7 @@ object Maintenance {
     * [[DvDeletePred]]; returns the root. Idempotent per (name, sfDir). */
   def dvRoot(s: SparkSession, d: String): String = {
     import s.implicits._
-    val root = tmp("io_deletion_vectors", d)
+    val root = Staging.scratch("io_deletion_vectors", d)
     Tables.lineitem(s, d)
       .select($"l_orderkey", $"l_linenumber", $"l_quantity",
         $"l_extendedprice", $"l_returnflag")
@@ -3008,65 +2966,55 @@ object Maintenance {
     * references base files only. */
   private[graft] def morData(s: SparkSession, d: String): String = {
     import s.implicits._
-    val (dirKey, fp) = Tables.stagingKey(d, "orders")
-    val root = s"/tmp/graft_q/mordata_$dirKey"
-    val marker = java.nio.file.Paths.get(root, "staging_format.txt")
-    val fmt = s"v4-mor-data|$fp" // v4: recorded file schema (seedMorSchema)
-    if (java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt)
-      return root
-    graft.Staging.vacuum()
-    val tmpDir = graft.Staging.tempBuildDir()
-    val base = Tables.orders(s, d).withColumn("g", ($"o_orderkey" % 4).cast("int"))
-    base.write.partitionBy("g").parquet(s"$tmpDir/base")
-    val hit1 = ($"o_orderkey" % 10 === 0) ||
-      ($"o_orderkey" % MorDeleteMod === MorDeleteRem)
-    val hit2 = ($"o_orderkey" % 10 === 5) ||
-      ($"o_orderkey" % MorDeleteMod === MorDelete2Rem)
-    // each DV: positions (file, row) its merge's update or delete leg
-    // hits — ONE metadata-projected scan of the base, no data rewrite.
-    // position identity = the path's last two segments (g=X/part-*.parquet)
-    // + row index: stable across Staging.publish's directory move, where
-    // the absolute _metadata.file_path recorded at build time would not be
-    def writeDv(hit: org.apache.spark.sql.Column, out: String): Unit =
-      s.read.parquet((0 to 3).map(g => s"$tmpDir/base/g=$g"): _*)
-        .filter(hit)
-        .select(regexp_extract(col("_metadata.file_path"), "([^/]+/[^/]+)$", 1)
-            .as("file_key"),
-          col("_metadata.row_index").as("row_index"))
-        .coalesce(1).write.parquet(s"$tmpDir/$out")
-    writeDv(hit1, "dv")
-    writeDv(hit2, "dv2")
-    // the insert legs: re-written update rows + genuinely new rows
-    val orders = Tables.orders(s, d)
-    orders.filter($"o_orderkey" % 10 === 0)
-      .withColumn("o_totalprice", bumpedPrice($"o_totalprice"))
-      .unionByName(orders.filter($"o_orderkey" % 1000 === 0)
-        .withColumn("o_orderkey", $"o_orderkey" + 100000000L))
-      .coalesce(1).write.parquet(s"$tmpDir/newfile")
-    orders.filter($"o_orderkey" % 10 === 5)
-      .withColumn("o_totalprice", bumpedPrice($"o_totalprice"))
-      .unionByName(orders.filter($"o_orderkey" % 1000 === 500)
-        .withColumn("o_orderkey", $"o_orderkey" + 200000000L))
-      .coalesce(1).write.parquet(s"$tmpDir/newfile2")
-    // compacted groups: each base group minus BOTH DVs' rows — the
-    // fold-the-whole-pile rewrite, staged with the rest so the
-    // per-call compaction commit is manifest arithmetic
-    base.filter(!hit1 && !hit2)
-      .write.partitionBy("g").parquet(s"$tmpDir/compact")
-    // record the groups' file schema once at the content-keyed staging
-    // build (the occDataRoot trick): every store stacked over these
-    // groups seeds its schema log from this file instead of running a
-    // footer-inference Spark job per resolve. One base group suffices —
-    // base/newfile*/compact all carry the identical orders file schema
-    // (written from the same frame), and reading the leaf dir matches
-    // the resolve's own path shape (no partition-column discovery).
-    java.nio.file.Files.write(tmpDir.toPath.resolve("schema.json"),
-      s.read.parquet(s"$tmpDir/base/g=0").schema.json.getBytes("UTF-8"))
-    java.nio.file.Files.write(tmpDir.toPath.resolve("staging_format.txt"),
-      fmt.getBytes("UTF-8"))
-    graft.Staging.publish(tmpDir, root, d, "orders", fp)
-    root
+    // v4: recorded file schema (seedMorSchema)
+    Staging.once("mordata_", d, Seq("orders"), "v4-mor-data") { tmpDir =>
+      val base = Tables.orders(s, d).withColumn("g", ($"o_orderkey" % 4).cast("int"))
+      base.write.partitionBy("g").parquet(s"$tmpDir/base")
+      val hit1 = ($"o_orderkey" % 10 === 0) ||
+        ($"o_orderkey" % MorDeleteMod === MorDeleteRem)
+      val hit2 = ($"o_orderkey" % 10 === 5) ||
+        ($"o_orderkey" % MorDeleteMod === MorDelete2Rem)
+      // each DV: positions (file, row) its merge's update or delete leg
+      // hits — ONE metadata-projected scan of the base, no data rewrite.
+      // position identity = the path's last two segments (g=X/part-*.parquet)
+      // + row index: stable across Staging.publish's directory move, where
+      // the absolute _metadata.file_path recorded at build time would not be
+      def writeDv(hit: org.apache.spark.sql.Column, out: String): Unit =
+        s.read.parquet((0 to 3).map(g => s"$tmpDir/base/g=$g"): _*)
+          .filter(hit)
+          .select(regexp_extract(col("_metadata.file_path"), "([^/]+/[^/]+)$", 1)
+              .as("file_key"),
+            col("_metadata.row_index").as("row_index"))
+          .coalesce(1).write.parquet(s"$tmpDir/$out")
+      writeDv(hit1, "dv")
+      writeDv(hit2, "dv2")
+      // the insert legs: re-written update rows + genuinely new rows
+      val orders = Tables.orders(s, d)
+      orders.filter($"o_orderkey" % 10 === 0)
+        .withColumn("o_totalprice", bumpedPrice($"o_totalprice"))
+        .unionByName(orders.filter($"o_orderkey" % 1000 === 0)
+          .withColumn("o_orderkey", $"o_orderkey" + 100000000L))
+        .coalesce(1).write.parquet(s"$tmpDir/newfile")
+      orders.filter($"o_orderkey" % 10 === 5)
+        .withColumn("o_totalprice", bumpedPrice($"o_totalprice"))
+        .unionByName(orders.filter($"o_orderkey" % 1000 === 500)
+          .withColumn("o_orderkey", $"o_orderkey" + 200000000L))
+        .coalesce(1).write.parquet(s"$tmpDir/newfile2")
+      // compacted groups: each base group minus BOTH DVs' rows — the
+      // fold-the-whole-pile rewrite, staged with the rest so the
+      // per-call compaction commit is manifest arithmetic
+      base.filter(!hit1 && !hit2)
+        .write.partitionBy("g").parquet(s"$tmpDir/compact")
+      // record the groups' file schema once at the content-keyed staging
+      // build (the occDataRoot trick): every store stacked over these
+      // groups seeds its schema log from this file instead of running a
+      // footer-inference Spark job per resolve. One base group suffices —
+      // base/newfile*/compact all carry the identical orders file schema
+      // (written from the same frame), and reading the leaf dir matches
+      // the resolve's own path shape (no partition-column discovery).
+      java.nio.file.Files.write(tmpDir.toPath.resolve("schema.json"),
+        s.read.parquet(s"$tmpDir/base/g=0").schema.json.getBytes("UTF-8"))
+    }
   }
 
   /** Seed a fresh store's schema log from the staged MoR data's
@@ -3108,7 +3056,7 @@ object Maintenance {
   private def qMergeDv(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val data = morData(s, d)
-    val root = tmp("io_merge_dv", d)
+    val root = Staging.scratch("io_merge_dv", d)
     graft.Staging.rmTree(new java.io.File(root))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
     java.nio.file.Files.write(
@@ -3196,7 +3144,7 @@ object Maintenance {
     // files), its added data file is the insert post-image — the scan
     // emits `_change_type`, cost stays O(changed rows)
     val data = morData(s, d)
-    val root = tmp("q_cdc_mor", d)
+    val root = Staging.scratch("q_cdc_mor", d)
     graft.Staging.rmTree(new java.io.File(root))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
     java.nio.file.Files.write(
@@ -3210,7 +3158,7 @@ object Maintenance {
     java.nio.file.Files.write(java.nio.file.Paths.get(root, "commits_ts.txt"),
       CommitEpochs.map { case (v, t) => s"$v=$t" }.mkString("\n").getBytes("UTF-8"))
     s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", "/tmp/graft_q")
+    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
     val name = new java.io.File(root).getName
     // r17 (r16 verdict #5): every change row carries its commit
     // provenance — _commit_version joins the feed back to DESCRIBE
@@ -3264,7 +3212,7 @@ object Maintenance {
   private def qDvCompaction(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val data = morData(s, d)
-    val root = tmp("io_dv_compaction", d)
+    val root = Staging.scratch("io_dv_compaction", d)
     graft.Staging.rmTree(new java.io.File(root))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
     java.nio.file.Files.write(
@@ -3349,7 +3297,7 @@ object Maintenance {
   // table.
   def dynamicOverwriteRoot(s: SparkSession, d: String): String = {
     import s.implicits._
-    val root = tmp("io_dynamic_overwrite", d)
+    val root = Staging.scratch("io_dynamic_overwrite", d)
     Tables.orders(s, d).write.mode("overwrite")
       .partitionBy("o_orderpriority").parquet(root)
     val prev = s.conf.get("spark.sql.sources.partitionOverwriteMode")
@@ -3397,40 +3345,29 @@ object Maintenance {
     * are rebuilt per call. */
   private def rollbackData(s: SparkSession, d: String): String = {
     import s.implicits._
-    val (dirKey, fp) = Tables.stagingKey(d, "orders")
-    val root = s"/tmp/graft_q/rbdata_$dirKey"
-    val marker = java.nio.file.Paths.get(root, "staging_format.txt")
-    val fmt = s"v1-rollback-data|$fp"
-    if (java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt)
-      return root
-    graft.Staging.vacuum()
-    val tmpDir = graft.Staging.tempBuildDir()
-    val t = Tables.orders(s, d).filter($"o_orderkey" % 10 < 3)
-      .withColumn("g", ($"o_orderkey" % 2).cast("int"))
-    t.write.partitionBy("g").parquet(s"$tmpDir/base")
-    // churn: copy-on-write rewrite of g=0, the only group whose keys
-    // the update predicate hits (% 20 == 0 ⇒ even ⇒ g = 0)
-    s.read.parquet(s"$tmpDir/base/g=0")
-      .withColumn("o_totalprice",
-        when($"o_orderkey" % 20 === 0, bumpedPrice($"o_totalprice"))
-          .otherwise($"o_totalprice"))
-      .write.parquet(s"$tmpDir/rewrite_g0")
-    // the WAP insert batch (shifted copies of % 500 == 0 keys): also
-    // deterministic pure-function-of-the-dataset data, also immutable
-    Tables.orders(s, d)
-      .filter($"o_orderkey" % 10 < 3 && $"o_orderkey" % 500 === 0)
-      .withColumn("o_orderkey", $"o_orderkey" + lit(10000000L))
-      .write.parquet(s"$tmpDir/wap_batch")
-    java.nio.file.Files.write(tmpDir.toPath.resolve("staging_format.txt"),
-      fmt.getBytes("UTF-8"))
-    graft.Staging.publish(tmpDir, root, d, "orders", fp)
-    root
+    Staging.once("rbdata_", d, Seq("orders"), "v1-rollback-data") { tmpDir =>
+      val t = Tables.orders(s, d).filter($"o_orderkey" % 10 < 3)
+        .withColumn("g", ($"o_orderkey" % 2).cast("int"))
+      t.write.partitionBy("g").parquet(s"$tmpDir/base")
+      // churn: copy-on-write rewrite of g=0, the only group whose keys
+      // the update predicate hits (% 20 == 0 ⇒ even ⇒ g = 0)
+      s.read.parquet(s"$tmpDir/base/g=0")
+        .withColumn("o_totalprice",
+          when($"o_orderkey" % 20 === 0, bumpedPrice($"o_totalprice"))
+            .otherwise($"o_totalprice"))
+        .write.parquet(s"$tmpDir/rewrite_g0")
+      // the WAP insert batch (shifted copies of % 500 == 0 keys): also
+      // deterministic pure-function-of-the-dataset data, also immutable
+      Tables.orders(s, d)
+        .filter($"o_orderkey" % 10 < 3 && $"o_orderkey" % 500 === 0)
+        .withColumn("o_orderkey", $"o_orderkey" + lit(10000000L))
+        .write.parquet(s"$tmpDir/wap_batch")
+    }
   }
 
   private def rollbackRoot(s: SparkSession, d: String): String = {
     val data = rollbackData(s, d)
-    val root = tmp("rollback", d)
+    val root = Staging.scratch("rollback", d)
     def wipe(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(wipe)); f.delete(); ()
     }
@@ -3563,7 +3500,7 @@ object Maintenance {
 
   private[graft] def peRoot(s: SparkSession, d: String): String = {
     import s.implicits._
-    val root = tmp("partevo", d)
+    val root = Staging.scratch("partevo", d)
     val marker = java.nio.file.Paths.get(root, "pe_ok.txt")
     if (java.nio.file.Files.exists(marker) &&
         manifestPaths(root, 1).forall(p => new java.io.File(p).exists))
@@ -3655,7 +3592,7 @@ object Maintenance {
     import s.implicits._
     val src = snapshotRoot(s, d)
     val srcV = currentSnapshotVersion(src)
-    val dst = tmp("clone", d)
+    val dst = Staging.scratch("clone", d)
     def wipe(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(wipe)); f.delete(); ()
     }

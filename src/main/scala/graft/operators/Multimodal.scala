@@ -355,29 +355,15 @@ object Multimodal {
     * splits are byte-sized, and codec work is CPU-per-row. */
   private[graft] def mediaRoot(s: SparkSession, d: String): String = {
     import s.implicits._
-    val (dirKey, fp) = graft.Tables.stagingKey(d, "documents")
-    val root = s"/tmp/graft_q/mm_$dirKey"
-    val marker = java.nio.file.Paths.get(root, "staging_format.txt")
-    val fmt = s"v5-media-parquet|$fp" // v4 moved video to motion-PNG at 1 fps
-    // (PNG frames barely compress the gradient, so 4 fps bloated the staged
-    // store ~6x and every media query paid the read; 1 fps restores r11-parity
-    // payload bytes while the sampler math is fps-independent: sampled =
-    // min(dur_s, 8)); v5 switched the PNG encoder to Sub filtering, which
-    // shrank the staged store ~85x — bump the prefix again on the next
-    // byte-layout change
-    if (java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt) {
-      if (!new java.io.File(root, "staging_source.txt").exists())
-        graft.Staging.recordSource(root, d, "documents", fp)
-      return root
+    // v4 moved video to motion-PNG at 1 fps (PNG frames barely compress
+    // the gradient, so 4 fps bloated the staged store ~6x and every media
+    // query paid the read; 1 fps restores r11-parity payload bytes while
+    // the sampler math is fps-independent: sampled = min(dur_s, 8)); v5
+    // switched the PNG encoder to Sub filtering, which shrank the staged
+    // store ~85x — bump the prefix again on the next byte-layout change
+    graft.Staging.once("mm_", d, Seq("documents"), "v5-media-parquet") { tmp =>
+      mediaTable(s, d).write.mode("overwrite").parquet(s"$tmp/media")
     }
-    graft.Staging.vacuum()
-    val tmp = graft.Staging.tempBuildDir()
-    mediaTable(s, d).write.mode("overwrite").parquet(s"$tmp/media")
-    java.nio.file.Files.write(tmp.toPath.resolve("staging_format.txt"),
-      fmt.getBytes("UTF-8"))
-    graft.Staging.publish(tmp, root, d, "documents", fp)
-    root
   }
 
   private def stagedMedia(s: SparkSession, d: String): Dataset[MediaRow] = {

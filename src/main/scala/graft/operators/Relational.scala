@@ -987,21 +987,11 @@ object Relational {
     new java.util.concurrent.atomic.AtomicLong(0)
   private def stagedNeighbors(s: SparkSession, d: String, tag: String,
       oiRaw: => DataFrame): DataFrame = {
-    val (dirKey, fpL) = Tables.stagingKey(d, "lineitem")
-    val (_, fpO) = Tables.stagingKey(d, "orders")
-    val root = s"${graft.Staging.Base}/nbrs_${dirKey}_$tag"
-    val marker = java.nio.file.Paths.get(root, "staging_format.txt")
-    val fmt = s"v1-cf-nbrs-$tag|$fpL|$fpO"
-    if (java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt)
-      return s.read.parquet(s"$root/nbrs")
-    nbrStageRuns.incrementAndGet()
-    graft.Staging.vacuum()
-    val tmp = graft.Staging.tempBuildDir()
-    buildNeighbors(oiRaw).write.mode("overwrite").parquet(s"$tmp/nbrs")
-    java.nio.file.Files.write(tmp.toPath.resolve("staging_format.txt"),
-      fmt.getBytes("UTF-8"))
-    graft.Staging.publish(tmp, root, d, "lineitem", fpL)
+    val root = graft.Staging.once("nbrs_", d, Seq("lineitem", "orders"),
+        s"v1-cf-nbrs-$tag", tag) { tmp =>
+      nbrStageRuns.incrementAndGet()
+      buildNeighbors(oiRaw).write.mode("overwrite").parquet(s"$tmp/nbrs")
+    }
     s.read.parquet(s"$root/nbrs")
   }
 

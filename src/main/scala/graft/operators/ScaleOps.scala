@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Staging, Tables}
 import graft.functions.GraftFunctions.md5lower64
 import graft.OracleMath._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -14,16 +14,13 @@ import org.apache.spark.sql.functions._
   */
 object ScaleOps {
 
-  private def tmp(name: String, sfDir: String): String =
-    s"/tmp/graft_q/${name}_${new java.io.File(sfDir).getName}"
-
   // -- partitioned layout + partition pruning ------------------------------
   // Hive-style partition directories: a filter on the partition column
   // never touches non-matching files (PartitionFilters, not a data
   // filter) — at 100 TB, date/tenant partitioning is the first-line
   // data-skipping mechanism.
   def partitionedOrders(s: SparkSession, d: String): String = {
-    val out = tmp("io_partition_pruning", d)
+    val out = Staging.scratch("io_partition_pruning", d)
     Tables.orders(s, d).write.mode("overwrite")
       .partitionBy("o_orderpriority").parquet(out)
     out
@@ -53,7 +50,7 @@ object ScaleOps {
     * priorities + their numeric urgency); returns its path. */
   def dppDim(s: SparkSession, d: String): String = {
     import s.implicits._
-    val dim = tmp("q_dpp_dim", d)
+    val dim = Staging.scratch("q_dpp_dim", d)
     Tables.orders(s, d).select($"o_orderpriority").distinct()
       .withColumn("urgency", split($"o_orderpriority", "-")(0).cast("int"))
       .coalesce(1).write.mode("overwrite").parquet(dim)
@@ -98,7 +95,7 @@ object ScaleOps {
   // equality filters.
   def bloomTable(s: SparkSession, d: String): String = {
     import s.implicits._
-    val out = tmp("io_parquet_bloom", d)
+    val out = Staging.scratch("io_parquet_bloom", d)
     Tables.lineitem(s, d)
       .select($"l_orderkey", $"l_linenumber", $"l_extendedprice")
       .repartition(4)
@@ -140,36 +137,26 @@ object ScaleOps {
   // sorted by the probe key, small pages so the index has resolution.
   def pageIndexTable(s: SparkSession, d: String): String = {
     import s.implicits._
-    val (dirKey, fp) = Tables.stagingKey(d, "lineitem")
-    val root = s"/tmp/graft_q/pidata_$dirKey"
-    val marker = java.nio.file.Paths.get(root, "staging_format.txt")
-    val fmt = s"v3-page-index|$fp" // v2: 500-row pages (5k pages were coarser
-    // than the probe range at small SF — the index needs resolution ≪ range);
-    // v3: 1 GiB row groups, so "one file, one row group" is ENFORCED at
-    // write time rather than implied by data size — at larger SF the
-    // projection would otherwise split at parquet's default ~128 MB and
-    // row-group stats would start pruning, contaminating the spec's
+    // v2: 500-row pages (5k pages were coarser than the probe range at
+    // small SF — the index needs resolution ≪ range); v3: 1 GiB row
+    // groups, so "one file, one row group" is ENFORCED at write time
+    // rather than implied by data size — at larger SF the projection
+    // would otherwise split at parquet's default ~128 MB and row-group
+    // stats would start pruning, contaminating the spec's
     // page-vs-row-group separation control
-    if (java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt)
-      return root
-    graft.Staging.vacuum()
-    val tmpDir = graft.Staging.tempBuildDir()
-    Tables.lineitem(s, d)
-      .select($"l_orderkey", $"l_returnflag", $"l_extendedprice")
-      .coalesce(1)
-      .sortWithinPartitions($"l_orderkey")
-      .write.mode("overwrite")
-      // small pages give the column index resolution; the row-count
-      // limit binds before the byte size on this narrow projection
-      .option("parquet.page.row.count.limit", "500")
-      .option("parquet.page.size", "16384")
-      .option("parquet.block.size", (1L << 30).toString)
-      .parquet(s"$tmpDir/data")
-    java.nio.file.Files.write(tmpDir.toPath.resolve("staging_format.txt"),
-      fmt.getBytes("UTF-8"))
-    graft.Staging.publish(tmpDir, root, d, "lineitem", fp)
-    root
+    Staging.once("pidata_", d, Seq("lineitem"), "v3-page-index") { tmpDir =>
+      Tables.lineitem(s, d)
+        .select($"l_orderkey", $"l_returnflag", $"l_extendedprice")
+        .coalesce(1)
+        .sortWithinPartitions($"l_orderkey")
+        .write.mode("overwrite")
+        // small pages give the column index resolution; the row-count
+        // limit binds before the byte size on this narrow projection
+        .option("parquet.page.row.count.limit", "500")
+        .option("parquet.page.size", "16384")
+        .option("parquet.block.size", (1L << 30).toString)
+        .parquet(s"$tmpDir/data")
+    }
   }
 
   private def pageIndex(s: SparkSession, d: String): DataFrame = {
@@ -194,7 +181,7 @@ object ScaleOps {
   // plaintext table); the spec measures the size win on this corpus.
   def zstdDirs(s: SparkSession, d: String): (String, String) = {
     import s.implicits._
-    val root = tmp("io_zstd", d)
+    val root = Staging.scratch("io_zstd", d)
     val src = Tables.lineitem(s, d)
       .select($"l_orderkey", $"l_extendedprice", $"l_returnflag", $"l_shipdate")
     src.write.mode("overwrite").option("compression", "zstd")
@@ -232,16 +219,14 @@ object ScaleOps {
     * session over an existing stage re-registers the tables in place. */
   def ensureBucketedTables(s: SparkSession, d: String): Unit = {
     import s.implicits._
-    val wh = tmp("q_bucketed_join_wh", d)
+    val wh = Staging.scratch("q_bucketed_join_wh", d)
     val fmt = s"v2-bucketed|${Tables.stagingKey(d, "lineitem")._2}|${Tables.stagingKey(d, "orders")._2}"
-    val marker = java.nio.file.Paths.get(wh, "staging_format.txt")
     def register(name: String, cols: String, keyCol: String, dir: String): Unit =
       if (!s.catalog.tableExists(name))
         s.sql(s"""CREATE TABLE $name ($cols) USING PARQUET
                  |CLUSTERED BY ($keyCol) SORTED BY ($keyCol) INTO 8 BUCKETS
                  |LOCATION '$wh/$dir'""".stripMargin)
-    if (java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt) {
+    if (Staging.isCurrent(wh, fmt)) {
       register("graft_li_bucketed",
         "l_orderkey BIGINT, l_extendedprice DOUBLE, l_linestatus STRING",
         "l_orderkey", "li")
@@ -261,7 +246,7 @@ object ScaleOps {
       .write.mode("overwrite").option("path", s"$wh/ord")
       .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
       .saveAsTable("graft_ord_bucketed")
-    java.nio.file.Files.write(marker, fmt.getBytes("UTF-8"))
+    Staging.mark(wh, fmt)
   }
 
   /** Join of the two bucketed tables alone — reads co-located buckets,
@@ -371,7 +356,7 @@ object ScaleOps {
     * production z-optimizers use range-partition ranks the same way. */
   def zorderDirs(s: SparkSession, d: String, files: Int = 16): (String, String) = {
     import s.implicits._
-    val linear = tmp("q_zorder_linear", d)
+    val linear = Staging.scratch("q_zorder_linear", d)
     val li = Tables.lineitem(s, d)
       .select($"l_suppkey", $"l_partkey", $"l_extendedprice", $"l_quantity")
     li.repartitionByRange(files, $"l_suppkey")
@@ -385,7 +370,7 @@ object ScaleOps {
   def zorderDir(s: SparkSession, d: String, files: Int = 16): String = {
     import s.implicits._
     import graft.functions.GraftFunctions.zorder64
-    val zord = tmp("q_zorder_z", d)
+    val zord = Staging.scratch("q_zorder_z", d)
     val li = Tables.lineitem(s, d)
       .select($"l_suppkey", $"l_partkey", $"l_extendedprice", $"l_quantity")
     val (sMn, sMx, pMn, pMx) = li.agg(
@@ -431,7 +416,7 @@ object ScaleOps {
   // aggregating after a write→read round trip proves lossless typed I/O.
   private def csvRoundtrip(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = tmp("io_csv_roundtrip", d)
+    val out = Staging.scratch("io_csv_roundtrip", d)
     val src = Tables.nation(s, d)
     src.write.mode("overwrite").option("header", "true").csv(out)
     s.read.option("header", "true").schema(src.schema).csv(out)
@@ -463,7 +448,7 @@ object ScaleOps {
     "99999999999999999999999999,overflowed key")
   private def csvMalformed(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = tmp("io_csv_malformed", d)
+    val out = Staging.scratch("io_csv_malformed", d)
     val src = Tables.customer(s, d)
       .select($"c_custkey", $"c_name", $"c_acctbal")
     src.coalesce(1).write.mode("overwrite").csv(out)
@@ -500,7 +485,7 @@ object ScaleOps {
 
   private def jsonRoundtrip(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = tmp("io_json_roundtrip", d)
+    val out = Staging.scratch("io_json_roundtrip", d)
     val src = Tables.supplier(s, d)
     src.write.mode("overwrite").json(out)
     s.read.schema(src.schema).json(out)
@@ -519,7 +504,7 @@ object ScaleOps {
   private def rbacDecrypt(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.crypto._
-    val out = tmp("crypto_rbac_decrypt", d)
+    val out = Staging.scratch("crypto_rbac_decrypt", d)
     val cfg = CryptoConfig("master-rbacdec",
       Seq(ColumnPolicy("c_name", kmsMasterKeyId = Some("mk-name")),
         ColumnPolicy("c_acctbal", kmsMasterKeyId = Some("mk-bal"))))
@@ -639,7 +624,7 @@ object ScaleOps {
   // ORIGINAL table — roundtrip fidelity IS the assertion.
   private def orcRoundtrip(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = tmp("io_orc_roundtrip", d)
+    val out = Staging.scratch("io_orc_roundtrip", d)
     Tables.lineitem(s, d)
       .select($"l_orderkey", $"l_returnflag", $"l_quantity")
       .write.mode("overwrite").orc(out)
@@ -664,7 +649,7 @@ object ScaleOps {
   // IS the assertion.
   private def avroRoundtrip(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = tmp("io_avro_roundtrip", d)
+    val out = Staging.scratch("io_avro_roundtrip", d)
     val fmt = classOf[graft.sources.AvroLiteFileFormat].getName
     Tables.orders(s, d)
       .select($"o_orderkey", $"o_orderpriority", $"o_totalprice", $"o_orderdate")
@@ -697,7 +682,7 @@ object ScaleOps {
   // engine-opaque binary (DataSketches) cannot oracle.
   def dailySketchTable(s: SparkSession, d: String): String = {
     import s.implicits._
-    val out = tmp("hll_regs", d)
+    val out = Staging.scratch("hll_regs", d)
     val ev = Tables.events(s, d).withColumn("day", date_trunc("day", $"ts"))
     DetHll.registers(ev, Seq("day"), $"user_id")
       .write.mode("overwrite").parquet(s"$out/registers")

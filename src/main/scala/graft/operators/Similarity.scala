@@ -337,24 +337,10 @@ object Similarity {
     new java.util.concurrent.atomic.AtomicLong(0)
 
   private[graft] def embPairsRoot(s: SparkSession, d: String): String = {
-    val (dirKey, fp) = Tables.stagingKey(d, "embeddings")
-    val root = s"${graft.Staging.Base}/epairs_$dirKey"
-    val marker = java.nio.file.Paths.get(root, "staging_format.txt")
-    val fmt = s"v1-emb-pairs|$fp"
-    if (java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt) {
-      if (!new java.io.File(root, "staging_source.txt").exists())
-        graft.Staging.recordSource(root, d, "embeddings", fp)
-      return root
+    Staging.once("epairs_", d, Seq("embeddings"), "v1-emb-pairs") { tmp =>
+      embPairStageRuns.incrementAndGet()
+      embPairsBuild(s, d).write.mode("overwrite").parquet(s"$tmp/pairs")
     }
-    embPairStageRuns.incrementAndGet()
-    graft.Staging.vacuum()
-    val tmp = graft.Staging.tempBuildDir()
-    embPairsBuild(s, d).write.mode("overwrite").parquet(s"$tmp/pairs")
-    java.nio.file.Files.write(tmp.toPath.resolve("staging_format.txt"),
-      fmt.getBytes("UTF-8"))
-    graft.Staging.publish(tmp, root, d, "embeddings", fp)
-    root
   }
 
   /** The verified cos ≥ 0.4 pair set served from the staged parquet. */
@@ -664,32 +650,18 @@ object Similarity {
     * tables are bit-identical to inline training — the oracle keeps
     * replaying training from scratch. */
   private[graft] def annRawRoot(s: SparkSession, d: String): String = {
-    import s.implicits._
-    val (dirKey, fp) = Tables.stagingKey(d, "embeddings")
-    val root = s"/tmp/graft_q/annr_$dirKey"
-    val marker = java.nio.file.Paths.get(root, "staging_format.txt")
-    val fmt = s"v2-pq-raw|$fp" // v2: dense-grid renumbered codebook
-    if (java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt) {
-      if (!new java.io.File(root, "staging_source.txt").exists())
-        Staging.recordSource(root, d, "embeddings", fp)
-      return root
+    // v2: dense-grid renumbered codebook
+    Staging.once("annr_", d, Seq("embeddings"), "v2-pq-raw") { tmp =>
+      annTrainRuns.incrementAndGet()
+      val subs = pqSubs(Tables.embeddings(s, d)).localCheckpoint()
+      // same fail-safe dense-grid renumbering as the residual roots:
+      // identity while every seed cell survives full-corpus training,
+      // and keeps j = (cell_id − 3)/16 a valid packed index if one dies
+      // (mirrored by the oracle's c1d CTE)
+      val c1 = denseCells(pqTrainCodebook(subs)).localCheckpoint()
+      c1.write.mode("overwrite").parquet(s"$tmp/pqcodebook")
+      pqCodes(subs, c1).write.mode("overwrite").parquet(s"$tmp/codes")
     }
-    annTrainRuns.incrementAndGet()
-    Staging.vacuum()
-    val subs = pqSubs(Tables.embeddings(s, d)).localCheckpoint()
-    // same fail-safe dense-grid renumbering as the residual roots:
-    // identity while every seed cell survives full-corpus training,
-    // and keeps j = (cell_id − 3)/16 a valid packed index if one dies
-    // (mirrored by the oracle's c1d CTE)
-    val c1 = denseCells(pqTrainCodebook(subs)).localCheckpoint()
-    val tmp = Staging.tempBuildDir()
-    c1.write.mode("overwrite").parquet(s"$tmp/pqcodebook")
-    pqCodes(subs, c1).write.mode("overwrite").parquet(s"$tmp/codes")
-    java.nio.file.Files.write(tmp.toPath.resolve("staging_format.txt"),
-      fmt.getBytes("UTF-8"))
-    Staging.publish(tmp, root, d, "embeddings", fp)
-    root
   }
 
   private def annPq(s: SparkSession, d: String): DataFrame = {
@@ -861,48 +833,33 @@ object Similarity {
     * why the DuckDB oracle can keep replaying training from scratch. */
   private[graft] def annIndexRoot(s: SparkSession, d: String): String = {
     import s.implicits._
-    val (dirKey, fp) = Tables.stagingKey(d, "embeddings")
-    val root = s"/tmp/graft_q/ann_$dirKey"
-    val marker = java.nio.file.Paths.get(root, "staging_format.txt")
-    val fmt = s"v1-ivfpq-residual|$fp"
-    if (java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt) {
-      if (!new java.io.File(root, "staging_source.txt").exists())
-        Staging.recordSource(root, d, "embeddings", fp)
-      return root
+    Staging.once("ann_", d, Seq("embeddings"), "v1-ivfpq-residual") { tmp =>
+      annTrainRuns.incrementAndGet()
+      val emb = Tables.embeddings(s, d)
+      val csubs = pqSubsM(emb, mCount = 1, subLen = Dims)
+      val coarse = pqTrainCodebook(csubs).localCheckpoint()
+      val cells = pqAssign(csubs, coarse).select($"vec_id", $"cell_id")
+        .localCheckpoint()
+      val cc = coarse.select($"cell_id", $"ce".as("cce"))
+      val resv = emb
+        .select($"vec_id", expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("fv"))
+        .join(cells, "vec_id")
+        .join(broadcast(cc), "cell_id")
+        .select($"vec_id", $"cell_id", zip_with($"fv", $"cce", (x, c) => x - c).as("rv"))
+        .localCheckpoint()
+      val rsubs = resSubs(resv, Seq("vec_id"))
+      // denseCells is identity while every seed cell survives training;
+      // if one ever dies, the oracle's unconditional renumbering and this
+      // side now fail-safe identically instead of silently misaligning
+      // the positional ADC lookup (r9 ADVICE)
+      val c1 = denseCells(pqTrainCodebook(rsubs)).localCheckpoint()
+      coarse.write.mode("overwrite").parquet(s"$tmp/coarse")
+      c1.write.mode("overwrite").parquet(s"$tmp/pqcodebook")
+      // ONE row per vector: cell routing key + M packed code indices —
+      // the 16-bytes-per-vector physical layout PQ storage exists for
+      pqCodes(rsubs, c1).join(cells, "vec_id")
+        .write.mode("overwrite").parquet(s"$tmp/codes")
     }
-    annTrainRuns.incrementAndGet()
-    Staging.vacuum()
-    val emb = Tables.embeddings(s, d)
-    val csubs = pqSubsM(emb, mCount = 1, subLen = Dims)
-    val coarse = pqTrainCodebook(csubs).localCheckpoint()
-    val cells = pqAssign(csubs, coarse).select($"vec_id", $"cell_id")
-      .localCheckpoint()
-    val cc = coarse.select($"cell_id", $"ce".as("cce"))
-    val resv = emb
-      .select($"vec_id", expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("fv"))
-      .join(cells, "vec_id")
-      .join(broadcast(cc), "cell_id")
-      .select($"vec_id", $"cell_id", zip_with($"fv", $"cce", (x, c) => x - c).as("rv"))
-      .localCheckpoint()
-    val rsubs = resSubs(resv, Seq("vec_id"))
-    // denseCells is identity while every seed cell survives training;
-    // if one ever dies, the oracle's unconditional renumbering and this
-    // side now fail-safe identically instead of silently misaligning
-    // the positional ADC lookup (r9 ADVICE)
-    val c1 = denseCells(pqTrainCodebook(rsubs)).localCheckpoint()
-    // build in a private temp dir; publish swaps it into place whole
-    val tmp = Staging.tempBuildDir()
-    coarse.write.mode("overwrite").parquet(s"$tmp/coarse")
-    c1.write.mode("overwrite").parquet(s"$tmp/pqcodebook")
-    // ONE row per vector: cell routing key + M packed code indices —
-    // the 16-bytes-per-vector physical layout PQ storage exists for
-    pqCodes(rsubs, c1).join(cells, "vec_id")
-      .write.mode("overwrite").parquet(s"$tmp/codes")
-    java.nio.file.Files.write(tmp.toPath.resolve("staging_format.txt"),
-      fmt.getBytes("UTF-8"))
-    Staging.publish(tmp, root, d, "embeddings", fp)
-    root
   }
 
   /** [[ivfpqAdist]] (residual encoding) served from the STORED index:
@@ -1358,44 +1315,30 @@ object Similarity {
     * Same freshness discipline as [[annIndexRoot]]. */
   private[graft] def annIncRoot(s: SparkSession, d: String): String = {
     import s.implicits._
-    val (dirKey, fp) = Tables.stagingKey(d, "embeddings")
-    val root = s"/tmp/graft_q/annb_$dirKey"
-    val marker = java.nio.file.Paths.get(root, "staging_format.txt")
-    val fmt = s"v1-ivfpq-base|$fp"
-    if (java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt) {
-      if (!new java.io.File(root, "staging_source.txt").exists())
-        Staging.recordSource(root, d, "embeddings", fp)
-      return root
+    Staging.once("annb_", d, Seq("embeddings"), "v1-ivfpq-base") { tmp =>
+      annTrainRuns.incrementAndGet()
+      val base = Tables.embeddings(s, d).filter($"vec_id" % IncMod =!= 3)
+      val csubsBase = pqSubsM(base, 1, Dims)
+      val coarse = pqTrainCodebook(csubsBase).localCheckpoint()
+      val cells = pqAssign(csubsBase, coarse).select($"vec_id", $"cell_id")
+        .localCheckpoint()
+      val cc = coarse.select($"cell_id", $"ce".as("cce"))
+      val resv = base
+        .select($"vec_id", expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("fv"))
+        .join(cells, "vec_id")
+        .join(broadcast(cc), "cell_id")
+        .select($"vec_id", $"cell_id", zip_with($"fv", $"cce", (x, c) => x - c).as("rv"))
+        .localCheckpoint()
+      // a filtered training set can lose seed cells, holing the packed
+      // code index j = (cell_id − 3)/16 — renumber the surviving cells
+      // onto a dense grid (identity when no seed is missing)
+      val c1 = denseCells(pqTrainCodebook(resSubs(resv, Seq("vec_id"))))
+        .localCheckpoint()
+      coarse.write.mode("overwrite").parquet(s"$tmp/coarse")
+      c1.write.mode("overwrite").parquet(s"$tmp/pqcodebook")
+      pqCodes(resSubs(resv, Seq("vec_id")), c1).join(cells, "vec_id")
+        .write.mode("overwrite").parquet(s"$tmp/codes")
     }
-    annTrainRuns.incrementAndGet()
-    Staging.vacuum()
-    val base = Tables.embeddings(s, d).filter($"vec_id" % IncMod =!= 3)
-    val csubsBase = pqSubsM(base, 1, Dims)
-    val coarse = pqTrainCodebook(csubsBase).localCheckpoint()
-    val cells = pqAssign(csubsBase, coarse).select($"vec_id", $"cell_id")
-      .localCheckpoint()
-    val cc = coarse.select($"cell_id", $"ce".as("cce"))
-    val resv = base
-      .select($"vec_id", expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("fv"))
-      .join(cells, "vec_id")
-      .join(broadcast(cc), "cell_id")
-      .select($"vec_id", $"cell_id", zip_with($"fv", $"cce", (x, c) => x - c).as("rv"))
-      .localCheckpoint()
-    // a filtered training set can lose seed cells, holing the packed
-    // code index j = (cell_id − 3)/16 — renumber the surviving cells
-    // onto a dense grid (identity when no seed is missing)
-    val c1 = denseCells(pqTrainCodebook(resSubs(resv, Seq("vec_id"))))
-      .localCheckpoint()
-    val tmp = Staging.tempBuildDir()
-    coarse.write.mode("overwrite").parquet(s"$tmp/coarse")
-    c1.write.mode("overwrite").parquet(s"$tmp/pqcodebook")
-    pqCodes(resSubs(resv, Seq("vec_id")), c1).join(cells, "vec_id")
-      .write.mode("overwrite").parquet(s"$tmp/codes")
-    java.nio.file.Files.write(tmp.toPath.resolve("staging_format.txt"),
-      fmt.getBytes("UTF-8"))
-    Staging.publish(tmp, root, d, "embeddings", fp)
-    root
   }
 
   private def annIncremental(s: SparkSession, d: String): DataFrame = {
@@ -1799,63 +1742,49 @@ object Similarity {
     * discipline as the ANN index. Returns (root, tfTable, dfTable). */
   private[graft] def lexIndexRoot(s: SparkSession, d: String): (String, String, String) = {
     import s.implicits._
-    val (dirKey, fp) = Tables.stagingKey(d, "documents")
-    val root = s"/tmp/graft_q/lex_$dirKey"
+    val dirKey = Tables.stagingKey(d, "documents")._1
     val tfT = lexTableName("tf", dirKey)
     val dfT = lexTableName("df", dirKey)
-    val marker = java.nio.file.Paths.get(root, "staging_format.txt")
-    val fmt = s"v1-bm25-postings|$fp"
+    val root = Staging.once("lex_", d, Seq("documents"), "v1-bm25-postings") { tmp =>
+      lexStageRuns.incrementAndGet()
+      // ONE tokenize pass at staging time; all three index tables derive
+      // from the (doc, tok, tf) aggregate (the tfidf lesson — separate
+      // branches off the raw explode would each re-scan the corpus)
+      val tfAll = Tables.documents(s, d)
+        .select($"doc_id", explode(TextPrep.words($"text")).as("tok"))
+        .filter($"tok" =!= "")
+        .groupBy($"doc_id", $"tok").agg(count(lit(1)).as("tf"))
+        .localCheckpoint()
+      val dl = tfAll.groupBy($"doc_id").agg(sum($"tf").as("dl"))
+      // bucketed writes go through throwaway catalog names into the
+      // private temp dir; publish swaps the whole index into place and
+      // the final names re-register over it
+      dl.agg(count(lit(1)).as("n_docs"), avg($"dl").as("avgdl"))
+        .write.mode("overwrite").parquet(s"$tmp/stats")
+      val buildTag = java.lang.Long.toHexString(System.nanoTime())
+      // postings ⋈ dl co-partitions on doc_id — a one-time staging
+      // shuffle that buys every future scoring run its dl column for free
+      tfAll.join(dl, "doc_id")
+        .select($"tok", $"doc_id", $"tf", $"dl")
+        .write.mode("overwrite").option("path", s"$tmp/tf")
+        .bucketBy(LexBuckets, "tok").sortBy("tok").saveAsTable(s"graft_lex_build_tf_$buildTag")
+      tfAll.groupBy($"tok").agg(count(lit(1)).as("df"))
+        .write.mode("overwrite").option("path", s"$tmp/df")
+        .bucketBy(LexBuckets, "tok").sortBy("tok").saveAsTable(s"graft_lex_build_df_$buildTag")
+      s.sql(s"DROP TABLE IF EXISTS graft_lex_build_tf_$buildTag")
+      s.sql(s"DROP TABLE IF EXISTS graft_lex_build_df_$buildTag")
+      // a restage must also drop final-name registrations that still
+      // point at the replaced files
+      s.sql(s"DROP TABLE IF EXISTS $tfT")
+      s.sql(s"DROP TABLE IF EXISTS $dfT")
+    }
+    // (re-)register the final names; a warm hit in a fresh session finds
+    // the files staged but unknown to the session catalog
     def register(name: String, cols: String, dir: String): Unit =
       if (!s.catalog.tableExists(name))
         s.sql(s"""CREATE TABLE $name ($cols) USING PARQUET
                  |CLUSTERED BY (tok) SORTED BY (tok) INTO $LexBuckets BUCKETS
                  |LOCATION '$root/$dir'""".stripMargin)
-    if (java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt) {
-      // warm hit in a fresh session: the files are staged but the
-      // session catalog may not know them yet — re-register in place
-      register(tfT, "tok STRING, doc_id BIGINT, tf BIGINT, dl BIGINT", "tf")
-      register(dfT, "tok STRING, df BIGINT", "df")
-      if (!new java.io.File(root, "staging_source.txt").exists())
-        Staging.recordSource(root, d, "documents", fp)
-      return (root, tfT, dfT)
-    }
-    lexStageRuns.incrementAndGet()
-    Staging.vacuum()
-    // ONE tokenize pass at staging time; all three index tables derive
-    // from the (doc, tok, tf) aggregate (the tfidf lesson — separate
-    // branches off the raw explode would each re-scan the corpus)
-    val tfAll = Tables.documents(s, d)
-      .select($"doc_id", explode(TextPrep.words($"text")).as("tok"))
-      .filter($"tok" =!= "")
-      .groupBy($"doc_id", $"tok").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
-    val dl = tfAll.groupBy($"doc_id").agg(sum($"tf").as("dl"))
-    // bucketed writes go through throwaway catalog names into a private
-    // temp dir; publish swaps the whole index into place and the final
-    // names re-register over it
-    val tmp = Staging.tempBuildDir()
-    dl.agg(count(lit(1)).as("n_docs"), avg($"dl").as("avgdl"))
-      .write.mode("overwrite").parquet(s"$tmp/stats")
-    val buildTag = java.lang.Long.toHexString(System.nanoTime())
-    // postings ⋈ dl co-partitions on doc_id — a one-time staging
-    // shuffle that buys every future scoring run its dl column for free
-    tfAll.join(dl, "doc_id")
-      .select($"tok", $"doc_id", $"tf", $"dl")
-      .write.mode("overwrite").option("path", s"$tmp/tf")
-      .bucketBy(LexBuckets, "tok").sortBy("tok").saveAsTable(s"graft_lex_build_tf_$buildTag")
-    tfAll.groupBy($"tok").agg(count(lit(1)).as("df"))
-      .write.mode("overwrite").option("path", s"$tmp/df")
-      .bucketBy(LexBuckets, "tok").sortBy("tok").saveAsTable(s"graft_lex_build_df_$buildTag")
-    s.sql(s"DROP TABLE IF EXISTS graft_lex_build_tf_$buildTag")
-    s.sql(s"DROP TABLE IF EXISTS graft_lex_build_df_$buildTag")
-    java.nio.file.Files.write(tmp.toPath.resolve("staging_format.txt"),
-      fmt.getBytes("UTF-8"))
-    // a restage must also drop final-name registrations that still
-    // point at the replaced files
-    s.sql(s"DROP TABLE IF EXISTS $tfT")
-    s.sql(s"DROP TABLE IF EXISTS $dfT")
-    Staging.publish(tmp, root, d, "documents", fp)
     register(tfT, "tok STRING, doc_id BIGINT, tf BIGINT, dl BIGINT", "tf")
     register(dfT, "tok STRING, df BIGINT", "df")
     (root, tfT, dfT)
@@ -2110,25 +2039,10 @@ object Similarity {
     * documents fingerprint — a stale dir is replaced in place on the
     * next access via the format-marker mismatch. */
   private[graft] def hybridFusedRoot(s: SparkSession, d: String): String = {
-    val (dirKey, fpD) = Tables.stagingKey(d, "documents")
-    val (_, fpE) = Tables.stagingKey(d, "embeddings")
-    val root = s"/tmp/graft_q/hyb_$dirKey"
-    val marker = java.nio.file.Paths.get(root, "staging_format.txt")
-    val fmt = s"v1-hybrid-fused|$fpD|$fpE"
-    if (java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt) {
-      if (!new java.io.File(root, "staging_source.txt").exists())
-        graft.Staging.recordSource(root, d, "documents", fpD)
-      return root
+    Staging.once("hyb_", d, Seq("documents", "embeddings"), "v1-hybrid-fused") { tmp =>
+      hybridBuildRuns.incrementAndGet()
+      hybridRrf(s, d).write.mode("overwrite").parquet(s"$tmp/fused")
     }
-    hybridBuildRuns.incrementAndGet()
-    graft.Staging.vacuum()
-    val tmp = graft.Staging.tempBuildDir()
-    hybridRrf(s, d).write.mode("overwrite").parquet(s"$tmp/fused")
-    java.nio.file.Files.write(tmp.toPath.resolve("staging_format.txt"),
-      fmt.getBytes("UTF-8"))
-    graft.Staging.publish(tmp, root, d, "documents", fpD)
-    root
   }
 
   private def rerankCrossenc(s: SparkSession, d: String): DataFrame = {

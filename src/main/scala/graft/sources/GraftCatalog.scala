@@ -14,7 +14,7 @@ import graft.operators.Maintenance
   *
   * {{{
   * spark.sql.catalog.graft      = graft.sources.GraftCatalog
-  * spark.sql.catalog.graft.base = /tmp/graft_q
+  * spark.sql.catalog.graft.base = /path/to/stores
   * }}}
   *
   * and every store directory under `base` is a SQL table with NATIVE

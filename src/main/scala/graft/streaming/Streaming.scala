@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{OracleMath, QueryDef, Tables}
+import graft.{OracleMath, QueryDef, Staging, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -1178,17 +1178,7 @@ object Streaming {
   private def fileSinkStream(s: SparkSession, d: String): DataFrame =
     withStateParts(s, 8) {
       import s.implicits._
-      val (dirKey, fp) = Tables.stagingKey(d, "events")
-      val root = s"/tmp/graft_q/ssink_$dirKey"
-      val marker = java.nio.file.Paths.get(root, "staging_format.txt")
-      val fmt = s"v1-parquet-sink|$fp"
-      val fresh = java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt
-      if (!fresh) {
-        graft.Staging.rmTree(new java.io.File(root))
-        new java.io.File(root).mkdirs()
-      }
-      val q = eventsStream(s, d)
+      def drain(root: String): Unit = eventsStream(s, d)
         .select($"event_id", $"user_id", $"event_type", $"value")
         .writeStream.format("parquet")
         .option("path", s"$root/data")
@@ -1196,11 +1186,9 @@ object Streaming {
         .outputMode(OutputMode.Append())
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
-      if (!fresh) {
-        java.nio.file.Files.write(marker, fmt.getBytes("UTF-8"))
-        graft.Staging.recordSource(root, d, "events", fp)
-      }
+        .awaitTermination()
+      val root = Staging.inPlace("ssink_", d, Seq("events"), "v1-parquet-sink",
+        onHit = drain)(drain)
       s.read.parquet(s"$root/data") // listed via the _spark_metadata log
         .groupBy($"event_type")
         .agg(count(lit(1)).as("n"), OracleMath.dsum($"value").as("sum_value"))
@@ -1252,22 +1240,7 @@ object Streaming {
   private def graftSinkStream(s: SparkSession, d: String): DataFrame =
     withStateParts(s, 8) {
       import s.implicits._
-      val (dirKey, fp) = Tables.stagingKey(d, "events")
-      val root = s"/tmp/graft_q/gsink_$dirKey"
-      val marker = java.nio.file.Paths.get(root, "staging_format.txt")
-      val fmt = s"v2-graft-sink|$fp" // v2: DSv2 txn-registry ingest path
-      val fresh = java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt
-      if (!fresh) {
-        graft.Staging.rmTree(new java.io.File(root))
-        // v1 = the empty store (schema'd, so the DSv2 front door can
-        // resolve it before the first batch lands): ingestion history
-        // starts from nothing
-        Maintenance.createStore(root, org.apache.spark.sql.types.StructType(
-          Tables.events(s, d).select("event_id", "user_id", "event_type", "value")
-            .schema.fields.toSeq))
-      }
-      val q = eventsStream(s, d)
+      def drain(root: String): Unit = eventsStream(s, d)
         .select($"event_id", $"user_id", $"event_type", $"value")
         .writeStream
         .option("checkpointLocation", s"$root/chk")
@@ -1277,10 +1250,17 @@ object Streaming {
           graftSinkCommit(root, id, b); ()
         }
         .start()
-      q.awaitTermination()
-      if (!fresh) {
-        java.nio.file.Files.write(marker, fmt.getBytes("UTF-8"))
-        graft.Staging.recordSource(root, d, "events", fp)
+        .awaitTermination()
+      // v2: DSv2 txn-registry ingest path
+      val root = Staging.inPlace("gsink_", d, Seq("events"), "v2-graft-sink",
+          onHit = drain) { root =>
+        // v1 = the empty store (schema'd, so the DSv2 front door can
+        // resolve it before the first batch lands): ingestion history
+        // starts from nothing
+        Maintenance.createStore(root, org.apache.spark.sql.types.StructType(
+          Tables.events(s, d).select("event_id", "user_id", "event_type", "value")
+            .schema.fields.toSeq))
+        drain(root)
       }
       s.read.format("graft").load(root)
         .groupBy($"event_type")
@@ -1305,21 +1285,7 @@ object Streaming {
   private def txnSinkStream(s: SparkSession, d: String): DataFrame =
     withStateParts(s, 8) {
       import s.implicits._
-      val (dirKey, fp) = Tables.stagingKey(d, "events")
-      val root = s"/tmp/graft_q/txnsink_$dirKey"
-      val marker = java.nio.file.Paths.get(root, "staging_format.txt")
-      val fmt = s"v1-txn-sink|$fp"
-      val fresh = java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt
-      if (!fresh) {
-        graft.Staging.rmTree(new java.io.File(root))
-        Maintenance.createStore(root, org.apache.spark.sql.types.StructType(
-          Tables.events(s, d).select("event_id", "user_id", "event_type", "value")
-            .schema.fields.toSeq),
-          partitionCols = Seq("event_type"))
-        Maintenance.enableStoreEncryption(root, "txn-sink-mk", dataPlane = true)
-      }
-      val q = eventsStream(s, d)
+      def drain(root: String): Unit = eventsStream(s, d)
         .select($"event_id", $"user_id", $"event_type", $"value")
         .writeStream
         .option("checkpointLocation", s"$root/chk")
@@ -1335,10 +1301,15 @@ object Streaming {
           ()
         }
         .start()
-      q.awaitTermination()
-      if (!fresh) {
-        java.nio.file.Files.write(marker, fmt.getBytes("UTF-8"))
-        graft.Staging.recordSource(root, d, "events", fp)
+        .awaitTermination()
+      val root = Staging.inPlace("txnsink_", d, Seq("events"), "v1-txn-sink",
+          onHit = drain) { root =>
+        Maintenance.createStore(root, org.apache.spark.sql.types.StructType(
+          Tables.events(s, d).select("event_id", "user_id", "event_type", "value")
+            .schema.fields.toSeq),
+          partitionCols = Seq("event_type"))
+        Maintenance.enableStoreEncryption(root, "txn-sink-mk", dataPlane = true)
+        drain(root)
       }
       s.read.format("graft").load(root)
         .groupBy($"event_type")
@@ -1369,25 +1340,7 @@ object Streaming {
     withStateParts(s, 8) {
       import s.implicits._
       val data = Maintenance.morData(s, d)
-      val (dirKey, fp) = Tables.stagingKey(d, "orders")
-      val root = s"/tmp/graft_q/gsrc_$dirKey"
-      val marker = java.nio.file.Paths.get(root, "staging_format.txt")
-      val fmt = s"v3-graft-source|$fp" // v3: seeded schema log (r18)
-      val fresh = java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt
-      if (!fresh) {
-        graft.Staging.rmTree(new java.io.File(root))
-        new java.io.File(root).mkdirs()
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(root, "manifest_v1.txt"),
-          (0 to 3).map(g => s"$data/base/g=$g").mkString("\n").getBytes("UTF-8"))
-        Maintenance.seedMorSchema(data, root)
-        val v2 = Maintenance.commitSnapshot(root, 1, Seq.empty,
-          Seq(s"$data/newfile", s"dv:$data/dv"))
-        Maintenance.commitSnapshot(root, v2, Seq.empty,
-          Seq(s"$data/newfile2", s"dv:$data/dv2"))
-      }
-      val q = s.readStream.format("graft")
+      def drain(root: String): Unit = s.readStream.format("graft")
         .option("readChangeFeed", "true")
         .load(root)
         .select($"_change_type".as("op"),
@@ -1399,10 +1352,19 @@ object Streaming {
         .outputMode(OutputMode.Append())
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
-      if (!fresh) {
-        java.nio.file.Files.write(marker, fmt.getBytes("UTF-8"))
-        graft.Staging.recordSource(root, d, "orders", fp)
+        .awaitTermination()
+      // v3: seeded schema log (r18)
+      val root = Staging.inPlace("gsrc_", d, Seq("orders"), "v3-graft-source",
+          onHit = drain) { root =>
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get(root, "manifest_v1.txt"),
+          (0 to 3).map(g => s"$data/base/g=$g").mkString("\n").getBytes("UTF-8"))
+        Maintenance.seedMorSchema(data, root)
+        val v2 = Maintenance.commitSnapshot(root, 1, Seq.empty,
+          Seq(s"$data/newfile", s"dv:$data/dv"))
+        Maintenance.commitSnapshot(root, v2, Seq.empty,
+          Seq(s"$data/newfile2", s"dv:$data/dv2"))
+        drain(root)
       }
       s.read.parquet(s"$root/out")
         .groupBy($"op", $"commit_version",
@@ -1459,15 +1421,21 @@ object Streaming {
     withStateParts(s, 8) {
       import s.implicits._
       val data = Maintenance.morData(s, d)
-      val (dirKey, fp) = Tables.stagingKey(d, "orders")
-      val root = s"/tmp/graft_q/gsnap_$dirKey"
-      val marker = java.nio.file.Paths.get(root, "staging_format.txt")
-      val fmt = s"v2-initial-snapshot|$fp" // v2: seeded schema log (r18)
-      val fresh = java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fmt
-      if (!fresh) {
-        graft.Staging.rmTree(new java.io.File(root))
-        new java.io.File(root).mkdirs()
+      def drain(root: String): Unit = s.readStream.format("graft")
+        .option("initialSnapshot", "true")
+        .load(root)
+        .select($"o_orderpriority", $"o_totalprice")
+        .writeStream.format("parquet")
+        .option("path", s"$root/out")
+        .option("checkpointLocation", s"$root/chk")
+        .outputMode(OutputMode.Append())
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+      // v2: seeded schema log (r18); a warm call restarts the drained
+      // checkpoint twice, both no-ops
+      val root = Staging.inPlace("gsnap_", d, Seq("orders"), "v2-initial-snapshot",
+          onHit = r => { drain(r); drain(r) }) { root =>
         java.nio.file.Files.write(
           java.nio.file.Paths.get(root, "manifest_v1.txt"),
           (0 to 3).map(g => s"$data/base/g=$g").mkString("\n").getBytes("UTF-8"))
@@ -1476,33 +1444,14 @@ object Streaming {
           Seq(s"$data/newfile", Maintenance.morDvLine(data, "dv")))
         Maintenance.commitSnapshot(root, v2, Seq.empty,
           Seq(s"$data/newfile2", Maintenance.morDvLine(data, "dv2")))
-      }
-      def drain(): Unit = {
-        val q = s.readStream.format("graft")
-          .option("initialSnapshot", "true")
-          .load(root)
-          .select($"o_orderpriority", $"o_totalprice")
-          .writeStream.format("parquet")
-          .option("path", s"$root/out")
-          .option("checkpointLocation", s"$root/chk")
-          .outputMode(OutputMode.Append())
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      drain() // batch 0: the anchor (v3) MoR state
-      if (!fresh) {
+        drain(root) // batch 0: the anchor (v3) MoR state
         // the post-anchor delta: one DSv2 append, committed exactly once
         val cols = s.read.format("graft").option("versionAsOf", 1).load(root)
           .columns.toSeq
         Tables.orders(s, d).filter($"o_orderkey" % 100 === 3)
           .select(cols.map(col): _*)
           .write.format("graft").mode("append").save(root) // -> v4
-      }
-      drain() // the SAME checkpoint continues with only v4's delta
-      if (!fresh) {
-        java.nio.file.Files.write(marker, fmt.getBytes("UTF-8"))
-        graft.Staging.recordSource(root, d, "orders", fp)
+        drain(root) // the SAME checkpoint continues with only v4's delta
       }
       s.read.parquet(s"$root/out")
         .groupBy($"o_orderpriority")
@@ -1556,19 +1505,12 @@ object Streaming {
     withStateParts(s, 8) {
       import s.implicits._
       import java.nio.file.{Files, Paths}
-      val (dirKey, fp) = Tables.stagingKey(d, "events")
-      val root = s"/tmp/graft_q/srestart_$dirKey"
-      val src = s"$root/src"
-      val marker = Paths.get(root, "staging_format.txt")
-      val fmt = s"v1-restart-sink|$fp"
-      val fresh = Files.exists(marker) &&
-        new String(Files.readAllBytes(marker), "UTF-8") == fmt
-      def hbNs: Long =
+      def hbNs(root: String): Long =
         new String(Files.readAllBytes(Paths.get(root, "hb_ns.txt")), "UTF-8").toLong
-      def runOnce(): Unit = {
-        val q = eventsStream(s, src, glob = "chunk*.parquet")
+      def runOnce(root: String): Unit = {
+        val q = eventsStream(s, s"$root/src", glob = "chunk*.parquet")
           .withWatermark("ts", "1 hour")
-          .filter($"ts" < timestamp_micros(lit(hbNs / 1000))) // see windowedAggStream
+          .filter($"ts" < timestamp_micros(lit(hbNs(root) / 1000))) // see windowedAggStream
           .groupBy(window($"ts", "1 hour"), $"event_type")
           .agg(count(lit(1)).as("n_events"), OracleMath.dsum($"value").as("sum_value"))
           .select(date_format($"window.start", "yyyy-MM-dd HH:mm:ss").as("win_start"),
@@ -1581,17 +1523,17 @@ object Streaming {
           .start()
         q.awaitTermination()
       }
-      def publishChunk(df: DataFrame, name: String): Unit = {
-        val stage = s"$root/stage_$name"
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        val part = new java.io.File(stage).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        Files.move(part.toPath, Paths.get(src, s"$name.parquet"))
-      }
-      if (!fresh) {
-        graft.Staging.vacuum() // reap dead staged dirs, like every stage-once root
-        graft.Staging.rmTree(new java.io.File(root))
-        new java.io.File(src).mkdirs()
+      // warm: the no-op restart (offsets say all batches done)
+      val root = Staging.inPlace("srestart_", d, Seq("events"), "v1-restart-sink",
+          onHit = runOnce) { root =>
+        def publishChunk(df: DataFrame, name: String): Unit = {
+          val stage = s"$root/stage_$name"
+          df.coalesce(1).write.mode("overwrite").parquet(stage)
+          val part = new java.io.File(stage).listFiles()
+            .find(_.getName.endsWith(".parquet")).get
+          Files.move(part.toPath, Paths.get(root, "src", s"$name.parquet"))
+        }
+        new java.io.File(root, "src").mkdirs()
         val ev = Tables.events(s, d)
         val mm = ev.agg(min($"ts_ns"), max($"ts_ns")).head()
         val (mn, mx) = (mm.getLong(0), mm.getLong(1))
@@ -1599,18 +1541,14 @@ object Streaming {
           (mx + 3L * 3600 * 1000 * 1000 * 1000).toString.getBytes("UTF-8"))
         val mid = mn + (mx - mn) / 2 // deterministic mid-range split
         publishChunk(ev.filter($"ts_ns" <= mid).drop("ts_ns"), "chunk1")
-        runOnce() // run 1: chunk1 only — stops with open window state
+        runOnce(root) // run 1: chunk1 only — stops with open window state
         publishChunk(
           ev.filter($"ts_ns" > mid).drop("ts_ns")
             .unionByName(ev.limit(1).drop("ts_ns")
-              .withColumn("ts", timestamp_micros(lit(hbNs / 1000)))
+              .withColumn("ts", timestamp_micros(lit(hbNs(root) / 1000)))
               .withColumn("event_type", lit("__heartbeat"))),
           "chunk2")
-        runOnce() // run 2: restart — restores state, heartbeat closes all
-        Files.write(marker, fmt.getBytes("UTF-8"))
-        graft.Staging.recordSource(root, d, "events", fp)
-      } else {
-        runOnce() // warm: the no-op restart (offsets say all batches done)
+        runOnce(root) // run 2: restart — restores state, heartbeat closes all
       }
       s.read.parquet(s"$root/data").orderBy($"win_start", $"event_type")
     }

@@ -203,6 +203,20 @@ class Round10Spec extends AnyFunSuite {
     wipe(new java.io.File(dirB))
   }
 
+  test("staging protocol lives only in core.scala (no hand-rolled stage-once blocks)") {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
+    val main = walk(new java.io.File("src/main/scala")).filter(_.getName.endsWith(".scala"))
+    assert(main.exists(_.getName == "core.scala"), "source tree not found from the test's cwd")
+    val offenders = for {
+      f <- main if f.getName != "core.scala"
+      text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      lit <- Seq("staging_format.txt", "/tmp/graft_q") if text.contains(lit)
+    } yield s"${f.getPath}: $lit"
+    assert(offenders.isEmpty,
+      s"use Staging.once/inPlace/scratch/Base instead of: ${offenders.mkString("; ")}")
+  }
+
   test("q_hybrid_rrf: exchange budget is fixed") {
     val df = SparkEntry.queries("q_hybrid_rrf")(spark, sf)
     df.count()
