@@ -3,17 +3,18 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Session factory with the engine's production defaults. Library
-  * users call `GraftSession.builder(...)`; the driver mains (Verify/
-  * Bench) apply the same settings so measured behavior matches shipped
-  * behavior.
+  * users call `GraftSession.builder(...)` or `getOrCreate(...)`; the
+  * mains (Bench, Verify, RunOne) call `getOrCreate("local[n]", n)`, so
+  * what they measure is the engine as shipped.
   *
   * Defaults and why they hold at cluster scale:
   *  - AQE on: runtime re-planning (skew-join splitting, dynamic
   *    coalescing, sort-merge→broadcast demotion) is the difference
   *    between a plan that survives 100 TB and one tuned to a sample;
-  *  - shuffle.partitions sized to parallelism here (32 local threads);
-  *    on a real cluster size it to ~2-3× total executor cores, or let
-  *    AQE coalesce from a high initial value;
+  *  - shuffle.partitions sized to the caller's parallelism (the mains
+  *    pass their local thread count); on a real cluster size it to
+  *    ~2-3× total executor cores, or let AQE coalesce from a high
+  *    initial value;
   *  - UTC session timezone: timestamp semantics must not depend on
   *    cluster locale (and the DuckDB oracle compares naive timestamps);
   *  - custom graft SQL functions registered (also available via

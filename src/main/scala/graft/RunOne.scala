@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run one driver-contract query and print its wall time.
   * Usage: tools/run_class.sh graft.RunOne <query_name> <sfDir> [explain]
@@ -8,13 +7,8 @@ object RunOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = GraftSession.getOrCreate(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
     // GRAFT_RUNONE_STAGES=1 → per-stage wall times (slow-stage hunting)
     if (sys.env.contains("GRAFT_RUNONE_STAGES")) {

@@ -292,6 +292,84 @@ object Staging {
   }
 }
 
+/** Lineage-truncation protocol of the engine's iterative Spark loops
+  * (component labels, PageRank, dup-distance BFS, label propagation,
+  * BPE merges). Each round's state is a `localCheckpoint`, so a round's
+  * plan reads one constant-size leaf however many rounds ran before it;
+  * chaining rounds directly grows the analyzed tree per round,
+  * exponentially where a round reads its state more than once.
+  *
+  * `step` builds a round's plan from the previous round's state; `init`
+  * is round 0, and if it is itself a checkpoint the loop owns its
+  * blocks from then on. The order below is
+  * load-bearing and lives only here:
+  *  - superseded states are released only once the new state is FULLY
+  *    materialized, by an eager checkpoint or a `count()` (every
+  *    partition). Until then a lazy state's lineage reads their blocks;
+  *    after a partial action (`take`/`limit`) later scans of it would
+  *    recompute through freed blocks. So a fixed-round loop releases
+  *    its rounds after the last one, a counted loop after every round;
+  *  - the final state is fully materialized when the loop returns, so
+  *    the caller may drop the caches its rounds read (edge lists);
+  *  - a state's blocks are found through its own `LogicalRDD`, never by
+  *    diffing the global persistent-RDD registry (a concurrent query's
+  *    cache landing in the diff window would lose its blocks).
+  * Lazy checkpoints are the default because these loops are
+  * scheduling-bound: an eager one costs a scheduler job per round just
+  * to materialize.
+  */
+object Iterate {
+  /** `rounds` rounds: every checkpoint lazy but the last, whose eager
+    * checkpoint is the one job that materializes the whole chain. */
+  def fixed(init: DataFrame, rounds: Int)(step: DataFrame => DataFrame): DataFrame =
+    loop(init, rounds, eagerAt = _ == rounds, changed = None)((st, _) => Some(step(st)))._1
+
+  /** Rounds until `changed(state).count()` is 0, at most
+    * `maxRounds`. That count is the round's only action and fully
+    * materializes its lazy checkpoint. Returns the last state and
+    * whether the loop converged. */
+  def untilStable(init: DataFrame, maxRounds: Int)(step: DataFrame => DataFrame)
+      (changed: DataFrame => DataFrame): (DataFrame, Boolean) =
+    loop(init, maxRounds, eagerAt = _ => false, Some(changed))((st, _) => Some(step(st)))
+
+  /** At most `maxRounds` rounds, every checkpoint eager;
+    * `step(state, round)` (rounds count from 1) returns None when the
+    * state is already a fixpoint. */
+  def eager(init: DataFrame, maxRounds: Int)(step: (DataFrame, Int) => Option[DataFrame]): DataFrame =
+    loop(init, maxRounds, eagerAt = _ => true, changed = None)(step)._1
+
+  private def loop(init: DataFrame, maxRounds: Int, eagerAt: Int => Boolean,
+      changed: Option[DataFrame => DataFrame])
+      (step: (DataFrame, Int) => Option[DataFrame]): (DataFrame, Boolean) = {
+    var state = init
+    var held = ownBlocks(init) // the current state's and every unreleased predecessor's
+    var round = 0
+    var converged = false
+    while (!converged && round < maxRounds) {
+      round += 1
+      step(state, round) match {
+        case None => converged = true
+        case Some(plan) =>
+          state = plan.localCheckpoint(eagerAt(round))
+          val left = changed.map(_(state).count())
+          converged = left.contains(0L)
+          if (eagerAt(round) || left.isDefined) {
+            held.foreach(_.unpersist(blocking = false))
+            held = Nil
+          }
+          held ++= ownBlocks(state)
+      }
+    }
+    (state, converged)
+  }
+
+  private def ownBlocks(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => Seq(r.rdd)
+      case _ => Nil
+    }
+}
+
 /** Shared helpers for oracle-exact arithmetic.
   *
   * The driver hash-compares our results against DuckDB. Double aggregation

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Staging, Tables}
+import graft.{Iterate, QueryDef, Staging, Tables}
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -593,10 +593,9 @@ object Corpus {
   // the corpus — one corpus pass builds it, and every round after that
   // touches only vocab-bounded state (a few million rows at web scale,
   // here 31). Each round is one narrow pair-count aggregate + a
-  // broadcast of the single winning pair; per-round localCheckpoint
-  // keeps the iterated plan O(1) (the `dedup_components` discipline,
-  // Dedup.scala:240-259), and superseded checkpoint blocks are dropped
-  // by unpersisting exactly the round's own LogicalRDD.
+  // broadcast of the single winning pair; an eager checkpoint per round
+  // (Iterate.eager) keeps the iterated plan O(1), the
+  // `dedup_components` discipline.
   private[graft] val BpeRounds = 10
 
   /** Counts BPE TRAINING jobs — the spec pins that warm encode /
@@ -636,22 +635,15 @@ object Corpus {
       .select(explode(TextPrep.words($"text")).as("word"))
       .filter($"word" =!= "")
       .groupBy($"word").agg(count(lit(1)).as("freq"))
-    var state = words
+    val init = words
       .select($"word", $"freq", split($"word", "").as("syms"))
       .localCheckpoint()
-    def ownRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.logical.collect {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-      }
-    var stateBlocks = ownRdds(state)
     // the learned merge table accumulates DRIVER-side: each round's
     // argmax is one row, collected by the same TakeOrdered action that
     // decides exhaustion — O(rounds) driver state, the documented
     // manifest-arithmetic budget
     var mergeRows = List.empty[(Long, String, String, Long)]
-    var rank = 1
-    var exhausted = false
-    while (rank <= BpeRounds && !exhausted) {
+    val state = Iterate.eager(init, BpeRounds) { (state, rank) =>
       val pairs = state.filter(size($"syms") >= 2)
         .select($"freq", explode(expr(
           "transform(sequence(0, size(syms) - 2), " +
@@ -664,27 +656,13 @@ object Corpus {
       // the winner into a crossJoin — 3 barriers per round, which is
       // what made the loop fragile under driver-box load). Empty ⇒
       // degenerate corpus with fewer merges than rounds.
-      val bestRow = pairs.orderBy($"n".desc, $"lft", $"rgt").head(1)
-      if (bestRow.isEmpty) exhausted = true
-      else {
-        val (l, r, n) = (bestRow(0).getString(0), bestRow(0).getString(1),
-          bestRow(0).getLong(2))
+      pairs.orderBy($"n".desc, $"lft", $"rgt").head(1).headOption.map { best =>
+        val (l, r, n) = (best.getString(0), best.getString(1), best.getLong(2))
         mergeRows ::= ((rank.toLong, l, r, n))
         // the winning pair rides into the round's plan as LITERALS —
         // no per-round broadcast exchange at all
-        val next = state
-          .select($"word", $"freq", Bpe.mergePair($"syms", lit(l), lit(r)).as("syms"))
-          .localCheckpoint()
-        val nextBlocks = ownRdds(next)
-        state = next
-        // the superseded round's checkpoint blocks are dead — but NOT
-        // the final round's, which text_bpe_encode reads after the loop
-        if (rank < BpeRounds) {
-          stateBlocks.foreach(_.unpersist(blocking = false))
-          stateBlocks = nextBlocks
-        }
+        state.select($"word", $"freq", Bpe.mergePair($"syms", lit(l), lit(r)).as("syms"))
       }
-      rank += 1
     }
     val merges = mergeRows.reverse
       .toDF("merge_rank", "pair_left", "pair_right", "n")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Iterate, QueryDef, Tables}
 import graft.functions.GraftFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1019,43 +1019,41 @@ object Dedup {
   // loop runs one O(1)-row convergence aggregate per round, not a
   // per-row collect. Oracle: DuckDB recursive-CTE transitive closure
   // over the same exact-Jaccard ≥ 0.8 pairs the minhash oracle pins.
-  def componentLabels(pairs: DataFrame, maxRounds: Int = 50): DataFrame = {
+  private val CcRounds = 50
+  def componentLabels(pairs: DataFrame): DataFrame = {
+    val (p, edges) = symmetricEdges(pairs)
+    try labelsOver(edges)
+    finally { edges.unpersist(blocking = false); p.unpersist(blocking = false) }
+  }
+
+  /** `pairs` (two id columns) as the cached symmetric edge list
+    * (src, dst), plus the cached pair list it unions; the caller
+    * unpersists both. Cached and counted BEFORE any plan forks off it:
+    * a propagation loop re-reads the edge list every round, and without
+    * the cache each round would re-scan the pair source and rebuild the
+    * union. */
+  private def symmetricEdges(pairs: DataFrame): (DataFrame, DataFrame) = {
     val s = pairs.sparkSession
     import s.implicits._
-    // cache + materialize the pair list BEFORE any plan forks off it:
-    // edges is pairs ∪ reverse(pairs) and the loop re-reads edges every
-    // round — without this, each uncached branch recomputes the entire
-    // candidate-generation pipeline upstream of `pairs` (measured ~2×
-    // the whole query cost at sf0.1)
     val p = pairs.toDF("src", "dst").cache()
     p.count()
-    val edges = p.union(p.select($"dst".as("src"), $"src".as("dst"))).cache()
-    // Each round references `labels` THREE times (neighbor lookup, the
+    (p, p.union(p.select($"dst".as("src"), $"src".as("dst"))).cache())
+  }
+
+  /** Min-label propagation over a cached symmetric edge list. */
+  private def labelsOver(edges: DataFrame): DataFrame = {
+    val s = edges.sparkSession
+    import s.implicits._
+    // Each round references the labels THREE times (neighbor lookup, the
     // carried prev_label, the pointer jump), and cache() does NOT
     // truncate the logical plan — so chaining rounds directly triples
     // the analyzed tree per round and the driver spends O(3^rounds) in
     // the analyzer (this, not execution, was the measured 499s at
-    // sf0.1). localCheckpoint (eager) collapses each round's result to
-    // a constant-size LogicalRDD leaf: plans stay O(1), rounds stay two
-    // narrow (id,label) equi-joins. The superseded round's checkpoint
-    // blocks are dropped as soon as the next round materializes.
-    // A localCheckpoint'd Dataset's logical plan is a LogicalRDD whose
-    // `rdd` IS the persisted checkpoint RDD — unpersist exactly that,
-    // never a before/after diff of the global persistent-RDD registry
-    // (a concurrent query's cache landing in the diff window would get
-    // its blocks dropped out from under it).
-    def checkpointRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.logical.collect {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-      }
-    def dropBlocks(rdds: Seq[org.apache.spark.rdd.RDD[_]]): Unit =
-      rdds.foreach(_.unpersist(blocking = false))
-    var labels = edges.select($"src".as("id")).distinct()
+    // sf0.1). Iterate checkpoints every round to a one-node leaf:
+    // plans stay O(1), rounds stay two narrow (id,label) equi-joins.
+    val init = edges.select($"src".as("id")).distinct()
       .select($"id", $"id".as("label")).localCheckpoint()
-    var labelBlocks = checkpointRdds(labels)
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < maxRounds) {
+    val (labels, converged) = Iterate.untilStable(init, CcRounds) { labels =>
       // neighbor propagation: adopt the min label among direct neighbors
       val nbrMin = edges.join(labels, edges("dst") === labels("id"))
         .groupBy(edges("src")).agg(min($"label").as("nbr_min"))
@@ -1067,39 +1065,16 @@ object Dedup {
       // (label(x) ← label(label(x))) — collapses label chains
       // geometrically, so long components converge in O(log diameter)
       // rounds instead of O(diameter)
-      // LAZY checkpoint: the convergence count below is the action that
-      // materializes it, so each round schedules ONE job, not two (the
-      // loop is scheduling-bound — every round's stages are milliseconds
-      // at any graph the candidates stage admits; the eager-checkpoint
-      // job + count job pair doubled the per-round barrier cost)
-      val next = viaNbr.as("x")
+      viaNbr.as("x")
         .join(labels.select($"id".as("jid"), $"label".as("jlabel")), $"l1" === $"jid", "left")
-        .select($"x.id",
-          least($"l1", coalesce($"jlabel", $"l1")).as("next_label"),
-          $"prev_label")
-        .localCheckpoint(eager = false)
-      val nextBlocks = checkpointRdds(next)
-      changed = next.filter($"next_label" < $"prev_label").count()
-      labels = next.select($"id", $"next_label".as("label"))
-      // INVARIANT (r17 ADVICE): the count() above must FULLY
-      // materialize the lazy checkpoint — every partition — BEFORE
-      // dropBlocks unpersists the previous round, because `next`'s
-      // lineage reads the previous round's blocks. A partial action
-      // here (take/limit) or reordering dropBlocks above the count
-      // would make later scans of `next` recompute through freed
-      // blocks. count() computes all partitions; keep it that way.
-      dropBlocks(labelBlocks) // previous round is now dead
-      labelBlocks = nextBlocks
-      rounds += 1
-    }
-    edges.unpersist(blocking = false)
-    p.unpersist(blocking = false)
+        .select($"x.id", least($"l1", coalesce($"jlabel", $"l1")).as("label"), $"prev_label")
+    }(_.filter($"label" < $"prev_label"))
     // silent non-convergence would hand the caller SPLIT components that
     // look like a correct answer
-    if (changed > 0) throw new IllegalStateException(
-      s"componentLabels did not converge after $maxRounds rounds " +
-        s"($changed labels still shrinking); raise maxRounds")
-    labels
+    if (!converged) throw new IllegalStateException(
+      s"componentLabels did not converge after $CcRounds rounds " +
+        "(labels still shrinking); raise CcRounds")
+    labels.select($"id", $"label")
   }
 
   private def components(s: SparkSession, d: String): DataFrame = {
@@ -1482,8 +1457,8 @@ object Dedup {
   //  - each iteration is one narrow shuffle: edges (16 bytes/row,
   //    cached) join the 16-byte (id, rank) table on src, aggregate
   //    contributions by dst — document text and degree never re-derive;
-  //  - localCheckpoint per round truncates the lineage exactly like
-  //    Dedup.componentLabels / the BPE trainer;
+  //  - a checkpoint per round (Iterate.fixed) truncates the lineage
+  //    exactly like Dedup.componentLabels / the BPE trainer;
   //  - iteration count is FIXED (10), so convergence is deterministic
   //    and the oracle replays rounds unrolled, the text_bpe discipline.
   // Parity: all arithmetic is exact scaled-integer — ranks carry
@@ -1515,25 +1490,15 @@ object Dedup {
     val n = nodes.count() // one scalar (graph order), not data
     val r0 = PrScale / n
     val base = (15L * r0) / 100L
-    var ranks = nodes.withColumn("r", lit(r0))
-    // LAZY per-round checkpoints (r18): each round references `ranks`
-    // once, so the plan collapse is all the checkpoint must provide —
-    // eager materialization spent one scheduler job per round writing
-    // the full (id, r) table to the block store. The FINAL round is
-    // eager: one job materializes the 10-round chain before the caches
-    // it reads are dropped below.
-    for (it <- 1 to PrIters) {
+    val ranks = Iterate.fixed(nodes.withColumn("r", lit(r0)), PrIters) { ranks =>
       val contrib = edgesDeg
         .join(ranks.select($"id".as("src"), $"r"), "src")
         .groupBy($"dst").agg(sum(expr("r div deg")).as("cs"))
-      ranks = nodes
+      nodes
         .join(contrib.select($"dst".as("id"), $"cs"), Seq("id"), "left")
         .select($"id",
           expr(s"$base + (85 * coalesce(cs, 0)) div 100").as("r"))
-        .localCheckpoint(eager = it == PrIters)
     }
-    // INVARIANT: the eager final-round checkpoint above has fully
-    // materialized every round BEFORE these caches drop.
     edges.unpersist(blocking = false)
     edgesDeg.unpersist(blocking = false)
     ranks.join(deg.select($"src".as("id"), $"deg"), Seq("id"), "left")
@@ -1626,36 +1591,25 @@ object Dedup {
   private val BfsRounds = 8
   private def dupDistance(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val pairs = verifiedPairs(s, d).select($"doc_a", $"doc_b")
-    val p = pairs.toDF("src", "dst").cache()
-    p.count()
-    val edges = p.union(p.select($"dst".as("src"), $"src".as("dst"))).cache()
-    val labels = componentLabels(pairs)
-    // LAZY per-round checkpoints (r18, the componentLabels lesson one
-    // step further): eager = one scheduler job PER ROUND just to
-    // materialize; lazy still collapses each round's logical plan to a
-    // LogicalRDD at call time (the analyzer stays O(1) — each round
-    // references dist twice), while the FINAL round is eager so one job
-    // materializes the whole 8-round chain before the caches it reads
-    // are dropped below. A round's two consumers may race-recompute its
-    // reduce side once (shuffle files cap the recompute depth at one
-    // round) — measured cheaper than seven materialization barriers.
-    var dist = labels
+    val (p, edges) = symmetricEdges(verifiedPairs(s, d).select($"doc_a", $"doc_b"))
+    val labels = labelsOver(edges)
+    // lazy per-round checkpoints (r18) although each round references
+    // dist twice: its two consumers may race-recompute the previous
+    // round's reduce side once (shuffle files cap the recompute depth
+    // at one round) — measured cheaper than seven materialization
+    // barriers.
+    val init = labels
       .select($"id",
         when($"id" === $"label", 0L).otherwise(lit(null).cast("long")).as("dist"))
       .localCheckpoint(eager = false)
-    for (round <- 1 to BfsRounds) {
+    val dist = Iterate.fixed(init, BfsRounds) { dist =>
       val nbrMin = edges
         .join(dist.filter($"dist".isNotNull).select($"id".as("dst"), $"dist"), "dst")
         .groupBy($"src").agg(min($"dist" + 1).as("nd"))
-      dist = dist.join(nbrMin.select($"src".as("id"), $"nd"), Seq("id"), "left")
+      dist.join(nbrMin.select($"src".as("id"), $"nd"), Seq("id"), "left")
         .select($"id",
           least(coalesce($"dist", $"nd"), coalesce($"nd", $"dist")).as("dist"))
-        .localCheckpoint(eager = round == BfsRounds)
     }
-    // INVARIANT: the eager final-round checkpoint above has fully
-    // materialized every round BEFORE these caches drop — a lazy tail
-    // here would recompute the candidate pipeline per round reference.
     edges.unpersist(blocking = false)
     p.unpersist(blocking = false)
     dist
@@ -1936,7 +1890,7 @@ object Dedup {
         .groupBy($"src").agg(count(lit(1)).as("dg"))
       // LAZY checkpoints, ONE job per round (r18, the componentLabels
       // lesson): the convergence count below computes removed, which
-      // computes aliveNext on the way — both persist as LogicalRDDs
+      // computes aliveNext on the way — both persist as checkpoints
       // for the next round — where the two eager checkpoints spent two
       // extra scheduler jobs per round just to materialize.
       // INVARIANT: count() must fully materialize removed (and through

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Staging, Tables}
+import graft.{Iterate, QueryDef, Staging, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2222,30 +2222,22 @@ object Similarity {
       .select($"vec_id", $"label",
         when($"vec_id" % 5 === 0, lit(-1)).otherwise($"label").as("seed_lab"))
       .localCheckpoint()
-    var cur = seeds.select($"vec_id", $"seed_lab".as("lab"))
+    val init = seeds.select($"vec_id", $"seed_lab".as("lab"))
       .localCheckpoint(eager = false)
     val w = Window.partitionBy($"src").orderBy($"c".desc, $"lab")
-    // LAZY per-round checkpoints (r18): each round references `cur`
-    // once, so the LogicalRDD plan collapse is all the checkpoint must
-    // provide — eager spent one scheduler job per round. The FINAL
-    // round is eager: one job materializes the whole chain before the
-    // caches it reads are dropped below.
-    for (round <- 1 to LpRounds) {
+    val cur = Iterate.fixed(init, LpRounds) { cur =>
       val votes = edges
         .join(cur.select($"vec_id".as("dst"), $"lab"), "dst")
         .filter($"lab" =!= -1)
         .groupBy($"src", $"lab").agg(count(lit(1)).as("c"))
       val best = votes.withColumn("rn", row_number().over(w))
         .filter($"rn" === 1).select($"src", $"lab".as("vote"))
-      cur = seeds
+      seeds
         .join(best.select($"src".as("vec_id"), $"vote"), Seq("vec_id"), "left")
         .select($"vec_id",
           when($"seed_lab" =!= -1, $"seed_lab")
             .otherwise(coalesce($"vote", lit(-1))).as("lab"))
-        .localCheckpoint(eager = round == LpRounds)
     }
-    // INVARIANT: the eager final-round checkpoint above has fully
-    // materialized every round BEFORE these caches drop.
     edges.unpersist(blocking = false)
     p.unpersist(blocking = false)
     seeds

@@ -203,18 +203,30 @@ class Round10Spec extends AnyFunSuite {
     wipe(new java.io.File(dirB))
   }
 
-  test("staging protocol lives only in core.scala (no hand-rolled stage-once blocks)") {
+  /** `file: literal` for every main source but core.scala that contains
+    * one of `lits`. */
+  private def outsideCore(lits: Seq[String]): Seq[String] = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
     val main = walk(new java.io.File("src/main/scala")).filter(_.getName.endsWith(".scala"))
     assert(main.exists(_.getName == "core.scala"), "source tree not found from the test's cwd")
-    val offenders = for {
+    for {
       f <- main if f.getName != "core.scala"
       text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      lit <- Seq("staging_format.txt", "/tmp/graft_q") if text.contains(lit)
+      lit <- lits if text.contains(lit)
     } yield s"${f.getPath}: $lit"
+  }
+
+  test("staging protocol lives only in core.scala (no hand-rolled stage-once blocks)") {
+    val offenders = outsideCore(Seq("staging_format.txt", "/tmp/graft_q"))
     assert(offenders.isEmpty,
       s"use Staging.once/inPlace/scratch/Base instead of: ${offenders.mkString("; ")}")
+  }
+
+  test("checkpoint release lives only in core.scala (no hand-rolled block dropping)") {
+    val offenders = outsideCore(Seq("LogicalRDD"))
+    assert(offenders.isEmpty,
+      s"iterate through Iterate.fixed/untilStable/eager instead of: ${offenders.mkString("; ")}")
   }
 
   test("q_hybrid_rrf: exchange budget is fixed") {
