@@ -103,12 +103,6 @@ object Bench {
     * ~1 s of a 180 s bench. Membership is part of the contract. */
   val InterleaveProbe: String = "q6_filter_agg"
 
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-
   /** Pinned canary set for cross-round normalization. Ten trivial,
     * plan-stable queries (single-scan aggs, one broadcast join, a
     * row-local text pass) whose intrinsic cost has been flat since r5;
@@ -138,7 +132,7 @@ object Bench {
     // "queries" stays a flat name→seconds map (the driver parses it);
     // "stats" adds the per-query min/median/n so the committed artifact
     // carries the noise-control signal instead of leaving it in scratch logs
-    val qs = results.map(r => s"${jstr(r.name)}:${r.seconds}").mkString("{", ",", "}")
+    val qs = results.map(r => s"${Json.quote(r.name)}:${r.seconds}").mkString("{", ",", "}")
     val cm = canaryMedian(results)
     def norm(r: QueryResult): Double =
       if (cm > 0) math.round(r.seconds / cm * 1e4) / 1e4 else -1.0
@@ -151,21 +145,22 @@ object Bench {
         if (t > 0) math.round(r.seconds / t * 1e4) / 1e4 else -1.0
       }
     val stats = results.zipWithIndex.map { case (r, i) =>
-      s"""${jstr(r.name)}:{"min":${r.seconds},"median":${r.median},""" +
+      s"""${Json.quote(r.name)}:{"min":${r.seconds},"median":${r.median},""" +
         s""""cpu":${r.cpuSeconds},"n":${r.times.size},"norm":${norm(r)},""" +
         s""""lnorm":${lnorm(i, r)},"remeasured":${r.remeasured}}"""
     }.mkString("{", ",", "}")
-    val errs = results.collect { case QueryResult(n, _, Some(e), _, _) => s"${jstr(n)}:${jstr(e)}" }
+    val errs = results.collect { case QueryResult(n, _, Some(e), _, _) =>
+      s"${Json.quote(n)}:${Json.quote(e)}" }
       .mkString("{", ",", "}")
     val total = results.map(_.seconds).sum
     val sampleJson = samples.map { case (i, t) => s"[$i,$t]" }.mkString("[", ",", "]")
     val canary = s"""{"median_min":$cm,"n_present":${
       results.count(r => CanaryQueries.contains(r.name) && r.error.isEmpty)},""" +
-      s""""queries":[${CanaryQueries.map(jstr).mkString(",")}],""" +
-      s""""probe":${jstr(InterleaveProbe)},"samples":$sampleJson}"""
+      s""""queries":[${CanaryQueries.map(Json.quote).mkString(",")}],""" +
+      s""""probe":${Json.quote(InterleaveProbe)},"samples":$sampleJson}"""
     s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"stats":$stats,""" +
       s""""canary":$canary,""" +
-      s""""errors":$errs,"n_errors":${results.count(_.error.isDefined)},"sf":${jstr(sfDir)}}"""
+      s""""errors":$errs,"n_errors":${results.count(_.error.isDefined)},"sf":${Json.quote(sfDir)}}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -280,14 +275,14 @@ object Bench {
     // total, error count, the 10 slowest queries with min/median, and
     // a pointer to the full per-query stats persisted above.
     val top = results.sortBy(-_.seconds).take(10).map(r =>
-      f"""${jstr(r.name)}:{"min":${r.seconds}%.3f,"median":${r.median}%.3f,"cpu":${r.cpuSeconds}%.3f}""")
+      f"""${Json.quote(r.name)}:{"min":${r.seconds}%.3f,"median":${r.median}%.3f,"cpu":${r.cpuSeconds}%.3f}""")
       .mkString("{", ",", "}")
     val cpuTotal = results.map(r => math.max(0.0, r.cpuSeconds)).sum
     println(s"""{"metric":"total","value":${f"${results.map(_.seconds).sum}%.3f"},""" +
       s""""unit":"sec","cpu_total":${f"$cpuTotal%.3f"},"n_queries":${results.size},""" +
       s""""n_errors":${results.count(_.error.isDefined)},""" +
       s""""canary_median":${canaryMedian(results)},"top":$top,""" +
-      s""""detail":"full per-query stats in $outPath","sf":${jstr(sfDir)}}""")
+      s""""detail":"full per-query stats in $outPath","sf":${Json.quote(sfDir)}}""")
     spark.stop()
   }
 }

@@ -393,3 +393,12 @@ object OracleMath {
   def sqlAvg(expr: String): String =
     s"(CAST(SUM(CAST(($expr) AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*))"
 }
+
+/** The one JSON string quoter: Jackson's encoder escapes quotes,
+  * backslashes and every control character, so free text (SQL with
+  * tabs, error messages) never breaks a consumer's parse. */
+object Json {
+  def quote(s: String): String =
+    "\"" + new String(com.fasterxml.jackson.core.io.JsonStringEncoder
+      .getInstance().quoteAsString(s)) + "\""
+}

@@ -38,23 +38,15 @@ object EncryptedParquet {
       wrappedDek: Option[String], masterKeyId: Option[String])
   final case class Manifest(rowCount: Long, masterKeyId: String, columns: Seq[ColumnMeta])
 
-  // -- manifest JSON (hand-rolled: tiny, schema'd, zero extra deps) --------
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-
+  // -- manifest JSON (hand-rolled writer: tiny and schema'd) --------------
   private def manifestJson(m: Manifest): String = {
+    def field(k: String, v: String): String = s""""$k": ${graft.Json.quote(v)}"""
     val cols = m.columns.map { c =>
-      val base = Seq(s"${jstr("name")}: ${jstr(c.name)}",
-        s"${jstr("mode")}: ${jstr(c.mode)}",
-        s"${jstr("orig_type")}: ${jstr(c.origType)}") ++
-        c.wrappedDek.map(w => s"${jstr("wrapped_dek")}: ${jstr(w)}") ++
-        c.masterKeyId.map(k => s"${jstr("master_key_id")}: ${jstr(k)}")
-      base.mkString("{", ", ", "}")
+      (Seq(field("name", c.name), field("mode", c.mode), field("orig_type", c.origType)) ++
+        c.wrappedDek.map(field("wrapped_dek", _)) ++
+        c.masterKeyId.map(field("master_key_id", _))).mkString("{", ", ", "}")
     }.mkString("[", ", ", "]")
-    s"""{${jstr("row_count")}: ${m.rowCount}, ${jstr("master_key_id")}: ${jstr(m.masterKeyId)}, ${jstr("columns")}: $cols}"""
+    s"""{"row_count": ${m.rowCount}, ${field("master_key_id", m.masterKeyId)}, "columns": $cols}"""
   }
 
   private def parseManifest(json: String): Manifest = {
@@ -70,26 +62,36 @@ object EncryptedParquet {
     Manifest(root.get("row_count").asLong(), root.get("master_key_id").asText(), cols)
   }
 
-  private def writeManifest(spark: SparkSession, dir: String, m: Manifest,
-      resolver: MasterKeyResolver): Unit = {
-    val blob = AesGcm.encrypt(resolver.resolve(m.masterKeyId),
-      manifestJson(m).getBytes(StandardCharsets.UTF_8))
+  // -- the manifest blob: base64 of the AES-GCM ciphertext -----------------
+  private def manifestFs(spark: SparkSession, dir: String): (FileSystem, Path) = {
     val p = new Path(dir, ManifestFile)
-    val fs = FileSystem.get(p.toUri, spark.sessionState.newHadoopConf())
+    (FileSystem.get(p.toUri, spark.sessionState.newHadoopConf()), p)
+  }
+
+  /** Raw (still-encrypted) manifest bytes — for specs asserting the
+    * footer really is ciphertext. */
+  def rawManifestBytes(spark: SparkSession, dir: String): Array[Byte] = {
+    val (fs, p) = manifestFs(spark, dir)
+    val in = fs.open(p)
+    try Base64.getDecoder.decode(org.apache.commons.io.IOUtils.toByteArray(in))
+    finally in.close()
+  }
+
+  private def writeManifestBlob(spark: SparkSession, dir: String, blob: Array[Byte]): Unit = {
+    val (fs, p) = manifestFs(spark, dir)
     val out = fs.create(p, true)
     try out.write(Base64.getEncoder.encode(blob)) finally out.close()
   }
 
+  private def writeManifest(spark: SparkSession, dir: String, m: Manifest,
+      resolver: MasterKeyResolver): Unit =
+    writeManifestBlob(spark, dir, AesGcm.encrypt(resolver.resolve(m.masterKeyId),
+      manifestJson(m).getBytes(StandardCharsets.UTF_8)))
+
   def readManifest(spark: SparkSession, dir: String, masterKeyId: String,
-      resolver: MasterKeyResolver = DemoMasterKeyResolver): Manifest = {
-    val p = new Path(dir, ManifestFile)
-    val fs = FileSystem.get(p.toUri, spark.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    val raw = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-    val json = new String(AesGcm.decrypt(resolver.resolve(masterKeyId),
-      Base64.getDecoder.decode(raw)), StandardCharsets.UTF_8)
-    parseManifest(json)
-  }
+      resolver: MasterKeyResolver = DemoMasterKeyResolver): Manifest =
+    parseManifest(new String(AesGcm.decrypt(resolver.resolve(masterKeyId),
+      rawManifestBytes(spark, dir)), StandardCharsets.UTF_8))
 
   /** Flip one bit of the encrypted manifest IN PLACE — the hook the
     * tamper gate (crypto_footer_tamper) and specs use to prove the
@@ -97,24 +99,9 @@ object EncryptedParquet {
     * any single-bit change must surface as an authentication error
     * before a single column key is unwrapped or a data row decrypted. */
   def tamperManifest(spark: SparkSession, dir: String): Unit = {
-    val p = new Path(dir, ManifestFile)
-    val fs = FileSystem.get(p.toUri, spark.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    val raw = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-    val blob = Base64.getDecoder.decode(raw)
+    val blob = rawManifestBytes(spark, dir)
     blob(blob.length / 2) = (blob(blob.length / 2) ^ 0x01).toByte
-    val out = fs.create(p, true)
-    try out.write(Base64.getEncoder.encode(blob)) finally out.close()
-  }
-
-  /** Raw (still-encrypted) manifest bytes — for specs asserting the
-    * footer really is ciphertext. */
-  def rawManifestBytes(spark: SparkSession, dir: String): Array[Byte] = {
-    val p = new Path(dir, ManifestFile)
-    val fs = FileSystem.get(p.toUri, spark.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    try Base64.getDecoder.decode(org.apache.commons.io.IOUtils.toByteArray(in))
-    finally in.close()
+    writeManifestBlob(spark, dir, blob)
   }
 
   // -- write ---------------------------------------------------------------

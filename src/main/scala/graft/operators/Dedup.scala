@@ -1763,10 +1763,7 @@ object Dedup {
       .manifestZones(root, cur).map(_._1).distinct.size
     // from the store's own commit log, not the staging constant — the
     // card must report what the engine RECORDED (r15 verdict #3)
-    val lastCommit = graft.operators.Maintenance
-      .readStoreText(root, "commits_ts.txt")
-      .split("\n").map(_.trim).filter(_.nonEmpty)
-      .map(_.split("=", 2)(1).toLong).max
+    val lastCommit = graft.operators.Maintenance.commitEpochs(root).values.max
     val storeRows = Seq(
       "store_versions" -> cur.toDouble,
       "store_data_groups" -> dataLines.size.toDouble,

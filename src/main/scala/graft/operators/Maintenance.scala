@@ -257,6 +257,171 @@ object Maintenance {
       |    (PARTITION BY user_id ORDER BY ts_ns, event_id) IS NULL AS is_current
       |FROM chg ORDER BY user_id, valid_from_us""".stripMargin
 
+  // -- the snapshot store's on-disk format ------------------------------------
+  // This section is the only code that knows the store's control-plane
+  // layout; every other file goes through the functions below. Under a
+  // store root (all driver-side manifest arithmetic, no data IO until
+  // the resolved scan):
+  //  - `manifest_v<N>.txt` — newline-separated file-group paths of
+  //    snapshot N. `dv:` lines are merge-on-read deletion-vector
+  //    sidecars (parquet of `(file_key, row_index)` positions), `zone:`
+  //    lines per-group column stats, `txn:` lines the idempotent-writer
+  //    registry. A version is claimed only by [[commitSnapshot]]'s
+  //    atomic link; [[writeManifest]] seeds or rewrites one in place.
+  //  - `commits_ts.txt` — `version=epochSeconds` lines; `timestampAsOf`
+  //    resolves through [[resolveAsOf]] (fail-closed before the first
+  //    commit, exactly like Delta/Iceberg).
+  //  - `schema_v<N>.json` — the physical-schema log; `mapping_v<N>.txt`
+  //    — `logical=physical` column-mapping lines (renames/drops are
+  //    metadata-only commits; reads project the mapping, and pruning
+  //    and filter pushdown translate names). Entry N serves every
+  //    snapshot from N up to the next entry ([[VersionLog.atOrBelow]]).
+  //  - `partition_cols.txt` — the declared partition columns, comma-
+  //    separated; `parquet_opts.txt` — `key=value` writer options.
+  //  - `zones_v1.txt` + `zones_col.txt` — per-group `path|lo|hi|rows`
+  //    zone map over one column; pushed range/equality filters on it
+  //    prune whole file groups BEFORE listing.
+  //  - `store_key.txt` — `key=value` lines holding the KMS-wrapped DEK
+  //    of an encrypted control plane (never itself encrypted).
+  // Every other text file may be AES-GCM ciphertext once
+  // [[enableStoreEncryption]] ran, so reads go through [[readStoreText]]
+  // and writes through [[writeStoreText]].
+  private val StoreEncMagic = "GRAFTENC1\n".getBytes("UTF-8")
+  private val StoreKeyFile = "store_key.txt"
+  private val CommitLogFile = "commits_ts.txt"
+  private val PartitionColsFile = "partition_cols.txt"
+  private val ParquetOptsFile = "parquet_opts.txt"
+  private val ZonesFile = "zones_v1.txt"
+  private val ZoneColFile = "zones_col.txt"
+  /** A staged data dir's recorded parquet file schema (see [[seedStore]]). */
+  private val StagedSchemaFile = "schema.json"
+
+  /** A per-version log `<prefix><N><suffix>` under a store root. */
+  private[graft] final case class VersionLog(prefix: String, suffix: String) {
+    def file(version: Int): String = s"$prefix$version$suffix"
+    def owns(name: String): Boolean = name.startsWith(prefix) && name.endsWith(suffix)
+    /** Logged versions. The suffix is part of the match: a concurrent
+      * writer's in-flight temp file (or a crash-orphaned one) must never
+      * count as a version or make the listing throw. */
+    def versions(root: String): Seq[Int] =
+      Option(new java.io.File(root).list()).toSeq.flatten.filter(owns)
+        .flatMap(_.stripPrefix(prefix).stripSuffix(suffix).toIntOption)
+    /** The largest logged version <= `version`: the entry serving it. */
+    def atOrBelow(root: String, version: Int): Option[Int] =
+      if (new java.io.File(root, file(version)).exists()) Some(version)
+      else versions(root).filter(_ <= version).maxOption
+  }
+  private[graft] val ManifestLog = VersionLog("manifest_v", ".txt")
+  private[graft] val SchemaLog = VersionLog("schema_v", ".json")
+  private[graft] val MappingLog = VersionLog("mapping_v", ".txt")
+
+  private def textLines(text: String): Seq[String] =
+    text.split("\n").toIndexedSeq.map(_.trim).filter(_.nonEmpty)
+
+  /** Lines (trimmed, blanks dropped) of store text file `name`; empty
+    * when the file is absent. */
+  private def storeLines(root: String, name: String): Seq[String] =
+    if (!new java.io.File(root, name).exists()) Nil
+    else textLines(readStoreText(root, name))
+
+  /** The `key=value` lines of store text file `name` as pairs in file
+    * order, split at the first '=' (the commit log, mappings, writer
+    * options and the key file). */
+  private def keyValues(root: String, name: String): Seq[(String, String)] =
+    storeLines(root, name).filter(_.contains("=")).map { l =>
+      val i = l.indexOf('='); (l.take(i), l.drop(i + 1))
+    }
+  private def renderKeyValues(kvs: Seq[(Any, Any)]): String =
+    kvs.map { case (k, v) => s"$k=$v" }.mkString("\n")
+
+  /** True iff `root` holds a store (its v1 manifest exists). */
+  def isStore(root: String): Boolean =
+    new java.io.File(root, ManifestLog.file(1)).exists()
+
+  /** Write manifest `version` listing `lines` — seeding a store or
+    * rewriting a version in place, never a commit (commits claim their
+    * version through [[commitSnapshot]]). */
+  private[graft] def writeManifest(root: String, version: Int, lines: Seq[String]): Unit =
+    writeStoreText(root, ManifestLog.file(version), lines.mkString("\n"))
+
+  /** Reset `root` to a fresh store whose v1 manifest lists `groups`.
+    * With `schemaOf`, the schema log starts from that staged data dir's
+    * recorded file schema ([[recordFileSchema]], r18): [[schemaAt]]
+    * serves every version from the largest entry <= it and data commits
+    * are schema-strict, so this one text file replaces a
+    * footer-inference Spark job on EVERY subsequent resolve of the store
+    * (mergeSchema commits still log their own evolved entry on top).
+    * Staged dirs without the record fall back to inference unchanged. */
+  private[graft] def seedStore(root: String, groups: Seq[String],
+      schemaOf: Option[String] = None): Unit = {
+    Staging.rmTree(new java.io.File(root))
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
+    writeManifest(root, 1, groups)
+    for (data <- schemaOf; staged = java.nio.file.Paths.get(data, StagedSchemaFile)
+         if java.nio.file.Files.exists(staged))
+      writeStoreText(root, SchemaLog.file(1),
+        new String(java.nio.file.Files.readAllBytes(staged), "UTF-8"))
+  }
+
+  /** Record `group`'s parquet file schema in the staged dir `dir`, once
+    * at a content-keyed staging build — what [[seedStore]] seeds from.
+    * It IS the inferred schema, nullability included, so resolution is
+    * bit-identical to the footer-inference path it short-circuits. */
+  private def recordFileSchema(s: SparkSession, dir: java.io.File, group: String): Unit =
+    java.nio.file.Files.write(dir.toPath.resolve(StagedSchemaFile),
+      s.read.parquet(group).schema.json.getBytes("UTF-8"))
+
+  /** The schema-log entry serving snapshot `version`, if any. A
+    * malformed entry reads as None (fail open: footer inference). */
+  private[graft] def schemaAt(root: String, version: Int)
+      : Option[org.apache.spark.sql.types.StructType] =
+    SchemaLog.atOrBelow(root, version).flatMap { m =>
+      try Some(org.apache.spark.sql.types.DataType.fromJson(
+        readStoreText(root, SchemaLog.file(m)))
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+      catch { case _: IllegalArgumentException => None }
+    }
+  private[graft] def writeSchemaLog(root: String, version: Int,
+      schema: org.apache.spark.sql.types.StructType): Unit =
+    writeStoreText(root, SchemaLog.file(version), schema.json)
+
+  /** The column mapping (logical -> physical, in column order) serving
+    * snapshot `version`, if any. */
+  private[graft] def mappingAt(root: String, version: Int): Option[Seq[(String, String)]] =
+    MappingLog.atOrBelow(root, version).map(m => keyValues(root, MappingLog.file(m)))
+  private[graft] def writeMapping(root: String, version: Int,
+      mapping: Seq[(String, String)]): Unit =
+    writeStoreText(root, MappingLog.file(version), renderKeyValues(mapping))
+
+  /** The store's declared partition columns (empty: unpartitioned). */
+  private[graft] def partitionCols(root: String): Seq[String] =
+    storeLines(root, PartitionColsFile).flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
+  private[graft] def writePartitionCols(root: String, cols: Seq[String]): Unit =
+    writeStoreText(root, PartitionColsFile, cols.mkString(","))
+
+  /** The store's zone-map column, if it has a zone map. */
+  private[graft] def zoneColumn(root: String): Option[String] =
+    storeLines(root, ZoneColFile).headOption
+
+  /** Parsed (path, lo, hi, n_rows) zone rows — manifest arithmetic only;
+    * empty without a zone map. */
+  private[graft] def zoneStats(root: String): Seq[(String, String, String, Long)] =
+    storeLines(root, ZonesFile).map(_.split('|'))
+      .collect { case Array(path, lo, hi, n) => (path, lo, hi, n.toLong) }
+
+  /** The commit log: snapshot version -> commit epoch (seconds).
+    * Empty for stores without one. */
+  private[graft] def commitEpochs(root: String): Map[Int, Long] =
+    keyValues(root, CommitLogFile).map { case (v, t) => v.toInt -> t.toLong }.toMap
+
+  /** Idempotent, atomic commit-log write: skip-if-current, and the
+    * atomic replace means a concurrent reader (a parallel bench rep
+    * mid-resolveAsOf) never observes a truncated log, which a plain
+    * truncate-then-write allows. */
+  private[graft] def writeCommitLog(root: String, epochs: Seq[(Int, Long)]): Unit =
+    if (commitEpochs(root) != epochs.toMap)
+      writeStoreText(root, CommitLogFile, renderKeyValues(epochs))
+
   // -- io_snapshot_read: copy-on-write snapshot versioning (time travel) ---
   // Delta/Iceberg's core idea on bare parquet: a table version is a
   // MANIFEST (list of immutable files), a write adds new files plus a
@@ -280,15 +445,6 @@ object Maintenance {
       .filterNot(l => l.startsWith("zone:") || l.startsWith("txn:"))
       .map(DvLine.normalize)
 
-  /** The commit log: snapshot version -> commit epoch (seconds).
-    * Empty for stores without `commits_ts.txt`. */
-  private[graft] def commitEpochs(root: String): Map[Int, Long] =
-    if (!new java.io.File(root, "commits_ts.txt").exists()) Map.empty
-    else readStoreText(root, "commits_ts.txt")
-      .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-      .map { l => val Array(v, t) = l.split("=", 2); v.toInt -> t.toLong }
-      .toMap
-
   /** Latest idempotent-writer version recorded for `app` at snapshot
     * `version`, if any (the `txn:` registry, r16 verdict #2). */
   private[graft] def txnVersionAt(root: String, version: Int,
@@ -298,8 +454,7 @@ object Maintenance {
   /** Every line of a manifest, including `zone:` stat lines and raw
     * (read-set-annotated) `dv:` lines. */
   private[graft] def manifestRawLines(root: String, version: Int): Seq[String] =
-    readStoreText(root, s"manifest_v$version.txt")
-      .split("\n").toIndexedSeq.map(_.trim).filter(_.nonEmpty)
+    textLines(readStoreText(root, ManifestLog.file(version)))
 
   /** Deletion-vector manifest lines (r16). Two forms:
     *
@@ -407,20 +562,22 @@ object Maintenance {
   // an O(1) metadata operation; ciphertexts never rewrite. All of this
   // is driver-side O(manifest) work; data files are untouched (column
   // encryption is the separate graft.crypto surface).
-  private val StoreEncMagic = "GRAFTENC1\n".getBytes("UTF-8")
-  private val StoreKeyFile = "store_key.txt"
+
+  /** The key file's `key=value` pairs, in file order (empty: plaintext
+    * control plane). */
+  private def storeKey(root: String): Seq[(String, String)] = keyValues(root, StoreKeyFile)
+  private def writeStoreKey(root: String, kvs: Seq[(String, String)]): Unit =
+    atomicWrite(root, StoreKeyFile, renderKeyValues(kvs).getBytes("UTF-8"))
 
   /** The store's unwrapped DEK, when metadata encryption is enabled. */
   private[graft] def storeDek(root: String): Option[Array[Byte]] = {
-    val p = java.nio.file.Paths.get(root, StoreKeyFile)
-    if (!java.nio.file.Files.exists(p)) None
-    else {
-      val kv = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        .split("\n").map(_.trim).filter(_.contains("="))
-        .map { l => val Array(k, v) = l.split("=", 2); (k, v) }.toMap
-      Some(graft.crypto.Kms.unwrapFromBase64(kv("wrappedDek"), kv("masterKeyId")))
-    }
+    val kv = storeKey(root).toMap
+    kv.get("wrappedDek").map(graft.crypto.Kms.unwrapFromBase64(_, kv("masterKeyId")))
   }
+
+  private def isCiphertext(bytes: Array[Byte]): Boolean =
+    bytes.length >= StoreEncMagic.length &&
+      bytes.take(StoreEncMagic.length).sameElements(StoreEncMagic)
 
   /** Read a store metadata file, transparently decrypting when it
     * carries the encryption magic. Fail-closed by construction: a
@@ -429,8 +586,8 @@ object Maintenance {
   private[graft] def readStoreText(root: String, name: String): String = {
     val bytes = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(root, name))
-    if (bytes.length < StoreEncMagic.length ||
-        !bytes.take(StoreEncMagic.length).sameElements(StoreEncMagic))
+    // the key file is never encrypted: reading it must not recurse
+    if (name == StoreKeyFile || !isCiphertext(bytes))
       return new String(bytes, "UTF-8")
     val dek = storeDek(root).getOrElse(throw new SecurityException(
       s"$name is encrypted but $root has no $StoreKeyFile"))
@@ -456,16 +613,21 @@ object Maintenance {
           name.getBytes("UTF-8")))
   }
 
-  /** Atomic write of a (possibly encrypted) metadata file. */
-  private[graft] def writeStoreText(root: String, name: String,
-      text: String): Unit = {
+  /** Atomic replace of store file `name` (temp file + ATOMIC_MOVE): a
+    * concurrent reader sees the old bytes or the new, never a torn
+    * file. The temp name starts with '.', so no lister matches it. */
+  private def atomicWrite(root: String, name: String, bytes: Array[Byte]): Unit = {
     val target = java.nio.file.Paths.get(root, name)
     val tmpF = java.nio.file.Files.createTempFile(target.getParent, s".$name", ".tmp")
-    java.nio.file.Files.write(tmpF, encodeStoreText(root, name, text))
+    java.nio.file.Files.write(tmpF, bytes)
     java.nio.file.Files.move(tmpF, target,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
+
+  /** Atomic write of a (possibly encrypted) metadata file. */
+  private[graft] def writeStoreText(root: String, name: String, text: String): Unit =
+    atomicWrite(root, name, encodeStoreText(root, name, text))
 
   /** Enable metadata encryption: mint a DEK wrapped under
     * `masterKeyId`, then encrypt every existing metadata file in place
@@ -483,51 +645,35 @@ object Maintenance {
     * their write-time master id, which the resolver keeps serving. */
   def enableStoreEncryption(root: String, masterKeyId: String,
       dataPlane: Boolean = false): Unit = {
-    val keyPath = java.nio.file.Paths.get(root, StoreKeyFile)
-    if (!java.nio.file.Files.exists(keyPath)) {
+    val dataKey = if (dataPlane) Seq("dataKeyId" -> masterKeyId) else Nil
+    if (storeKey(root).isEmpty) {
       val dk = graft.crypto.Kms.generateDataKey(masterKeyId, numBytes = 32)
-      val dp = if (dataPlane) s"\ndataKeyId=$masterKeyId" else ""
-      java.nio.file.Files.write(keyPath,
-        (s"masterKeyId=$masterKeyId\nwrappedDek=${graft.crypto.Kms.wrapToBase64(dk)}"
-          + dp).getBytes("UTF-8"))
+      writeStoreKey(root, Seq("masterKeyId" -> masterKeyId,
+        "wrappedDek" -> graft.crypto.Kms.wrapToBase64(dk)) ++ dataKey)
     } else if (dataPlane && storeDataKeyId(root).isEmpty) {
       // control plane was enabled earlier WITHOUT the data plane:
       // merge the dataKeyId line in instead of silently leaving the
       // data plane off (the caller believes PME is on — subsequent
       // data files landing plaintext would be a silent policy breach)
-      val txt = new String(java.nio.file.Files.readAllBytes(keyPath), "UTF-8")
-      java.nio.file.Files.write(keyPath,
-        (txt.reverse.dropWhile(_ == '\n').reverse +
-          s"\ndataKeyId=$masterKeyId").getBytes("UTF-8"))
+      writeStoreKey(root, storeKey(root) ++ dataKey)
     }
-    // schema_v*.json logs are control plane like any manifest — leaving
-    // them plaintext would break the "encrypted control plane"
-    // guarantee for stores that evolved their schema before enabling
-    // encryption (r15 ADVICE)
-    val names = Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-      .map(_.getName).filter(n => n != StoreKeyFile &&
-        ((n.endsWith(".txt") &&
-          (n.startsWith("manifest_v") || n.startsWith("mapping_v") ||
-            n.startsWith("zones") || n == "commits_ts.txt")) ||
-          (n.startsWith("schema_v") && n.endsWith(".json"))))
+    // schema logs are control plane like any manifest — leaving them
+    // plaintext would break the "encrypted control plane" guarantee
+    // for stores that evolved their schema before enabling encryption
+    // (r15 ADVICE)
+    val names = Option(new java.io.File(root).list()).toSeq.flatten.filter(n =>
+      Seq(ManifestLog, MappingLog, SchemaLog).exists(_.owns(n)) ||
+        Seq(CommitLogFile, ZonesFile, ZoneColFile).contains(n))
     for (n <- names) {
       val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(root, n))
-      if (bytes.length < StoreEncMagic.length ||
-          !bytes.take(StoreEncMagic.length).sameElements(StoreEncMagic))
-        writeStoreText(root, n, new String(bytes, "UTF-8"))
+      if (!isCiphertext(bytes)) writeStoreText(root, n, new String(bytes, "UTF-8"))
     }
   }
 
   /** The store's data-plane master key id, when the data plane is
     * encrypted ([[enableStoreEncryption]] with dataPlane = true). */
-  private[graft] def storeDataKeyId(root: String): Option[String] = {
-    val p = java.nio.file.Paths.get(root, StoreKeyFile)
-    if (!java.nio.file.Files.exists(p)) None
-    else new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      .split("\n").map(_.trim).filter(_.contains("="))
-      .map { l => val Array(k, v) = l.split("=", 2); (k, v) }.toMap
-      .get("dataKeyId")
-  }
+  private[graft] def storeDataKeyId(root: String): Option[String] =
+    storeKey(root).toMap.get("dataKeyId")
 
   /** Parquet Modular Encryption reader/writer properties for the
     * store's data plane; empty for plaintext stores so every caller
@@ -553,16 +699,11 @@ object Maintenance {
     * stack raw parquet gets; a read-side conf ignores writer keys, so
     * merging them into [[storeHadoopConf]] is safe everywhere. */
   private[graft] def parquetWriteOpts(root: String): Map[String, String] =
-    readStoreText2(root, "parquet_opts.txt").map(
-      _.split('\n').toSeq.map(_.trim)
-        .filter(l => l.nonEmpty && l.contains("="))
-        .map { l => val Array(k, v) = l.split("=", 2); (k, v) }.toMap)
-      .getOrElse(Map.empty)
+    keyValues(root, ParquetOptsFile).toMap
 
   /** Declare writer options for every future write into the store. */
   def setStoreWriteOptions(root: String, opts: Map[String, String]): Unit =
-    writeStoreText(root, "parquet_opts.txt",
-      opts.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("\n"))
+    writeStoreText(root, ParquetOptsFile, renderKeyValues(opts.toSeq.sortBy(_._1)))
 
   /** A hadoop conf carrying the store's data-plane crypto properties
     * plus its writer tuning — what every footer read (harvest/
@@ -584,21 +725,11 @@ object Maintenance {
       throw new IllegalStateException(s"$root has no $StoreKeyFile to rotate"))
     val wrapped = graft.crypto.AesGcm.encrypt(
       graft.crypto.Kms.masterKey(newMasterKeyId), dek)
-    val target = java.nio.file.Paths.get(root, StoreKeyFile)
-    val tmpF = java.nio.file.Files.createTempFile(target.getParent, ".store_key", ".tmp")
     // data-plane key id (and any future fields) survive the rotation —
     // data files pin their write-time master id, which stays resolvable
-    val extras = new String(java.nio.file.Files.readAllBytes(target), "UTF-8")
-      .split("\n").map(_.trim)
-      .filter(l => l.contains("=") &&
-        !l.startsWith("masterKeyId=") && !l.startsWith("wrappedDek="))
-    java.nio.file.Files.write(tmpF,
-      (Seq(s"masterKeyId=$newMasterKeyId",
-        s"wrappedDek=${java.util.Base64.getEncoder.encodeToString(wrapped)}")
-        ++ extras).mkString("\n").getBytes("UTF-8"))
-    java.nio.file.Files.move(tmpF, target,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    writeStoreKey(root, Seq("masterKeyId" -> newMasterKeyId,
+      "wrappedDek" -> java.util.Base64.getEncoder.encodeToString(wrapped)) ++
+      storeKey(root).filterNot { case (k, _) => k == "masterKeyId" || k == "wrappedDek" })
   }
 
   /** Zone stats committed in a manifest: `zone:<path>|<col>|<lo>|<hi>|<n>`
@@ -642,11 +773,8 @@ object Maintenance {
         when($"o_orderkey" % 40 === 0, bumpedPrice($"o_totalprice"))
           .otherwise($"o_totalprice"))
       .write.mode("overwrite").parquet(s"$root/rewrite_g0_v2")
-    def manifest(v: Int, paths: Seq[String]): Unit =
-      java.nio.file.Files.write(java.nio.file.Paths.get(root, s"manifest_v$v.txt"),
-        String.join("\n", paths: _*).getBytes("UTF-8"))
-    manifest(1, (0 to 3).map(g => s"$root/base/g=$g"))
-    manifest(2, s"$root/rewrite_g0_v2" +: (1 to 3).map(g => s"$root/base/g=$g"))
+    writeManifest(root, 1, (0 to 3).map(g => s"$root/base/g=$g"))
+    writeManifest(root, 2, s"$root/rewrite_g0_v2" +: (1 to 3).map(g => s"$root/base/g=$g"))
     // marker LAST: a crash mid-staging leaves no marker → restage
     Staging.mark(root, SnapshotFormat)
     root
@@ -671,16 +799,9 @@ object Maintenance {
   // commit cost is manifest arithmetic, independent of table size.
   final class SnapshotConflictException(msg: String) extends RuntimeException(msg)
 
-  /** Committed manifest versions under `root`. Only `manifest_v<N>.txt`
-    * counts as committed — a concurrent writer's in-flight staging file
-    * (or a stale one left by a crash) must never make version listing
-    * throw, so the suffix is part of the match, not assumed. */
+  /** Committed manifest versions under `root`. */
   private[graft] def manifestVersions(root: String): Seq[Int] =
-    Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-      .map(_.getName)
-      .filter(n => n.startsWith("manifest_v") && n.endsWith(".txt"))
-      .map(_.stripPrefix("manifest_v").stripSuffix(".txt").toInt)
-      .toSeq
+    ManifestLog.versions(root)
 
   /** Highest committed manifest version under `root`. */
   def currentSnapshotVersion(root: String): Int = manifestVersions(root).max
@@ -696,11 +817,9 @@ object Maintenance {
     require(missing.isEmpty, s"partition columns not in schema: $missing")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
     require(manifestVersions(root).isEmpty, s"$root is already a store")
-    writeStoreText(root, "schema_v1.json", schema.json)
-    if (partitionCols.nonEmpty)
-      writeStoreText(root, "partition_cols.txt", partitionCols.mkString(","))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root, "manifest_v1.txt"), Array.empty[Byte])
+    writeSchemaLog(root, 1, schema)
+    if (partitionCols.nonEmpty) writePartitionCols(root, partitionCols)
+    writeManifest(root, 1, Nil)
   }
 
   /** Commit a copy-on-write rewrite: `removed` file groups (as listed in
@@ -922,14 +1041,9 @@ object Maintenance {
       rewrite(2, 2, "rw_c_g2")  // writer C: disjoint g2, keys ≡ 2 (mod 40)
       // record the groups' FILE schema once at staging time (r18): every
       // occRun seeds its store's schema log from this, so no store
-      // resolve ever runs the read.parquet(...).schema footer-inference
-      // job again (io_dsv2_write alone resolved ~14 times per
-      // invocation, each a scheduler job). One footer read here, at the
-      // content-keyed staging build, replaces all of them — and it IS
-      // the inferred schema, nullability included, so resolution is
-      // bit-identical to the fallback path it short-circuits.
-      java.nio.file.Files.write(tmpDir.toPath.resolve("schema.json"),
-        s.read.parquet(s"$tmpDir/base/g=0").schema.json.getBytes("UTF-8"))
+      // resolve ever runs the footer-inference job again (io_dsv2_write
+      // alone resolved ~14 times per invocation, each a scheduler job)
+      recordFileSchema(s, tmpDir, s"$tmpDir/base/g=0")
     }
   }
   /** Replays the 3-writer race in a fresh run dir; returns it (for the
@@ -937,21 +1051,7 @@ object Maintenance {
   def occRun(s: SparkSession, d: String, name: String = "io_occ_run"): String = {
     val data = occDataRoot(s, d)
     val run = Staging.scratch(name, d)
-    graft.Staging.rmTree(new java.io.File(run))
-    new java.io.File(run).mkdirs()
-    java.nio.file.Files.write(java.nio.file.Paths.get(run, "manifest_v1.txt"),
-      String.join("\n", (0 to 3).map(g => s"$data/base/g=$g"): _*).getBytes("UTF-8"))
-    // seed the schema log from the staged groups' recorded file schema
-    // (r18): schemaAt serves every version >= 1 from the largest entry
-    // <= it, and data commits are schema-strict, so this one file
-    // replaces a footer-inference Spark job on EVERY subsequent store
-    // resolve (mergeSchema commits still log their own evolved entry
-    // on top, exactly as before). Staged roots from before this change
-    // lack the file; resolution then falls back unchanged.
-    val staged = java.nio.file.Paths.get(data, "schema.json")
-    if (java.nio.file.Files.exists(staged))
-      java.nio.file.Files.copy(staged,
-        java.nio.file.Paths.get(run, "schema_v1.json"))
+    seedStore(run, (0 to 3).map(g => s"$data/base/g=$g"), schemaOf = Some(data))
     run
   }
   private def qOccCommit(s: SparkSession, d: String): DataFrame = {
@@ -1106,10 +1206,7 @@ object Maintenance {
     import s.implicits._
     val data = occDataRoot(s, d)
     val run = Staging.scratch("io_enc_manifest", d)
-    graft.Staging.rmTree(new java.io.File(run))
-    new java.io.File(run).mkdirs()
-    java.nio.file.Files.write(java.nio.file.Paths.get(run, "manifest_v1.txt"),
-      (0 to 3).map(g => s"$data/base/g=$g").mkString("\n").getBytes("UTF-8"))
+    seedStore(run, (0 to 3).map(g => s"$data/base/g=$g"))
     enableStoreEncryption(run, "store-mk-1")
     // DSv2 append commits v2 as an AAD-bound ciphertext manifest
     val cols = s.read.format("graft").option("versionAsOf", 1).load(run).columns.toSeq
@@ -1117,9 +1214,8 @@ object Maintenance {
       .select(cols.map(col): _*)
       .write.format("graft").mode("append").save(run)
     val encAtRest = Seq(1, 2).forall { v =>
-      java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(run, s"manifest_v$v.txt"))
-        .startsWith("GRAFTENC1".getBytes("UTF-8"))
+      isCiphertext(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(run, ManifestLog.file(v))))
     }
     rotateStoreKek(run, "store-mk-2")
     def leg(stage: String, v: Int) =
@@ -1138,18 +1234,17 @@ object Maintenance {
       try { s.read.format("graft").option("versionAsOf", 2).load(bad).count(); false }
       catch { case _: Exception => true }
     // attack 1: flip one ciphertext byte inside the base64 payload
-    val m2 = java.nio.file.Paths.get(bad, "manifest_v2.txt")
+    val m2 = java.nio.file.Paths.get(bad, ManifestLog.file(2))
     val orig = java.nio.file.Files.readAllBytes(m2)
-    val magicLen = "GRAFTENC1\n".length
     val blob = java.util.Base64.getDecoder.decode(
-      new String(orig.drop(magicLen), "UTF-8").trim)
+      new String(orig.drop(StoreEncMagic.length), "UTF-8").trim)
     blob(blob.length / 2) = (blob(blob.length / 2) ^ 0x01).toByte
-    java.nio.file.Files.write(m2, "GRAFTENC1\n".getBytes("UTF-8") ++
+    java.nio.file.Files.write(m2, StoreEncMagic ++
       java.util.Base64.getEncoder.encode(blob))
     val tamperFailed = readFails()
     // attack 2: substitute v1's (validly encrypted) manifest for v2 —
     // the AAD name binding must reject it
-    java.nio.file.Files.copy(java.nio.file.Paths.get(bad, "manifest_v1.txt"),
+    java.nio.file.Files.copy(java.nio.file.Paths.get(bad, ManifestLog.file(1)),
       m2, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     val substitutionFailed = readFails()
     leg("1_v1", 1)
@@ -1501,8 +1596,7 @@ object Maintenance {
     // rewrite re-partitions by the same path tags, so the output is
     // again one group per partition value — partition pruning keeps
     // working on compacted data instead of degrading to one wide group
-    val partCols = readStoreText2(root, "partition_cols.txt")
-      .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Seq.empty)
+    val partCols = partitionCols(root)
     val (outGroups, zoneLines) =
       if (partCols.isEmpty) {
         writeOpts.foldLeft(rewritten.write.mode("overwrite")) {
@@ -1530,11 +1624,6 @@ object Maintenance {
       }
     Some(CompactionPlan(cur, touched ++ dvLines, outGroups ++ zoneLines, out))
   }
-
-  /** partition_cols.txt (or any store text) when present. */
-  private def readStoreText2(root: String, name: String): Option[String] =
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(root, name))) None
-    else Some(readStoreText(root, name))
 
   /** Leaf partition dirs (dirs directly holding parquet files). */
   private def leafDirs(dir: String,
@@ -1565,12 +1654,7 @@ object Maintenance {
     import s.implicits._
     val data = morData(s, d)
     val root = Staging.scratch("io_compact_store", d)
-    graft.Staging.rmTree(new java.io.File(root))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root, "manifest_v1.txt"),
-      (0 to 3).map(g => s"$data/base/g=$g").mkString("\n").getBytes("UTF-8"))
-    seedMorSchema(data, root)
+    seedStore(root, (0 to 3).map(g => s"$data/base/g=$g"), schemaOf = Some(data))
     val v2 = commitSnapshot(root, 1, Seq.empty,
       Seq(s"$data/newfile", morDvLine(data, "dv")))
     val v3 = commitSnapshot(root, v2, Seq.empty,
@@ -1640,12 +1724,7 @@ object Maintenance {
     val data = morData(s, d)
     def freshStore(name: String): String = {
       val root = Staging.scratch(name, d)
-      graft.Staging.rmTree(new java.io.File(root))
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(root, "manifest_v1.txt"),
-        morBaseGroups(data).mkString("\n").getBytes("UTF-8"))
-      seedMorSchema(data, root)
+      seedStore(root, morBaseGroups(data), schemaOf = Some(data))
       commitSnapshot(root, 1, Seq.empty,
         Seq(s"$data/newfile", morDvLine(data, "dv"))) // v2: MERGE #1
       root
@@ -2025,9 +2104,7 @@ object Maintenance {
     // pinned commit log, then vacuum with a horizon past every epoch:
     // the fail-closed floor retains the CURRENT version; everything
     // referenced only by retired versions is reclaimed
-    java.nio.file.Files.write(java.nio.file.Paths.get(root, "commits_ts.txt"),
-      (1 to 6).map(v => s"$v=${1767261600L + v * 3600}").mkString("\n")
-        .getBytes("UTF-8"))
+    writeCommitLog(root, (1 to 6).map(v => v -> (1767261600L + v * 3600)))
     val nDeleted = s.sql(s"CALL graft.vacuum('$name', 1767290000)")
       .collect()(0).getInt(0)
     val finalRow = s.sql(
@@ -2395,17 +2472,14 @@ object Maintenance {
     val data = morData(s, d)
     // v2: seeded schema log (r18)
     Staging.inPlace("cardstore_", d, Seq("orders"), "v2-card-store") { root =>
-      java.nio.file.Files.write(java.nio.file.Paths.get(root, "manifest_v1.txt"),
-        (0 to 3).map(g => s"$data/base/g=$g").mkString("\n").getBytes("UTF-8"))
-      seedMorSchema(data, root)
+      seedStore(root, (0 to 3).map(g => s"$data/base/g=$g"), schemaOf = Some(data))
       val v2 = commitSnapshot(root, 1, Seq.empty, Seq(s"$data/newfile", morDvLine(data, "dv")))
       commitSnapshot(root, v2, Seq.empty, Seq(s"$data/newfile2", morDvLine(data, "dv2")))
       val cols = s.read.format("graft").option("versionAsOf", 1).load(root).columns.toSeq
       Tables.orders(s, d).filter($"o_orderkey" % 100 === 1)
         .select(cols.map(col): _*)
         .write.format("graft").mode("append").save(root) // v4, with zone: lines
-      java.nio.file.Files.write(java.nio.file.Paths.get(root, "commits_ts.txt"),
-        CardCommitEpochs.map { case (v, t) => s"$v=$t" }.mkString("\n").getBytes("UTF-8"))
+      writeCommitLog(root, CardCommitEpochs)
     }
   }
 
@@ -2445,32 +2519,16 @@ object Maintenance {
   /** Latest version with commit instant <= asof; throws (fail-closed)
     * when the probe predates the first commit. */
   def resolveAsOf(root: String, asofEpoch: Long): Int = {
-    val log = readStoreText(root, "commits_ts.txt")
-      .split("\n").toIndexedSeq.map(_.trim).filter(_.nonEmpty)
-      .map { l => val Array(v, t) = l.split("=", 2); (v.toInt, t.toLong) }
+    val log = commitEpochs(root)
+    require(log.nonEmpty, s"$root has no commit log to resolve $asofEpoch against")
     val ok = log.filter(_._2 <= asofEpoch)
     require(ok.nonEmpty,
-      s"no commit at or before $asofEpoch (earliest: ${log.map(_._2).min})")
-    ok.map(_._1).max
+      s"no commit at or before $asofEpoch (earliest: ${log.values.min})")
+    ok.keys.max
   }
 
-  /** Idempotent, atomic commit-log staging. Skip-if-current +
-    * temp-and-ATOMIC_MOVE: a concurrent reader (a parallel bench rep
-    * mid-resolveAsOf) must never observe a truncated log, which a
-    * plain truncate-then-write allows. */
-  def ensureCommitLog(root: String): Unit = {
-    val log = CommitEpochs.map { case (v, t) => s"$v=$t" }.mkString("\n")
-    val target = java.nio.file.Paths.get(root, "commits_ts.txt")
-    if (!java.nio.file.Files.exists(target) ||
-        new String(java.nio.file.Files.readAllBytes(target), "UTF-8") != log) {
-      val tmpF = java.nio.file.Files.createTempFile(
-        target.getParent, ".commits_ts", ".tmp")
-      java.nio.file.Files.write(tmpF, log.getBytes("UTF-8"))
-      java.nio.file.Files.move(tmpF, target,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
+  /** Stage the io_time_travel_ts commit log ([[writeCommitLog]]). */
+  def ensureCommitLog(root: String): Unit = writeCommitLog(root, CommitEpochs)
 
   private def qTimeTravelTs(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -2618,12 +2676,7 @@ object Maintenance {
     * reclaimed paths. Cost is manifest/commit-log arithmetic + the
     * deletes — no data is read. */
   def vacuumExpired(root: String, horizonEpoch: Long): Seq[String] = {
-    val epochs: Map[Int, Long] =
-      if (!new java.io.File(root, "commits_ts.txt").exists()) Map.empty
-      else readStoreText(root, "commits_ts.txt")
-        .split("\n").toIndexedSeq.map(_.trim).filter(_.nonEmpty)
-        .map { l => val Array(v, t) = l.split("=", 2); v.toInt -> t.toLong }
-        .toMap
+    val epochs = commitEpochs(root)
     val cur = currentSnapshotVersion(root)
     val retain = manifestVersions(root).filter(v =>
       v == cur || epochs.get(v).forall(_ >= horizonEpoch))
@@ -2674,14 +2727,11 @@ object Maintenance {
       .collect().sortBy(_.getInt(0))
     val zoneLines = stats.map(r =>
       s"$root/data/y=${r.getInt(0)}|${r.getString(1)}|${r.getString(2)}|${r.getLong(3)}")
-    java.nio.file.Files.write(java.nio.file.Paths.get(root, "zones_v1.txt"),
-      zoneLines.mkString("\n").getBytes("UTF-8"))
-    java.nio.file.Files.write(java.nio.file.Paths.get(root, "manifest_v1.txt"),
-      stats.map(r => s"$root/data/y=${r.getInt(0)}").mkString("\n").getBytes("UTF-8"))
+    writeStoreText(root, ZonesFile, zoneLines.mkString("\n"))
+    writeManifest(root, 1, stats.map(r => s"$root/data/y=${r.getInt(0)}").toSeq)
     // the zone column's physical name, for spark.read.format("graft")'s
     // pushed-filter group pruning (GraftScan.zoneBounds)
-    java.nio.file.Files.write(java.nio.file.Paths.get(root, "zones_col.txt"),
-      "o_orderdate".getBytes("UTF-8"))
+    writeStoreText(root, ZoneColFile, "o_orderdate")
     Staging.mark(root, fmt)
     root
   }
@@ -2691,21 +2741,9 @@ object Maintenance {
     * total group count. Pure manifest arithmetic: no file is opened. */
   private[graft] def zonePrunedPaths(root: String, wantLo: String,
       wantHi: String): (Seq[String], Int) = {
-    val lines = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(root, "zones_v1.txt")), "UTF-8").split("\n").toSeq
-    val chosen = lines.map(_.split('|')).collect {
-      case a if a.length >= 3 && a(2) >= wantLo && a(1) <= wantHi => a(0)
-    }
-    (chosen, lines.size)
-  }
-
-  /** Parsed (path, lo, hi, n_rows) zone rows — manifest arithmetic only. */
-  private[graft] def zoneStats(root: String): Seq[(String, String, String, Long)] = {
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(root, "zones_v1.txt")), "UTF-8").split("\n").toSeq
-      .map(_.split('|')).collect { case Array(path, lo, hi, n) =>
-        (path, lo, hi, n.toLong)
-      }
+    val zones = zoneStats(root)
+    (zones.collect { case (p, lo, hi, _) if hi >= wantLo && lo <= wantHi => p },
+      zones.size)
   }
 
   private val ZoneLo = "1995-03-01"
@@ -2808,10 +2846,8 @@ object Maintenance {
     * files; unmapped physical columns are invisible (dropped). */
   def readMapped(s: SparkSession, root: String, data: String,
       version: Int): DataFrame = {
-    val mapping = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(root, s"mapping_v$version.txt")), "UTF-8")
-      .split("\n").toIndexedSeq.map(_.trim).filter(_.nonEmpty)
-      .map { l => val Array(lg, ph) = l.split("=", 2); (lg, ph) }
+    val mapping = mappingAt(root, version).getOrElse(throw new IllegalArgumentException(
+      s"$root has no column mapping at or below v$version"))
     s.read.parquet((0 to 3).map(g => s"$data/base/g=$g"): _*)
       .select(mapping.map { case (lg, ph) => col(ph).as(lg) }: _*)
   }
@@ -2821,26 +2857,18 @@ object Maintenance {
   def columnMappingStore(s: SparkSession, d: String): (String, String) = {
     val data = morData(s, d)
     val root = Staging.scratch("io_column_mapping", d)
-    graft.Staging.rmTree(new java.io.File(root))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root, "mapping_v1.txt"),
-      CmPhysCols.map(p => s"$p=$p").mkString("\n").getBytes("UTF-8"))
-    // the rename+drop commit: price_usd now maps to the physical
-    // o_totalprice; o_custkey's entry is gone (dropped — bytes stay)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root, "mapping_v2.txt"),
-      CmPhysCols.filterNot(_ == "o_custkey")
-        .map(p => if (p == "o_totalprice") s"price_usd=$p" else s"$p=$p")
-        .mkString("\n").getBytes("UTF-8"))
     // manifests for the DSv2 front door: the rename/drop commit is
     // metadata-only, so BOTH versions pin the same (shared, read-only)
-    // base groups — only the mapping file differs
-    val groups = (0 to 3).map(g => s"$data/base/g=$g").mkString("\n")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root, "manifest_v1.txt"), groups.getBytes("UTF-8"))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root, "manifest_v2.txt"), groups.getBytes("UTF-8"))
+    // base groups — only the mapping file differs. No schema log: the
+    // store holds the manifests and mappings only.
+    val groups = (0 to 3).map(g => s"$data/base/g=$g")
+    seedStore(root, groups)
+    writeMapping(root, 1, CmPhysCols.map(p => p -> p))
+    // the rename+drop commit: price_usd now maps to the physical
+    // o_totalprice; o_custkey's entry is gone (dropped — bytes stay)
+    writeMapping(root, 2, CmPhysCols.filterNot(_ == "o_custkey")
+      .map(p => (if (p == "o_totalprice") "price_usd" else p) -> p))
+    writeManifest(root, 2, groups)
     (root, data)
   }
 
@@ -2966,7 +2994,7 @@ object Maintenance {
     * references base files only. */
   private[graft] def morData(s: SparkSession, d: String): String = {
     import s.implicits._
-    // v4: recorded file schema (seedMorSchema)
+    // v4: recorded file schema (seedStore)
     Staging.once("mordata_", d, Seq("orders"), "v4-mor-data") { tmpDir =>
       val base = Tables.orders(s, d).withColumn("g", ($"o_orderkey" % 4).cast("int"))
       base.write.partitionBy("g").parquet(s"$tmpDir/base")
@@ -3005,32 +3033,13 @@ object Maintenance {
       // per-call compaction commit is manifest arithmetic
       base.filter(!hit1 && !hit2)
         .write.partitionBy("g").parquet(s"$tmpDir/compact")
-      // record the groups' file schema once at the content-keyed staging
-      // build (the occDataRoot trick): every store stacked over these
-      // groups seeds its schema log from this file instead of running a
-      // footer-inference Spark job per resolve. One base group suffices —
-      // base/newfile*/compact all carry the identical orders file schema
-      // (written from the same frame), and reading the leaf dir matches
-      // the resolve's own path shape (no partition-column discovery).
-      java.nio.file.Files.write(tmpDir.toPath.resolve("schema.json"),
-        s.read.parquet(s"$tmpDir/base/g=0").schema.json.getBytes("UTF-8"))
+      // record the groups' file schema (the occDataRoot trick). One base
+      // group suffices — base/newfile*/compact all carry the identical
+      // orders file schema (written from the same frame), and reading
+      // the leaf dir matches the resolve's own path shape (no
+      // partition-column discovery).
+      recordFileSchema(s, tmpDir, s"$tmpDir/base/g=0")
     }
-  }
-
-  /** Seed a fresh store's schema log from the staged MoR data's
-    * recorded file schema (r18, the occRun trick): `schemaAt` serves
-    * every version from the largest entry <= it and data commits are
-    * schema-strict, so this one text file replaces a footer-inference
-    * Spark job on EVERY subsequent resolve of the store (mergeSchema
-    * commits still log their own evolved entry on top). Staged roots
-    * from before v4-mor-data lack the file; resolution then falls back
-    * to inference unchanged. */
-  private[graft] def seedMorSchema(data: String, root: String): Unit = {
-    val staged = java.nio.file.Paths.get(data, "schema.json")
-    if (java.nio.file.Files.exists(staged))
-      java.nio.file.Files.copy(staged,
-        java.nio.file.Paths.get(root, "schema_v1.json"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** MoR snapshot read: manifest data paths minus every `dv:` sidecar's
@@ -3057,12 +3066,7 @@ object Maintenance {
     import s.implicits._
     val data = morData(s, d)
     val root = Staging.scratch("io_merge_dv", d)
-    graft.Staging.rmTree(new java.io.File(root))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root, "manifest_v1.txt"),
-      (0 to 3).map(g => s"$data/base/g=$g").mkString("\n").getBytes("UTF-8"))
-    seedMorSchema(data, root)
+    seedStore(root, (0 to 3).map(g => s"$data/base/g=$g"), schemaOf = Some(data))
     // MERGE #1: one OCC commit adds the insert file + DV line; zero
     // base groups move. MERGE #2 stacks a SECOND dv line + insert leg
     // atop v2 — the DV-pile steady state: reads must subtract BOTH.
@@ -3145,18 +3149,12 @@ object Maintenance {
     // emits `_change_type`, cost stays O(changed rows)
     val data = morData(s, d)
     val root = Staging.scratch("q_cdc_mor", d)
-    graft.Staging.rmTree(new java.io.File(root))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root, "manifest_v1.txt"),
-      (0 to 3).map(g => s"$data/base/g=$g").mkString("\n").getBytes("UTF-8"))
-    seedMorSchema(data, root)
+    seedStore(root, (0 to 3).map(g => s"$data/base/g=$g"), schemaOf = Some(data))
     val v2 = commitSnapshot(root, 1, Seq.empty,
       Seq(s"$data/newfile", morDvLine(data, "dv")))
     // pinned commit log: _commit_timestamp becomes a replayable
     // constant, and the DESCRIBE HISTORY join below is deterministic
-    java.nio.file.Files.write(java.nio.file.Paths.get(root, "commits_ts.txt"),
-      CommitEpochs.map { case (v, t) => s"$v=$t" }.mkString("\n").getBytes("UTF-8"))
+    writeCommitLog(root, CommitEpochs)
     s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
     val name = new java.io.File(root).getName
@@ -3213,12 +3211,7 @@ object Maintenance {
     import s.implicits._
     val data = morData(s, d)
     val root = Staging.scratch("io_dv_compaction", d)
-    graft.Staging.rmTree(new java.io.File(root))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root, "manifest_v1.txt"),
-      (0 to 3).map(g => s"$data/base/g=$g").mkString("\n").getBytes("UTF-8"))
-    seedMorSchema(data, root)
+    seedStore(root, (0 to 3).map(g => s"$data/base/g=$g"), schemaOf = Some(data))
     val v2 = commitSnapshot(root, 1, Seq.empty,
       Seq(s"$data/newfile", morDvLine(data, "dv")))
     // the second MERGE stacks a second dv line: the steady state a
@@ -3368,14 +3361,7 @@ object Maintenance {
   private def rollbackRoot(s: SparkSession, d: String): String = {
     val data = rollbackData(s, d)
     val root = Staging.scratch("rollback", d)
-    def wipe(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(wipe)); f.delete(); ()
-    }
-    wipe(new java.io.File(root))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root, "manifest_v1.txt"),
-      Seq(0, 1).map(g => s"$data/base/g=$g").mkString("\n").getBytes("UTF-8"))
+    seedStore(root, Seq(0, 1).map(g => s"$data/base/g=$g"))
     commitSnapshot(root, 1, Seq(s"$data/base/g=0"), Seq(s"$data/rewrite_g0"))
     root
   }
@@ -3423,14 +3409,10 @@ object Maintenance {
   // construction (no `manifest_v` prefix), the same property that
   // protects listers from in-flight OCC temp files.
   def writeBranch(root: String, name: String, paths: Seq[String]): Unit =
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root, s"branch_$name.txt"),
-      String.join("\n", paths: _*).getBytes("UTF-8"))
+    writeStoreText(root, s"branch_$name.txt", paths.mkString("\n"))
 
   def branchPaths(root: String, name: String): Seq[String] =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(root, s"branch_$name.txt")), "UTF-8")
-      .split("\n").toIndexedSeq.map(_.trim).filter(_.nonEmpty)
+    textLines(readStoreText(root, s"branch_$name.txt"))
 
   def dropBranch(root: String, name: String): Unit =
     java.nio.file.Files.deleteIfExists(
@@ -3505,10 +3487,7 @@ object Maintenance {
     if (java.nio.file.Files.exists(marker) &&
         manifestPaths(root, 1).forall(p => new java.io.File(p).exists))
       return root
-    def wipe(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(wipe)); f.delete(); ()
-    }
-    wipe(new java.io.File(root))
+    Staging.rmTree(new java.io.File(root))
     val t = Tables.orders(s, d)
     // old spec: one untagged group (written before the evolution)
     t.filter($"o_orderkey" % 2 === 0).write.parquet(s"$root/gen1")
@@ -3532,10 +3511,7 @@ object Maintenance {
     val pris = Option(new java.io.File(s"$root/gen2").listFiles()).toSeq.flatten
       .filter(f => f.isDirectory && f.getName.startsWith("pri="))
       .map(_.getName.stripPrefix("pri=")).sorted
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root, "manifest_v1.txt"),
-      (s"$root/gen1" +: pris.map(p => s"$root/gen2/pri=$p"))
-        .mkString("\n").getBytes("UTF-8"))
+    writeManifest(root, 1, s"$root/gen1" +: pris.map(p => s"$root/gen2/pri=$p"))
     java.nio.file.Files.write(marker, "ok".getBytes("UTF-8"))
     root
   }
@@ -3580,9 +3556,7 @@ object Maintenance {
   // format.
   def shallowClone(srcRoot: String, srcVersion: Int, dstRoot: String): Unit = {
     new java.io.File(dstRoot).mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dstRoot, "manifest_v1.txt"),
-      String.join("\n", manifestPaths(srcRoot, srcVersion): _*).getBytes("UTF-8"))
+    writeManifest(dstRoot, 1, manifestPaths(srcRoot, srcVersion))
   }
 
   private def bumpSqlOf(e: String): String =
@@ -3593,10 +3567,7 @@ object Maintenance {
     val src = snapshotRoot(s, d)
     val srcV = currentSnapshotVersion(src)
     val dst = Staging.scratch("clone", d)
-    def wipe(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(wipe)); f.delete(); ()
-    }
-    wipe(new java.io.File(dst))
+    Staging.rmTree(new java.io.File(dst))
     shallowClone(src, srcV, dst)
     // diverge the clone: copy-on-write the one group the update hits,
     // committed on the CLONE's OCC chain — the source never sees it

@@ -55,9 +55,6 @@ class GraftCatalog extends CatalogPlugin with TableCatalog with ProcedureCatalog
       s"graft catalog has a single flat namespace, got ${ident.namespace().mkString(".")}")
     s"$base/${ident.name()}"
   }
-  private def isStore(root: String): Boolean =
-    new java.io.File(root, "manifest_v1.txt").exists()
-
   private def load(ident: Identifier, extra: Map[String, String]): Table = {
     // `<store>$history` — the DESCRIBE HISTORY metadata table (r15):
     // one row per committed version, pure manifest arithmetic
@@ -65,13 +62,13 @@ class GraftCatalog extends CatalogPlugin with TableCatalog with ProcedureCatalog
       val base = Identifier.of(ident.namespace(),
         ident.name().stripSuffix("$history"))
       val root = rootOf(base)
-      if (!isStore(root))
+      if (!Maintenance.isStore(root))
         throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
           Seq(catalogName, ident.name()))
       return new GraftHistoryTable(root)
     }
     val root = rootOf(ident)
-    if (!isStore(root))
+    if (!Maintenance.isStore(root))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         Seq(catalogName, ident.name()))
     val opts = new CaseInsensitiveStringMap(
@@ -90,11 +87,11 @@ class GraftCatalog extends CatalogPlugin with TableCatalog with ProcedureCatalog
   override def loadTable(ident: Identifier, timestampMicros: Long): Table =
     load(ident, Map("timestampAsOf" -> Math.floorDiv(timestampMicros, 1000000L).toString))
 
-  override def tableExists(ident: Identifier): Boolean = isStore(rootOf(ident))
+  override def tableExists(ident: Identifier): Boolean = Maintenance.isStore(rootOf(ident))
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     require(namespace.isEmpty, "graft catalog has a single flat namespace")
     Option(new java.io.File(base).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && isStore(f.getAbsolutePath))
+      .filter(f => f.isDirectory && Maintenance.isStore(f.getAbsolutePath))
       .map(f => Identifier.of(Array.empty, f.getName))
   }
   override def invalidateTable(ident: Identifier): Unit = ()
@@ -112,7 +109,7 @@ class GraftCatalog extends CatalogPlugin with TableCatalog with ProcedureCatalog
   override def createTable(ident: Identifier, schema: StructType,
       partitions: Array[Transform], properties: java.util.Map[String, String]): Table = {
     val root = rootOf(ident)
-    if (isStore(root))
+    if (Maintenance.isStore(root))
       throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(
         Seq(catalogName, ident.name()))
     val partCols = partitions.toSeq.map { t =>
@@ -130,7 +127,7 @@ class GraftCatalog extends CatalogPlugin with TableCatalog with ProcedureCatalog
     * #3). Every other change kind fails loudly. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val root = rootOf(ident)
-    if (!isStore(root))
+    if (!Maintenance.isStore(root))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         Seq(catalogName, ident.name()))
     GraftStore.alterStore(root, changes)
@@ -156,7 +153,7 @@ class GraftCatalog extends CatalogPlugin with TableCatalog with ProcedureCatalog
     * non-store path, Spark's contract for "nothing to drop". */
   override def dropTable(ident: Identifier): Boolean = {
     val root = rootOf(ident)
-    if (!isStore(root)) return false
+    if (!Maintenance.isStore(root)) return false
     graft.Staging.rmTree(new java.io.File(root))
     true
   }
@@ -171,10 +168,10 @@ class GraftCatalog extends CatalogPlugin with TableCatalog with ProcedureCatalog
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit = {
     val from = rootOf(oldIdent)
     val to = rootOf(newIdent)
-    if (!isStore(from))
+    if (!Maintenance.isStore(from))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         Seq(catalogName, oldIdent.name()))
-    if (isStore(to))
+    if (Maintenance.isStore(to))
       throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(
         Seq(catalogName, newIdent.name()))
     val versions = Maintenance.manifestVersions(from)
@@ -192,7 +189,7 @@ class GraftCatalog extends CatalogPlugin with TableCatalog with ProcedureCatalog
     for (v <- versions) {
       val lines = Maintenance.manifestRawLines(to, v)
         .map(_.replace(from + "/", to + "/"))
-      Maintenance.writeStoreText(to, s"manifest_v$v.txt", lines.mkString("\n"))
+      Maintenance.writeManifest(to, v, lines)
     }
   }
 }

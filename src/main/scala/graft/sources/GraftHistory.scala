@@ -14,7 +14,7 @@ import graft.operators.Maintenance
   * arithmetic on the driver (no data file is listed or opened):
   *
   *  - `version`        committed manifest version
-  *  - `commit_epoch`   from `commits_ts.txt` when present, else NULL
+  *  - `commit_epoch`   from the store's commit log when present, else NULL
   *  - `n_data_groups`  data file groups live at the version
   *  - `n_dv_lines`     deletion-vector sidecars live (MoR debt)
   *  - `n_zoned_groups` groups carrying committed `zone:` stats
@@ -66,11 +66,7 @@ private[sources] object GraftHistoryTable {
     * subset), metadata (nothing moved). */
   def rows(root: String): Seq[Row] = {
     val epochs: Map[Int, Long] = Maintenance.commitEpochs(root)
-    val versions = Option(new java.io.File(root).listFiles())
-      .getOrElse(Array.empty).map(_.getName)
-      .filter(n => n.startsWith("manifest_v") && n.endsWith(".txt"))
-      .map(_.stripPrefix("manifest_v").stripSuffix(".txt").toInt)
-      .sorted.toSeq
+    val versions = Maintenance.manifestVersions(root).sorted
     versions.map { v =>
       val lines = Maintenance.manifestPaths(root, v)
       val (dv, data) = lines.partition(_.startsWith("dv:"))

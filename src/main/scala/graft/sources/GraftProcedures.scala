@@ -61,7 +61,7 @@ private[sources] object GraftProcedures {
     def root(input: InternalRow): String = {
       val t = input.getUTF8String(0).toString
       val r = s"$base/$t"
-      require(new java.io.File(r, "manifest_v1.txt").exists(),
+      require(Maintenance.isStore(r),
         s"no graft store named $t under $base")
       r
     }

@@ -36,22 +36,14 @@ import graft.operators.Maintenance
   *   .option("startingVersion", 1).option("endingVersion", 2).load(root)
   * }}}
   *
-  * Store contract (all driver-side manifest arithmetic, no data IO
-  * until the resolved scan):
-  *  - `manifest_v<N>.txt` — newline-separated file-group paths of
-  *    snapshot N; lines prefixed `dv:` are merge-on-read deletion-
-  *    vector sidecars (parquet of `(file_key, row_index)` positions).
-  *  - `commits_ts.txt` — `version=epochSeconds` lines; `timestampAsOf`
-  *    resolves through [[Maintenance.resolveAsOf]] (fail-closed before
-  *    the first commit, exactly like Delta/Iceberg).
-  *  - `mapping_v<N>.txt` — `logical=physical` column-mapping lines;
-  *    renames/drops are metadata-only commits, reads project the
-  *    mapping (pruning and filter pushdown translate names, so the
-  *    physical scan still reads only mapped, required columns).
-  *  - `zones_v1.txt` + `zones_col.txt` — per-group `[lo|hi|rows]` zone
-  *    map over one column; pushed range/equality filters on that
-  *    column prune whole file groups BEFORE listing (the scan's
-  *    `description()` reports `zoneSkipped=` for the plan gate).
+  * The store's on-disk layout (manifests, commit log, schema and
+  * column-mapping logs, zone map) is owned by the store-format section
+  * of [[Maintenance]]; this file reads and writes it only through
+  * those functions. Reads project the column mapping (pruning and
+  * filter pushdown translate names, so the physical scan still reads
+  * only mapped, required columns), and pushed filters on the zone
+  * column prune whole file groups BEFORE listing (the scan's
+  * `description()` reports `zoneSkipped=` for the plan gate).
   *
   * Execution delegates to Spark's own vectorized DSv2 parquet scan
   * over the resolved file list — whole-stage codegen, row-group/page
@@ -156,15 +148,6 @@ private[graft] object GraftStore {
   val FileKeyCol = "_graft_file_key"
   val RowIndexCol = "_graft_row_index"
 
-  private def readLines(root: String, name: String): Option[Seq[String]] = {
-    val p = java.nio.file.Paths.get(root, name)
-    if (!java.nio.file.Files.exists(p)) None
-    // routed through the store-metadata reader: encrypted stores
-    // (r15) decrypt transparently, tampering fails closed
-    else Some(Maintenance.readStoreText(root, name)
-      .split("\n").toIndexedSeq.map(_.trim).filter(_.nonEmpty))
-  }
-
   def resolve(options: CaseInsensitiveStringMap): Resolved = {
     val root = Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException("graft source requires a store path"))
@@ -205,14 +188,10 @@ private[graft] object GraftStore {
     // are metadata commits; a data commit (DSv2 append, streaming sink)
     // between two mapping versions must keep serving the mapped schema,
     // not silently revert to physical names (r14 ADVICE)
-    val mapping = mappingAt(root, version).map(_.map { l =>
-      val Array(lg, ph) = l.split("=", 2); (lg, ph)
-    })
-    val zoneCol = readLines(root, "zones_col.txt").flatMap(_.headOption)
-    val zones = readLines(root, "zones_v1.txt").getOrElse(Seq.empty)
-      .map(_.split('|')).collect {
-        case a if a.length >= 3 => a(0) -> (a(1), a(2))
-      }.toMap
+    val mapping = Maintenance.mappingAt(root, version)
+    val zoneCol = Maintenance.zoneColumn(root)
+    val zones = Maintenance.zoneStats(root)
+      .map { case (p, lo, hi, _) => p -> (lo, hi) }.toMap
     val groupZones = Maintenance.manifestZones(root, version)
       .groupBy(_._1)
       .map { case (p, zs) => p -> zs.map(z => z._2 -> (z._3, z._4)).toMap }
@@ -224,7 +203,7 @@ private[graft] object GraftStore {
     // at write time (the path tag is a copy), so the file schema IS
     // the data schema even for partitioned stores
     val cryptoOpts = Maintenance.dataPlaneOptions(root)
-    val physicalSchema = schemaAt(root, version).getOrElse(
+    val physicalSchema = Maintenance.schemaAt(root, version).getOrElse(
       SparkSession.active.read.options(cryptoOpts).parquet(dataPaths: _*).schema)
     Resolved(root, version, dataPaths, dvLines.map(_.stripPrefix("dv:")),
       mapping, zoneCol, zones, groupZones, changeFeed,
@@ -233,9 +212,7 @@ private[graft] object GraftStore {
       options.getBoolean("mergeSchema", false),
       Option(options.get("maxVersionsPerTrigger")).map(_.toInt),
       options.getBoolean("initialSnapshot", false),
-      readLines(root, "partition_cols.txt")
-        .map(_.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty))
-        .getOrElse(Seq.empty),
+      Maintenance.partitionCols(root),
       cryptoOpts,
       physicalSchema,
       Option(options.get("txnAppId")),
@@ -373,53 +350,21 @@ private[graft] object GraftStore {
     }
   }
 
-  /** schema_v<M>.json for the largest M <= version, if any — the
-    * per-version physical schema recorded by mergeSchema commits. */
-  private def schemaAt(root: String, version: Int): Option[StructType] = {
-    def read(m: Int): Option[StructType] =
-      try Some(DataType.fromJson(
-        Maintenance.readStoreText(root, s"schema_v$m.json")).asInstanceOf[StructType])
-      catch { case _: IllegalArgumentException => None } // malformed: fail open
-    val exact = java.nio.file.Paths.get(root, s"schema_v$version.json")
-    if (java.nio.file.Files.exists(exact)) read(version)
-    else Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-      .map(_.getName)
-      .filter(n => n.startsWith("schema_v") && n.endsWith(".json"))
-      .map(_.stripPrefix("schema_v").stripSuffix(".json"))
-      .flatMap(_.toIntOption)
-      .filter(_ <= version)
-      .maxOption
-      .flatMap(read)
-  }
-
-  /** mapping_v<M>.txt lines for the largest M <= version, if any. */
-  private def mappingAt(root: String, version: Int): Option[Seq[String]] =
-    readLines(root, s"mapping_v$version.txt").orElse {
-      Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-        .map(_.getName)
-        .filter(n => n.startsWith("mapping_v") && n.endsWith(".txt"))
-        .map(_.stripPrefix("mapping_v").stripSuffix(".txt"))
-        .flatMap(_.toIntOption)
-        .filter(_ <= version)
-        .maxOption
-        .flatMap(m => readLines(root, s"mapping_v$m.txt"))
-    }
-
   /** SQL `ALTER TABLE` (r16 verdict #3): ADD / RENAME / DROP COLUMN as
     * METADATA-ONLY commits — zero data bytes move. Each change lands
     * as one OCC commit whose manifest is identical to its parent
     * (history reads it as `metadata`), plus a per-version schema-log
     * and/or column-mapping entry:
     *
-    *  - ADD COLUMN: the evolved physical schema goes to
-    *    `schema_v<next>.json` (the io_dsv2_schema_merge machinery);
+    *  - ADD COLUMN: the evolved physical schema goes to the schema
+    *    log at the next version (the io_dsv2_schema_merge machinery);
     *    old groups null-pad the new column at scan time. A re-added
     *    name whose physical slot is still occupied by a dropped
     *    column's bytes gets a fresh physical name — old bytes stay
     *    invisible, Delta's column-mapping discipline.
-    *  - RENAME COLUMN: a `mapping_v<next>.txt` header swap (the
-    *    io_column_mapping machinery); renaming a partition column
-    *    also rewrites `partition_cols.txt` (the path tags carry
+    *  - RENAME COLUMN: a column-mapping log entry swapping the header
+    *    (the io_column_mapping machinery); renaming a partition column
+    *    also rewrites the partition spec (the path tags carry
     *    PHYSICAL names, so the layout is untouched).
     *  - DROP COLUMN: the mapping entry disappears; bytes stay,
     *    invisible to every reader from this version on. Dropping a
@@ -507,14 +452,9 @@ private[graft] object GraftStore {
     // resolution serves readers between the claim and these writes
     // the PARENT shape — fail open, rows stay right)
     val next = Maintenance.commitSnapshot(root, cur, Seq.empty, Seq.empty)
-    if (schemaChanged)
-      Maintenance.writeStoreText(root, s"schema_v$next.json", phys.json)
-    if (mappingChanged)
-      Maintenance.writeStoreText(root, s"mapping_v$next.txt",
-        mapping.map { case (lg, ph) => s"$lg=$ph" }.mkString("\n"))
-    if (partCols != store.partitionCols)
-      Maintenance.writeStoreText(root, "partition_cols.txt",
-        partCols.mkString(","))
+    if (schemaChanged) Maintenance.writeSchemaLog(root, next, phys)
+    if (mappingChanged) Maintenance.writeMapping(root, next, mapping)
+    if (partCols != store.partitionCols) Maintenance.writePartitionCols(root, partCols)
   }
 
   /** `DELETE FROM graft.<store> WHERE <pred>` — a MERGE-ON-READ
@@ -745,20 +685,15 @@ private[graft] object GraftStore {
       // window remains (the concurrent winner committing its manifest
       // but not yet its schema file); closing it fully needs the
       // schema inside the committed manifest.
-      val parent = schemaAt(store.root, committed - 1)
+      val parent = Maintenance.schemaAt(store.root, committed - 1)
         .getOrElse(store.physicalSchema)
       val fresh = extras.filterNot(f => parent.fieldNames.contains(f.name))
-      val evolved = StructType(parent.fields ++ fresh)
-      Maintenance.writeStoreText(store.root, s"schema_v$committed.json",
-        evolved.json)
+      Maintenance.writeSchemaLog(store.root, committed, StructType(parent.fields ++ fresh))
       store.mapping.foreach { m =>
-        val parentM = mappingAt(store.root, committed - 1)
-          .map(_.map { l => val Array(lg, ph) = l.split("=", 2); (lg, ph) })
-          .getOrElse(m)
+        val parentM = Maintenance.mappingAt(store.root, committed - 1).getOrElse(m)
         val newM = parentM ++ extras.map(f => f.name -> f.name)
           .filterNot { case (lg, _) => parentM.exists(_._1 == lg) }
-        Maintenance.writeStoreText(store.root, s"mapping_v$committed.txt",
-          newM.map { case (lg, ph) => s"$lg=$ph" }.mkString("\n"))
+        Maintenance.writeMapping(store.root, committed, newM)
       }
     }
   }
@@ -774,7 +709,7 @@ private[sources] class GraftTable(val store: GraftStore.Resolved)
   // INVALID_ATTRIBUTE_NAME_SYNTAX about the table name itself
   override def name(): String = s"graft:${store.root}@v${store.version}"
   override def schema(): StructType = store.logicalSchema
-  // identity partitioning over partition_cols.txt — what makes
+  // identity partitioning over the store's partition spec — what makes
   // `df.write.format("graft").partitionBy(...)` pass the analyzer's
   // table-vs-provided partitioning check (r16)
   override def partitioning(): Array[Transform] =

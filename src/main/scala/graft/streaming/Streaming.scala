@@ -1356,10 +1356,8 @@ object Streaming {
       // v3: seeded schema log (r18)
       val root = Staging.inPlace("gsrc_", d, Seq("orders"), "v3-graft-source",
           onHit = drain) { root =>
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(root, "manifest_v1.txt"),
-          (0 to 3).map(g => s"$data/base/g=$g").mkString("\n").getBytes("UTF-8"))
-        Maintenance.seedMorSchema(data, root)
+        Maintenance.seedStore(root, (0 to 3).map(g => s"$data/base/g=$g"),
+          schemaOf = Some(data))
         val v2 = Maintenance.commitSnapshot(root, 1, Seq.empty,
           Seq(s"$data/newfile", s"dv:$data/dv"))
         Maintenance.commitSnapshot(root, v2, Seq.empty,
@@ -1436,10 +1434,8 @@ object Streaming {
       // checkpoint twice, both no-ops
       val root = Staging.inPlace("gsnap_", d, Seq("orders"), "v2-initial-snapshot",
           onHit = r => { drain(r); drain(r) }) { root =>
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(root, "manifest_v1.txt"),
-          (0 to 3).map(g => s"$data/base/g=$g").mkString("\n").getBytes("UTF-8"))
-        Maintenance.seedMorSchema(data, root)
+        Maintenance.seedStore(root, (0 to 3).map(g => s"$data/base/g=$g"),
+          schemaOf = Some(data))
         val v2 = Maintenance.commitSnapshot(root, 1, Seq.empty,
           Seq(s"$data/newfile", Maintenance.morDvLine(data, "dv")))
         Maintenance.commitSnapshot(root, v2, Seq.empty,

@@ -94,4 +94,11 @@ class BenchSpec extends AnyFunSuite {
     val missing = Bench.CanaryQueries.filterNot(SparkEntry.queries.contains)
     assert(missing.isEmpty, s"canary names not in the driver contract: $missing")
   }
+
+  test("the JSON quoter round-trips quotes, backslashes, control chars and non-ASCII") {
+    val raw = "say \"hi\"\\path\tcol\r\n\u0001 naïve 東京 ✓"
+    val back = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(s"""{"k": ${Json.quote(raw)}}""").get("k").asText()
+    assert(back == raw)
+  }
 }

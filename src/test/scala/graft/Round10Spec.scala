@@ -203,30 +203,38 @@ class Round10Spec extends AnyFunSuite {
     wipe(new java.io.File(dirB))
   }
 
-  /** `file: literal` for every main source but core.scala that contains
+  /** `file: literal` for every main source but `owner` that contains
     * one of `lits`. */
-  private def outsideCore(lits: Seq[String]): Seq[String] = {
+  private def outside(owner: String, lits: Seq[String]): Seq[String] = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
     val main = walk(new java.io.File("src/main/scala")).filter(_.getName.endsWith(".scala"))
-    assert(main.exists(_.getName == "core.scala"), "source tree not found from the test's cwd")
+    assert(main.exists(_.getName == owner), s"$owner not found under src/main/scala from the test's cwd")
     for {
-      f <- main if f.getName != "core.scala"
+      f <- main if f.getName != owner
       text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
       lit <- lits if text.contains(lit)
     } yield s"${f.getPath}: $lit"
   }
 
   test("staging protocol lives only in core.scala (no hand-rolled stage-once blocks)") {
-    val offenders = outsideCore(Seq("staging_format.txt", "/tmp/graft_q"))
+    val offenders = outside("core.scala", Seq("staging_format.txt", "/tmp/graft_q"))
     assert(offenders.isEmpty,
       s"use Staging.once/inPlace/scratch/Base instead of: ${offenders.mkString("; ")}")
   }
 
   test("checkpoint release lives only in core.scala (no hand-rolled block dropping)") {
-    val offenders = outsideCore(Seq("LogicalRDD"))
+    val offenders = outside("core.scala", Seq("LogicalRDD"))
     assert(offenders.isEmpty,
       s"iterate through Iterate.fixed/untilStable/eager instead of: ${offenders.mkString("; ")}")
+  }
+
+  test("store format lives only in Maintenance.scala (no hand-read manifests, logs or key files)") {
+    val offenders = outside("Maintenance.scala", Seq("manifest_v", "mapping_v", "schema_v",
+      "commits_ts", "store_key", "partition_cols.txt", "parquet_opts.txt", "zones_v1",
+      "zones_col", "GRAFTENC1"))
+    assert(offenders.isEmpty,
+      s"go through the store-format functions in Maintenance instead of: ${offenders.mkString("; ")}")
   }
 
   test("q_hybrid_rrf: exchange budget is fixed") {

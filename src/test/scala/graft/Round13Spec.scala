@@ -341,6 +341,20 @@ class Round13Spec extends AnyFunSuite {
       Map(1L -> 6L, 2L -> 5L))
   }
 
+  test("io_column_mapping: readMapped serves an encrypted store like the DSv2 read") {
+    import graft.operators.Maintenance
+    val (root, data) = Maintenance.columnMappingStore(spark, sf)
+    Maintenance.enableStoreEncryption(root, "r13-cm-mk")
+    val mapped = Maintenance.readMapped(spark, root, data, 2)
+    val dsv2 = spark.read.format("graft").option("versionAsOf", 2).load(root)
+    assert(mapped.columns.toSeq == dsv2.columns.toSeq)
+    def total(df: DataFrame): Double =
+      df.agg(OracleMath.dsum(col("price_usd"))).collect()(0).getDouble(0)
+    assert(total(mapped) == total(dsv2), "mapped read disagrees with the DSv2 read")
+    // the nearest mapping <= v serves a version with no entry of its own
+    assert(Maintenance.readMapped(spark, root, data, 3).columns.toSeq == mapped.columns.toSeq)
+  }
+
   // -- q_holt_winters --------------------------------------------------------------
 
   test("q_holt_winters: zero seasonal init makes the first week exactly Holt, then diverges") {

@@ -66,6 +66,44 @@ class Round17Spec extends AnyFunSuite {
     assert(before == after)
   }
 
+  // ---- the store format's version lookup (no Spark job) ---------------------
+
+  test("store format: schema and mapping logs serve the nearest version <= v, encrypted too") {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val root = freshRoot("store_fmt_lookup")
+    Maintenance.writeManifest(root, 1, Nil)
+    intercept[IllegalArgumentException](Maintenance.resolveAsOf(root, 100L)) // no log
+    val s1 = StructType(Seq(StructField("a", LongType)))
+    val s3 = StructType(s1.fields :+ StructField("b", StringType))
+    val m1 = Seq("a" -> "a")
+    val m3 = Seq("x" -> "a", "b" -> "b")
+    Maintenance.writeSchemaLog(root, 1, s1)
+    Maintenance.writeSchemaLog(root, 3, s3)
+    Maintenance.writeMapping(root, 1, m1)
+    Maintenance.writeMapping(root, 3, m3)
+    Maintenance.writeCommitLog(root, Seq(1 -> 100L, 3 -> 300L))
+    val want = Map(0 -> None, 2 -> Some(1), 3 -> Some(3), 5 -> Some(3))
+    def check(stage: String): Unit = for ((v, m) <- want) {
+      for (log <- Seq(Maintenance.SchemaLog, Maintenance.MappingLog))
+        assert(log.atOrBelow(root, v) == m, s"$stage: ${log.prefix} serving v$v")
+      assert(Maintenance.schemaAt(root, v) == m.map(Map(1 -> s1, 3 -> s3)),
+        s"$stage: schema at v$v")
+      assert(Maintenance.mappingAt(root, v) == m.map(Map(1 -> m1, 3 -> m3)),
+        s"$stage: mapping at v$v")
+    }
+    check("plaintext")
+    Maintenance.enableStoreEncryption(root, "fmt-mk")
+    for (f <- Seq("schema_v1.json", "schema_v3.json", "mapping_v1.txt",
+        "mapping_v3.txt", "commits_ts.txt"))
+      assert(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(root, f)), "UTF-8").startsWith("GRAFTENC1"),
+        s"$f left plaintext")
+    check("encrypted")
+    assert(Maintenance.commitEpochs(root) == Map(1 -> 100L, 3 -> 300L))
+    assert(Maintenance.resolveAsOf(root, 299L) == 1)
+    intercept[IllegalArgumentException](Maintenance.resolveAsOf(root, 99L)) // all later
+  }
+
   // ---- history: truncating overwrite of a dv-carrying store ----------------
 
   test("r17: truncating overwrite of a store with dvs reads as overwrite, not compact") {
