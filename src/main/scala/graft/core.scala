@@ -137,7 +137,8 @@ object Staging {
     * private[graft]: the crypto-parity spec walks the same list. */
   private[graft] val Kinds = Seq("ann_", "annb_", "annr_", "lex_", "index_", "mm_", "pairs_",
     "epairs_", "nbrs_", "ssink_", "rbdata_", "mordata_", "srestart_", "hyb_", "cpdata_",
-    "pidata_", "occdata_", "bpe_", "gsink_", "cardstore_", "gsnap_", "gsrc_", "txnsink_")
+    "pidata_", "occdata_", "bpe_", "gsink_", "cardstore_", "gsnap_", "gsrc_", "txnsink_",
+    "zonestore_", "pestore_")
   private val SourceFile = "staging_source.txt"
   private val FormatFile = "staging_format.txt"
   private val LockFile = ".staging.lock"

@@ -264,10 +264,14 @@ object Maintenance {
   // the resolved scan):
   //  - `manifest_v<N>.txt` — newline-separated file-group paths of
   //    snapshot N. `dv:` lines are merge-on-read deletion-vector
-  //    sidecars (parquet of `(file_key, row_index)` positions), `zone:`
-  //    lines per-group column stats, `txn:` lines the idempotent-writer
-  //    registry. A version is claimed only by [[commitSnapshot]]'s
-  //    atomic link; [[writeManifest]] seeds or rewrites one in place.
+  //    sidecars (parquet of `(file_key, row_index)` positions), `txn:`
+  //    lines the idempotent-writer registry, and
+  //    `zone:<group>|<column>|<lo>|<hi>|<rows>` lines ([[ZoneLine]])
+  //    one group's min/max for one column plus its row count: pushed
+  //    range/equality filters prune whole groups BEFORE listing, and
+  //    the stats share the commit's atomicity and versioning. A version
+  //    is claimed only by [[commitSnapshot]]'s atomic link;
+  //    [[writeManifest]] seeds or rewrites one in place.
   //  - `commits_ts.txt` — `version=epochSeconds` lines; `timestampAsOf`
   //    resolves through [[resolveAsOf]] (fail-closed before the first
   //    commit, exactly like Delta/Iceberg).
@@ -278,9 +282,6 @@ object Maintenance {
   //    snapshot from N up to the next entry ([[VersionLog.atOrBelow]]).
   //  - `partition_cols.txt` — the declared partition columns, comma-
   //    separated; `parquet_opts.txt` — `key=value` writer options.
-  //  - `zones_v1.txt` + `zones_col.txt` — per-group `path|lo|hi|rows`
-  //    zone map over one column; pushed range/equality filters on it
-  //    prune whole file groups BEFORE listing.
   //  - `store_key.txt` — `key=value` lines holding the KMS-wrapped DEK
   //    of an encrypted control plane (never itself encrypted).
   // Every other text file may be AES-GCM ciphertext once
@@ -291,8 +292,6 @@ object Maintenance {
   private val CommitLogFile = "commits_ts.txt"
   private val PartitionColsFile = "partition_cols.txt"
   private val ParquetOptsFile = "parquet_opts.txt"
-  private val ZonesFile = "zones_v1.txt"
-  private val ZoneColFile = "zones_col.txt"
   /** A staged data dir's recorded parquet file schema (see [[seedStore]]). */
   private val StagedSchemaFile = "schema.json"
 
@@ -399,16 +398,6 @@ object Maintenance {
   private[graft] def writePartitionCols(root: String, cols: Seq[String]): Unit =
     writeStoreText(root, PartitionColsFile, cols.mkString(","))
 
-  /** The store's zone-map column, if it has a zone map. */
-  private[graft] def zoneColumn(root: String): Option[String] =
-    storeLines(root, ZoneColFile).headOption
-
-  /** Parsed (path, lo, hi, n_rows) zone rows — manifest arithmetic only;
-    * empty without a zone map. */
-  private[graft] def zoneStats(root: String): Seq[(String, String, String, Long)] =
-    storeLines(root, ZonesFile).map(_.split('|'))
-      .collect { case Array(path, lo, hi, n) => (path, lo, hi, n.toLong) }
-
   /** The commit log: snapshot version -> commit epoch (seconds).
     * Empty for stores without one. */
   private[graft] def commitEpochs(root: String): Map[Int, Long] =
@@ -421,6 +410,14 @@ object Maintenance {
   private[graft] def writeCommitLog(root: String, epochs: Seq[(Int, Long)]): Unit =
     if (commitEpochs(root) != epochs.toMap)
       writeStoreText(root, CommitLogFile, renderKeyValues(epochs))
+
+  /** Register the graft SQL catalog over [[Staging.Base]] and return
+    * the table name that addresses store `root`, a dir under it. */
+  private def sqlTable(s: SparkSession, root: String): String = {
+    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
+    new java.io.File(root).getName
+  }
 
   // -- io_snapshot_read: copy-on-write snapshot versioning (time travel) ---
   // Delta/Iceberg's core idea on bare parquet: a table version is a
@@ -441,9 +438,19 @@ object Maintenance {
     * metadata, not paths, and are stripped here so every existing
     * consumer keeps seeing only data and `dv:` lines. */
   def manifestPaths(root: String, version: Int): Seq[String] =
-    manifestRawLines(root, version)
-      .filterNot(l => l.startsWith("zone:") || l.startsWith("txn:"))
-      .map(DvLine.normalize)
+    pathsIn(manifestRawLines(root, version))
+
+  /** The data and (normalized) `dv:` lines among manifest `lines`. */
+  private def pathsIn(lines: Seq[String]): Seq[String] =
+    lines.filterNot(l => ZoneLine.is(l) || TxnLine.is(l)).map(DvLine.normalize)
+
+  /** [[manifestPaths]] and [[manifestZones]] of one version from a
+    * single read (and, on an encrypted store, a single decrypt). */
+  private[graft] def manifestPathsAndZones(root: String, version: Int)
+      : (Seq[String], Seq[(String, String, String, String, Long)]) = {
+    val lines = manifestRawLines(root, version)
+    (pathsIn(lines), lines.flatMap(ZoneLine.parse))
+  }
 
   /** Latest idempotent-writer version recorded for `app` at snapshot
     * `version`, if any (the `txn:` registry, r16 verdict #2). */
@@ -516,6 +523,31 @@ object Maintenance {
     /** `dv:` lines to their un-annotated form; other lines unchanged. */
     def normalize(line: String): String =
       if (is(line)) s"dv:${sidecar(line)}" else line
+
+    /** A row's position identity is (file key, row index). The file
+      * key is the data file's name under its chain of `name=value`
+      * partition dirs, and at least its one enclosing dir:
+      * `<group>/part-*` unpartitioned, `__p_a=x/part-*`,
+      * `__p_a=x/__p_b=y/part-*` (part names repeat across sibling
+      * partition dirs of one write, so the whole chain is needed). It
+      * survives a staged dir's move, where an absolute path would not.
+      * Sidecars store it as [[fileKeyCol]] renders `_metadata.file_path`. */
+    private val KeyPattern = "(?:^|/)((?:[^/=]+=[^/]*/)+[^/]+|[^/]+/[^/]+)$"
+    private val KeyRegex = KeyPattern.r
+    def fileKeyCol: org.apache.spark.sql.Column =
+      regexp_extract(col("_metadata.file_path"), KeyPattern, 1)
+    /** [[fileKeyCol]] of a data file path. */
+    def fileKey(path: String): String =
+      KeyRegex.findFirstMatchIn(path).map(_.group(1)).getOrElse(path)
+    /** The group part of a file key: all but the file name. */
+    def keyGroup(key: String): String = key.substring(0, math.max(0, key.lastIndexOf('/')))
+    /** The [[keyGroup]] of the files under manifest group `g`, which
+      * is URI-escaped first as `_metadata.file_path` renders it (a
+      * partition value with a space is "%20" there but raw in the
+      * manifest's filesystem path), or a dv on such a group would
+      * never match it. */
+    def groupTail(g: String): String =
+      keyGroup(fileKey(new org.apache.hadoop.fs.Path(g).toUri.toString + "/f"))
   }
 
   /** `txn:<appId>=<version>` manifest lines — the idempotent-writer
@@ -546,6 +578,29 @@ object Maintenance {
       val vs = lines.filter(is).filter(l => appId(l) == app).map(version)
       if (vs.isEmpty) None else Some(vs.max)
     }
+  }
+
+  /** `zone:<group>|<column>|<lo>|<hi>|<rows>` manifest lines — one
+    * group's footer min/max for one column plus its row count. Bounds
+    * render in [[graft.sources.ZoneOrder]]'s forms and never contain
+    * '|' (the footer harvest drops such a bound). Zone lines ride the
+    * commit that adds their group, and [[commitSnapshot]] drops them
+    * with it. */
+  private[graft] object ZoneLine {
+    def is(line: String): Boolean = line.startsWith("zone:")
+    def render(group: String, column: String, lo: String, hi: String,
+        rows: Long): String = s"zone:$group|$column|$lo|$hi|$rows"
+    /** The group a zone line describes. */
+    def group(line: String): String = line.stripPrefix("zone:").takeWhile(_ != '|')
+    /** (group, column, lo, hi, rows); None for any other line and for
+      * a malformed one — zone stats fail OPEN, a bad line only costs
+      * pruning. */
+    def parse(line: String): Option[(String, String, String, String, Long)] =
+      if (!is(line)) None
+      else line.stripPrefix("zone:").split('|') match {
+        case Array(g, c, lo, hi, n) => n.toLongOption.map((g, c, lo, hi, _))
+        case _ => None
+      }
   }
 
   // -- encrypted store metadata (r15) ----------------------------------------
@@ -662,8 +717,7 @@ object Maintenance {
     // for stores that evolved their schema before enabling encryption
     // (r15 ADVICE)
     val names = Option(new java.io.File(root).list()).toSeq.flatten.filter(n =>
-      Seq(ManifestLog, MappingLog, SchemaLog).exists(_.owns(n)) ||
-        Seq(CommitLogFile, ZonesFile, ZoneColFile).contains(n))
+      Seq(ManifestLog, MappingLog, SchemaLog).exists(_.owns(n)) || n == CommitLogFile)
     for (n <- names) {
       val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(root, n))
       if (!isCiphertext(bytes)) writeStoreText(root, n, new String(bytes, "UTF-8"))
@@ -732,16 +786,10 @@ object Maintenance {
       storeKey(root).filterNot { case (k, _) => k == "masterKeyId" || k == "wrappedDek" })
   }
 
-  /** Zone stats committed in a manifest: `zone:<path>|<col>|<lo>|<hi>|<n>`
-    * lines → (group path, column, lo, hi, rows). Unparseable lines are
-    * dropped (zone stats must fail OPEN — a malformed line degrades
-    * pruning, never correctness). */
+  /** Zone stats committed in a manifest ([[ZoneLine.parse]]). */
   private[graft] def manifestZones(root: String, version: Int)
       : Seq[(String, String, String, String, Long)] =
-    manifestRawLines(root, version)
-      .filter(_.startsWith("zone:"))
-      .map(_.stripPrefix("zone:").split('|'))
-      .collect { case Array(p, c, lo, hi, n) => (p, c, lo, hi, n.toLong) }
+    manifestRawLines(root, version).flatMap(ZoneLine.parse)
 
   // bump when the staged CONTENT changes (e.g. the rewrite's rounding
   // formula) — an intact-looking layout staged by older code would
@@ -874,9 +922,7 @@ object Maintenance {
           return TxnSkipped
         case _ => ()
       }
-      val curPaths = curLines
-        .filterNot(l => l.startsWith("zone:") || TxnLine.is(l))
-        .map(DvLine.normalize)
+      val curPaths = pathsIn(curLines)
       // conflict iff a group we replace is no longer live — some
       // intervening commit already replaced or dropped it
       val gone = removedNorm.filterNot(curPaths.contains)
@@ -908,8 +954,7 @@ object Maintenance {
       val newManifest = curLines.filterNot { l =>
         val norm = DvLine.normalize(l)
         removedNorm.contains(norm) ||
-          (l.startsWith("zone:") &&
-            removedNorm.contains(l.stripPrefix("zone:").takeWhile(_ != '|'))) ||
+          (ZoneLine.is(l) && removedNorm.contains(ZoneLine.group(l))) ||
           // one registry line per appId: this commit's txn replaces it
           txn.exists { case (app, _) => TxnLine.is(l) && TxnLine.appId(l) == app }
       } ++ added ++ txn.map { case (app, v) => TxnLine.render(app, v) }
@@ -923,9 +968,7 @@ object Maintenance {
       // branch readmitted exactly the resurrect anomaly for pre-r16
       // stores). [[migrateDvReadSets]] annotates legacy lines from
       // their sidecars' file_keys so such stores commit normally again.
-      val liveData = newManifest
-        .filterNot(l => l.startsWith("zone:") || TxnLine.is(l) || DvLine.is(l))
-        .toSet
+      val liveData = pathsIn(newManifest).filterNot(DvLine.is).toSet
       val dangling = newManifest.filter(DvLine.is).flatMap(l =>
         DvLine.groups(l).map(_.filterNot(liveData.contains)).getOrElse(Nil)
           .map(g => s"${DvLine.sidecar(l)} -> $g"))
@@ -972,6 +1015,68 @@ object Maintenance {
     -1 // unreachable
   }
 
+  /** `df` plus a path-tag copy `__p_<c>` of each partition column `c`,
+    * and the tag names. The column itself stays in the files, so a
+    * group's footer stats pin it to the one value its dir names. */
+  private[graft] def withPartitionTags(df: DataFrame, cols: Seq[String])
+      : (DataFrame, Seq[String]) =
+    (cols.foldLeft(df)((t, c) => t.withColumn(s"__p_$c", col(c))), cols.map(c => s"__p_$c"))
+
+  /** Write `df` as new file groups under `dir` of store `root` (its
+    * data-plane crypto and writer options applied) and return the
+    * manifest lines that add them ([[harvestGroups]]). With `tags`,
+    * ONE dynamic `partitionBy` over them lays out a group per
+    * tag-value combination; without, `dir` is the one group. Nothing
+    * is committed: hand the lines to [[commitGroups]]. */
+  private[graft] def writeGroups(root: String, df: DataFrame, dir: String,
+      tags: Seq[String] = Nil): Seq[String] = {
+    val w = df.write.options(dataPlaneOptions(root) ++ parquetWriteOpts(root)).mode("overwrite")
+    (if (tags.isEmpty) w else w.partitionBy(tags: _*)).parquet(dir)
+    harvestGroups(df.sparkSession, root, dir,
+      org.apache.spark.sql.types.StructType(df.schema.filterNot(f => tags.contains(f.name))),
+      tags.nonEmpty)
+  }
+
+  /** The manifest lines that add the groups under a written `dir`:
+    * the groups — its leaf dirs when `partitioned`, else `dir` itself
+    * — then their `zone:` lines over the columns of `schema`, from the
+    * parquet footers (zero Spark jobs; a bound that cannot render
+    * drops only that column's line). */
+  private[graft] def harvestGroups(s: SparkSession, root: String, dir: String,
+      schema: org.apache.spark.sql.types.StructType, partitioned: Boolean): Seq[String] = {
+    val conf = storeHadoopConf(s, root)
+    val groups = if (partitioned) leafDirs(dir, conf) else Seq(dir)
+    groups ++ groups.flatMap { g =>
+      val (rows, stats) = graft.sources.FooterStats.harvest(g, schema, conf)
+      stats.toSeq.sortBy(_._1).map { case (c, (lo, hi)) => ZoneLine.render(g, c, lo, hi, rows) }
+    }
+  }
+
+  /** Leaf dirs under `dir` (the dirs directly holding parquet files),
+    * sorted. Driver-side listing, O(dirs). */
+  private def leafDirs(dir: String,
+      conf: org.apache.hadoop.conf.Configuration): Seq[String] = {
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+    def walk(p: org.apache.hadoop.fs.Path): Seq[String] = {
+      val st = fs.listStatus(p)
+      if (st.exists(x => x.isFile && x.getPath.getName.endsWith(".parquet")))
+        Seq(p.toUri.getPath)
+      else st.filter(_.isDirectory).toSeq.flatMap(x => walk(x.getPath))
+    }
+    walk(new org.apache.hadoop.fs.Path(dir)).sorted
+  }
+
+  /** [[commitSnapshot]] of lines backed by the `staged` dirs; a commit
+    * that throws (lost race, conflict) deletes them, so a failed writer
+    * leaves no orphan files under the store. */
+  private[graft] def commitGroups(root: String, readVersion: Int, removed: Seq[String],
+      added: Seq[String], staged: Seq[String], strict: Boolean = false,
+      txn: Option[(String, Long)] = None): Int =
+    try commitSnapshot(root, readVersion, removed, added, strict = strict, txn = txn)
+    catch { case t: Throwable =>
+      staged.foreach(d => Staging.rmTree(new java.io.File(d))); throw t
+    }
+
   /** One-time migration for pre-r16 stores (r16 verdict #6): annotate
     * every LEGACY unannotated `dv:` line with the read set derived
     * from its sidecar's own file_keys, landed as one metadata-only
@@ -990,15 +1095,13 @@ object Maintenance {
       .filter(l => DvLine.is(l) && DvLine.groups(l).isEmpty)
     if (legacy.isEmpty) return cur
     val dataLines = lines.filterNot(DvLine.is)
-    def escapedTail(g: String): String =
-      new org.apache.hadoop.fs.Path(g).toUri.toString.split('/').last
-    val byTail = dataLines.map(g => escapedTail(g) -> g).toMap
+    val byTail = dataLines.map(g => DvLine.groupTail(g) -> g).toMap
     val crypto = dataPlaneOptions(root)
     val annotated = legacy.map { l =>
       val sc = DvLine.sidecar(l)
       val tails = s.read.options(crypto).parquet(sc)
         .select($"file_key").distinct().collect().map(_.getString(0))
-        .map(_.takeWhile(_ != '/')).toSet
+        .map(DvLine.keyGroup).toSet
       val unknown = tails.filterNot(byTail.contains)
       require(unknown.isEmpty,
         s"dv sidecar $sc references groups not live at v$cur: $unknown")
@@ -1154,9 +1257,7 @@ object Maintenance {
   private def qSqlInsert(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val run = occRun(s, d, name = "io_sql_insert_run")
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
-    val name = new java.io.File(run).getName
+    val name = sqlTable(s, run)
     val cols = s.read.format("graft").option("versionAsOf", 1).load(run)
       .columns.toSeq
     def stage(mod: Int, view: String): Unit =
@@ -1293,9 +1394,7 @@ object Maintenance {
     enableStoreEncryption(root, "store-dk-1", dataPlane = true)
     orders.filter($"o_orderkey" % 20 === 7)
       .write.format("graft").mode("append").save(root) // v2: encrypted group
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
-    val name = new java.io.File(root).getName
+    val name = sqlTable(s, root)
     s.sql(s"DELETE FROM graft.`$name` WHERE o_orderpriority = '1-URGENT'") // v3
     // ciphertext at rest: every parquet artifact carries the PARE magic
     def parquetFiles(dir: java.io.File): Seq[java.io.File] =
@@ -1421,28 +1520,17 @@ object Maintenance {
     if (clusters.isEmpty) return cur
     val out = s"$root/pack_${java.util.UUID.randomUUID().toString.take(12)}"
     val crypto = dataPlaneOptions(root)
-    val writeOpts = crypto ++ parquetWriteOpts(root)
     val removed = Seq.newBuilder[String]
     val added = Seq.newBuilder[String]
     for ((chain, gs) <- clusters.toSeq.sortBy(_._1)) {
       val dst = if (chain.isEmpty) out else s"$out/$chain"
-      val df = s.read.options(crypto).parquet(gs: _*)
       val nFiles = math.max(1,
         math.ceil(gs.map(rowsOf).sum.toDouble / smallRows).toInt)
-      writeOpts.foldLeft(
-        df.coalesce(nFiles).write.mode("overwrite")) {
-        case (w, (k, v)) => w.option(k, v)
-      }.parquet(dst)
-      val (rows, stats) = graft.sources.FooterStats.harvest(dst, df.schema, conf)
       removed ++= gs
-      added += dst
-      added ++= stats.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
-        s"zone:$dst|$c|$lo|$hi|$rows" }
+      added ++= writeGroups(root,
+        s.read.options(crypto).parquet(gs: _*).coalesce(nFiles), dst)
     }
-    try commitSnapshot(root, cur, removed.result(), added.result())
-    catch { case t: Throwable =>
-      graft.Staging.rmTree(new java.io.File(out)); throw t
-    }
+    commitGroups(root, cur, removed.result(), added.result(), Seq(out))
   }
 
   /** OPTIMIZE ZORDER for the snapshot store (r16 verdict #8): rewrite
@@ -1504,40 +1592,22 @@ object Maintenance {
         case ((b, i), acc) => when(col("__z") <= b, i).otherwise(acc)
       }
     // physical names + partition tags, the DSv2 write discipline
-    val m = new java.util.HashMap[String, String](); m.put("path", root)
-    val store = graft.sources.GraftStore.resolve(
-      new org.apache.spark.sql.util.CaseInsensitiveStringMap(m))
+    val store = graft.sources.GraftStore.at(root)
     val partPhys = store.partitionCols.map(store.phys)
     val physical = withZ.select(
       (logical.columns.toSeq.map(n => col(n).as(store.phys(n))) :+
         col("__z") :+ bucketExpr.as("__zb")): _*)
-    val tags = partPhys.map(p => s"__p_$p") :+ "__zb"
-    val tagged = partPhys.foldLeft(physical)((df, p) =>
-      df.withColumn(s"__p_$p", col(p)))
+    val (tagged, partTags) = withPartitionTags(physical, partPhys)
+    val tags = partTags :+ "__zb"
     val out = s"$root/cluster_${java.util.UUID.randomUUID().toString.take(12)}"
-    val conf = storeHadoopConf(s, root)
-    val crypto = dataPlaneOptions(root) ++ parquetWriteOpts(root)
     // rows sort by (tags…, z): leading partition columns keep the
     // dynamic-partition writer from re-sorting (which would scramble
     // the z order), so row-group stats inside each bucket stay narrow
-    crypto.foldLeft(
+    val added = writeGroups(root,
       tagged.repartition(tags.map(col): _*)
         .sortWithinPartitions((tags :+ "__z").map(col): _*)
-        .drop("__z")
-        .write.partitionBy(tags: _*).mode("overwrite")) {
-      case (w, (k, v)) => w.option(k, v)
-    }.parquet(out)
-    val fileSchema = store.physicalSchema
-    val leaves = leafDirs(out, conf)
-    val zoneLines = leaves.flatMap { g =>
-      val (rows, stats) = graft.sources.FooterStats.harvest(g, fileSchema, conf)
-      stats.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
-        s"zone:$g|$c|$lo|$hi|$rows" }
-    }
-    try commitSnapshot(root, cur, dataLines ++ dvLines, leaves ++ zoneLines)
-    catch { case t: Throwable =>
-      graft.Staging.rmTree(new java.io.File(out)); throw t
-    }
+        .drop("__z"), out, tags)
+    commitGroups(root, cur, dataLines ++ dvLines, added, Seq(out))
   }
 
   /** The data-IO half of [[compactStore]]: resolve the touched groups,
@@ -1562,19 +1632,15 @@ object Maintenance {
     val crypto = dataPlaneOptions(root)
     val refKeys = s.read.options(crypto).parquet(dvPaths: _*)
       .select($"file_key").distinct().collect().map(_.getString(0))
-      .map(_.takeWhile(_ != '/')).toSet
-    // dv file_keys come from `_metadata.file_path`, which renders the
-    // URI-ESCAPED form (a partition value with a space is "%20" there
-    // but raw in the manifest's filesystem path) — compare the group's
-    // last segment in the same escaped rendering, or a dv on such a
-    // group would be retired WITHOUT rewriting it (resurrected rows)
-    def escapedTail(g: String): String =
-      new org.apache.hadoop.fs.Path(g).toUri.toString.split('/').last
-    val touched = dataLines.filter(g => refKeys.contains(escapedTail(g)))
+      .map(DvLine.keyGroup).toSet
+    // compared in the file keys' escaped rendering, or a dv on a group
+    // with an escaped partition value would be retired WITHOUT
+    // rewriting it (resurrected rows)
+    val touched = dataLines.filter(g => refKeys.contains(DvLine.groupTail(g)))
     require(touched.nonEmpty, "dv positions reference no live group")
     // and the retired dv set must reference ONLY touched groups — a
     // partially-matched pile must fail loudly, never fold blind
-    val touchedTails = touched.map(escapedTail).toSet
+    val touchedTails = touched.map(DvLine.groupTail).toSet
     require(refKeys.subsetOf(touchedTails),
       s"dv positions reference groups not in the manifest: ${refKeys -- touchedTails}")
     val dv = s.read.options(crypto).parquet(dvPaths: _*)
@@ -1583,59 +1649,18 @@ object Maintenance {
     // is the 8-GB-driver-ceiling shape (r15 verdict #2). Spark/AQE
     // picks broadcast when the pile is actually small.
     val rewritten = s.read.options(crypto).parquet(touched: _*)
-      .withColumn("file_key",
-        regexp_extract(col("_metadata.file_path"), "([^/]+/[^/]+)$", 1))
+      .withColumn("file_key", DvLine.fileKeyCol)
       .withColumn("row_index", col("_metadata.row_index"))
       .join(dv.select($"file_key", $"row_index"),
         Seq("file_key", "row_index"), "left_anti")
       .drop("file_key", "row_index")
     val out = s"$root/compact_${java.util.UUID.randomUUID().toString.take(12)}"
-    val conf = storeHadoopConf(s, root)
-    val writeOpts = crypto ++ parquetWriteOpts(root)
     // PARTITIONED stores keep their layout through compaction: the
     // rewrite re-partitions by the same path tags, so the output is
     // again one group per partition value — partition pruning keeps
     // working on compacted data instead of degrading to one wide group
-    val partCols = partitionCols(root)
-    val (outGroups, zoneLines) =
-      if (partCols.isEmpty) {
-        writeOpts.foldLeft(rewritten.write.mode("overwrite")) {
-          case (w, (k, v)) => w.option(k, v)
-        }.parquet(out)
-        val (rows, stats) = graft.sources.FooterStats.harvest(out,
-          rewritten.schema, conf)
-        (Seq(out), stats.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
-          s"zone:$out|$c|$lo|$hi|$rows" })
-      } else {
-        val tags = partCols.map(c => s"__p_$c")
-        val tagged = partCols.foldLeft(rewritten)((df, c) =>
-          df.withColumn(s"__p_$c", col(c)))
-        writeOpts.foldLeft(
-          tagged.write.partitionBy(tags: _*).mode("overwrite")) {
-          case (w, (k, v)) => w.option(k, v)
-        }.parquet(out)
-        val leaves = leafDirs(out, conf)
-        (leaves, leaves.flatMap { d =>
-          val (rows, stats) = graft.sources.FooterStats.harvest(d,
-            rewritten.schema, conf)
-          stats.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
-            s"zone:$d|$c|$lo|$hi|$rows" }
-        })
-      }
-    Some(CompactionPlan(cur, touched ++ dvLines, outGroups ++ zoneLines, out))
-  }
-
-  /** Leaf partition dirs (dirs directly holding parquet files). */
-  private def leafDirs(dir: String,
-      conf: org.apache.hadoop.conf.Configuration): Seq[String] = {
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
-    def walk(p: org.apache.hadoop.fs.Path): Seq[String] = {
-      val st = fs.listStatus(p)
-      if (st.exists(x => x.isFile && x.getPath.getName.endsWith(".parquet")))
-        Seq(p.toUri.getPath)
-      else st.filter(_.isDirectory).toSeq.flatMap(x => walk(x.getPath))
-    }
-    walk(new org.apache.hadoop.fs.Path(dir)).sorted
+    val (tagged, tags) = withPartitionTags(rewritten, partitionCols(root))
+    Some(CompactionPlan(cur, touched ++ dvLines, writeGroups(root, tagged, out, tags), out))
   }
 
   /** Commit a [[planCompaction]] result through the OCC path. A lost
@@ -1644,11 +1669,7 @@ object Maintenance {
     * dv rule fails the rebase if a concurrent MERGE/DELETE added a dv
     * on a group this compaction retires (r15 verdict #1). */
   private[graft] def commitCompaction(root: String, plan: CompactionPlan): Int =
-    try commitSnapshot(root, plan.readVersion, plan.removed, plan.added)
-    catch { case t: Throwable =>
-      graft.Staging.rmTree(new java.io.File(plan.out))
-      throw t
-    }
+    commitGroups(root, plan.readVersion, plan.removed, plan.added, Seq(plan.out))
 
   private def qCompactStore(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -1855,9 +1876,7 @@ object Maintenance {
   private def qSqlDelete(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val run = occRun(s, d, name = "io_sql_delete_run")
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
-    val name = new java.io.File(run).getName
+    val name = sqlTable(s, run)
     s.sql(s"DELETE FROM graft.`$name` WHERE o_orderpriority = '1-URGENT'") // -> v2
     // the replayed DELETE finds every position already deleted: no-op
     s.sql(s"DELETE FROM graft.`$name` WHERE o_orderpriority = '1-URGENT'")
@@ -1906,10 +1925,7 @@ object Maintenance {
     orders.filter($"o_orderkey" % 2 === 1)
       .write.format("graft")
       .mode("append").save(root) // v3: the store's layout applies anyway
-    val opts = new java.util.HashMap[String, String]()
-    opts.put("path", root)
-    val store = graft.sources.GraftStore.resolve(
-      new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts))
+    val store = graft.sources.GraftStore.at(root)
     val (kept, _) = graft.sources.GraftStore.zonePrune(store,
       Array[org.apache.spark.sql.sources.Filter](
         org.apache.spark.sql.sources.EqualTo("o_orderpriority", "1-URGENT")))
@@ -1944,11 +1960,9 @@ object Maintenance {
   // orders.
   private def qSqlDdl(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
     val root = Staging.scratch("io_sql_ddl", d)
     graft.Staging.rmTree(new java.io.File(root))
-    val name = new java.io.File(root).getName
+    val name = sqlTable(s, root)
     s.sql(s"""CREATE TABLE graft.`$name` (
               |  o_orderkey BIGINT, o_orderpriority STRING, o_totalprice DOUBLE)
               |PARTITIONED BY (o_orderpriority)""".stripMargin)
@@ -1999,11 +2013,9 @@ object Maintenance {
   // makes schema evolution O(1) on a 100 TB store.
   private def qSqlAlter(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
     val root = Staging.scratch("io_sql_alter", d)
     graft.Staging.rmTree(new java.io.File(root))
-    val name = new java.io.File(root).getName
+    val name = sqlTable(s, root)
     s.sql(s"""CREATE TABLE graft.`$name` (
               |  o_orderkey BIGINT, o_totalprice DOUBLE, o_note STRING)""".stripMargin) // v1
     Tables.orders(s, d).createOrReplaceTempView("io_sql_alter_orders")
@@ -2077,11 +2089,9 @@ object Maintenance {
   // column pinning compact/rewrite classification.
   private def qSqlMaintenance(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
     val root = Staging.scratch("io_sql_maintenance", d)
     graft.Staging.rmTree(new java.io.File(root))
-    val name = new java.io.File(root).getName
+    val name = sqlTable(s, root)
     val orders = Tables.orders(s, d)
     Maintenance.createStore(root, orders.schema)
     orders.filter($"o_orderkey" % 4 === 1)
@@ -2213,9 +2223,7 @@ object Maintenance {
     for (r <- 0 until 4)
       orders.filter($"o_orderkey" % 4 === r)
         .write.format("graft").mode("append").save(root) // v2..v5
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
-    val name = new java.io.File(root).getName
+    val name = sqlTable(s, root)
     s.sql(s"DELETE FROM graft.`$name` WHERE o_orderkey % 20 = 7") // v6: dv
     val maxKey = orders.agg(max($"o_orderkey")).head().getLong(0)
     def keptOfTotal(df: DataFrame): (Int, Int) = {
@@ -2271,9 +2279,7 @@ object Maintenance {
   private def qSqlUpdate(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val run = occRun(s, d, name = "io_sql_update_run")
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
-    val name = new java.io.File(run).getName
+    val name = sqlTable(s, run)
     s.sql(s"""UPDATE graft.`$name`
               |SET o_totalprice = $bumpedPriceSql
               |WHERE o_orderkey % 10 = 0""".stripMargin) // -> v2, ONE commit
@@ -2313,9 +2319,7 @@ object Maintenance {
   private def qSqlMerge(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val run = occRun(s, d, name = "io_sql_merge_run")
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
-    val name = new java.io.File(run).getName
+    val name = sqlTable(s, run)
     val cols = s.read.format("graft").option("versionAsOf", 1).load(run)
       .columns.toSeq
     val orders = Tables.orders(s, d)
@@ -2372,9 +2376,7 @@ object Maintenance {
   private def qSqlMergeFull(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val run = occRun(s, d, name = "io_sql_merge_full_run")
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
-    val name = new java.io.File(run).getName
+    val name = sqlTable(s, run)
     val cols = s.read.format("graft").option("versionAsOf", 1).load(run)
       .columns.toSeq
     val orders = Tables.orders(s, d).withColumn("g", ($"o_orderkey" % 4).cast("int"))
@@ -2436,9 +2438,7 @@ object Maintenance {
   private def qHistoryTable(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val root = governedStoreRoot(s, d)
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
-    val name = new java.io.File(root).getName
+    val name = sqlTable(s, root)
     s.sql(s"SELECT * FROM graft.`$name$$history`")
       .orderBy($"version")
   }
@@ -2561,9 +2561,7 @@ object Maintenance {
   private def qSqlTimeTravel(s: SparkSession, d: String): DataFrame = {
     val root = snapshotRoot(s, d)
     ensureCommitLog(root)
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
-    val name = new java.io.File(root).getName
+    val name = sqlTable(s, root)
     def leg(probe: String, suffix: String) =
       s"""SELECT '$probe' AS probe, COUNT(*) AS n,
          |  ${sqlSum("o_totalprice")} AS sum_price
@@ -2702,57 +2700,61 @@ object Maintenance {
   // selective predicate prunes whole file groups from the MANIFEST —
   // before any file is listed or opened (parquet row-group stats only
   // help after the footer read; manifest stats avoid even touching the
-  // file). Staging splits orders into per-year file groups and records
-  // each group's o_orderdate min/max in `zones_v1.txt` alongside the
-  // path manifest; the pruned read keeps exactly the groups whose
-  // [min, max] overlaps the predicate window. The query emits the
+  // file). Staging splits orders into per-year file groups and commits
+  // each group's o_orderdate min/max as `zone:` lines of manifest v1;
+  // the pruned read keeps exactly the groups whose [min, max] overlaps
+  // the predicate window (GraftStore.zonePrune, the same pruner as a
+  // DSv2 scan or a SQL DELETE). The query emits the
   // number of groups it read next to the aggregate, and the oracle
   // recomputes that count independently (distinct years among matching
   // rows) — a pruning bug that reads too many OR too few groups fails
   // the value compare itself, not just a spec.
-  private[graft] def zonemapRoot(s: SparkSession, d: String): String = {
-    import s.implicits._
-    val root = Staging.scratch("zonemap", d)
-    val fmt = "v3-year-groups+counts+col" // v3: zones_col.txt for the DSv2 scan
-    if (Staging.isCurrent(root, fmt)) return root
-    val base = Tables.orders(s, d).withColumn("y", year($"o_orderdate"))
-    base.write.mode("overwrite").partitionBy("y").parquet(s"$root/data")
-    // O(groups) stats rows — the same aggregate a lake writer folds into
-    // its commit; at scale these come free from the parquet footers the
-    // writer just produced
-    val stats = base.groupBy($"y").agg(
-      date_format(min($"o_orderdate"), "yyyy-MM-dd").as("lo"),
-      date_format(max($"o_orderdate"), "yyyy-MM-dd").as("hi"),
-      count(lit(1)).as("n"))
-      .collect().sortBy(_.getInt(0))
-    val zoneLines = stats.map(r =>
-      s"$root/data/y=${r.getInt(0)}|${r.getString(1)}|${r.getString(2)}|${r.getLong(3)}")
-    writeStoreText(root, ZonesFile, zoneLines.mkString("\n"))
-    writeManifest(root, 1, stats.map(r => s"$root/data/y=${r.getInt(0)}").toSeq)
-    // the zone column's physical name, for spark.read.format("graft")'s
-    // pushed-filter group pruning (GraftScan.zoneBounds)
-    writeStoreText(root, ZoneColFile, "o_orderdate")
-    Staging.mark(root, fmt)
-    root
-  }
-
-  /** File groups whose zone [lo, hi] overlaps [wantLo, wantHi] (ISO date
-    * strings — lexicographic comparison IS date comparison), plus the
-    * total group count. Pure manifest arithmetic: no file is opened. */
-  private[graft] def zonePrunedPaths(root: String, wantLo: String,
-      wantHi: String): (Seq[String], Int) = {
-    val zones = zoneStats(root)
-    (zones.collect { case (p, lo, hi, _) if hi >= wantLo && lo <= wantHi => p },
-      zones.size)
-  }
+  private[graft] def zonemapRoot(s: SparkSession, d: String): String =
+    // v4: year-group stats as manifest zone: lines + schema log v1
+    Staging.inPlace("zonestore_", d, Seq("orders"), "v4-year-groups+zone-lines") { root =>
+      import s.implicits._
+      val base = Tables.orders(s, d).withColumn("y", year($"o_orderdate"))
+      base.write.mode("overwrite").partitionBy("y").parquet(s"$root/data")
+      // O(groups) stats rows — the same aggregate a lake writer folds
+      // into its commit; at scale these come free from the parquet
+      // footers the writer just produced
+      val stats = base.groupBy($"y").agg(
+        date_format(min($"o_orderdate"), "yyyy-MM-dd").as("lo"),
+        date_format(max($"o_orderdate"), "yyyy-MM-dd").as("hi"),
+        count(lit(1)).as("n"))
+        .collect().sortBy(_.getInt(0)).toSeq
+      val groups = stats.map(r => s"$root/data/y=${r.getInt(0)}")
+      writeManifest(root, 1, groups ++ stats.zip(groups).map { case (r, g) =>
+        ZoneLine.render(g, "o_orderdate", r.getString(1), r.getString(2), r.getLong(3)) })
+      // the groups' file schema, so a resolve infers no footer
+      writeSchemaLog(root, 1, s.read.parquet(groups.head).schema)
+    }
 
   private val ZoneLo = "1995-03-01"
   private val ZoneHi = "1995-09-30"
 
+  /** Pushed-filter form of the day window [lo, hi] (ISO dates) on the
+    * date or timestamp column `c` of `store`, each bound at its day's
+    * first instant (UTC) in the column's own type. A zone's date-only
+    * stats cover whole days, so [[graft.sources.GraftStore.zonePrune]]
+    * keeps exactly the groups holding a day of the window. */
+  private[graft] def dayWindow(store: graft.sources.GraftStore.Resolved, c: String,
+      lo: String, hi: String): Array[org.apache.spark.sql.sources.Filter] = {
+    import org.apache.spark.sql.types.{DateType, TimestampNTZType}
+    def day(iso: String): Any = store.physicalSchema(c).dataType match {
+      case DateType => java.sql.Date.valueOf(iso)
+      case TimestampNTZType => java.time.LocalDate.parse(iso).atStartOfDay()
+      case _ => java.time.LocalDate.parse(iso).atStartOfDay(java.time.ZoneOffset.UTC).toInstant
+    }
+    Array(org.apache.spark.sql.sources.GreaterThanOrEqual(c, day(lo)),
+      org.apache.spark.sql.sources.LessThanOrEqual(c, day(hi)))
+  }
+
   private def qManifestSkipping(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = zonemapRoot(s, d)
-    val (paths, _) = zonePrunedPaths(root, ZoneLo, ZoneHi)
+    val store = graft.sources.GraftStore.at(zonemapRoot(s, d))
+    val (paths, _) = graft.sources.GraftStore.zonePrune(store,
+      dayWindow(store, "o_orderdate", ZoneLo, ZoneHi))
     s.read.parquet(paths: _*)
       .filter(year($"o_orderdate") === 1995 &&
         month($"o_orderdate").between(3, 9))
@@ -2768,7 +2770,7 @@ object Maintenance {
   // -- io_metadata_count: counts answered from manifest arithmetic ----------
   // The metadata-only query optimization every lake engine fields
   // (Iceberg/Delta answer COUNT(*) from manifest row counts without
-  // touching a data file): the r11 zone manifest carries each file
+  // touching a data file): the manifest's zone: lines carry each file
   // group's row count next to its min/max, so per-group counts and
   // date bounds come from PARSING ONE TEXT FILE — zero data-file IO,
   // the plan contains no parquet scan of the table at all (spec-
@@ -2778,7 +2780,7 @@ object Maintenance {
   private def qMetadataCount(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val root = zonemapRoot(s, d)
-    val rows = zoneStats(root).map { case (path, lo, hi, n) =>
+    val rows = manifestZones(root, 1).map { case (path, _, lo, hi, n) =>
       (path.substring(path.lastIndexOf("y=") + 2).toInt, lo, hi, n)
     }
     s.createDataFrame(rows)
@@ -3004,14 +3006,11 @@ object Maintenance {
         ($"o_orderkey" % MorDeleteMod === MorDelete2Rem)
       // each DV: positions (file, row) its merge's update or delete leg
       // hits — ONE metadata-projected scan of the base, no data rewrite.
-      // position identity = the path's last two segments (g=X/part-*.parquet)
-      // + row index: stable across Staging.publish's directory move, where
-      // the absolute _metadata.file_path recorded at build time would not be
+      // The file key stays valid across Staging.publish's directory move
       def writeDv(hit: org.apache.spark.sql.Column, out: String): Unit =
         s.read.parquet((0 to 3).map(g => s"$tmpDir/base/g=$g"): _*)
           .filter(hit)
-          .select(regexp_extract(col("_metadata.file_path"), "([^/]+/[^/]+)$", 1)
-              .as("file_key"),
+          .select(DvLine.fileKeyCol.as("file_key"),
             col("_metadata.row_index").as("row_index"))
           .coalesce(1).write.parquet(s"$tmpDir/$out")
       writeDv(hit1, "dv")
@@ -3054,8 +3053,7 @@ object Maintenance {
     else {
       val dv = s.read.options(crypto).parquet(dvLines.map(_.stripPrefix("dv:")): _*)
       base
-        .withColumn("file_key",
-          regexp_extract(col("_metadata.file_path"), "([^/]+/[^/]+)$", 1))
+        .withColumn("file_key", DvLine.fileKeyCol)
         .withColumn("row_index", col("_metadata.row_index"))
         .join(dv, Seq("file_key", "row_index"), "left_anti")
         .drop("file_key", "row_index")
@@ -3155,9 +3153,7 @@ object Maintenance {
     // pinned commit log: _commit_timestamp becomes a replayable
     // constant, and the DESCRIBE HISTORY join below is deterministic
     writeCommitLog(root, CommitEpochs)
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.base", Staging.Base)
-    val name = new java.io.File(root).getName
+    val name = sqlTable(s, root)
     // r17 (r16 verdict #5): every change row carries its commit
     // provenance — _commit_version joins the feed back to DESCRIBE
     // HISTORY (the audit-trail shape), _commit_timestamp serves the
@@ -3480,41 +3476,34 @@ object Maintenance {
   // io_manifest_skipping discipline.
   private val PeWanted = "1-URGENT"
 
-  private[graft] def peRoot(s: SparkSession, d: String): String = {
-    import s.implicits._
-    val root = Staging.scratch("partevo", d)
-    val marker = java.nio.file.Paths.get(root, "pe_ok.txt")
-    if (java.nio.file.Files.exists(marker) &&
-        manifestPaths(root, 1).forall(p => new java.io.File(p).exists))
-      return root
-    Staging.rmTree(new java.io.File(root))
-    val t = Tables.orders(s, d)
-    // old spec: one untagged group (written before the evolution)
-    t.filter($"o_orderkey" % 2 === 0).write.parquet(s"$root/gen1")
-    // new spec: ONE dynamic partitionBy write fans out every partition
-    // value (a per-value filter+write loop is one full scan per value —
-    // O(partitions) jobs, unusable at a real partition count). The tag
-    // is a DUPLICATE of o_orderpriority so the path carries pri=<v>
-    // while the data files keep the full orders schema, byte-compatible
-    // with the untagged gen1 group.
-    t.filter($"o_orderkey" % 2 === 1)
-      .withColumn("pri", $"o_orderpriority")
-      .write.partitionBy("pri").parquet(s"$root/gen2")
-    // the value list is read back from the written directory names —
-    // O(partitions) driver-side metadata, no extra Spark job. The names
-    // stay URI-ESCAPED here on purpose: the manifest stores PATHS, and
-    // the escaped form is the on-disk truth (a value with space/'%'/'/'
-    // round-trips only escaped); every VALUE comparison against a raw
-    // wanted value unescapes at read time (qPartitionEvolution), never
-    // here — escaping exactly once and unescaping exactly once is the
-    // invariant.
-    val pris = Option(new java.io.File(s"$root/gen2").listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("pri="))
-      .map(_.getName.stripPrefix("pri=")).sorted
-    writeManifest(root, 1, s"$root/gen1" +: pris.map(p => s"$root/gen2/pri=$p"))
-    java.nio.file.Files.write(marker, "ok".getBytes("UTF-8"))
-    root
-  }
+  private[graft] def peRoot(s: SparkSession, d: String): String =
+    Staging.inPlace("pestore_", d, Seq("orders"), "v1-two-spec-generations") { root =>
+      import s.implicits._
+      val t = Tables.orders(s, d)
+      // old spec: one untagged group (written before the evolution)
+      t.filter($"o_orderkey" % 2 === 0).write.parquet(s"$root/gen1")
+      // new spec: ONE dynamic partitionBy write fans out every partition
+      // value (a per-value filter+write loop is one full scan per value —
+      // O(partitions) jobs, unusable at a real partition count). The tag
+      // is a DUPLICATE of o_orderpriority so the path carries pri=<v>
+      // while the data files keep the full orders schema, byte-compatible
+      // with the untagged gen1 group.
+      t.filter($"o_orderkey" % 2 === 1)
+        .withColumn("pri", $"o_orderpriority")
+        .write.partitionBy("pri").parquet(s"$root/gen2")
+      // the value list is read back from the written directory names —
+      // O(partitions) driver-side metadata, no extra Spark job. The names
+      // stay URI-ESCAPED here on purpose: the manifest stores PATHS, and
+      // the escaped form is the on-disk truth (a value with space/'%'/'/'
+      // round-trips only escaped); every VALUE comparison against a raw
+      // wanted value unescapes at read time (qPartitionEvolution), never
+      // here — escaping exactly once and unescaping exactly once is the
+      // invariant.
+      val pris = Option(new java.io.File(s"$root/gen2").listFiles()).toSeq.flatten
+        .filter(f => f.isDirectory && f.getName.startsWith("pri="))
+        .map(_.getName.stripPrefix("pri=")).sorted
+      writeManifest(root, 1, s"$root/gen1" +: pris.map(p => s"$root/gen2/pri=$p"))
+    }
 
   private def qPartitionEvolution(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

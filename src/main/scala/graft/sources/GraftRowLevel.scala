@@ -152,35 +152,19 @@ private[sources] class GraftDeltaBatchWrite(store: GraftStore.Resolved,
       .map(p => new java.io.File(p).getAbsolutePath).toSet
     sweepUncommitted(appendDir, committed)
     sweepUncommitted(dvDir, committed)
-    val added = Seq.newBuilder[String]
-    if (nIns > 0) {
-      // zone stats for the insert leg(s) from their own footers — the
-      // same zero-job harvest every write front door does; partitioned
-      // stores commit one group per touched partition value
-      val conf = Maintenance.storeHadoopConf(spark, store.root)
-      val groups =
-        if (store.partitionCols.isEmpty) Seq(appendDir)
-        else {
-          val fs = new org.apache.hadoop.fs.Path(appendDir).getFileSystem(conf)
-          fs.listStatus(new org.apache.hadoop.fs.Path(appendDir))
-            .filter(_.isDirectory).map(_.getPath.toUri.getPath).toSeq.sorted
-        }
-      for (g <- groups) {
-        val (rows, stats) = FooterStats.harvest(g, physSchema, conf)
-        added += g
-        added ++= stats.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
-          s"zone:$g|$c|$lo|$hi|$rows" }
-      }
-    } else drop(appendDir)
-    if (nDel > 0) added += Maintenance.DvLine.render(dvDir, op.scannedGroups)
-    else drop(dvDir)
-    try { Maintenance.commitSnapshot(store.root, store.version, Seq.empty,
-      added.result()); () }
-    catch { case t: Throwable =>
-      if (nIns > 0) drop(appendDir)
-      if (nDel > 0) drop(dvDir)
-      throw t
-    }
+    // zone stats for the insert leg(s) from their own footers — the
+    // same zero-job harvest every write front door does; partitioned
+    // stores commit one group per touched partition-value leaf dir
+    val inserted =
+      if (nIns > 0) Maintenance.harvestGroups(spark, store.root, appendDir,
+        physSchema, partitioned = store.partitionCols.nonEmpty)
+      else { drop(appendDir); Nil }
+    val deleted =
+      if (nDel > 0) Seq(Maintenance.DvLine.render(dvDir, op.scannedGroups))
+      else { drop(dvDir); Nil }
+    Maintenance.commitGroups(store.root, store.version, Seq.empty,
+      inserted ++ deleted, Seq(appendDir, dvDir))
+    ()
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

@@ -22,6 +22,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.Maintenance
+import graft.operators.Maintenance.DvLine.fileKey
 
 /** `spark.read.format("graft")` — the DSv2 front door over the graft
   * manifest/snapshot store (r13 verdict "Next round" #2).
@@ -36,14 +37,14 @@ import graft.operators.Maintenance
   *   .option("startingVersion", 1).option("endingVersion", 2).load(root)
   * }}}
   *
-  * The store's on-disk layout (manifests, commit log, schema and
-  * column-mapping logs, zone map) is owned by the store-format section
-  * of [[Maintenance]]; this file reads and writes it only through
-  * those functions. Reads project the column mapping (pruning and
-  * filter pushdown translate names, so the physical scan still reads
-  * only mapped, required columns), and pushed filters on the zone
-  * column prune whole file groups BEFORE listing (the scan's
-  * `description()` reports `zoneSkipped=` for the plan gate).
+  * The store's on-disk layout (manifests and their zone stats, commit
+  * log, schema and column-mapping logs) is owned by the store-format
+  * section of [[Maintenance]]; this file reads and writes it only
+  * through those functions. Reads project the column mapping (pruning
+  * and filter pushdown translate names, so the physical scan still
+  * reads only mapped, required columns), and pushed filters on any
+  * zone-mapped column prune whole file groups BEFORE listing (the
+  * scan's `description()` reports `zoneSkipped=` for the plan gate).
   *
   * Execution delegates to Spark's own vectorized DSv2 parquet scan
   * over the resolved file list — whole-stage codegen, row-group/page
@@ -88,10 +89,7 @@ private[graft] object GraftStore {
       dataPaths: Seq[String],          // file-group dirs of the snapshot
       dvPaths: Seq[String],            // deletion-vector sidecar paths
       mapping: Option[Seq[(String, String)]], // logical -> physical
-      zoneCol: Option[String],         // physical zone-map column
-      zones: Map[String, (String, String)],   // group path -> (lo, hi)
-      // r15: multi-column stats committed INSIDE the manifest (zone:
-      // lines) — group path -> physical column -> (lo, hi)
+      // the manifest's zone: lines — group path -> physical column -> (lo, hi)
       groupZones: Map[String, Map[String, (String, String)]],
       changeFeed: Option[(Int, Int)],  // (startingVersion, endingVersion)
       cdfStartGiven: Boolean,          // explicit startingVersion/-Timestamp
@@ -182,18 +180,14 @@ private[graft] object GraftStore {
       .orElse(vOpt)
       .orElse(tOpt.map(Maintenance.resolveAsOf(root, _)))
       .getOrElse(Maintenance.currentSnapshotVersion(root))
-    val (dvLines, dataPaths) =
-      Maintenance.manifestPaths(root, version).partition(_.startsWith("dv:"))
+    val (paths, stats) = Maintenance.manifestPathsAndZones(root, version)
+    val (dvLines, dataPaths) = paths.partition(Maintenance.DvLine.is)
     // the mapping of the NEAREST version <= the resolved one: mappings
     // are metadata commits; a data commit (DSv2 append, streaming sink)
     // between two mapping versions must keep serving the mapped schema,
     // not silently revert to physical names (r14 ADVICE)
     val mapping = Maintenance.mappingAt(root, version)
-    val zoneCol = Maintenance.zoneColumn(root)
-    val zones = Maintenance.zoneStats(root)
-      .map { case (p, lo, hi, _) => p -> (lo, hi) }.toMap
-    val groupZones = Maintenance.manifestZones(root, version)
-      .groupBy(_._1)
+    val groupZones = stats.groupBy(_._1)
       .map { case (p, zs) => p -> zs.map(z => z._2 -> (z._3, z._4)).toMap }
     // physical schema: the per-version schema LOG when present (r15 —
     // written by mergeSchema commits; O(1) planning like Delta's log
@@ -206,7 +200,7 @@ private[graft] object GraftStore {
     val physicalSchema = Maintenance.schemaAt(root, version).getOrElse(
       SparkSession.active.read.options(cryptoOpts).parquet(dataPaths: _*).schema)
     Resolved(root, version, dataPaths, dvLines.map(_.stripPrefix("dv:")),
-      mapping, zoneCol, zones, groupZones, changeFeed,
+      mapping, groupZones, changeFeed,
       startingVersion.isDefined, vOpt.isDefined || tOpt.isDefined,
       startingVersion,
       options.getBoolean("mergeSchema", false),
@@ -218,6 +212,10 @@ private[graft] object GraftStore {
       Option(options.get("txnAppId")),
       Option(options.get("txnVersion")).map(_.toLong))
   }
+
+  /** The store at `root`, resolved at its current version. */
+  def at(root: String): Resolved =
+    resolve(new CaseInsensitiveStringMap(java.util.Map.of("path", root)))
 
   /** Rewrite a filter's column names logical -> physical; None when
     * the filter shape is unknown or touches `_change_type` (those stay
@@ -302,13 +300,11 @@ private[graft] object GraftStore {
     (lo, hi)
   }
 
-  /** Stats for (group, physical column): manifest `zone:` lines first
-    * (per-version, OCC-committed), then the legacy single-column side
-    * file. None = unmapped → fail open. */
+  /** Stats for (group, physical column) from the manifest's zone
+    * lines. None = unmapped → fail open. */
   private def statsFor(store: Resolved, p: String, c: String)
       : Option[(String, String)] =
     store.groupZones.get(p).flatMap(_.get(c))
-      .orElse(if (store.zoneCol.contains(c)) store.zones.get(p) else None)
 
   /** (kept paths, skipped count): groups whose stats provably miss the
     * pushed (physical-name) bounds on ANY zone-mapped column drop
@@ -317,8 +313,7 @@ private[graft] object GraftStore {
     * and the SQL DELETE route (which prunes its candidate set the
     * same way a read would). */
   def zonePrune(store: Resolved, pushed: Array[Filter]): (Seq[String], Int) = {
-    val zonedCols: Set[String] =
-      store.groupZones.values.flatMap(_.keys).toSet ++ store.zoneCol
+    val zonedCols: Set[String] = store.groupZones.values.flatMap(_.keys).toSet
     if (pushed.isEmpty || zonedCols.isEmpty) (store.dataPaths, 0)
     else {
       val types = store.physicalSchema.fields.map(f => f.name -> f.dataType).toMap
@@ -376,8 +371,7 @@ private[graft] object GraftStore {
   def alterStore(root: String,
       changes: Seq[org.apache.spark.sql.connector.catalog.TableChange]): Unit = {
     import org.apache.spark.sql.connector.catalog.TableChange
-    val m = new java.util.HashMap[String, String](); m.put("path", root)
-    val store = resolve(new CaseInsensitiveStringMap(m))
+    val store = at(root)
     val cur = store.version
     var mapping: Seq[(String, String)] = store.mapping.getOrElse(
       store.logicalSchema.fieldNames.toSeq.map(n => (n, n)))
@@ -468,7 +462,7 @@ private[graft] object GraftStore {
     * churn-bounded anti-join, so re-running the same DELETE commits
     * nothing. A predicate matching zero rows is a no-op (no version). */
   def deleteWhere(store: Resolved, physFilters: Array[Filter]): Unit = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit, regexp_extract}
+    import org.apache.spark.sql.functions.{col, lit}
     val spark = SparkSession.active
     val cur = Maintenance.currentSnapshotVersion(store.root)
     require(store.version == cur,
@@ -478,8 +472,7 @@ private[graft] object GraftStore {
     if (candidates.isEmpty) return
     val cond = physFilters.map(toColumn).reduceOption(_ && _).getOrElse(lit(true))
     val hit = spark.read.options(store.cryptoOpts).parquet(candidates: _*)
-      .withColumn("file_key",
-        regexp_extract(col("_metadata.file_path"), "([^/]+/[^/]+)$", 1))
+      .withColumn("file_key", Maintenance.DvLine.fileKeyCol)
       .withColumn("row_index", col("_metadata.row_index"))
       .filter(cond)
       .select(col("file_key"), col("row_index"))
@@ -493,9 +486,7 @@ private[graft] object GraftStore {
           .select(col("file_key"), col("row_index")),
         Seq("file_key", "row_index"), "left_anti")
     val dvDir = s"${store.root}/dv_${java.util.UUID.randomUUID().toString.take(12)}"
-    store.cryptoOpts.foldLeft(fresh.write.mode("overwrite")) {
-      case (w, (k, v)) => w.option(k, v)
-    }.parquet(dvDir)
+    fresh.write.options(store.cryptoOpts).mode("overwrite").parquet(dvDir)
     // position count from the footers just written — no second job
     if (FooterStats.rowCount(Seq(dvDir),
         Maintenance.storeHadoopConf(spark, store.root)) == 0L) {
@@ -509,36 +500,9 @@ private[graft] object GraftStore {
     // silently delete zero rows while reporting success), and
     // conflicts a concurrent dv on the same groups (serializable
     // row-level writes). r15 ADVICE + verdict #1.
-    try { Maintenance.commitSnapshot(store.root, cur, Seq.empty,
-      Seq(Maintenance.DvLine.render(dvDir, candidates))); () }
-    catch { case t: Throwable =>
-      graft.Staging.rmTree(new java.io.File(dvDir))
-      throw t
-    }
-  }
-
-  /** `zone:` manifest lines for one written group dir, from its own
-    * parquet footers (zero Spark jobs). */
-  private def zonesOf(dir: String, schema: StructType,
-      conf: org.apache.hadoop.conf.Configuration): Seq[String] = {
-    val (rows, stats) = FooterStats.harvest(dir, schema, conf)
-    stats.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
-      s"zone:$dir|$c|$lo|$hi|$rows" }
-  }
-
-  /** Leaf partition dirs under a dynamic-partitioned stage — the dirs
-    * that directly hold parquet files. Driver-side listing, O(dirs). */
-  private def leafGroupDirs(dir: String,
-      conf: org.apache.hadoop.conf.Configuration): Seq[String] = {
-    val fs = new Path(dir).getFileSystem(conf)
-    def walk(p: Path): Seq[String] = {
-      val st = fs.listStatus(p)
-      val subdirs = st.filter(_.isDirectory)
-      if (st.exists(s => s.isFile && s.getPath.getName.endsWith(".parquet")))
-        Seq(p.toUri.getPath)
-      else subdirs.toSeq.flatMap(s => walk(s.getPath))
-    }
-    walk(new Path(dir)).sorted
+    Maintenance.commitGroups(store.root, cur, Seq.empty,
+      Seq(Maintenance.DvLine.render(dvDir, candidates)), Seq(dvDir))
+    ()
   }
 
   /** Stage the batch as one new file group, then OCC-commit it. */
@@ -613,7 +577,6 @@ private[graft] object GraftStore {
       case None => resolved
     }
     val stage = s"${store.root}/append_${java.util.UUID.randomUUID().toString.take(12)}"
-    val conf = Maintenance.storeHadoopConf(data.sparkSession, store.root)
     // Partitioned stores (r16): each partition value lands as its OWN
     // manifest group — `<stage>/__p_<col>=<value>` — written in ONE
     // dynamic partitionBy job. The path tag is a DUPLICATE of the
@@ -622,51 +585,23 @@ private[graft] object GraftStore {
     // single value: partition pruning IS zone pruning, composing with
     // every other zone-mapped column for free, and a point read keeps
     // exactly the matching groups before any file is listed.
-    val partPhysCols = store.partitionCols.map(store.phys)
-    // store-declared writer tuning (bloom filters, page layout — r17)
-    // rides every append alongside the crypto properties
-    val writeOpts = store.cryptoOpts ++ Maintenance.parquetWriteOpts(store.root)
-    val (groupDirs, zoneLines) =
-      if (partPhysCols.isEmpty) {
-        writeOpts.foldLeft(physical.write.mode("overwrite")) {
-          case (w, (k, v)) => w.option(k, v)
-        }.parquet(stage)
-        (Seq(stage), zonesOf(stage, physical.schema, conf))
-      } else {
-        import org.apache.spark.sql.functions.{col => c}
-        val tags = partPhysCols.map(p => s"__p_$p")
-        val tagged = partPhysCols.foldLeft(physical)((df, p) =>
-          df.withColumn(s"__p_$p", c(p)))
-        writeOpts.foldLeft(
-          tagged.write.partitionBy(tags: _*).mode("overwrite")) {
-          case (w, (k, v)) => w.option(k, v)
-        }.parquet(stage)
-        val fileSchema = StructType(
-          physical.schema.fields.filterNot(f => tags.contains(f.name)))
-        val leaves = leafGroupDirs(stage, conf)
-        (leaves, leaves.flatMap(d => zonesOf(d, fileSchema, conf)))
-      }
+    val (tagged, tags) = Maintenance.withPartitionTags(physical,
+      store.partitionCols.map(store.phys))
     // zone stats for the new group(s) come from the parquet FOOTERS
     // the write just produced — zero extra Spark jobs, zero data
     // re-read — for EVERY supported scalar column (multi-column
     // skipping, r15). They ride the commit as `zone:` manifest lines,
     // so stats inherit the claim's atomicity: concurrent appenders
-    // can't lose each other's lines the way a shared side file could,
-    // and time travel sees each version's own stats. Failure to render
-    // any bound just drops that column's line — zone maps fail open by
-    // construction.
+    // can't lose each other's lines, and time travel sees each
+    // version's own stats.
+    val added = Maintenance.writeGroups(store.root, tagged, stage, tags)
     val removed =
       if (overwrite) Maintenance.manifestPaths(store.root, cur) else Seq.empty
     // overwrite is strict: "replace everything live at v" must fail
     // closed against ANY concurrent commit, not rebase over an append
     // it never saw (truncate semantics — r14 ADVICE)
-    val committed =
-      try Maintenance.commitSnapshot(store.root, cur, removed,
-        groupDirs ++ zoneLines, strict = overwrite, txn = txn)
-      catch { case t: Throwable =>
-        graft.Staging.rmTree(new java.io.File(stage)) // lost commit: no orphans
-        throw t
-      }
+    val committed = Maintenance.commitGroups(store.root, cur, removed,
+      added, Seq(stage), strict = overwrite, txn = txn)
     if (committed == Maintenance.TxnSkipped) {
       // a concurrent replay won the claim between the fast-path check
       // and ours — drop the staged duplicate, the batch is in
@@ -959,11 +894,6 @@ private[sources] class GraftScan(store: GraftStore.Resolved,
   override def toBatch: Batch = this
 
   // ---- MoR / change-feed position machinery ------------------------------
-  /** file_key = the path's last two segments — stable across staging
-    * moves, the same identity [[Maintenance.readSnapshotMoR]] uses. */
-  private def fileKey(path: String): String =
-    path.split('/').takeRight(2).mkString("/")
-
   /** Which sidecar parquet FILES carry positions for which file_key —
     * the ONLY per-DV state the driver ever materializes (r15 verdict
     * #2): O(data files × sidecar files) keys, never O(positions). The
@@ -1074,9 +1004,9 @@ private[sources] class GraftScan(store: GraftStore.Resolved,
             // delete pre-images: keep-position reads of ONLY the
             // dv-referenced groups, listed at v (every referenced
             // group is live there — removals fail closed above)
-            val refGroups = dv.keySet.map(_.takeWhile(_ != '/'))
+            val refGroups = dv.keySet.map(Maintenance.DvLine.keyGroup)
             val touched = cData.filter(g => refGroups.contains(
-              new Path(g).toUri.toString.split('/').last))
+              Maintenance.DvLine.groupTail(g)))
             parts ++= listFiles(touched)
               .filter(f => dv.contains(fileKey(f.filePath.toString)))
               .map(f => (f, dv(fileKey(f.filePath.toString)), true, "delete", v.toLong))

@@ -237,6 +237,12 @@ class Round10Spec extends AnyFunSuite {
       s"go through the store-format functions in Maintenance instead of: ${offenders.mkString("; ")}")
   }
 
+  test("zone stats live only in Maintenance.scala (one zone: renderer and parser)") {
+    val offenders = outside("Maintenance.scala", Seq("\"zone:", "s\"zone:"))
+    assert(offenders.isEmpty,
+      s"render and parse zone lines through Maintenance.ZoneLine instead of: ${offenders.mkString("; ")}")
+  }
+
   test("q_hybrid_rrf: exchange budget is fixed") {
     val df = SparkEntry.queries("q_hybrid_rrf")(spark, sf)
     df.count()

@@ -296,7 +296,7 @@ class Round14Spec extends AnyFunSuite {
     // for io_manifest_skipping's oracle)
     val zroot = Maintenance.zonemapRoot(spark, sf)
     val root = freshRoot("r14_zones_w")
-    for (f <- Seq("manifest_v1.txt", "zones_v1.txt", "zones_col.txt"))
+    for (f <- Seq("manifest_v1.txt", "schema_v1.json"))
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(zroot, f), java.nio.file.Paths.get(root, f))
     // append one known-range year of orders through the front door
@@ -305,8 +305,7 @@ class Round14Spec extends AnyFunSuite {
       .filter(year($"o_orderdate") === 1997).select(cols.map(col): _*)
     batch.write.format("graft").mode("append").save(root)
     // the new group carries exact zone stats — committed as `zone:`
-    // lines INSIDE manifest_v2 (r15: stats inherit OCC atomicity), the
-    // legacy side file stays untouched
+    // lines INSIDE manifest_v2 (r15: stats inherit OCC atomicity)
     val added = Maintenance.manifestZones(root, 2)
       .filter(z => z._1.contains("/append_") && z._2 == "o_orderdate")
     assert(added.length == 1, "exactly one o_orderdate zone line for the appended group")
@@ -317,9 +316,6 @@ class Round14Spec extends AnyFunSuite {
       date_format(max($"o_orderdate"), "yyyy-MM-dd"), count(lit(1))).collect()(0)
     assert(lo.startsWith(want.getString(0)) && hi.startsWith(want.getString(1)) &&
       n == want.getLong(2), s"zone stats $lo..$hi ($n) vs $want")
-    assert(!new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(root, "zones_v1.txt")), "UTF-8").contains("/append_"),
-      "the racy shared side file must no longer be rewritten")
     // ...and a read outside its range prunes it from the very next scan
     val df = spark.read.format("graft").load(root)
       .filter($"o_orderdate" >= "1995-03-01" && $"o_orderdate" <= "1995-09-30")

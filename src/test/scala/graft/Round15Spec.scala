@@ -58,7 +58,7 @@ class Round15Spec extends AnyFunSuite {
   private def scratchZoneStore(name: String): String = {
     val zroot = Maintenance.zonemapRoot(spark, sf)
     val root = freshRoot(name)
-    for (f <- Seq("manifest_v1.txt", "zones_v1.txt", "zones_col.txt"))
+    for (f <- Seq("manifest_v1.txt", "schema_v1.json"))
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(zroot, f), java.nio.file.Paths.get(root, f))
     root

@@ -505,41 +505,72 @@ class Round16Spec extends AnyFunSuite {
       s"compacted partitioned store must still point-prune: $desc")
   }
 
-  test("r16: UPDATE on a partitioned store keeps per-partition insert legs") {
-    import spark.implicits._
-    val root = freshRoot("r16_part_update")
-    graft.Staging.rmTree(new java.io.File(root))
-    val orders = Tables.orders(spark, sf)
-    Maintenance.createStore(root, orders.schema, Seq("o_orderpriority"))
-    orders.filter($"o_orderkey" % 3 === 1)
-      .write.format("graft").mode("append").save(root)
-    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.graft.base", "/tmp/graft_q")
-    val name = new java.io.File(root).getName
-    spark.sql(s"""UPDATE graft.`$name` SET o_totalprice = o_totalprice + 5.0
-                 |WHERE o_custkey % 3 = 0""".stripMargin)
-    val v = Maintenance.currentSnapshotVersion(root)
-    val groups = Maintenance.manifestPaths(root, v).filterNot(_.startsWith("dv:"))
-    // EVERY group — including the UPDATE's insert legs — is a
-    // single-partition-value dir, so pruning never degrades
-    assert(groups.forall(_.contains("/__p_o_orderpriority=")),
-      s"UPDATE's insert leg broke the partition layout: ${
-        groups.filterNot(_.contains("/__p_o_orderpriority="))}")
-    val df = spark.read.format("graft").load(root)
-      .filter($"o_orderpriority" === "2-HIGH")
-    val desc = df.queryExecution.executedPlan.toString
-      .linesIterator.find(_.contains("GraftScan")).getOrElse("")
-    val m = """groups=(\d+)/(\d+)""".r.findFirstMatchIn(desc)
-    assert(m.exists(x => x.group(1).toInt <= 2 &&
-      x.group(1).toInt < x.group(2).toInt),
-      s"point read must prune on the updated store: $desc")
-    // and the values are right
-    val base = orders.filter($"o_orderkey" % 3 === 1)
-    val wantSum = base.agg(sum($"o_totalprice")).collect()(0).getDouble(0) +
-      5.0 * base.filter($"o_custkey" % 3 === 0).count()
-    val gotSum = spark.read.format("graft").load(root)
-      .agg(sum($"o_totalprice")).collect()(0).getDouble(0)
-    assert(math.abs(gotSum - wantSum) < 1e-3, s"$gotSum vs $wantSum")
+  test("r16: a DV file key names the file under its whole partition-dir chain") {
+    val p = "file:/tmp/graft_q/s/append_1/__p_a=x/__p_b=y%20z/part-00000-u.c000.snappy.parquet"
+    assert(DvLine.fileKey(p) == "__p_a=x/__p_b=y%20z/part-00000-u.c000.snappy.parquet")
+    assert(DvLine.keyGroup(DvLine.fileKey(p)) == "__p_a=x/__p_b=y%20z")
+    assert(DvLine.groupTail("/tmp/graft_q/s/append_1/__p_a=x/__p_b=y z") == "__p_a=x/__p_b=y%20z")
+    // unpartitioned and single-level keys keep the two segments that
+    // sidecars staged before multi-level stores existed carry
+    assert(DvLine.fileKey("file:/tmp/s/append_1/part-0.parquet") == "append_1/part-0.parquet")
+    assert(DvLine.fileKey("file:/tmp/s/append_1/__p_a=x/part-0.parquet") == "__p_a=x/part-0.parquet")
+    assert(DvLine.fileKey("file:/tmp/m/base/g=0/part-0.parquet") == "g=0/part-0.parquet")
+    assert(DvLine.groupTail("/tmp/s/append_1") == "append_1")
+    // the task-side column renders the same key as the driver
+    val cols = spark.read.parquet(s"${Maintenance.morData(spark, sf)}/base/g=1")
+      .select(DvLine.fileKeyCol, col("_metadata.file_path")).distinct().collect()
+    assert(cols.nonEmpty && cols.forall(r => r.getString(0) == DvLine.fileKey(r.getString(1))))
+  }
+
+  // one and two partition columns: the task-side writer nests the tag
+  // dirs (`__p_a=x/__p_b=y`), so only the leaf dirs are groups
+  for (parts <- Seq(Seq("o_orderpriority"), Seq("o_orderpriority", "o_orderstatus"))) {
+    val label = if (parts.size == 1) "" else s" (partitioned by ${parts.mkString(", ")})"
+    test(s"r16: UPDATE on a partitioned store keeps per-partition insert legs$label") {
+      import spark.implicits._
+      val root = freshRoot(s"r16_part_update_${parts.size}")
+      graft.Staging.rmTree(new java.io.File(root))
+      val orders = Tables.orders(spark, sf)
+      Maintenance.createStore(root, orders.schema, parts)
+      orders.filter($"o_orderkey" % 3 === 1)
+        .write.format("graft").mode("append").save(root)
+      spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+      spark.conf.set("spark.sql.catalog.graft.base", "/tmp/graft_q")
+      val name = new java.io.File(root).getName
+      spark.sql(s"""UPDATE graft.`$name` SET o_totalprice = o_totalprice + 5.0
+                   |WHERE o_custkey % 3 = 0""".stripMargin)
+      val v = Maintenance.currentSnapshotVersion(root)
+      val groups = Maintenance.manifestPaths(root, v).filterNot(_.startsWith("dv:"))
+      // EVERY group — including the UPDATE's insert legs — is a
+      // single-partition-value dir, so pruning never degrades
+      val offLayout = groups.filterNot(g => parts.forall(p => g.contains(s"/__p_$p=")))
+      assert(offLayout.isEmpty, s"UPDATE's insert leg broke the partition layout: $offLayout")
+      // ...that directly holds the group's files and carries its zone stats
+      val zoned = Maintenance.manifestZones(root, v).map(_._1).toSet
+      val noFiles = groups.filterNot(g => Option(new java.io.File(g).listFiles()).toSeq
+        .flatten.exists(f => f.isFile && f.getName.endsWith(".parquet")))
+      assert(noFiles.isEmpty, s"groups holding no parquet file directly: $noFiles")
+      assert(groups.forall(zoned.contains),
+        s"groups without zone lines: ${groups.filterNot(zoned.contains)}")
+      val df = spark.read.format("graft").load(root)
+        .filter($"o_orderpriority" === "2-HIGH")
+      val desc = df.queryExecution.executedPlan.toString
+        .linesIterator.find(_.contains("GraftScan")).getOrElse("")
+      val m = """groups=(\d+)/(\d+)""".r.findFirstMatchIn(desc)
+      // per value of the other partition columns: the append's group
+      // and at most one insert leg
+      val perValue = orders.select(parts.tail.map(col): _*).distinct().count()
+      assert(m.exists(x => x.group(1).toInt <= 2 * perValue &&
+        x.group(1).toInt < x.group(2).toInt),
+        s"point read must prune on the updated store: $desc")
+      // and the values are right
+      val base = orders.filter($"o_orderkey" % 3 === 1)
+      val wantSum = base.agg(sum($"o_totalprice")).collect()(0).getDouble(0) +
+        5.0 * base.filter($"o_custkey" % 3 === 0).count()
+      val gotSum = spark.read.format("graft").load(root)
+        .agg(sum($"o_totalprice")).collect()(0).getDouble(0)
+      assert(math.abs(gotSum - wantSum) < 1e-3, s"$gotSum vs $wantSum")
+    }
   }
 
   test("r16: SQL UPDATE works on an all-ciphertext store") {

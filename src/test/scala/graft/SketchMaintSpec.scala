@@ -210,9 +210,14 @@ class SketchMaintSpec extends AnyFunSuite {
   test("manifest zone maps prune file groups before read; answers unchanged") {
     import spark.implicits._
     import graft.operators.Maintenance
-    val root = Maintenance.zonemapRoot(spark, sf)
+    val store = graft.sources.GraftStore.at(Maintenance.zonemapRoot(spark, sf))
+    def pruneDays(lo: String, hi: String): (Seq[String], Int) = {
+      val (kept, skipped) = graft.sources.GraftStore.zonePrune(store,
+        Maintenance.dayWindow(store, "o_orderdate", lo, hi))
+      (kept, kept.size + skipped)
+    }
     // a one-year window keeps exactly one group of the ~7-year corpus
-    val (pruned, total) = Maintenance.zonePrunedPaths(root, "1995-03-01", "1995-09-30")
+    val (pruned, total) = pruneDays("1995-03-01", "1995-09-30")
     assert(total >= 6 && pruned.length == 1,
       s"expected 1 of >=6 groups, got ${pruned.length} of $total")
     // the pruned scan + residual filter equals the direct full scan
@@ -224,7 +229,7 @@ class SketchMaintSpec extends AnyFunSuite {
       "zone pruning changed the answer")
     // a window spanning everything prunes nothing — stats are bounds,
     // not filters
-    val (all, t2) = Maintenance.zonePrunedPaths(root, "1990-01-01", "2099-12-31")
+    val (all, t2) = pruneDays("1990-01-01", "2099-12-31")
     assert(all.length == t2, s"${all.length} != $t2")
   }
 
