@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import graft.OracleMath._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -597,6 +597,16 @@ object Advanced {
   private[graft] val QdStep = 2    // bits per tree level (arity 4)
   private val QdK = 2048L          // compression target: T = max(1, n/K)
 
+  /** The message [[qdKeyByte]] raises outside the packed key's domain. */
+  private[graft] val QdDomainError =
+    s"q_quantile_sketch: packed key needs a one-char group (code 1-255) and 0 <= cents < 2^$QdLevels"
+  /** Q-digest packed-key group byte `ascii(g)`, or a raised error
+    * unless `g` is one char with code 1-255 and `0 <= v < 2^QdLevels`. */
+  private def qdKeyByte: Column = expr(
+    s"""CASE WHEN g IS NOT NULL AND length(g) = 1 AND ascii(g) BETWEEN 1 AND 255
+       |  AND v >= 0 AND v < ${1L << QdLevels} THEN ascii(g)
+       |  ELSE raise_error('$QdDomainError') END""".stripMargin)
+
   private def qQuantileSketch(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     // ONE aggregation builds the whole subtree table: explode every
@@ -616,12 +626,15 @@ object Advanced {
     // single ASCII code point (8 bits) round-trips via char(). A single
     // long key halves the hash/compare/shuffle-key bytes of the two
     // aggregation stages that dominate this query (the 8.4M-row explode
-    // partial agg and the 2.2M-group final agg).
+    // partial agg and the 2.2M-group final agg). The key FAILS CLOSED
+    // outside that domain (a multi-char, non-Latin-1, empty or null
+    // group, or a price outside [0, 2^26) cents would otherwise mis-key
+    // or drop groups silently): one raise_error in the same projection.
     val lv = Tables.lineitem(s, d)
       .select($"l_returnflag".as("g"),
         expr("CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)").as("v"))
       .repartition(s.sparkContext.defaultParallelism, $"g", $"v")
-      .select(expr("ascii(g)").as("a"), $"v",
+      .select(qdKeyByte.as("a"), $"v",
         explode(expr(s"sequence(0, $QdLevels, $QdStep)")).as("l"))
       .select(expr("shiftleft(shiftright(v, l), 13) + shiftleft(l, 8) + a").as("pk"))
     val sub0 = lv.groupBy($"pk").agg(count(lit(1)).as("sc"))

@@ -1756,9 +1756,9 @@ object Dedup {
     val root = graft.operators.Maintenance.governedStoreRoot(s, d)
     val cur = graft.operators.Maintenance.currentSnapshotVersion(root)
     val (dvLines, dataLines) = graft.operators.Maintenance
-      .manifestPaths(root, cur).partition(_.startsWith("dv:"))
+      .manifestPaths(root, cur).partition(graft.operators.Maintenance.DvLine.is)
     val dvDebt = graft.sources.FooterStats.rowCount(
-      dvLines.map(_.stripPrefix("dv:")), s.sessionState.newHadoopConf())
+      dvLines.map(graft.operators.Maintenance.DvLine.path), s.sessionState.newHadoopConf())
     val zonedGroups = graft.operators.Maintenance
       .manifestZones(root, cur).map(_._1).distinct.size
     // from the store's own commit log, not the staging constant — the

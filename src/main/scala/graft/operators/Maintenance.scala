@@ -481,7 +481,8 @@ object Maintenance {
     * the raw form. Group paths never contain '@' or ',' (staging
     * uses /tmp paths + hex UUIDs); [[render]] enforces it. */
   object DvLine {
-    def is(line: String): Boolean = line.startsWith("dv:")
+    private val Prefix = "dv:"
+    def is(line: String): Boolean = line.startsWith(Prefix)
     /** The annotation's reserved characters are percent-encoded in
       * path components (r16 ADVICE): partitioned-store group dirs
       * embed partition VALUES (`__p_col=value`), and Hive path
@@ -504,13 +505,13 @@ object Maintenance {
     }
     /** Sidecar path with any read-set annotation stripped. */
     def sidecar(line: String): String = {
-      val body = line.stripPrefix("dv:")
+      val body = line.stripPrefix(Prefix)
       val i = body.indexOf('@')
       if (i < 0) body else dec(body.substring(0, i))
     }
     /** Annotated referenced data groups; None = legacy unannotated. */
     def groups(line: String): Option[Seq[String]] = {
-      val body = line.stripPrefix("dv:")
+      val body = line.stripPrefix(Prefix)
       val i = body.indexOf('@')
       if (i < 0) None
       else Some(body.substring(i + 1).split(',').toIndexedSeq
@@ -518,11 +519,17 @@ object Maintenance {
     }
     def render(sidecar: String, groups: Seq[String]): String = {
       require(groups.nonEmpty, "a dv read set must name at least one group")
-      s"dv:${enc(sidecar)}@${groups.map(enc).mkString(",")}"
+      s"$Prefix${enc(sidecar)}@${groups.map(enc).mkString(",")}"
     }
+    /** The legacy un-annotated line for `sidecar` — the form
+      * [[normalize]] (and so [[manifestPaths]]) yields. */
+    def plain(sidecar: String): String = s"$Prefix$sidecar"
     /** `dv:` lines to their un-annotated form; other lines unchanged. */
     def normalize(line: String): String =
-      if (is(line)) s"dv:${sidecar(line)}" else line
+      if (is(line)) plain(sidecar(line)) else line
+    /** The path a [[normalize]]d line names: a `dv:` line's sidecar,
+      * any other line itself. */
+    def path(line: String): String = line.stripPrefix(Prefix)
 
     /** A row's position identity is (file key, row index). The file
       * key is the data file's name under its chain of `name=value`
@@ -1407,7 +1414,7 @@ object Maintenance {
       try { val b = new Array[Byte](4); in.read(b); new String(b, "UTF-8") == "PARE" }
       finally in.close()
     }
-    val hasDv = manifestPaths(root, 3).exists(_.startsWith("dv:"))
+    val hasDv = manifestPaths(root, 3).exists(DvLine.is)
     rotateStoreKek(root, "store-dk-2") // O(1); data files pin their key id
     // fail-closure: flip one ciphertext byte in a scratch clone
     val bad = Staging.scratch("io_enc_data_bad", d)
@@ -1623,9 +1630,9 @@ object Maintenance {
     import s.implicits._
     val cur = currentSnapshotVersion(root)
     val lines = manifestPaths(root, cur)
-    val (dvLines, dataLines) = lines.partition(_.startsWith("dv:"))
+    val (dvLines, dataLines) = lines.partition(DvLine.is)
     if (dvLines.isEmpty) return None
-    val dvPaths = dvLines.map(_.stripPrefix("dv:"))
+    val dvPaths = dvLines.map(DvLine.path)
     // the touched-group set resolves driver-side from DISTINCT file
     // keys — O(files with deletes), never O(positions) — with the same
     // path-tail identity readSnapshotMoR uses
@@ -1690,9 +1697,9 @@ object Maintenance {
         .select(lit(stage).as("stage"), $"n_rows", $"sum_price",
           lit(nDv.toLong).as("n_dv_lines"), lit(feedRows).as("feed_rows"))
     leg("1_mor_pile", v3,
-        manifestPaths(root, v3).count(_.startsWith("dv:")))
+        manifestPaths(root, v3).count(DvLine.is))
       .unionByName(leg("2_compacted", v4,
-        manifestPaths(root, v4).count(_.startsWith("dv:"))))
+        manifestPaths(root, v4).count(DvLine.is)))
       .orderBy($"stage")
   }
   // lazy: MorDeleteMod/-Rem are declared LATER in this object; a plain
@@ -1976,7 +1983,7 @@ object Maintenance {
               |SET o_totalprice = $bumpedPriceSql
               |WHERE o_orderkey % 8 = 2""".stripMargin) // v3
     val groups = manifestPaths(root, currentSnapshotVersion(root))
-      .filterNot(_.startsWith("dv:"))
+      .filterNot(DvLine.is)
     val partitioned = groups.forall(_.contains("/__p_o_orderpriority="))
     val sumSql = "CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)"
     Seq("2_inserted" -> 2, "3_updated" -> 3).map { case (stage, v) =>
@@ -2180,9 +2187,9 @@ object Maintenance {
       graft.streaming.Streaming.graftSinkCommit(root, r,
         orders.filter($"o_orderkey" % 4 === r), appId = "binpack") // v2..v5
     val before = manifestPaths(root, currentSnapshotVersion(root))
-      .count(l => !l.startsWith("dv:"))
+      .count(l => !DvLine.is(l))
     val v = Maintenance.binPackStore(s, root, smallRows = 10000000L) // v6
-    val after = manifestPaths(root, v).count(l => !l.startsWith("dv:"))
+    val after = manifestPaths(root, v).count(l => !DvLine.is(l))
     val probe = s.read.format("graft").load(root)
       .filter($"o_orderpriority" === "1-URGENT")
     val desc = probe.queryExecution.executedPlan.toString
@@ -2236,7 +2243,7 @@ object Maintenance {
     val (kb, tb) = keptOfTotal(probe())
     val v = Maintenance.clusterStore(s, root, Seq("o_orderkey"), buckets = 8)
     val (ka, ta) = keptOfTotal(probe())
-    val dvFolded = !manifestPaths(root, v).exists(_.startsWith("dv:"))
+    val dvFolded = !manifestPaths(root, v).exists(DvLine.is)
     val scannedAllBefore = kb == tb && tb == 4
     val prunedAfter = ka < ta && ka <= 2 && ta >= 4
     val sumSql = "CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)"
@@ -2284,7 +2291,7 @@ object Maintenance {
               |SET o_totalprice = $bumpedPriceSql
               |WHERE o_orderkey % 10 = 0""".stripMargin) // -> v2, ONE commit
     val nv = currentSnapshotVersion(run).toLong
-    val nDv = manifestPaths(run, nv.toInt).count(_.startsWith("dv:")).toLong
+    val nDv = manifestPaths(run, nv.toInt).count(DvLine.is).toLong
     val sumSql = "CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)"
     Seq("1_before" -> 1, "2_after_update" -> 2).map { case (stage, v) =>
       s.sql(s"""SELECT '$stage' AS stage, COUNT(*) AS n_rows,
@@ -2394,7 +2401,7 @@ object Maintenance {
               |WHEN NOT MATCHED BY SOURCE AND t.o_orderkey % 10 = 3
               |  THEN DELETE""".stripMargin) // -> v2, ONE commit
     val nv = currentSnapshotVersion(run).toLong
-    val nDv = manifestPaths(run, nv.toInt).count(_.startsWith("dv:")).toLong
+    val nDv = manifestPaths(run, nv.toInt).count(DvLine.is).toLong
     val sumSql = "CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)"
     Seq(1, 2).map { v =>
       s.sql(s"""SELECT CAST($v AS BIGINT) AS version, o_orderpriority,
@@ -2652,7 +2659,7 @@ object Maintenance {
     // RETIRED deletion vector is reclaimed (r15; the prefixed string
     // previously never matched an existing path and leaked forever)
     // while one still referenced by a retained version stays safe
-    val paths = (v: Int) => manifestPaths(root, v).map(_.stripPrefix("dv:"))
+    val paths = (v: Int) => manifestPaths(root, v).map(DvLine.path)
     val live = retainVersions.flatMap(paths).toSet
     val dead = (all.diff(retainVersions)
       .flatMap(paths).toSet -- live).toSeq.sorted
@@ -3046,12 +3053,12 @@ object Maintenance {
     * churn-sized DV pile on its own, and a pile that has grown past the
     * broadcast threshold shuffles instead of capping at the driver. */
   def readSnapshotMoR(s: SparkSession, root: String, version: Int): DataFrame = {
-    val (dvLines, dataPaths) = manifestPaths(root, version).partition(_.startsWith("dv:"))
+    val (dvLines, dataPaths) = manifestPaths(root, version).partition(DvLine.is)
     val crypto = dataPlaneOptions(root)
     val base = s.read.options(crypto).parquet(dataPaths: _*)
     if (dvLines.isEmpty) base
     else {
-      val dv = s.read.options(crypto).parquet(dvLines.map(_.stripPrefix("dv:")): _*)
+      val dv = s.read.options(crypto).parquet(dvLines.map(DvLine.path): _*)
       base
         .withColumn("file_key", DvLine.fileKeyCol)
         .withColumn("row_index", col("_metadata.row_index"))
@@ -3217,11 +3224,10 @@ object Maintenance {
     // the compaction commit: every DV-touched group swaps for its
     // compacted rewrite and BOTH dv lines are dropped with them
     val v4 = commitSnapshot(root, v3,
-      (0 to 3).map(g => s"$data/base/g=$g") ++
-        Seq(s"dv:$data/dv", s"dv:$data/dv2"),
+      morBaseGroups(data) ++ Seq(DvLine.plain(s"$data/dv"), DvLine.plain(s"$data/dv2")),
       (0 to 3).map(g => s"$data/compact/g=$g"))
     def stamp(v: Int, df: DataFrame): DataFrame = {
-      val nDv = manifestPaths(root, v).count(_.startsWith("dv:")).toLong
+      val nDv = manifestPaths(root, v).count(DvLine.is).toLong
       df.groupBy($"o_orderpriority")
         .agg(count(lit(1)).as("n"), dsum($"o_totalprice").as("sum_price"))
         .select(lit(v.toLong).as("version"), lit(nDv).as("n_dv_lines"),

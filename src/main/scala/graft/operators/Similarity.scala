@@ -522,10 +522,9 @@ object Similarity {
   private val PqSeedCap = 256
   private val PqShortlist = 20 // ADC candidates per query before re-rank
 
-  /** Exact left-to-right Σ(aᵢ−bᵢ)² — the codegen'd
-    * [[graft.functions.VecL2Sq]] kernel (same loop order as the DuckDB
-    * list_sum it is oracled against, so near-tie ranking is identical). */
-  private def l2sq(a: Column, b: Column): Column = VectorOps.l2sq(a, b)
+  /** DuckDB twin of [[VectorOps.l2sq]]: exact left-to-right Σ(aᵢ−bᵢ)²
+    * (same loop order as the codegen'd kernel, so near-tie ranking is
+    * identical). */
   private def l2sqSql(a: String, b: String, n: Int): String =
     s"list_sum(list_transform(range(1, ${n + 1}), i -> ($a[i] - $b[i]) * ($a[i] - $b[i])))"
 
@@ -624,43 +623,130 @@ object Similarity {
   }
 
   /** Exact re-rank of a (query_id, neighbor_id) shortlist on the full
-    * vectors (FAISS refine step): fetches ≤ shortlist rows per query.
-    * `panel` must cover every query_id in the shortlist (a superset is
-    * fine — the join drops unmatched rows). */
-  private def pqRerank(emb: DataFrame, shortlist: DataFrame,
-      panel: Column = col("vec_id") % 50 === 0): DataFrame = {
+    * vectors (FAISS refine step): fetches ≤ shortlist rows per query
+    * and keeps each query's `k` nearest as (query_id, neighbor_id, d,
+    * rank). `panel` must cover every query_id in the shortlist (a
+    * superset is fine — the join drops unmatched rows). */
+  private def rerankTopK(emb: DataFrame, shortlist: DataFrame, panel: Column,
+      k: Int): DataFrame = {
     import emb.sparkSession.implicits._
-    val full = emb.select($"vec_id",
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("fe"))
+    val full = fullVectors(emb)
     val qfull = full.filter(panel)
       .select($"vec_id".as("query_id"), $"fe".as("qe"))
     val w = Window.partitionBy($"query_id").orderBy($"d", $"neighbor_id")
     shortlist
       .join(full.withColumnRenamed("vec_id", "neighbor_id"), Seq("neighbor_id"))
       .join(broadcast(qfull), Seq("query_id"))
-      .select($"query_id", $"neighbor_id", l2sq($"qe", $"fe").as("d"))
-      .withColumn("rank", row_number().over(w)).filter($"rank" <= 3)
+      .select($"query_id", $"neighbor_id", VectorOps.l2sq($"qe", $"fe").as("d"))
+      .withColumn("rank", row_number().over(w)).filter($"rank" <= k)
+  }
+
+  /** The ANN queries' answer: [[rerankTopK]] at k = 3 as (query_id,
+    * rank, neighbor_id, d6), ordered. */
+  private def pqRerank(emb: DataFrame, shortlist: DataFrame,
+      panel: Column = col("vec_id") % 50 === 0): DataFrame = {
+    import emb.sparkSession.implicits._
+    rerankTopK(emb, shortlist, panel, 3)
       .select($"query_id", $"rank".cast("long").as("rank"), $"neighbor_id", round($"d", 6).as("d6"))
       .orderBy($"query_id", $"rank")
   }
 
-  /** Stage the raw-vector PQ index (the contrast case to the residual
-    * IVFPQ): codebook + packed codes once per dataset, same lifecycle
-    * as [[annIndexRoot]]. Training is deterministic, so the staged
-    * tables are bit-identical to inline training — the oracle keeps
+  /** (vec_id, fe): every full vector promoted to double — the re-rank,
+    * exact-gold and residual inputs. */
+  private def fullVectors(emb: DataFrame): DataFrame = {
+    import emb.sparkSession.implicits._
+    emb.select($"vec_id", expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("fe"))
+  }
+
+  /** The ADC candidate stage: each query's `depth` best (query_id,
+    * neighbor_id) by (adist, neighbor_id) — the shortlist every ANN
+    * query re-ranks on full vectors. */
+  private def adcShortlist(adist: DataFrame, depth: Int): DataFrame = {
+    import adist.sparkSession.implicits._
+    val w = Window.partitionBy($"query_id").orderBy($"adist", $"neighbor_id")
+    adist.withColumn("srank", row_number().over(w)).filter($"srank" <= depth)
+      .select($"query_id", $"neighbor_id")
+  }
+
+  /** Exact L2 top-`k` gold (query_id, neighbor_id, r) for the pinned
+    * [[evalPanel]] queries: a scan of `full` (see [[fullVectors]]) per
+    * broadcast panel query — O(panel · corpus). */
+  private def exactTopK(full: DataFrame, k: Int): DataFrame = {
+    import full.sparkSession.implicits._
+    val qfull = full.filter(evalPanel($"vec_id"))
+      .select($"vec_id".as("query_id"), $"fe".as("qe"))
+    val w = Window.partitionBy($"query_id").orderBy($"dx", $"neighbor_id")
+    full.withColumnRenamed("vec_id", "neighbor_id")
+      .crossJoin(broadcast(qfull))
+      .filter($"neighbor_id" =!= $"query_id")
+      .select($"query_id", $"neighbor_id", VectorOps.l2sq($"qe", $"fe").as("dx"))
+      .withColumn("r", row_number().over(w)).filter($"r" <= k)
+      .select($"query_id", $"neighbor_id", $"r")
+  }
+
+  // DuckDB twins of the candidate stage and its consumers, shared by the
+  // ANN oracle strings: the `shortlist` CTE is [[adcShortlist]] over an
+  // `adist(query_id, vec_id, adist)` CTE, `fullv` is [[fullVectors]],
+  // the `reranked`/`ranked` tail is [[pqRerank]] over a (query_id,
+  // neighbor_id) CTE, the re-rank subquery is [[rerankTopK]] over
+  // `shortlist` and the exact-rank subquery is [[exactTopK]].
+  private def shortlistSql(depth: Int): String =
+    s"""shortlist AS (SELECT query_id, neighbor_id FROM (
+       |    SELECT query_id, vec_id AS neighbor_id, row_number() OVER (
+       |      PARTITION BY query_id ORDER BY adist, vec_id) AS srank
+       |    FROM adist) WHERE srank <= $depth)""".stripMargin
+  private def fullvSql: String =
+    s"""fullv AS (SELECT vec_id, list_transform(range(1, ${Dims + 1}),
+       |    i -> CAST(embedding[i] AS DOUBLE)) AS fe FROM embeddings)""".stripMargin
+  private def rerankSql(candidates: String): String =
+    s"""reranked AS (
+       |  SELECT s.query_id, s.neighbor_id,
+       |    ${l2sqSql("qv.fe", "nv.fe", Dims)} AS d
+       |  FROM $candidates s
+       |  JOIN fullv nv ON s.neighbor_id = nv.vec_id
+       |  JOIN fullv qv ON s.query_id = qv.vec_id),
+       |ranked AS (SELECT query_id, neighbor_id, d, row_number() OVER (
+       |    PARTITION BY query_id ORDER BY d, neighbor_id) AS rank
+       |  FROM reranked)
+       |SELECT query_id, rank, neighbor_id, round(d, 6) AS d6
+       |FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+  private def rerankRanksSql(rank: String): String =
+    s"""    SELECT s.query_id, s.neighbor_id, row_number() OVER (
+       |      PARTITION BY s.query_id
+       |      ORDER BY ${l2sqSql("qv.fe", "nv.fe", Dims)}, s.neighbor_id) AS $rank
+       |    FROM shortlist s
+       |    JOIN fullv nv ON s.neighbor_id = nv.vec_id
+       |    JOIN fullv qv ON s.query_id = qv.vec_id""".stripMargin
+  private def exactRanksSql: String =
+    s"""    SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
+       |      row_number() OVER (PARTITION BY q.vec_id
+       |        ORDER BY ${l2sqSql("q.fe", "n.fe", Dims)}, n.vec_id) AS r
+       |    FROM fullv q JOIN fullv n ON n.vec_id <> q.vec_id
+       |    WHERE ${evalPanelSql("q.vec_id")}""".stripMargin
+
+  /** Raw-vector PQ training (the contrast case to [[ivfpqTrain]]):
+    * subspace codebooks + packed codes, `(c1, codes)`. Deterministic,
+    * so a staged copy is bit-identical to inline training. */
+  private def pqTrain(rows: DataFrame): (DataFrame, DataFrame) = {
+    val subs = pqSubs(rows).localCheckpoint()
+    // same fail-safe dense-grid renumbering as the residual trainer:
+    // identity while every seed cell survives training, and keeps
+    // j = (cell_id − 3)/16 a valid packed index if one dies (mirrored
+    // by the oracle's c1d CTE)
+    val c1 = denseCells(pqTrainCodebook(subs)).localCheckpoint()
+    (c1, pqCodes(subs, c1))
+  }
+
+  /** Stage the raw-vector PQ index ([[pqTrain]] over the corpus) once
+    * per dataset, same lifecycle as [[annIndexRoot]] — the oracle keeps
     * replaying training from scratch. */
   private[graft] def annRawRoot(s: SparkSession, d: String): String = {
     // v2: dense-grid renumbered codebook
     Staging.once("annr_", d, Seq("embeddings"), "v2-pq-raw") { tmp =>
       annTrainRuns.incrementAndGet()
-      val subs = pqSubs(Tables.embeddings(s, d)).localCheckpoint()
-      // same fail-safe dense-grid renumbering as the residual roots:
-      // identity while every seed cell survives full-corpus training,
-      // and keeps j = (cell_id − 3)/16 a valid packed index if one dies
-      // (mirrored by the oracle's c1d CTE)
-      val c1 = denseCells(pqTrainCodebook(subs)).localCheckpoint()
+      val (c1, codes) = pqTrain(Tables.embeddings(s, d))
       c1.write.mode("overwrite").parquet(s"$tmp/pqcodebook")
-      pqCodes(subs, c1).write.mode("overwrite").parquet(s"$tmp/codes")
+      codes.write.mode("overwrite").parquet(s"$tmp/codes")
     }
   }
 
@@ -684,14 +770,11 @@ object Similarity {
     // grow quadratically with the corpus) against the STORED codebook.
     val dtabWide = pqDtabWide(pqSubs(emb.filter(evalPanel($"vec_id"))), c1,
       panel = evalPanel($"vec_id"))
-    val wAdc = Window.partitionBy($"query_id").orderBy($"adist", $"neighbor_id")
-    val shortlist = codes.crossJoin(broadcast(dtabWide))
+    val adist = codes.crossJoin(broadcast(dtabWide))
       .filter($"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id".as("neighbor_id"),
         graft.functions.GraftFunctions.adc_sum($"code", $"tab").as("adist"))
-      .withColumn("srank", row_number().over(wAdc)).filter($"srank" <= PqShortlist)
-      .select($"query_id", $"neighbor_id")
-    pqRerank(emb, shortlist, panel = evalPanel($"vec_id"))
+    pqRerank(emb, adcShortlist(adist, PqShortlist), panel = evalPanel($"vec_id"))
   }
 
   // -- #36d IVF×PQ composed ANN (the production FAISS IVFPQ shape) ----------
@@ -714,16 +797,15 @@ object Similarity {
   // distance tables become per-(query, probed cell) instead of
   // per-query — probes× more table rows, still queries-bounded and
   // broadcastable, exactly FAISS's trade.
-  /** (query_id, neighbor_id, adist) for every candidate in a query's 2
-    * probed cells. `residual = true` is the production encoding;
-    * `false` PQ-encodes raw vectors at the identical code budget — kept
-    * as the contrast case [[adcError]] measures against. `queryMod`
-    * selects the query set (vec_id % queryMod == 0): 50 is the
-    * sim_ann_ivfpq gate set, 100 the hybrid-retrieval one — the
-    * corpus-side training is identical either way. */
-  private def ivfpqAdist(emb: DataFrame, residual: Boolean,
-      queryMod: Int = 50): DataFrame = {
-    import emb.sparkSession.implicits._
+  /** IVF×PQ residual training over `rows`, `(coarse, c1, codes)`:
+    * coarse Lloyd codebook → cell assignment → residual vectors →
+    * residual PQ codebook → packed codes (vec_id, code, cell_id). The
+    * one trainer behind the staged index ([[annIndexRoot]]), the
+    * base-trained incremental index ([[annIncRoot]]) and [[adcError]];
+    * deterministic (seeded Lloyd, decimal means), so a staged copy is
+    * bit-identical to inline training. */
+  private[graft] def ivfpqTrain(rows: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    import rows.sparkSession.implicits._
     // coarse quantizer: the SAME L2 + decimal-mean Lloyd machinery as
     // the per-subspace codebooks, applied to ONE "subspace" = the whole
     // vector (16 cells from the seed grid). Metric coherence is the
@@ -731,7 +813,7 @@ object Similarity {
     // L2 sends queries to cells their true L2 neighbors aren't in —
     // measured recall@3 drops 0.9 → 0.37. FAISS IVFPQ is L2 end-to-end
     // for the same reason.
-    val csubs = pqSubsM(emb, mCount = 1, subLen = Dims)
+    val csubs = pqSubsM(rows, mCount = 1, subLen = Dims)
     // the coarse codebook, cell assignment, residual corpus and PQ
     // codebook each feed 2-4 downstream consumers; without a
     // materialization point every consumer re-derives the whole
@@ -743,44 +825,48 @@ object Similarity {
     val coarse = pqTrainCodebook(csubs).localCheckpoint()
     val cells = pqAssign(csubs, coarse).select($"vec_id", $"cell_id")
       .localCheckpoint()
-    // query side: probe the 2 L2-nearest coarse cells
-    val probed = ivfpqProbeCells(csubs.filter($"vec_id" % queryMod === 0), coarse)
-    if (residual) {
-      // residual corpus: rv = x − centroid(cell(x)); centroids broadcast
-      val cc = coarse.select($"cell_id", $"ce".as("cce"))
-      val resv = emb
-        .select($"vec_id", expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("fv"))
-        .join(cells, "vec_id")
-        .join(broadcast(cc), "cell_id")
-        .select($"vec_id", $"cell_id", zip_with($"fv", $"cce", (x, c) => x - c).as("rv"))
-        .localCheckpoint()
-      val rsubs = resSubs(resv, Seq("vec_id"))
-      // same fail-safe renumbering as the staged/incremental roots
-      val c1 = denseCells(pqTrainCodebook(rsubs)).localCheckpoint()
-      val codes = pqCodes(rsubs, c1).join(cells, "vec_id")
-      ivfpqProbeOver(emb, coarse, c1, codes, probed, queryMod)
-    } else {
-      // raw-vector codes + per-query tables (the pre-r6 shape)
-      val subs = pqSubs(emb)
-      val c1 = denseCells(pqTrainCodebook(subs))
-      val codes = pqCodes(subs, c1).join(cells, "vec_id")
-      val dtabWide = pqDtabWide(subs, c1)
-      probed.join(codes, "cell_id")
-        .filter($"vec_id" =!= $"query_id")
-        .join(broadcast(dtabWide), Seq("query_id"))
-        .select($"query_id", $"vec_id".as("neighbor_id"),
-          graft.functions.GraftFunctions.adc_sum($"code", $"tab").as("adist"))
-    }
+    val resv = cellResiduals(rows, cells, coarse).localCheckpoint()
+    // denseCells is identity while every seed cell survives training;
+    // a filtered training set (the incremental base) can lose seed
+    // cells, holing the packed code index j = (cell_id − 3)/16 — the
+    // oracle's unconditional renumbering and this side then fail-safe
+    // identically instead of silently misaligning the positional ADC
+    // lookup (r9 ADVICE)
+    val c1 = denseCells(pqTrainCodebook(resSubs(resv, Seq("vec_id")))).localCheckpoint()
+    (coarse, c1, residualCodes(resv, cells, c1))
   }
 
-  /** ADC scoring tail shared by the inline-trained and staged paths:
-    * per-(query, probed cell) residual distance tables against the
-    * cells' packed code rows. */
+  /** The IVF×PQ residual step rv = x − centroid(cell(x)) over rows
+    * carrying a full vector `fe` (see [[fullVectors]]) and a coarse
+    * `cell_id` — a corpus row's own cell or a query's probed cell;
+    * centroids broadcast. */
+  private def withResidual(routed: DataFrame, coarse: DataFrame): DataFrame = {
+    import routed.sparkSession.implicits._
+    routed.join(broadcast(coarse.select($"cell_id", $"ce".as("cce"))), "cell_id")
+      .withColumn("rv", zip_with($"fe", $"cce", (x, c) => x - c))
+  }
+
+  /** (vec_id, cell_id, rv): `rows` minus the centroids of their `cells`. */
+  private def cellResiduals(rows: DataFrame, cells: DataFrame, coarse: DataFrame): DataFrame = {
+    import rows.sparkSession.implicits._
+    withResidual(fullVectors(rows).join(cells, "vec_id"), coarse)
+      .select($"vec_id", $"cell_id", $"rv")
+  }
+
+  /** ONE row per vector: cell routing key + M packed residual code
+    * indices — the 16-bytes-per-vector physical layout PQ storage
+    * exists for, written by training and by delta ingest alike. */
+  private def residualCodes(resv: DataFrame, cells: DataFrame, c1: DataFrame): DataFrame =
+    pqCodes(resSubs(resv, Seq("vec_id")), c1).join(cells, "vec_id")
+
+  /** ADC scoring tail shared by every residual-index path: (query_id,
+    * neighbor_id, adist) for each candidate in a query's probed cells,
+    * scored on per-(query, probed cell) residual distance tables against
+    * the cells' packed code rows. */
   private def ivfpqProbeOver(emb: DataFrame, coarse: DataFrame, c1: DataFrame,
       codes: DataFrame, probed: DataFrame, queryMod: Int): DataFrame = {
     import emb.sparkSession.implicits._
-    val cc = coarse.select($"cell_id", $"ce".as("cce"))
-    val dtabQC = resDtab(emb, probed, cc, c1, queryMod)
+    val dtabQC = resDtab(emb, probed, coarse, c1, queryMod)
     probed.withColumnRenamed("cell_id", "pcell")
       .join(codes.withColumnRenamed("cell_id", "pcell"), "pcell")
       .filter($"vec_id" =!= $"query_id")
@@ -820,52 +906,34 @@ object Similarity {
   private[graft] val annTrainRuns = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Stage the trained IVFPQ index ONCE per dataset under /tmp — the
-    * production storage model made literal: the coarse codebook, cell
-    * assignment, residual PQ codebook and packed 16-byte code rows
-    * persist as parquet (the "index"), and every query — sim_ann_ivfpq,
-    * q_hybrid_rrf's dense leg, any future retrieval op — reads them
-    * instead of re-running Lloyd training per query. Same
-    * [[Tables.stagingKey]] freshness discipline as the inverted index's
-    * indexRoot: full-path key + content fingerprint, so a regenerated
-    * dataset restages instead of serving a stale index. Training is
-    * deterministic (seeded Lloyd, decimal means), so the staged tables
-    * are bit-identical to what inline training would produce — which is
-    * why the DuckDB oracle can keep replaying training from scratch. */
-  private[graft] def annIndexRoot(s: SparkSession, d: String): String = {
-    import s.implicits._
+    * production storage model made literal: [[ivfpqTrain]]'s coarse
+    * codebook, residual PQ codebook and packed 16-byte code rows (with
+    * their cell routing key) persist as parquet (the "index"), and
+    * every query — sim_ann_ivfpq, q_hybrid_rrf's dense leg, any future
+    * retrieval op — reads them instead of re-running Lloyd training per
+    * query. Same [[Tables.stagingKey]] freshness discipline as the
+    * inverted index's indexRoot: full-path key + content fingerprint,
+    * so a regenerated dataset restages instead of serving a stale
+    * index. The DuckDB oracle keeps replaying training from scratch. */
+  private[graft] def annIndexRoot(s: SparkSession, d: String): String =
     Staging.once("ann_", d, Seq("embeddings"), "v1-ivfpq-residual") { tmp =>
       annTrainRuns.incrementAndGet()
-      val emb = Tables.embeddings(s, d)
-      val csubs = pqSubsM(emb, mCount = 1, subLen = Dims)
-      val coarse = pqTrainCodebook(csubs).localCheckpoint()
-      val cells = pqAssign(csubs, coarse).select($"vec_id", $"cell_id")
-        .localCheckpoint()
-      val cc = coarse.select($"cell_id", $"ce".as("cce"))
-      val resv = emb
-        .select($"vec_id", expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("fv"))
-        .join(cells, "vec_id")
-        .join(broadcast(cc), "cell_id")
-        .select($"vec_id", $"cell_id", zip_with($"fv", $"cce", (x, c) => x - c).as("rv"))
-        .localCheckpoint()
-      val rsubs = resSubs(resv, Seq("vec_id"))
-      // denseCells is identity while every seed cell survives training;
-      // if one ever dies, the oracle's unconditional renumbering and this
-      // side now fail-safe identically instead of silently misaligning
-      // the positional ADC lookup (r9 ADVICE)
-      val c1 = denseCells(pqTrainCodebook(rsubs)).localCheckpoint()
-      coarse.write.mode("overwrite").parquet(s"$tmp/coarse")
-      c1.write.mode("overwrite").parquet(s"$tmp/pqcodebook")
-      // ONE row per vector: cell routing key + M packed code indices —
-      // the 16-bytes-per-vector physical layout PQ storage exists for
-      pqCodes(rsubs, c1).join(cells, "vec_id")
-        .write.mode("overwrite").parquet(s"$tmp/codes")
+      writeIvfpq(ivfpqTrain(Tables.embeddings(s, d)), tmp)
     }
+
+  private def writeIvfpq(index: (DataFrame, DataFrame, DataFrame), tmp: java.io.File): Unit = {
+    val (coarse, c1, codes) = index
+    coarse.write.mode("overwrite").parquet(s"$tmp/coarse")
+    c1.write.mode("overwrite").parquet(s"$tmp/pqcodebook")
+    codes.write.mode("overwrite").parquet(s"$tmp/codes")
   }
 
-  /** [[ivfpqAdist]] (residual encoding) served from the STORED index:
-    * only the query-side work runs — probe routing, per-(query, cell)
-    * ADC tables, code-row scoring. Per query this touches
-    * corpus×(probes/cells) 16-byte code rows; no training job runs. */
+  /** Residual IVF×PQ candidates served from the STORED index: only the
+    * query-side work runs — probe routing, per-(query, cell) ADC
+    * tables, code-row scoring. Per query this touches
+    * corpus×(probes/cells) 16-byte code rows; no training job runs.
+    * `queryMod` selects the query set (vec_id % queryMod == 0): 50 is
+    * the sim_ann_ivfpq gate set, 100 the hybrid-retrieval one. */
   private def ivfpqAdistStaged(s: SparkSession, d: String,
       queryMod: Int): DataFrame = {
     import s.implicits._
@@ -879,15 +947,9 @@ object Similarity {
     ivfpqProbeOver(emb, coarse, c1, codes, probed, queryMod)
   }
 
-  private def annIvfPq(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val emb = Tables.embeddings(s, d)
-    val wAdc = Window.partitionBy($"query_id").orderBy($"adist", $"neighbor_id")
-    val shortlist = ivfpqAdistStaged(s, d, queryMod = 50)
-      .withColumn("srank", row_number().over(wAdc)).filter($"srank" <= PqShortlist)
-      .select($"query_id", $"neighbor_id")
-    pqRerank(emb, shortlist)
-  }
+  private def annIvfPq(s: SparkSession, d: String): DataFrame =
+    pqRerank(Tables.embeddings(s, d),
+      adcShortlist(ivfpqAdistStaged(s, d, queryMod = 50), PqShortlist))
 
   // -- ANN recall accounting -------------------------------------------------
   // The index-quality gauge every production ANN deployment monitors
@@ -906,23 +968,9 @@ object Similarity {
   private def annRecall(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
-    val wAdc = Window.partitionBy($"query_id").orderBy($"adist", $"neighbor_id")
-    val shortlist = ivfpqAdistStaged(s, d, queryMod = 50)
-      .withColumn("srank", row_number().over(wAdc)).filter($"srank" <= PqShortlist)
-      .select($"query_id", $"neighbor_id")
+    val shortlist = adcShortlist(ivfpqAdistStaged(s, d, queryMod = 50), PqShortlist)
     val approx = pqRerank(emb, shortlist).select($"query_id", $"neighbor_id")
-    val full = emb.select($"vec_id",
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("fe"))
-    val qfull = full.filter(evalPanel($"vec_id"))
-      .select($"vec_id".as("query_id"), $"fe".as("qe"))
-    val wEx = Window.partitionBy($"query_id").orderBy($"dx", $"neighbor_id")
-    val exact = full.withColumnRenamed("vec_id", "neighbor_id")
-      .crossJoin(broadcast(qfull))
-      .filter($"neighbor_id" =!= $"query_id")
-      .select($"query_id", $"neighbor_id", l2sq($"qe", $"fe").as("dx"))
-      .withColumn("r", row_number().over(wEx)).filter($"r" <= 3)
-      .select($"query_id", $"neighbor_id")
-    exact
+    exactTopK(fullVectors(emb), 3).select($"query_id", $"neighbor_id")
       .join(approx.withColumn("hit", lit(1)), Seq("query_id", "neighbor_id"), "left")
       .groupBy($"query_id")
       .agg(sum(coalesce($"hit", lit(0))).as("n_hit"))
@@ -931,25 +979,12 @@ object Similarity {
   }
   private val annRecallSql =
     s"""WITH ${ivfpqAdistSql(queryMod = 50)},
-       |shortlist AS (SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, vec_id AS neighbor_id, row_number() OVER (
-       |      PARTITION BY query_id ORDER BY adist, vec_id) AS srank
-       |    FROM adist) WHERE srank <= $PqShortlist),
-       |fullv AS (SELECT vec_id, list_transform(range(1, ${Dims + 1}),
-       |    i -> CAST(embedding[i] AS DOUBLE)) AS fe FROM embeddings),
+       |${shortlistSql(PqShortlist)},
+       |$fullvSql,
        |approx AS (SELECT query_id, neighbor_id FROM (
-       |    SELECT s.query_id, s.neighbor_id, row_number() OVER (
-       |      PARTITION BY s.query_id
-       |      ORDER BY ${l2sqSql("qv.fe", "nv.fe", Dims)}, s.neighbor_id) AS rank
-       |    FROM shortlist s
-       |    JOIN fullv nv ON s.neighbor_id = nv.vec_id
-       |    JOIN fullv qv ON s.query_id = qv.vec_id) WHERE rank <= 3),
+       |${rerankRanksSql("rank")}) WHERE rank <= 3),
        |exact AS (SELECT query_id, neighbor_id FROM (
-       |    SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-       |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY ${l2sqSql("q.fe", "n.fe", Dims)}, n.vec_id) AS r
-       |    FROM fullv q JOIN fullv n ON n.vec_id <> q.vec_id
-       |    WHERE ${evalPanelSql("q.vec_id")}) WHERE r <= 3)
+       |$exactRanksSql) WHERE r <= 3)
        |SELECT e.query_id,
        |  CAST(COUNT(a.neighbor_id) AS BIGINT) AS n_hit,
        |  CAST(COUNT(a.neighbor_id) AS DOUBLE) / CAST(3.0 AS DOUBLE) AS recall3
@@ -976,27 +1011,10 @@ object Similarity {
   private def ndcgEval(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
-    val wAdc = Window.partitionBy($"query_id").orderBy($"adist", $"neighbor_id")
-    val shortlist = ivfpqAdistStaged(s, d, queryMod = 50)
-      .withColumn("srank", row_number().over(wAdc)).filter($"srank" <= PqShortlist)
-      .select($"query_id", $"neighbor_id")
-    val full = emb.select($"vec_id",
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("fe"))
-    val qfull = full.filter(evalPanel($"vec_id"))
-      .select($"vec_id".as("query_id"), $"fe".as("qe"))
-    val wD = Window.partitionBy($"query_id").orderBy($"dd", $"neighbor_id")
-    val approx = shortlist
-      .join(full.withColumnRenamed("vec_id", "neighbor_id"), Seq("neighbor_id"))
-      .join(broadcast(qfull), Seq("query_id"))
-      .select($"query_id", $"neighbor_id", l2sq($"qe", $"fe").as("dd"))
-      .withColumn("pos", row_number().over(wD)).filter($"pos" <= NdcgK)
-      .select($"query_id", $"neighbor_id", $"pos")
-    val wEx = Window.partitionBy($"query_id").orderBy($"dx", $"neighbor_id")
-    val gold = full.withColumnRenamed("vec_id", "neighbor_id")
-      .crossJoin(broadcast(qfull))
-      .filter($"neighbor_id" =!= $"query_id")
-      .select($"query_id", $"neighbor_id", l2sq($"qe", $"fe").as("dx"))
-      .withColumn("r", row_number().over(wEx)).filter($"r" <= NdcgK)
+    val shortlist = adcShortlist(ivfpqAdistStaged(s, d, queryMod = 50), PqShortlist)
+    val approx = rerankTopK(emb, shortlist, evalPanel($"vec_id"), NdcgK)
+      .select($"query_id", $"neighbor_id", $"rank".as("pos"))
+    val gold = exactTopK(fullVectors(emb), NdcgK)
       .select($"query_id", $"neighbor_id",
         (lit(NdcgK + 1) - $"r").cast("long").as("rel"))
     val wArr = array(DcgWMicro.map(lit): _*)
@@ -1019,26 +1037,13 @@ object Similarity {
     val wts = DcgWMicro.zipWithIndex
       .map { case (w, i) => s"(${i + 1}, $w)" }.mkString(", ")
     s"""WITH ${ivfpqAdistSql(queryMod = 50)},
-       |shortlist AS (SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, vec_id AS neighbor_id, row_number() OVER (
-       |      PARTITION BY query_id ORDER BY adist, vec_id) AS srank
-       |    FROM adist) WHERE srank <= $PqShortlist),
-       |fullv AS (SELECT vec_id, list_transform(range(1, ${Dims + 1}),
-       |    i -> CAST(embedding[i] AS DOUBLE)) AS fe FROM embeddings),
+       |${shortlistSql(PqShortlist)},
+       |$fullvSql,
        |approx AS (SELECT query_id, neighbor_id, pos FROM (
-       |    SELECT s.query_id, s.neighbor_id, row_number() OVER (
-       |      PARTITION BY s.query_id
-       |      ORDER BY ${l2sqSql("qv.fe", "nv.fe", Dims)}, s.neighbor_id) AS pos
-       |    FROM shortlist s
-       |    JOIN fullv nv ON s.neighbor_id = nv.vec_id
-       |    JOIN fullv qv ON s.query_id = qv.vec_id) WHERE pos <= $NdcgK),
+       |${rerankRanksSql("pos")}) WHERE pos <= $NdcgK),
        |gold AS (SELECT query_id, neighbor_id,
        |    CAST(${NdcgK + 1} - r AS BIGINT) AS rel FROM (
-       |    SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-       |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY ${l2sqSql("q.fe", "n.fe", Dims)}, n.vec_id) AS r
-       |    FROM fullv q JOIN fullv n ON n.vec_id <> q.vec_id
-       |    WHERE ${evalPanelSql("q.vec_id")}) WHERE r <= $NdcgK),
+       |$exactRanksSql) WHERE r <= $NdcgK),
        |wts AS (SELECT * FROM (VALUES $wts) t(pos, w)),
        |dcg AS (SELECT a.query_id,
        |    CAST(SUM(COALESCE(g.rel, 0) * w.w) AS BIGINT) AS dcg_scaled
@@ -1083,7 +1088,7 @@ object Similarity {
     cells
       .join(csubs.select($"vec_id", $"sub"), "vec_id")
       .join(broadcast(cc), "cell_id")
-      .select($"cell_id", l2sq($"sub", $"cce").as("d2"))
+      .select($"cell_id", VectorOps.l2sq($"sub", $"cce").as("d2"))
       .groupBy($"cell_id")
       .agg(count(lit(1)).as("n"), dsum($"d2").as("inertia"))
       .orderBy($"cell_id")
@@ -1097,24 +1102,45 @@ object Similarity {
        |    list_transform(range(1, ${Dims + 1}),
        |      i -> CAST(embedding[i] AS DOUBLE)) AS sub
        |  FROM embeddings),
-       |cc0 AS (SELECT m, vec_id AS cell_id, sub AS ce FROM csubs
-       |       WHERE vec_id % $PqSeedMod = 3 AND vec_id < $PqSeedCap),
-       |ca0 AS (SELECT vec_id, m, cell_id FROM (
-       |    SELECT s.vec_id, s.m, c.cell_id, row_number() OVER (
-       |      PARTITION BY s.vec_id, s.m
-       |      ORDER BY ${l2FastSql("s.sub", "c.ce", Dims)}, c.cell_id) AS rn
-       |    FROM csubs s JOIN cc0 c ON s.m = c.m) WHERE rn = 1),
-       |cc1 AS (SELECT m, cell_id, list(mean ORDER BY i) AS ce FROM (
+       |${pqTrainSql("cc0", "ca0", "cc1", "csubs", Dims)},
+       |${pqAssignSql("cells", "vec_id, cell_id", "csubs", "cc1", Dims)}""".stripMargin
+
+  /** DuckDB twin of [[pqTrainCodebook]] over the `subs` CTE (vec_id, m,
+    * n-long sub): seed grid CTE `c0`, seed assignment `a0`,
+    * decimal-mean codebook `c1`. `trainPred` restricts the training
+    * rows (seeds and means) to those it accepts. */
+  private def pqTrainSql(c0: String, a0: String, c1: String, subs: String, n: Int,
+      trainPred: Option[String => String] = None): String = {
+    val seedPred = trainPred.fold("")(p => s"\n         AND ${p("vec_id")}")
+    s"""$c0 AS (SELECT m, vec_id AS cell_id, sub AS ce FROM $subs
+       |       WHERE vec_id % $PqSeedMod = 3 AND vec_id < $PqSeedCap$seedPred),
+       |${pqAssignSql(a0, "vec_id, m, cell_id", subs, c0, n, trainPred)},
+       |$c1 AS (SELECT m, cell_id, list(mean ORDER BY i) AS ce FROM (
        |    SELECT a.m, a.cell_id, t.i,
        |      CAST(SUM(CAST(s.sub[t.i] AS DECIMAL(28,10))) AS DOUBLE) / COUNT(*) AS mean
-       |    FROM ca0 a JOIN csubs s ON a.vec_id = s.vec_id AND a.m = s.m,
-       |         unnest(range(1, ${Dims + 1})) t(i)
-       |    GROUP BY a.m, a.cell_id, t.i) GROUP BY m, cell_id),
-       |cells AS (SELECT vec_id, cell_id FROM (
+       |    FROM $a0 a JOIN $subs s ON a.vec_id = s.vec_id AND a.m = s.m,
+       |         unnest(range(1, ${n + 1})) t(i)
+       |    GROUP BY a.m, a.cell_id, t.i) GROUP BY m, cell_id)""".stripMargin
+  }
+
+  /** DuckDB twin of [[pqAssign]]: CTE `name` (`cols`) holding each
+    * (vector, subspace) row of `subs` with its nearest `cb` entry. */
+  private def pqAssignSql(name: String, cols: String, subs: String, cb: String, n: Int,
+      trainPred: Option[String => String] = None): String = {
+    val where = trainPred.fold("")(p => s"\n    WHERE ${p("s.vec_id")}")
+    s"""$name AS (SELECT $cols FROM (
        |    SELECT s.vec_id, s.m, c.cell_id, row_number() OVER (
        |      PARTITION BY s.vec_id, s.m
-       |      ORDER BY ${l2FastSql("s.sub", "c.ce", Dims)}, c.cell_id) AS rn
-       |    FROM csubs s JOIN cc1 c ON s.m = c.m) WHERE rn = 1)""".stripMargin
+       |      ORDER BY ${l2FastSql("s.sub", "c.ce", n)}, c.cell_id) AS rn
+       |    FROM $subs s JOIN $cb c ON s.m = c.m$where) WHERE rn = 1)""".stripMargin
+  }
+
+  /** DuckDB twin of [[denseCells]]: `c1`'s cells renumbered onto the
+    * dense seed grid as CTE `name`. */
+  private def denseCellsSql(name: String, c1: String): String =
+    s"""$name AS (SELECT m,
+       |    3 + $PqSeedMod * (row_number() OVER (PARTITION BY m ORDER BY cell_id) - 1) AS cell_id,
+       |    ce FROM $c1)""".stripMargin
 
   private val kmeansClustersSql = {
     import graft.OracleMath.sqlSum
@@ -1243,7 +1269,7 @@ object Similarity {
     val d2s = cells
       .join(csubs.select($"vec_id", $"sub"), "vec_id")
       .join(broadcast(cc), "cell_id")
-      .select($"vec_id", $"cell_id", l2sq($"sub", $"cce").as("d2"))
+      .select($"vec_id", $"cell_id", VectorOps.l2sq($"sub", $"cce").as("d2"))
       .localCheckpoint()
     val q = floor($"d2" * 1e6 + 0.5).cast("decimal(38,0)")
     val stats = d2s.select($"cell_id", q.as("q"))
@@ -1293,53 +1319,32 @@ object Similarity {
   // spec pins that delta vectors actually surface as neighbors.
   private val IncMod = 17
 
-  /** Encode `rows` (already residual-ready) against the given coarse +
-    * residual codebooks: cell assignment, residuals, packed codes —
-    * per-row work against broadcast state, no training. */
-  private def ivfpqEncode(rows: DataFrame, coarse: DataFrame,
+  /** Encode `rows` against the given coarse + residual codebooks: cell
+    * assignment, residuals, packed codes — per-row work against
+    * broadcast state, no training. The same [[residualCodes]] encoding
+    * [[ivfpqTrain]] writes for its training rows. */
+  private[graft] def ivfpqEncode(rows: DataFrame, coarse: DataFrame,
       c1: DataFrame): DataFrame = {
     import rows.sparkSession.implicits._
     val cells = pqAssign(pqSubsM(rows, 1, Dims), coarse)
       .select($"vec_id", $"cell_id")
-    val cc = coarse.select($"cell_id", $"ce".as("cce"))
-    val resv = rows
-      .select($"vec_id", expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("fv"))
-      .join(cells, "vec_id")
-      .join(broadcast(cc), "cell_id")
-      .select($"vec_id", $"cell_id", zip_with($"fv", $"cce", (x, c) => x - c).as("rv"))
-    pqCodes(resSubs(resv, Seq("vec_id")), c1).join(cells, "vec_id")
+    residualCodes(cellResiduals(rows, cells, coarse), cells, c1)
   }
 
-  /** Stage the BASE-trained index (codebooks + base code rows) once per
-    * dataset — the pre-existing index an arriving delta batch lands in.
-    * Same freshness discipline as [[annIndexRoot]]. */
-  private[graft] def annIncRoot(s: SparkSession, d: String): String = {
-    import s.implicits._
+  /** The BASE rows of the incremental split: everything but the
+    * arriving delta (vec_id % IncMod == 3). */
+  private[graft] def incBase(emb: DataFrame): DataFrame =
+    emb.filter(col("vec_id") % IncMod =!= 3)
+
+  /** Stage the BASE-trained index ([[ivfpqTrain]] over [[incBase]]:
+    * codebooks + base code rows) once per dataset — the pre-existing
+    * index an arriving delta batch lands in. Same freshness discipline
+    * as [[annIndexRoot]]. */
+  private[graft] def annIncRoot(s: SparkSession, d: String): String =
     Staging.once("annb_", d, Seq("embeddings"), "v1-ivfpq-base") { tmp =>
       annTrainRuns.incrementAndGet()
-      val base = Tables.embeddings(s, d).filter($"vec_id" % IncMod =!= 3)
-      val csubsBase = pqSubsM(base, 1, Dims)
-      val coarse = pqTrainCodebook(csubsBase).localCheckpoint()
-      val cells = pqAssign(csubsBase, coarse).select($"vec_id", $"cell_id")
-        .localCheckpoint()
-      val cc = coarse.select($"cell_id", $"ce".as("cce"))
-      val resv = base
-        .select($"vec_id", expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("fv"))
-        .join(cells, "vec_id")
-        .join(broadcast(cc), "cell_id")
-        .select($"vec_id", $"cell_id", zip_with($"fv", $"cce", (x, c) => x - c).as("rv"))
-        .localCheckpoint()
-      // a filtered training set can lose seed cells, holing the packed
-      // code index j = (cell_id − 3)/16 — renumber the surviving cells
-      // onto a dense grid (identity when no seed is missing)
-      val c1 = denseCells(pqTrainCodebook(resSubs(resv, Seq("vec_id"))))
-        .localCheckpoint()
-      coarse.write.mode("overwrite").parquet(s"$tmp/coarse")
-      c1.write.mode("overwrite").parquet(s"$tmp/pqcodebook")
-      pqCodes(resSubs(resv, Seq("vec_id")), c1).join(cells, "vec_id")
-        .write.mode("overwrite").parquet(s"$tmp/codes")
+      writeIvfpq(ivfpqTrain(incBase(Tables.embeddings(s, d))), tmp)
     }
-  }
 
   private def annIncremental(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -1355,47 +1360,45 @@ object Similarity {
       .unionByName(ivfpqEncode(delta, coarse, c1))
     val probed = ivfpqProbeCells(
       pqSubsM(emb.filter($"vec_id" % 50 === 0), 1, Dims), coarse)
-    val wAdc = Window.partitionBy($"query_id").orderBy($"adist", $"neighbor_id")
-    val shortlist = ivfpqProbeOver(emb, coarse, c1, codes, probed, queryMod = 50)
-      .withColumn("srank", row_number().over(wAdc)).filter($"srank" <= PqShortlist)
-      .select($"query_id", $"neighbor_id")
-    pqRerank(emb, shortlist)
+    pqRerank(emb, adcShortlist(
+      ivfpqProbeOver(emb, coarse, c1, codes, probed, queryMod = 50), PqShortlist))
   }
 
   private val annIncrementalSql =
     s"""WITH ${ivfpqAdistSql(queryMod = 50, trainPred = c => s"$c % $IncMod <> 3")},
-       |shortlist AS (SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, vec_id AS neighbor_id, row_number() OVER (
-       |      PARTITION BY query_id ORDER BY adist, vec_id) AS srank
-       |    FROM adist) WHERE srank <= $PqShortlist),
-       |fullv AS (SELECT vec_id, list_transform(range(1, ${Dims + 1}),
-       |    i -> CAST(embedding[i] AS DOUBLE)) AS fe FROM embeddings),
-       |reranked AS (
-       |  SELECT s.query_id, s.neighbor_id,
-       |    ${l2sqSql("qv.fe", "nv.fe", Dims)} AS d
-       |  FROM shortlist s
-       |  JOIN fullv nv ON s.neighbor_id = nv.vec_id
-       |  JOIN fullv qv ON s.query_id = qv.vec_id),
-       |ranked AS (SELECT query_id, neighbor_id, d, row_number() OVER (
-       |    PARTITION BY query_id ORDER BY d, neighbor_id) AS rank
-       |  FROM reranked)
-       |SELECT query_id, rank, neighbor_id, round(d, 6) AS d6
-       |FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+       |${shortlistSql(PqShortlist)},
+       |$fullvSql,
+       |${rerankSql("shortlist")}""".stripMargin
 
   /** Spec instrumentation: mean |ADC − true L2²| over every (query,
-    * candidate) pair in the probed cells — the quantization-error
-    * number residual encoding exists to shrink. */
+    * candidate) pair in the 2 probed cells of each vec_id % 50 == 0
+    * query — the quantization-error number residual encoding exists to
+    * shrink. Both trainers run inline (nothing is staged): `residual =
+    * true` scores the production encoding; `false` PQ-encodes raw
+    * vectors at the identical code budget, routed by the same coarse
+    * cells, on per-query wide distance tables (the pre-r6 shape). */
   private[graft] def adcError(s: SparkSession, d: String, residual: Boolean): Double = {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
-    val full = emb.select($"vec_id",
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("fe"))
+    val (coarse, c1, codes) = ivfpqTrain(emb)
+    val probed = ivfpqProbeCells(pqSubsM(emb.filter($"vec_id" % 50 === 0), 1, Dims), coarse)
+    val adist =
+      if (residual) ivfpqProbeOver(emb, coarse, c1, codes, probed, queryMod = 50)
+      else {
+        val (rawC1, rawCodes) = pqTrain(emb)
+        probed.join(rawCodes.join(codes.select($"vec_id", $"cell_id"), "vec_id"), "cell_id")
+          .filter($"vec_id" =!= $"query_id")
+          .join(broadcast(pqDtabWide(pqSubs(emb), rawC1)), Seq("query_id"))
+          .select($"query_id", $"vec_id".as("neighbor_id"),
+            graft.functions.GraftFunctions.adc_sum($"code", $"tab").as("adist"))
+      }
+    val full = fullVectors(emb)
     val qfull = full.filter($"vec_id" % 50 === 0)
       .select($"vec_id".as("query_id"), $"fe".as("qe"))
-    ivfpqAdist(emb, residual)
+    adist
       .join(full.withColumnRenamed("vec_id", "neighbor_id"), Seq("neighbor_id"))
       .join(broadcast(qfull), Seq("query_id"))
-      .select(abs($"adist" - l2sq($"qe", $"fe")).as("err"))
+      .select(abs($"adist" - VectorOps.l2sq($"qe", $"fe")).as("err"))
       .agg(avg($"err")).head().getDouble(0)
   }
 
@@ -1413,16 +1416,13 @@ object Similarity {
   /** Per-(query, probed cell) residual ADC tables tab[m][j]: the query's
     * residual AGAINST THAT CELL scored once per (subspace, codebook
     * entry). Rows = queries × probes — broadcastable by construction. */
-  private def resDtab(emb: DataFrame, probed: DataFrame, cc: DataFrame,
-      codebook: DataFrame, queryMod: Int = 50): DataFrame = {
+  private def resDtab(emb: DataFrame, probed: DataFrame, coarse: DataFrame,
+      codebook: DataFrame, queryMod: Int): DataFrame = {
     import emb.sparkSession.implicits._
-    val qfv = emb.filter($"vec_id" % queryMod === 0)
-      .select($"vec_id".as("query_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("fv"))
-    val qres = probed.join(broadcast(qfv), "query_id")
-      .join(broadcast(cc), "cell_id")
-      .select($"query_id", $"cell_id".as("pcell"),
-        zip_with($"fv", $"cce", (x, c) => x - c).as("rv"))
+    val qfv = fullVectors(emb.filter($"vec_id" % queryMod === 0))
+      .withColumnRenamed("vec_id", "query_id")
+    val qres = withResidual(probed.join(broadcast(qfv), "query_id"), coarse)
+      .select($"query_id", $"cell_id".as("pcell"), $"rv")
     resSubs(qres, Seq("query_id", "pcell"))
       .join(broadcast(codebook.withColumn("cn", VectorOps.dot($"ce", $"ce"))), Seq("m"))
       .select($"query_id", $"pcell", $"m",
@@ -1441,27 +1441,9 @@ object Similarity {
        |    list_transform(range(1, ${sub + 1}),
        |      i -> CAST(embedding[t.m * $sub + i] AS DOUBLE)) AS sub
        |  FROM embeddings, unnest(range(0, $PqM)) t(m)),
-       |c0 AS (SELECT m, vec_id AS cell_id, sub AS ce FROM subs
-       |       WHERE vec_id % $PqSeedMod = 3 AND vec_id < $PqSeedCap),
-       |a0 AS (SELECT vec_id, m, cell_id FROM (
-       |    SELECT s.vec_id, s.m, c.cell_id, row_number() OVER (
-       |      PARTITION BY s.vec_id, s.m
-       |      ORDER BY ${l2FastSql("s.sub", "c.ce", sub)}, c.cell_id) AS rn
-       |    FROM subs s JOIN c0 c ON s.m = c.m) WHERE rn = 1),
-       |c1 AS (SELECT m, cell_id, list(mean ORDER BY i) AS ce FROM (
-       |    SELECT a.m, a.cell_id, t.i,
-       |      CAST(SUM(CAST(s.sub[t.i] AS DECIMAL(28,10))) AS DOUBLE) / COUNT(*) AS mean
-       |    FROM a0 a JOIN subs s ON a.vec_id = s.vec_id AND a.m = s.m,
-       |         unnest(range(1, ${sub + 1})) t(i)
-       |    GROUP BY a.m, a.cell_id, t.i) GROUP BY m, cell_id),
-       |c1d AS (SELECT m,
-       |    3 + $PqSeedMod * (row_number() OVER (PARTITION BY m ORDER BY cell_id) - 1) AS cell_id,
-       |    ce FROM c1),
-       |codes AS (SELECT vec_id, m, cell_id FROM (
-       |    SELECT s.vec_id, s.m, c.cell_id, row_number() OVER (
-       |      PARTITION BY s.vec_id, s.m
-       |      ORDER BY ${l2FastSql("s.sub", "c.ce", sub)}, c.cell_id) AS rn
-       |    FROM subs s JOIN c1d c ON s.m = c.m) WHERE rn = 1),
+       |${pqTrainSql("c0", "a0", "c1", "subs", sub)},
+       |${denseCellsSql("c1d", "c1")},
+       |${pqAssignSql("codes", "vec_id, m, cell_id", "subs", "c1d", sub)},
        |q AS (SELECT vec_id AS query_id, m, sub AS qsub FROM subs
        |      WHERE ${evalPanelSql("vec_id")}),
        |codesw AS (
@@ -1480,30 +1462,16 @@ object Similarity {
        |    list_sum(list_transform(range(1, ${PqM + 1}),
        |      i -> tab[i][code[i] + 1])) AS adist
        |  FROM codesw c, tabq t WHERE c.vec_id <> t.query_id),
-       |shortlist AS (SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, vec_id AS neighbor_id, row_number() OVER (
-       |      PARTITION BY query_id ORDER BY adist, vec_id) AS srank
-       |    FROM adist) WHERE srank <= $PqShortlist),
-       |fullv AS (SELECT vec_id, list_transform(range(1, ${Dims + 1}),
-       |    i -> CAST(embedding[i] AS DOUBLE)) AS fe FROM embeddings),
-       |reranked AS (
-       |  SELECT s.query_id, s.neighbor_id,
-       |    ${l2sqSql("qv.fe", "nv.fe", Dims)} AS d
-       |  FROM shortlist s
-       |  JOIN fullv nv ON s.neighbor_id = nv.vec_id
-       |  JOIN fullv qv ON s.query_id = qv.vec_id),
-       |ranked AS (SELECT query_id, neighbor_id, d, row_number() OVER (
-       |    PARTITION BY query_id ORDER BY d, neighbor_id) AS rank
-       |  FROM reranked)
-       |SELECT query_id, rank, neighbor_id, round(d, 6) AS d6
-       |FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+       |${shortlistSql(PqShortlist)},
+       |$fullvSql,
+       |${rerankSql("shortlist")}""".stripMargin
   }
 
   /** The IVF×PQ candidate machinery (coarse Lloyd train → cell assign →
     * top-2 probe → residual PQ codebooks/codes → per-(query, cell) ADC
     * tables) as a DuckDB CTE chain ending in
     * `adist(query_id, vec_id, adist)` — the SQL replay of
-    * [[ivfpqAdist]](residual = true). Shared by the sim_ann_ivfpq
+    * [[ivfpqTrain]] + [[ivfpqProbeOver]]. Shared by the sim_ann_ivfpq
     * oracle, q_hybrid_rrf's dense leg (different query sets via
     * `queryMod`; corpus-side training identical) and
     * sim_ann_incremental (`trainPred` restricts the TRAINING rows —
@@ -1517,26 +1485,8 @@ object Similarity {
        |    list_transform(range(1, ${Dims + 1}),
        |      i -> CAST(embedding[i] AS DOUBLE)) AS sub
        |  FROM embeddings, unnest(range(0, 1)) t(m)),
-       |cc0 AS (SELECT m, vec_id AS cell_id, sub AS ce FROM csubs
-       |       WHERE vec_id % $PqSeedMod = 3 AND vec_id < $PqSeedCap
-       |         AND ${trainPred("vec_id")}),
-       |ca0 AS (SELECT vec_id, m, cell_id FROM (
-       |    SELECT s.vec_id, s.m, c.cell_id, row_number() OVER (
-       |      PARTITION BY s.vec_id, s.m
-       |      ORDER BY ${l2FastSql("s.sub", "c.ce", Dims)}, c.cell_id) AS rn
-       |    FROM csubs s JOIN cc0 c ON s.m = c.m
-       |    WHERE ${trainPred("s.vec_id")}) WHERE rn = 1),
-       |cc1 AS (SELECT m, cell_id, list(mean ORDER BY i) AS ce FROM (
-       |    SELECT a.m, a.cell_id, t.i,
-       |      CAST(SUM(CAST(s.sub[t.i] AS DECIMAL(28,10))) AS DOUBLE) / COUNT(*) AS mean
-       |    FROM ca0 a JOIN csubs s ON a.vec_id = s.vec_id AND a.m = s.m,
-       |         unnest(range(1, ${Dims + 1})) t(i)
-       |    GROUP BY a.m, a.cell_id, t.i) GROUP BY m, cell_id),
-       |cells AS (SELECT vec_id, cell_id FROM (
-       |    SELECT s.vec_id, s.m, c.cell_id, row_number() OVER (
-       |      PARTITION BY s.vec_id, s.m
-       |      ORDER BY ${l2FastSql("s.sub", "c.ce", Dims)}, c.cell_id) AS rn
-       |    FROM csubs s JOIN cc1 c ON s.m = c.m) WHERE rn = 1),
+       |${pqTrainSql("cc0", "ca0", "cc1", "csubs", Dims, Some(trainPred))},
+       |${pqAssignSql("cells", "vec_id, cell_id", "csubs", "cc1", Dims)},
        |probed AS (
        |  SELECT query_id, cell_id FROM (
        |    SELECT s.vec_id AS query_id, c.cell_id,
@@ -1555,29 +1505,9 @@ object Similarity {
        |  SELECT vec_id, t.m,
        |    list_transform(range(1, ${sub + 1}), i -> rv[t.m * $sub + i]) AS sub
        |  FROM resv, unnest(range(0, $PqM)) t(m)),
-       |pc0 AS (SELECT m, vec_id AS cell_id, sub AS ce FROM subs
-       |       WHERE vec_id % $PqSeedMod = 3 AND vec_id < $PqSeedCap
-       |         AND ${trainPred("vec_id")}),
-       |pa0 AS (SELECT vec_id, m, cell_id FROM (
-       |    SELECT s.vec_id, s.m, c.cell_id, row_number() OVER (
-       |      PARTITION BY s.vec_id, s.m
-       |      ORDER BY ${l2FastSql("s.sub", "c.ce", sub)}, c.cell_id) AS rn
-       |    FROM subs s JOIN pc0 c ON s.m = c.m
-       |    WHERE ${trainPred("s.vec_id")}) WHERE rn = 1),
-       |pc1r AS (SELECT m, cell_id, list(mean ORDER BY i) AS ce FROM (
-       |    SELECT a.m, a.cell_id, t.i,
-       |      CAST(SUM(CAST(s.sub[t.i] AS DECIMAL(28,10))) AS DOUBLE) / COUNT(*) AS mean
-       |    FROM pa0 a JOIN subs s ON a.vec_id = s.vec_id AND a.m = s.m,
-       |         unnest(range(1, ${sub + 1})) t(i)
-       |    GROUP BY a.m, a.cell_id, t.i) GROUP BY m, cell_id),
-       |pc1 AS (SELECT m,
-       |    3 + $PqSeedMod * (row_number() OVER (PARTITION BY m ORDER BY cell_id) - 1) AS cell_id,
-       |    ce FROM pc1r),
-       |pcodes AS (SELECT vec_id, m, cell_id FROM (
-       |    SELECT s.vec_id, s.m, c.cell_id, row_number() OVER (
-       |      PARTITION BY s.vec_id, s.m
-       |      ORDER BY ${l2FastSql("s.sub", "c.ce", sub)}, c.cell_id) AS rn
-       |    FROM subs s JOIN pc1 c ON s.m = c.m) WHERE rn = 1),
+       |${pqTrainSql("pc0", "pa0", "pc1r", "subs", sub, Some(trainPred))},
+       |${denseCellsSql("pc1", "pc1r")},
+       |${pqAssignSql("pcodes", "vec_id, m, cell_id", "subs", "pc1", sub)},
        |codesw AS (
        |  SELECT vec_id, list((cell_id - 3) // $PqSeedMod ORDER BY m) AS code
        |  FROM pcodes GROUP BY vec_id),
@@ -1627,12 +1557,7 @@ object Similarity {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val labels = emb.select($"vec_id", $"label")
-    val wAdc = Window.partitionBy($"query_id").orderBy($"adist", $"neighbor_id")
-    val shortlist = ivfpqAdistStaged(s, d, queryMod = 50)
-      .withColumn("srank", row_number().over(wAdc))
-      .filter($"srank" <= PqShortlist * 3)
-      .select($"query_id", $"neighbor_id")
-    val filtered = shortlist
+    val filtered = adcShortlist(ivfpqAdistStaged(s, d, queryMod = 50), PqShortlist * 3)
       .join(labels.select($"vec_id".as("neighbor_id"), $"label".as("nl")),
         "neighbor_id")
       .join(broadcast(labels.filter($"vec_id" % 50 === 0)
@@ -1643,48 +1568,20 @@ object Similarity {
   }
   private val annFilteredSql =
     s"""WITH ${ivfpqAdistSql(queryMod = 50)},
-       |shortlist AS (SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, vec_id AS neighbor_id, row_number() OVER (
-       |      PARTITION BY query_id ORDER BY adist, vec_id) AS srank
-       |    FROM adist) WHERE srank <= ${PqShortlist * 3}),
+       |${shortlistSql(PqShortlist * 3)},
        |lbl AS (SELECT vec_id, label FROM embeddings),
        |filtered AS (SELECT s.query_id, s.neighbor_id FROM shortlist s
        |  JOIN lbl nl ON nl.vec_id = s.neighbor_id
        |  JOIN lbl ql ON ql.vec_id = s.query_id
        |  WHERE nl.label = ql.label),
-       |fullv AS (SELECT vec_id, list_transform(range(1, ${Dims + 1}),
-       |    i -> CAST(embedding[i] AS DOUBLE)) AS fe FROM embeddings),
-       |reranked AS (
-       |  SELECT s.query_id, s.neighbor_id,
-       |    ${l2sqSql("qv.fe", "nv.fe", Dims)} AS d
-       |  FROM filtered s
-       |  JOIN fullv nv ON s.neighbor_id = nv.vec_id
-       |  JOIN fullv qv ON s.query_id = qv.vec_id),
-       |ranked AS (SELECT query_id, neighbor_id, d, row_number() OVER (
-       |    PARTITION BY query_id ORDER BY d, neighbor_id) AS rank
-       |  FROM reranked)
-       |SELECT query_id, rank, neighbor_id, round(d, 6) AS d6
-       |FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+       |$fullvSql,
+       |${rerankSql("filtered")}""".stripMargin
 
   private val annIvfPqSql =
     s"""WITH ${ivfpqAdistSql(queryMod = 50)},
-       |shortlist AS (SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, vec_id AS neighbor_id, row_number() OVER (
-       |      PARTITION BY query_id ORDER BY adist, vec_id) AS srank
-       |    FROM adist) WHERE srank <= $PqShortlist),
-       |fullv AS (SELECT vec_id, list_transform(range(1, ${Dims + 1}),
-       |    i -> CAST(embedding[i] AS DOUBLE)) AS fe FROM embeddings),
-       |reranked AS (
-       |  SELECT s.query_id, s.neighbor_id,
-       |    ${l2sqSql("qv.fe", "nv.fe", Dims)} AS d
-       |  FROM shortlist s
-       |  JOIN fullv nv ON s.neighbor_id = nv.vec_id
-       |  JOIN fullv qv ON s.query_id = qv.vec_id),
-       |ranked AS (SELECT query_id, neighbor_id, d, row_number() OVER (
-       |    PARTITION BY query_id ORDER BY d, neighbor_id) AS rank
-       |  FROM reranked)
-       |SELECT query_id, rank, neighbor_id, round(d, 6) AS d6
-       |FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+       |${shortlistSql(PqShortlist)},
+       |$fullvSql,
+       |${rerankSql("shortlist")}""".stripMargin
 
   // -- q_hybrid_rrf: hybrid lexical+dense retrieval, RRF fusion ------------
   // The two retrieval legs this library already provides — BM25-style
@@ -1894,10 +1791,8 @@ object Similarity {
     // all-pairs crossJoin of the brute-force leg, which is the part
     // that dies at 100× corpus. The oracle replays the identical probe
     // (ivfpqAdistSql below), so leg parity is by construction.
-    val wAdc = Window.partitionBy($"query_id").orderBy($"adist", $"neighbor_id")
-    val shortd = ivfpqAdistStaged(s, d, queryMod = 100)
-      .withColumn("srank", row_number().over(wAdc)).filter($"srank" <= LegDepth)
-      .select($"query_id", $"neighbor_id".as("doc_id"))
+    val shortd = adcShortlist(ivfpqAdistStaged(s, d, queryMod = 100), LegDepth)
+      .withColumnRenamed("neighbor_id", "doc_id")
     val denseW = Window.partitionBy($"query_id").orderBy($"cos".desc, $"doc_id")
     // no forced broadcast on qv: the query-vector relation is
     // corpus-coupled in this synthetic setup (vec_id % 100), so the

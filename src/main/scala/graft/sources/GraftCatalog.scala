@@ -176,7 +176,7 @@ class GraftCatalog extends CatalogPlugin with TableCatalog with ProcedureCatalog
         Seq(catalogName, newIdent.name()))
     val versions = Maintenance.manifestVersions(from)
     val external = versions.flatMap(v => Maintenance.manifestPaths(from, v))
-      .map(l => l.stripPrefix("dv:"))
+      .map(Maintenance.DvLine.path)
       .filterNot(p => p.startsWith(from + "/"))
     require(external.isEmpty,
       s"cannot rename a store whose manifests reference groups outside " +

@@ -69,12 +69,12 @@ private[sources] object GraftHistoryTable {
     val versions = Maintenance.manifestVersions(root).sorted
     versions.map { v =>
       val lines = Maintenance.manifestPaths(root, v)
-      val (dv, data) = lines.partition(_.startsWith("dv:"))
+      val (dv, data) = lines.partition(Maintenance.DvLine.is)
       val zoned = Maintenance.manifestZones(root, v).map(_._1).distinct.size
       val parent =
         if (versions.contains(v - 1)) Some(Maintenance.manifestPaths(root, v - 1))
         else None
-      val (pDv, pData) = parent.getOrElse(Seq.empty).partition(_.startsWith("dv:"))
+      val (pDv, pData) = parent.getOrElse(Seq.empty).partition(Maintenance.DvLine.is)
       val addedData = data.filterNot(pData.contains)
       val removedData = pData.filterNot(data.contains)
       val addedDv = dv.filterNot(pDv.contains)

@@ -92,7 +92,7 @@ private[sources] object GraftProcedures {
             StructField("version", IntegerType, nullable = false),
             StructField("n_groups", IntegerType, nullable = false))),
             Seq(v, Maintenance.manifestPaths(r, v)
-              .count(l => !l.startsWith("dv:"))))
+              .count(l => !Maintenance.DvLine.is(l))))
         }
       }
       case "binpack" => new Proc("binpack",
@@ -105,7 +105,7 @@ private[sources] object GraftProcedures {
             StructField("version", IntegerType, nullable = false),
             StructField("n_groups", IntegerType, nullable = false))),
             Seq(v, Maintenance.manifestPaths(r, v)
-              .count(l => !l.startsWith("dv:"))))
+              .count(l => !Maintenance.DvLine.is(l))))
         }
       }
       case "vacuum" => new Proc("vacuum",

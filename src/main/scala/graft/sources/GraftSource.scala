@@ -22,6 +22,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.Maintenance
+import graft.operators.Maintenance.DvLine
 import graft.operators.Maintenance.DvLine.fileKey
 
 /** `spark.read.format("graft")` — the DSv2 front door over the graft
@@ -181,7 +182,7 @@ private[graft] object GraftStore {
       .orElse(tOpt.map(Maintenance.resolveAsOf(root, _)))
       .getOrElse(Maintenance.currentSnapshotVersion(root))
     val (paths, stats) = Maintenance.manifestPathsAndZones(root, version)
-    val (dvLines, dataPaths) = paths.partition(Maintenance.DvLine.is)
+    val (dvLines, dataPaths) = paths.partition(DvLine.is)
     // the mapping of the NEAREST version <= the resolved one: mappings
     // are metadata commits; a data commit (DSv2 append, streaming sink)
     // between two mapping versions must keep serving the mapped schema,
@@ -199,7 +200,7 @@ private[graft] object GraftStore {
     val cryptoOpts = Maintenance.dataPlaneOptions(root)
     val physicalSchema = Maintenance.schemaAt(root, version).getOrElse(
       SparkSession.active.read.options(cryptoOpts).parquet(dataPaths: _*).schema)
-    Resolved(root, version, dataPaths, dvLines.map(_.stripPrefix("dv:")),
+    Resolved(root, version, dataPaths, dvLines.map(DvLine.path),
       mapping, groupZones, changeFeed,
       startingVersion.isDefined, vOpt.isDefined || tOpt.isDefined,
       startingVersion,
@@ -472,7 +473,7 @@ private[graft] object GraftStore {
     if (candidates.isEmpty) return
     val cond = physFilters.map(toColumn).reduceOption(_ && _).getOrElse(lit(true))
     val hit = spark.read.options(store.cryptoOpts).parquet(candidates: _*)
-      .withColumn("file_key", Maintenance.DvLine.fileKeyCol)
+      .withColumn("file_key", DvLine.fileKeyCol)
       .withColumn("row_index", col("_metadata.row_index"))
       .filter(cond)
       .select(col("file_key"), col("row_index"))
@@ -501,7 +502,7 @@ private[graft] object GraftStore {
     // conflicts a concurrent dv on the same groups (serializable
     // row-level writes). r15 ADVICE + verdict #1.
     Maintenance.commitGroups(store.root, cur, Seq.empty,
-      Seq(Maintenance.DvLine.render(dvDir, candidates)), Seq(dvDir))
+      Seq(DvLine.render(dvDir, candidates)), Seq(dvDir))
     ()
   }
 
@@ -986,14 +987,14 @@ private[sources] class GraftScan(store: GraftStore.Resolved,
           val prev = if (v <= 1) Seq.empty[String]
             else Maintenance.manifestPaths(store.root, v - 1)
           val curL = Maintenance.manifestPaths(store.root, v)
-          val (pDv, pData) = prev.partition(_.startsWith("dv:"))
-          val (cDv, cData) = curL.partition(_.startsWith("dv:"))
+          val (pDv, pData) = prev.partition(DvLine.is)
+          val (cDv, cData) = curL.partition(DvLine.is)
           val removed = pData.filterNot(cData.contains)
           val newData = cData.filterNot(pData.contains)
-          val newDv = cDv.filterNot(pDv.contains).map(_.stripPrefix("dv:"))
+          val newDv = cDv.filterNot(pDv.contains).map(DvLine.path)
           if (removed.nonEmpty) {
             // a proven-neutral compaction commit changes no rows: skip
-            val foldedDv = pDv.filterNot(cDv.contains).map(_.stripPrefix("dv:"))
+            val foldedDv = pDv.filterNot(cDv.contains).map(DvLine.path)
             require(provablyNeutralCompaction(removed, newData, foldedDv, newDv),
               s"change feed commit v$v removed data groups " +
                 s"(${removed.mkString(", ")}) and is not a provably " +
@@ -1004,9 +1005,9 @@ private[sources] class GraftScan(store: GraftStore.Resolved,
             // delete pre-images: keep-position reads of ONLY the
             // dv-referenced groups, listed at v (every referenced
             // group is live there — removals fail closed above)
-            val refGroups = dv.keySet.map(Maintenance.DvLine.keyGroup)
+            val refGroups = dv.keySet.map(DvLine.keyGroup)
             val touched = cData.filter(g => refGroups.contains(
-              Maintenance.DvLine.groupTail(g)))
+              DvLine.groupTail(g)))
             parts ++= listFiles(touched)
               .filter(f => dv.contains(fileKey(f.filePath.toString)))
               .map(f => (f, dv(fileKey(f.filePath.toString)), true, "delete", v.toLong))
@@ -1128,8 +1129,8 @@ private[sources] class GraftScan(store: GraftStore.Resolved,
         // inserts — the same partition shape as a batch snapshot read;
         // provenance = the anchor version itself
         val lines = Maintenance.manifestPaths(store.root, from)
-        val (sDv, sData) = lines.partition(_.startsWith("dv:"))
-        val dvIdx = dvKeyIndex(sDv.map(_.stripPrefix("dv:")))
+        val (sDv, sData) = lines.partition(DvLine.is)
+        val dvIdx = dvKeyIndex(sDv.map(DvLine.path))
         parts ++= listFiles(sData).map(f =>
           (f, dvIdx.getOrElse(fileKey(f.filePath.toString), Seq.empty),
             false, "insert", from.toLong))
@@ -1138,15 +1139,15 @@ private[sources] class GraftScan(store: GraftStore.Resolved,
         val prev = if (v <= 1) Seq.empty[String]
           else Maintenance.manifestPaths(store.root, v - 1)
         val curL = Maintenance.manifestPaths(store.root, v)
-        val (pDv, pData) = prev.partition(_.startsWith("dv:"))
-        val (cDv, cData) = curL.partition(_.startsWith("dv:"))
+        val (pDv, pData) = prev.partition(DvLine.is)
+        val (cDv, cData) = curL.partition(DvLine.is)
         val removed = pData.filterNot(cData.contains)
         val newData = cData.filterNot(pData.contains)
-        val newDv = cDv.filterNot(pDv.contains).map(_.stripPrefix("dv:"))
+        val newDv = cDv.filterNot(pDv.contains).map(DvLine.path)
         if (removed.nonEmpty) {
           // a proven-neutral compaction commit changes no rows: the
           // stream SKIPS it and keeps flowing past the maintenance
-          val foldedDv = pDv.filterNot(cDv.contains).map(_.stripPrefix("dv:"))
+          val foldedDv = pDv.filterNot(cDv.contains).map(DvLine.path)
           require(provablyNeutralCompaction(removed, newData, foldedDv, newDv),
             s"stream hit commit v$v which removed data groups " +
               s"(${removed.mkString(", ")}) and is not a provably " +

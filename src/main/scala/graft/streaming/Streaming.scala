@@ -1189,12 +1189,22 @@ object Streaming {
         .awaitTermination()
       val root = Staging.inPlace("ssink_", d, Seq("events"), "v1-parquet-sink",
         onHit = drain)(drain)
-      s.read.parquet(s"$root/data") // listed via the _spark_metadata log
-        .groupBy($"event_type")
-        .agg(count(lit(1)).as("n"), OracleMath.dsum($"value").as("sum_value"))
-        .orderBy($"event_type")
+      // listed via the _spark_metadata log
+      sinkSummary(s.read.parquet(s"$root/data"))
     }
-  private val fileSinkStreamSql =
+
+  /** The readout all three event sinks end in: per event_type, the row
+    * count and exact value sum of what the sink holds — a duplicated
+    * or lost batch moves it off [[sinkSummarySql]]. */
+  private def sinkSummary(landed: DataFrame): DataFrame = {
+    import landed.sparkSession.implicits._
+    landed.groupBy($"event_type")
+      .agg(count(lit(1)).as("n"), OracleMath.dsum($"value").as("sum_value"))
+      .orderBy($"event_type")
+  }
+  /** DuckDB twin of [[sinkSummary]]: exactly-once means the sink holds
+    * exactly `events`. */
+  private val sinkSummarySql =
     s"""SELECT event_type, COUNT(*) AS n, ${OracleMath.sqlSum("value")} AS sum_value
        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
@@ -1262,14 +1272,8 @@ object Streaming {
             .schema.fields.toSeq))
         drain(root)
       }
-      s.read.format("graft").load(root)
-        .groupBy($"event_type")
-        .agg(count(lit(1)).as("n"), OracleMath.dsum($"value").as("sum_value"))
-        .orderBy($"event_type")
+      sinkSummary(s.read.format("graft").load(root))
     }
-  private val graftSinkStreamSql =
-    s"""SELECT event_type, COUNT(*) AS n, ${OracleMath.sqlSum("value")} AS sum_value
-       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
   // -- stream_txn_sink: exactly-once into a partitioned, encrypted store ----
   // The r16 composition hole, closed (r16 verdict #2 / What's wrong
@@ -1311,14 +1315,8 @@ object Streaming {
         Maintenance.enableStoreEncryption(root, "txn-sink-mk", dataPlane = true)
         drain(root)
       }
-      s.read.format("graft").load(root)
-        .groupBy($"event_type")
-        .agg(count(lit(1)).as("n"), OracleMath.dsum($"value").as("sum_value"))
-        .orderBy($"event_type")
+      sinkSummary(s.read.format("graft").load(root))
     }
-  private val txnSinkStreamSql =
-    s"""SELECT event_type, COUNT(*) AS n, ${OracleMath.sqlSum("value")} AS sum_value
-       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
   // -- stream_graft_source: streaming OUT of the snapshot store -------------
   // The read twin of stream_graft_sink (r14 verdict "Next round" #2):
@@ -1353,15 +1351,15 @@ object Streaming {
         .trigger(Trigger.AvailableNow())
         .start()
         .awaitTermination()
-      // v3: seeded schema log (r18)
-      val root = Staging.inPlace("gsrc_", d, Seq("orders"), "v3-graft-source",
+      // v3: seeded schema log (r18); v4: read-set-annotated dv lines
+      val root = Staging.inPlace("gsrc_", d, Seq("orders"), "v4-graft-source",
           onHit = drain) { root =>
-        Maintenance.seedStore(root, (0 to 3).map(g => s"$data/base/g=$g"),
+        Maintenance.seedStore(root, Maintenance.morBaseGroups(data),
           schemaOf = Some(data))
         val v2 = Maintenance.commitSnapshot(root, 1, Seq.empty,
-          Seq(s"$data/newfile", s"dv:$data/dv"))
+          Seq(s"$data/newfile", Maintenance.morDvLine(data, "dv")))
         Maintenance.commitSnapshot(root, v2, Seq.empty,
-          Seq(s"$data/newfile2", s"dv:$data/dv2"))
+          Seq(s"$data/newfile2", Maintenance.morDvLine(data, "dv2")))
         drain(root)
       }
       s.read.parquet(s"$root/out")
@@ -1434,7 +1432,7 @@ object Streaming {
       // checkpoint twice, both no-ops
       val root = Staging.inPlace("gsnap_", d, Seq("orders"), "v2-initial-snapshot",
           onHit = r => { drain(r); drain(r) }) { root =>
-        Maintenance.seedStore(root, (0 to 3).map(g => s"$data/base/g=$g"),
+        Maintenance.seedStore(root, Maintenance.morBaseGroups(data),
           schemaOf = Some(data))
         val v2 = Maintenance.commitSnapshot(root, 1, Seq.empty,
           Seq(s"$data/newfile", Maintenance.morDvLine(data, "dv")))
@@ -1558,9 +1556,9 @@ object Streaming {
   val defs: Seq[QueryDef] = Seq(
     QueryDef("stream_approx_distinct", approxDistinctStream,
       Some(approxDistinctStreamSql)),
-    QueryDef("stream_file_sink", fileSinkStream, Some(fileSinkStreamSql)),
-    QueryDef("stream_graft_sink", graftSinkStream, Some(graftSinkStreamSql)),
-    QueryDef("stream_txn_sink", txnSinkStream, Some(txnSinkStreamSql)),
+    QueryDef("stream_file_sink", fileSinkStream, Some(sinkSummarySql)),
+    QueryDef("stream_graft_sink", graftSinkStream, Some(sinkSummarySql)),
+    QueryDef("stream_txn_sink", txnSinkStream, Some(sinkSummarySql)),
     QueryDef("stream_graft_source", graftSourceStream,
       Some(graftSourceStreamSql)),
     QueryDef("stream_initial_snapshot", initialSnapshotStream,

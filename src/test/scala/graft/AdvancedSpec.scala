@@ -94,6 +94,28 @@ class AdvancedSpec extends AnyFunSuite {
     }
   }
 
+  test("q_quantile_sketch fails closed outside its packed-key domain") {
+    import spark.implicits._
+    val Err = operators.Advanced.QdDomainError
+    def sketch(rows: Seq[(String, Double)]): Array[Row] = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_qd").toString
+      rows.toDF("l_returnflag", "l_extendedprice")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+      SparkEntry.queries("q_quantile_sketch")(spark, dir).collect()
+    }
+    def causes(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => String.valueOf(x.getMessage) +: causes(x.getCause))
+    val ok = (1 to 40).map(i => (if (i % 2 == 0) "A" else "N", i * 10.25))
+    val rows = sketch(ok)
+    assert(rows.map(_.getString(0)).toSet == Set("A", "N"), rows.mkString(", "))
+    // $671,088.64 = 2^26 cents, the first price outside the universe
+    for ((label, bad) <- Seq("two chars" -> ("AB", 5.0), "non-Latin-1" -> ("€", 5.0),
+        "null group" -> (null, 5.0), "price >= 2^26 cents" -> ("A", 671088.64))) {
+      val e = intercept[Exception](sketch(ok :+ bad))
+      assert(causes(e).exists(_.contains(Err)), s"$label: ${e.getMessage}")
+    }
+  }
+
   test("q_pivot_native row sums equal the group totals") {
     val pivoted = q("q_pivot_native").collect()
       .map(r => r.getString(0) -> (r.getDouble(1) + r.getDouble(2) + r.getDouble(3))).toMap

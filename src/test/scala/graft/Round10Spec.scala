@@ -243,6 +243,12 @@ class Round10Spec extends AnyFunSuite {
       s"render and parse zone lines through Maintenance.ZoneLine instead of: ${offenders.mkString("; ")}")
   }
 
+  test("dv lines live only in Maintenance.scala (one dv: renderer and parser)") {
+    val offenders = outside("Maintenance.scala", Seq("\"dv:", "s\"dv:"))
+    assert(offenders.isEmpty,
+      s"render and parse dv lines through Maintenance.DvLine instead of: ${offenders.mkString("; ")}")
+  }
+
   test("q_hybrid_rrf: exchange budget is fixed") {
     val df = SparkEntry.queries("q_hybrid_rrf")(spark, sf)
     df.count()

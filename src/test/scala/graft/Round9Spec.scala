@@ -31,6 +31,31 @@ class Round9Spec extends AnyFunSuite {
       assert(new java.io.File(s"$root/$part").exists(), s"missing index part $root/$part")
   }
 
+  test("ANN index: staged parts equal the trainer run inline on the same rows") {
+    // the bit-identical claim q_kmeans_clusters, q_embedding_outliers and
+    // the oracle (which replays training from scratch) rest on
+    import org.apache.spark.sql.DataFrame
+    def same(staged: DataFrame, inline: DataFrame, what: String): Unit = {
+      assert(staged.count() > 0, s"$what is empty")
+      assert(staged.exceptAll(inline).isEmpty && inline.exceptAll(staged).isEmpty,
+        s"$what: staged rows differ from inline training")
+    }
+    val emb = Tables.embeddings(spark, sf)
+    for ((root, rows) <- Seq(Similarity.annIndexRoot(spark, sf) -> emb,
+        Similarity.annIncRoot(spark, sf) -> Similarity.incBase(emb))) {
+      val (coarse, c1, codes) = Similarity.ivfpqTrain(rows)
+      for ((part, df) <- Seq("coarse" -> coarse, "pqcodebook" -> c1, "codes" -> codes))
+        same(spark.read.parquet(s"$root/$part"), df, s"$root/$part")
+    }
+    // delta ingest encodes exactly as training did: the stored base
+    // rows re-encoded against the stored codebooks give the stored codes
+    val inc = Similarity.annIncRoot(spark, sf)
+    same(spark.read.parquet(s"$inc/codes"),
+      Similarity.ivfpqEncode(Similarity.incBase(emb),
+        spark.read.parquet(s"$inc/coarse"), spark.read.parquet(s"$inc/pqcodebook")),
+      s"$inc/codes vs ivfpqEncode")
+  }
+
   // ---- hybrid dense leg plan shape ---------------------------------------
 
   test("q_hybrid_rrf: no BroadcastNestedLoopJoin touches the embeddings table") {
