@@ -3,15 +3,15 @@ package graft.crypto
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Column-level AES-GCM encrypt/decrypt as pure Catalyst expressions.
+/** Column-level AES-GCM encrypt/decrypt as Catalyst expressions.
   *
   * Re-expression of the reference's per-column encryption loop
   * (/root/reference/src/parquet_writer.cpp:137-170 and
-  * parquet_reader.cpp:96-150) on Spark's codegen'd `aes_encrypt` /
-  * `aes_decrypt` builtins: each value becomes `[12B IV][ct][16B tag]`
-  * — the same wire layout — but the work is a narrow per-row map that
-  * rides inside WholeStageCodegen, introduces no shuffle, and scales
-  * embarrassingly parallel to any number of executors.
+  * parquet_reader.cpp:96-150) on graft's own codegen'd [[GcmKernel]]:
+  * each value becomes `[12B IV][ct][16B tag]` — the same wire layout —
+  * but the work is a narrow per-row map that rides inside
+  * WholeStageCodegen with one `Cipher` per task, introduces no shuffle,
+  * and scales embarrassingly parallel to any number of executors.
   *
   * Keys enter the plan as [[KeyHandle]] nodes, never `lit(key)`: a key
   * literal would be rendered verbatim by `explain()`, the Spark UI SQL
@@ -27,14 +27,25 @@ object ColumnCrypto {
     */
   def encryptColumns(df: DataFrame, keys: Map[String, Array[Byte]]): DataFrame =
     keys.foldLeft(df) { case (acc, (name, key)) =>
-      acc.withColumn(name, aes_encrypt(col(name).cast("string"), keyCol(name, key), lit("GCM")))
+      acc.withColumn(name, GcmKernel.encrypt(col(name).cast("string"), keyCol(name, key)))
     }
+
+  /** Parquet writer options for the ciphertext columns `cols`: GCM
+    * output is unique and random, so a dictionary never pays, and
+    * building one until the writer gives up costs about as much as the
+    * encryption itself. */
+  def writerOptions(cols: Iterable[String]): Map[String, String] =
+    cols.map(c => s"parquet.enable.dictionary#$c" -> "false").toMap
+
+  /** Decrypt one BINARY ciphertext column under `name`'s key, to STRING. */
+  def decrypt(c: Column, name: String, key: Array[Byte]): Column =
+    GcmKernel.decrypt(c, keyCol(name, key)).cast("string")
 
   /** Decrypt BINARY ciphertext columns back to STRING (caller restores
     * the original type from the manifest). */
   def decryptColumns(df: DataFrame, keys: Map[String, Array[Byte]]): DataFrame =
     keys.foldLeft(df) { case (acc, (name, key)) =>
-      acc.withColumn(name, aes_decrypt(col(name), keyCol(name, key), lit("GCM")).cast("string"))
+      acc.withColumn(name, decrypt(col(name), name, key))
     }
 
   /** Decrypt that yields NULL (instead of failing the task) on a bad
@@ -42,7 +53,7 @@ object ColumnCrypto {
     * mode for exploratory reads. */
   def tryDecryptColumns(df: DataFrame, keys: Map[String, Array[Byte]]): DataFrame =
     keys.foldLeft(df) { case (acc, (name, key)) =>
-      acc.withColumn(name, try_aes_decrypt(col(name), keyCol(name, key), lit("GCM")).cast("string"))
+      acc.withColumn(name, GcmKernel.tryDecrypt(col(name), keyCol(name, key)).cast("string"))
     }
 
   // -- AAD row binding ------------------------------------------------------
@@ -58,20 +69,17 @@ object ColumnCrypto {
   /** Encrypt `c` with the per-row `aad` (e.g. the primary key) bound
     * into the GCM auth tag. */
   def encryptBound(c: Column, name: String, key: Array[Byte], aad: Column): Column =
-    aes_encrypt(c.cast("string").cast("binary"), keyCol(name, key),
-      lit("GCM"), lit("DEFAULT"), lit(Array.empty[Byte]), aad.cast("string"))
+    GcmKernel.encrypt(c.cast("string"), keyCol(name, key), Some(aad.cast("string")))
 
   /** Decrypt a row-bound ciphertext; fails the task if `aad` does not
     * match what the value was encrypted under. */
   def decryptBound(c: Column, name: String, key: Array[Byte], aad: Column): Column =
-    aes_decrypt(c, keyCol(name, key), lit("GCM"), lit("DEFAULT"),
-      aad.cast("string")).cast("string")
+    GcmKernel.decrypt(c, keyCol(name, key), Some(aad.cast("string"))).cast("string")
 
   /** NULL-on-mismatch variant — the audit-scan mode: NULLs mark rows
     * whose ciphertext was moved or tampered with. */
   def tryDecryptBound(c: Column, name: String, key: Array[Byte], aad: Column): Column =
-    try_aes_decrypt(c, keyCol(name, key), lit("GCM"), lit("DEFAULT"),
-      aad.cast("string")).cast("string")
+    GcmKernel.tryDecrypt(c, keyCol(name, key), Some(aad.cast("string"))).cast("string")
 }
 
 /** Column masking (reference README "Future Improvements" row —

@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
   * (/root/reference/src/parquet_writer.cpp:172-240: encrypted footer with
   * per-column key metadata + row count) Spark-first:
   *
-  *  - data path: configured columns are `aes_encrypt`-ed per row inside
-  *    the scan/write pipeline (codegen, no shuffle, no extra pass) and
-  *    stored as parquet BINARY; everything else stays native parquet,
+  *  - data path: configured columns are encrypted per row by
+  *    [[ColumnCrypto]] on the [[GcmKernel]] inside the scan/write
+  *    pipeline (codegen, one `Cipher` per task, no shuffle, no extra
+  *    pass) and stored as parquet BINARY; everything else stays native parquet,
   *    so pushdown/pruning on unencrypted columns is preserved;
   *  - metadata path: column→key-resolution metadata (mode, wrapped DEK,
   *    master key id, original type) goes into `_graft_manifest.enc`,
@@ -126,7 +127,8 @@ object EncryptedParquet {
     val obs = org.apache.spark.sql.Observation()
     val encrypted = ColumnCrypto.encryptColumns(df, keys)
       .observe(obs, count(lit(1)).as("n_rows"))
-    encrypted.write.mode("overwrite").parquet(dir)
+    encrypted.write.mode("overwrite").options(ColumnCrypto.writerOptions(keys.keys))
+      .parquet(dir)
     val rowCount = obs.get("n_rows").asInstanceOf[Long]
     val manifest = Manifest(rowCount, config.masterKeyId,
       resolved.map { case (p, rk) =>
@@ -150,10 +152,7 @@ object EncryptedParquet {
       byName.get(name).filter(_.mode != "plaintext") match {
         case Some(meta) if request.contains(name) =>
           val key = config.resolveKeyForRead(name, meta.mode, meta.wrappedDek, meta.masterKeyId)
-          // key rides in a KeyHandle (redacted in every plan rendering),
-          // never a Literal — see KeyHandle.scala
-          aes_decrypt(col(name), KeyHandle.column(s"column:$name", key), lit("GCM"))
-            .cast("string").cast(meta.origType).as(name)
+          ColumnCrypto.decrypt(col(name), name, key).cast(meta.origType).as(name)
         case Some(_) => lit(Placeholder).as(name)
         case None => col(name)
       }

@@ -49,7 +49,7 @@ final case class KeyHandle(label: String, bytes: Array[Byte]) extends LeafExpres
 }
 
 object KeyHandle {
-  /** Column wrapping a key for `aes_encrypt`/`aes_decrypt` call sites. */
+  /** Column wrapping a key for [[GcmKernel]] call sites. */
   def column(label: String, bytes: Array[Byte]): Column =
     graftshim.column(KeyHandle(label, bytes))
 }

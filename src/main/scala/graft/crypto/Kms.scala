@@ -3,43 +3,28 @@ package graft.crypto
 import java.nio.charset.StandardCharsets
 import java.security.{MessageDigest, SecureRandom}
 import java.util.Base64
-import javax.crypto.Cipher
-import javax.crypto.spec.{GCMParameterSpec, SecretKeySpec}
 
-/** Driver-side AES-GCM primitive used for key wrapping and manifest
-  * encryption. Layout matches the data-path ciphertexts produced by
-  * Spark's `aes_encrypt(..., 'GCM')`: `[12B IV][ciphertext][16B tag]`
-  * (the same layout the reference writer emits, see
-  * /root/reference/src/parquet_writer.cpp:137-170).
+/** Driver-side AES-GCM for key wrapping, manifests and store metadata
+  * text: the calling thread's [[GcmKernel]], so these blobs share the
+  * data path's wire layout and code. Failures keep the JDK's types
+  * (`AEADBadTagException` for a wrong key or tampered blob, a
+  * `GeneralSecurityException` in general), which the footer-tamper gate
+  * and the store's metadata reader catch.
   *
   * This runs only on the driver and only over key/metadata material —
   * O(columns) work, never O(rows) — so it adds nothing to the
   * distributed data path at 100 TB.
   */
 object AesGcm {
-  private val IvLen = 12
-  private val TagBits = 128
-  private val rng = new SecureRandom()
+  private val Label = "driver"
 
   def encrypt(key: Array[Byte], plaintext: Array[Byte],
-      aad: Array[Byte] = Array.empty): Array[Byte] = {
-    val iv = new Array[Byte](IvLen)
-    rng.nextBytes(iv)
-    val c = Cipher.getInstance("AES/GCM/NoPadding")
-    c.init(Cipher.ENCRYPT_MODE, new SecretKeySpec(key, "AES"), new GCMParameterSpec(TagBits, iv))
-    if (aad.nonEmpty) c.updateAAD(aad)
-    val ct = c.doFinal(plaintext)
-    iv ++ ct
-  }
+      aad: Array[Byte] = Array.empty): Array[Byte] =
+    GcmKernel.local.get().encrypt(Label, key, plaintext, aad)
 
   def decrypt(key: Array[Byte], blob: Array[Byte],
-      aad: Array[Byte] = Array.empty): Array[Byte] = {
-    val iv = blob.take(IvLen)
-    val c = Cipher.getInstance("AES/GCM/NoPadding")
-    c.init(Cipher.DECRYPT_MODE, new SecretKeySpec(key, "AES"), new GCMParameterSpec(TagBits, iv))
-    if (aad.nonEmpty) c.updateAAD(aad)
-    c.doFinal(blob.drop(IvLen))
-  }
+      aad: Array[Byte] = Array.empty): Array[Byte] =
+    GcmKernel.local.get().decrypt(Label, key, blob, aad)
 }
 
 /** Pluggable source of master-key bytes. Production deployments inject

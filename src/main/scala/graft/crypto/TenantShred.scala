@@ -28,7 +28,9 @@ import org.apache.spark.sql.functions._
   * no-keys-in-explain guarantee [[KeyHandle]] gives the per-column API.
   * Driver-side work is O(tenants) key generation/unwrap — keystore
   * metadata, same cost class as manifest handling; the per-row
-  * encrypt/decrypt is a codegen'd map with no extra shuffle.
+  * encrypt/decrypt is a codegen'd [[GcmKernel]] map with no extra
+  * shuffle (the kernel re-keys its one `Cipher` only when the row's
+  * DEK differs from the previous row's).
   */
 object TenantShred {
 
@@ -54,9 +56,10 @@ object TenantShred {
     df.withColumn("tenant_id", col(tenantCol).cast("long"))
       .join(broadcast(keyDf), "tenant_id")
       .withColumn(sensitive,
-        aes_encrypt(col(sensitive).cast("string"), $"dek", lit("GCM")))
+        GcmKernel.encrypt(col(sensitive).cast("string"), $"dek"))
       .drop("dek")
-      .write.mode("overwrite").parquet(s"$root/data")
+      .write.mode("overwrite").options(ColumnCrypto.writerOptions(Seq(sensitive)))
+      .parquet(s"$root/data")
   }
 
   /** GDPR forget: delete the tenant's wrapped DEK. Pure keystore
@@ -84,7 +87,7 @@ object TenantShred {
       .join(broadcast(keyDf), Seq("tenant_id"), "left")
       .withColumn(sensitive,
         when($"dek".isNotNull,
-          aes_decrypt(col(sensitive), $"dek", lit("GCM")).cast("string"))
+          GcmKernel.decrypt(col(sensitive), $"dek").cast("string"))
           .otherwise(lit(Masked)))
       .drop("dek")
   }

@@ -251,7 +251,7 @@ object CryptoQueries {
   // back decrypting against the same key column — lossless (the oracle
   // proves it on plaintext). The spec proves the attack this closes:
   // swapping two rows' ciphertexts fails authentication (NULL under
-  // try_aes_decrypt), where unbound encryption would happily decrypt
+  // the try variant), where unbound encryption would happily decrypt
   // the wrong person's value.
   private def aadBinding(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -363,7 +363,7 @@ object CryptoQueries {
   // -- crypto_nulls_roundtrip: sparse/null round trip, value-oracled --------
   // §2.1 row 11 driver-gated (reference main.cpp sparse-row scenarios:
   // missing values, empty strings): NULL every 5th name and EMPTY every
-  // 7th segment BEFORE encryption; aes_encrypt propagates NULL (no
+  // 7th segment BEFORE encryption; the GCM kernel propagates NULL (no
   // ciphertext is ever written for a missing value) and encrypts "" to
   // a real 28-byte [IV][tag] blob, and the read path must hand back
   // exactly the sparse plaintext — null/empty/distinct counts all

@@ -1377,6 +1377,17 @@ object Maintenance {
        |SELECT '3_attacks', 0, 0.0, true, true
        |ORDER BY stage""".stripMargin
 
+  /** Fail-closure probe of io_encrypted_data: reads EVERY column of
+    * store `root` at version `v` (xxhash64 over the full struct), so a
+    * flipped byte cannot hide in a pruned-away column's pages. The
+    * hashes are summed as decimal(38,0), which cannot overflow, so the
+    * probe throws only when a page fails to decrypt or authenticate. */
+  private[graft] def readEveryColumn(s: SparkSession, root: String, v: Int): Unit = {
+    s.read.format("graft").option("versionAsOf", v).load(root)
+      .agg(sum(xxhash64(struct(col("*"))).cast("decimal(38,0)"))).collect()
+    ()
+  }
+
   // -- io_encrypted_data: the encrypted DATA plane (r16) ---------------------
   // io_encrypted_manifest protects the CONTROL plane; this closes the
   // other half (r15 verdict "Next round" #6): a store enabled with
@@ -1416,7 +1427,9 @@ object Maintenance {
     }
     val hasDv = manifestPaths(root, 3).exists(DvLine.is)
     rotateStoreKek(root, "store-dk-2") // O(1); data files pin their key id
-    // fail-closure: flip one ciphertext byte in a scratch clone
+    // fail-closure: flip one ciphertext byte in a scratch clone. The
+    // clone leaves out the local file system's `.crc` sidecars, so the
+    // flip must be caught by GCM, not by a checksum
     val bad = Staging.scratch("io_enc_data_bad", d)
     graft.Staging.rmTree(new java.io.File(bad))
     def copyTree(src: java.io.File, dst: java.io.File): Unit = {
@@ -1424,22 +1437,31 @@ object Maintenance {
         dst.mkdirs()
         Option(src.listFiles()).toSeq.flatten.foreach(f =>
           copyTree(f, new java.io.File(dst, f.getName)))
-      } else java.nio.file.Files.copy(src.toPath, dst.toPath)
+      } else if (!src.getName.endsWith(".crc"))
+        java.nio.file.Files.copy(src.toPath, dst.toPath)
     }
     copyTree(new java.io.File(root), new java.io.File(bad))
+    // manifest lines hold absolute paths: point the clone's v2 at its
+    // own files, or the probe would read the live store's bytes
+    writeManifest(bad, 2, manifestRawLines(bad, 2).map(_.replace(s"$root/", s"$bad/")))
+    def probeFails(): Boolean =
+      try { readEveryColumn(s, bad, 2); false } catch { case _: Exception => true }
+    // the probe must pass on the intact clone, or its failure on the
+    // tampered one would prove nothing
+    val cleanReadOk = !probeFails()
     val victim = parquetFiles(new java.io.File(bad))
       .find(f => !f.getAbsolutePath.contains("/dv_")).get
+    // the first ciphertext byte of the file's first module (a page
+    // header of the first column chunk, which every full read decodes):
+    // past the 4-byte PARE magic, the module's 4-byte length and its
+    // 12-byte nonce. (The file's middle can land in a page index that
+    // a plain scan never opens.)
+    val at = 4 + 4 + 12
     val raf = new java.io.RandomAccessFile(victim, "rw")
-    try { raf.seek(victim.length / 2)
-      val b = raf.read(); raf.seek(victim.length / 2); raf.write(b ^ 0x01)
+    try { raf.seek(at)
+      val b = raf.read(); raf.seek(at); raf.write(b ^ 0x01)
     } finally raf.close()
-    // the probe reads EVERY column (xxhash64 over the full struct) so
-    // the flipped byte cannot hide in a pruned-away column's pages
-    val tamperFailed =
-      try {
-        s.read.format("graft").option("versionAsOf", 2).load(bad)
-          .agg(sum(xxhash64(struct(col("*"))))).collect(); false
-      } catch { case _: Throwable => true }
+    val tamperFailed = cleanReadOk && probeFails()
     def leg(stage: String, v: Int) =
       s.read.format("graft").option("versionAsOf", v).load(root)
         .agg(count(lit(1)).as("n_rows"), dsum($"o_totalprice").as("sum_price"))

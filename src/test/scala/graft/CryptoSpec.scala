@@ -1,6 +1,7 @@
 package graft
 
 import graft.crypto._
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -73,22 +74,60 @@ class CryptoSpec extends AnyFunSuite {
         .find(_.name == "c_mktsegment").flatMap(_.wrappedDek),
       Some("mk-noleak")).map(b => f"$b%02x").mkString
 
-    for (df <- Seq(enc, dec, sel)) {
-      val renderings = Seq(
-        df.queryExecution.explainString(ExplainMode.fromString("extended")),
-        df.queryExecution.explainString(ExplainMode.fromString("formatted")),
-        df.queryExecution.executedPlan.toString,
-        df.queryExecution.optimizedPlan.toString)
-      for (r <- renderings; leak <- Seq(keyUtf8, keyHex, kmsKeyHex)) {
+    // the row-bound (AAD) variants
+    import spark.implicits._
+    val key = keys("c_name")
+    val bound = cust.limit(5).select($"c_custkey",
+      ColumnCrypto.encryptBound($"c_name", "c_name", key, $"c_custkey").as("ct"))
+    val boundDec = bound.select(
+      ColumnCrypto.decryptBound($"ct", "c_name", key, $"c_custkey").as("v"),
+      ColumnCrypto.tryDecryptBound($"ct", "c_name", key, $"c_custkey").as("t"))
+
+    def renderings(qe: QueryExecution): Seq[String] = Seq(
+      qe.explainString(ExplainMode.fromString("extended")),
+      qe.explainString(ExplainMode.fromString("formatted")),
+      qe.executedPlan.toString,
+      qe.optimizedPlan.toString)
+    def assertNoLeak(qe: QueryExecution, leaks: Seq[String]): Unit =
+      for (r <- renderings(qe); leak <- leaks) {
         assert(!r.toLowerCase.contains(leak.toLowerCase),
           s"key material leaked into plan rendering:\n$r")
       }
+    for (df <- Seq(enc, dec, sel, bound, boundDec)) {
+      assertNoLeak(df.queryExecution, Seq(keyUtf8, keyHex, kmsKeyHex))
       // the redacted handle is what should appear instead
       assert(df.queryExecution.analyzed.toString.contains("graft_key("),
         "expected the KeyHandle label in the plan")
     }
     // and the data path still works end-to-end with redacted handles
     assert(sel.select("c_name").na.drop().count() == 5)
+    assert(boundDec.filter($"v" === $"t").count() == 5)
+
+    // TenantShred: per-tenant DEKs ride as a join column; neither the
+    // staging write nor the decrypting read renders them
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val root = java.nio.file.Files.createTempDirectory("graft_shred_noleak").toString
+    spark.listenerManager.register(listener)
+    try {
+      TenantShred.stage(spark, cust.limit(20), "c_nationkey", "c_name", root)
+      // the listener bus is async: wait for the encrypting data write
+      val deadline = System.currentTimeMillis() + 10000
+      def sawWrite = seen.toArray.exists(_.toString.contains("graft_gcm_encrypt"))
+      while (!sawWrite && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(sawWrite, "expected the staging write's plan")
+    } finally spark.listenerManager.unregister(listener)
+    val deks = spark.read.parquet(s"$root/keystore").as[(Long, String)].collect()
+      .map { case (_, w) => Kms.unwrapFromBase64(w, "mk-tenant-shred") }
+      .map(_.map(b => f"$b%02x").mkString).toSeq
+    assert(deks.nonEmpty)
+    val read = TenantShred.read(spark, root, "c_name")
+    for (qe <- seen.toArray(Array.empty[QueryExecution]) :+ read.queryExecution)
+      assertNoLeak(qe, deks)
+    assert(read.filter($"c_name" === TenantShred.Masked).count() == 0)
   }
 
   test("injectable master-key resolver: custom vault keys round-trip; demo keys don't open them") {
@@ -236,6 +275,21 @@ class CryptoSpec extends AnyFunSuite {
     assert(rows(0).getString(1) == "alice" && rows(0).getString(2) == "x" * 5000)
     assert(rows(1).isNullAt(1) && rows(1).getString(2) == "")
     assert(rows(2).isNullAt(1) && rows(2).isNullAt(2))
+  }
+
+  test("io_encrypted_data tamper probe: passes on the intact store, throws on a flipped byte") {
+    val out = SparkEntry.queries("io_encrypted_data")(spark, sf)
+      .filter(col("stage") === "3_attacks").select("fail_closed").collect()
+    assert(out.length == 1 && out(0).getBoolean(0), "io_encrypted_data must fail closed")
+    // the query leaves the intact store and its byte-flipped clone behind
+    operators.Maintenance.readEveryColumn(spark, Staging.scratch("io_enc_data", sf), 2)
+    val ex = intercept[Exception] {
+      operators.Maintenance.readEveryColumn(spark, Staging.scratch("io_enc_data_bad", sf), 2)
+    }
+    // caught by GCM authentication, not by a file-system checksum
+    val causes = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(_.isInstanceOf[javax.crypto.AEADBadTagException]),
+      s"expected a GCM tag failure, got: ${causes.mkString(" <- ")}")
   }
 
   test("modular encryption: file unreadable without the crypto factory") {

@@ -249,6 +249,13 @@ class Round10Spec extends AnyFunSuite {
       s"render and parse dv lines through Maintenance.DvLine instead of: ${offenders.mkString("; ")}")
   }
 
+  test("AES-GCM lives only in GcmKernel.scala (no Spark aes builtins, no other Cipher)") {
+    val offenders = outside("GcmKernel.scala",
+      Seq("aes_encrypt", "aes_decrypt", "try_aes_decrypt", "Cipher.getInstance"))
+    assert(offenders.isEmpty,
+      s"encrypt and decrypt through GcmKernel instead of: ${offenders.mkString("; ")}")
+  }
+
   test("q_hybrid_rrf: exchange budget is fixed") {
     val df = SparkEntry.queries("q_hybrid_rrf")(spark, sf)
     df.count()
