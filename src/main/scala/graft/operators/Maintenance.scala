@@ -452,6 +452,40 @@ object Maintenance {
     (pathsIn(lines), lines.flatMap(ZoneLine.parse))
   }
 
+  /** One version's manifest against its parent's (version - 1): the
+    * live data groups and normalized `dv:` lines, what the commit added
+    * and removed of each (in manifest order), and its zone stats.
+    * Without a parent manifest (v1, or a missing v - 1) everything live
+    * counts as added. */
+  private[graft] final case class ManifestDelta(version: Int,
+      data: Seq[String], dv: Seq[String],
+      addedData: Seq[String], removedData: Seq[String],
+      addedDv: Seq[String], removedDv: Seq[String],
+      zones: Seq[(String, String, String, String, Long)], hasParent: Boolean)
+
+  /** The deltas of ascending `versions`, the one walk that diffs
+    * manifests (DESCRIBE HISTORY, the batch change feed, the streaming
+    * source). Each manifest is read, and on an encrypted store
+    * decrypted, once: a walked version is the next one's parent. A
+    * version whose manifest is missing throws. */
+  private[graft] def manifestDeltas(root: String, versions: Seq[Int]): Iterator[ManifestDelta] = {
+    def parentOf(v: Int): Option[Seq[String]] =
+      if (v > 1 && new java.io.File(root, ManifestLog.file(v - 1)).exists())
+        Some(manifestPaths(root, v - 1))
+      else None
+    var prev: Option[(Int, Seq[String])] = None
+    versions.iterator.map { v =>
+      val (paths, zones) = manifestPathsAndZones(root, v)
+      val parent = prev.collect { case (p, ls) if p == v - 1 => ls }.orElse(parentOf(v))
+      prev = Some(v -> paths)
+      val (dv, data) = paths.partition(DvLine.is)
+      val (pDv, pData) = parent.getOrElse(Nil).partition(DvLine.is)
+      def minus(a: Seq[String], b: Seq[String]) = { val bs = b.toSet; a.filterNot(bs) }
+      ManifestDelta(v, data, dv, minus(data, pData), minus(pData, data),
+        minus(dv, pDv), minus(pDv, dv), zones, parent.isDefined)
+    }
+  }
+
   /** Latest idempotent-writer version recorded for `app` at snapshot
     * `version`, if any (the `txn:` registry, r16 verdict #2). */
   private[graft] def txnVersionAt(root: String, version: Int,
@@ -2640,9 +2674,9 @@ object Maintenance {
   private def qCdcDiff(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val root = snapshotRoot(s, d)
-    val (v1, v2) = (manifestPaths(root, 1).toSet, manifestPaths(root, 2).toSet)
-    val removed = (v1 -- v2).toSeq.sorted // file groups only in v1
-    val added = (v2 -- v1).toSeq.sorted   // their rewritten replacements
+    val v2 = manifestDeltas(root, Seq(2)).next()
+    val removed = v2.removedData.sorted // file groups only in v1
+    val added = v2.addedData.sorted     // their rewritten replacements
     val before = s.read.parquet(removed: _*)
       .select($"o_orderkey", $"o_totalprice".as("old_price"))
     val after = s.read.parquet(added: _*)

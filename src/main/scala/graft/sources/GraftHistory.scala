@@ -53,9 +53,10 @@ private[sources] object GraftHistoryTable {
       blindAppend: Boolean, addedGroups: Int, removedGroups: Int,
       dataGroups: Int, dvLines: Int, zonedGroups: Int)
 
-  /** The operation each commit performed, DERIVED from consecutive
-    * manifest diffs rather than writer annotations (r15 verdict "Next
-    * round" #7 asked for annotations; derivation is strictly stronger:
+  /** The operation each commit performed, DERIVED from its manifest
+    * delta ([[Maintenance.manifestDeltas]], one read per version)
+    * rather than writer annotations (r15 verdict "Next round" #7
+    * asked for annotations; derivation is strictly stronger:
     * it cannot drift from the manifest truth, needs no write-path
     * cooperation, and classifies every EXISTING store's history
     * retroactively). The classification mirrors the commit shapes the
@@ -66,37 +67,27 @@ private[sources] object GraftHistoryTable {
     * subset), metadata (nothing moved). */
   def rows(root: String): Seq[Row] = {
     val epochs: Map[Int, Long] = Maintenance.commitEpochs(root)
-    val versions = Maintenance.manifestVersions(root).sorted
-    versions.map { v =>
-      val lines = Maintenance.manifestPaths(root, v)
-      val (dv, data) = lines.partition(Maintenance.DvLine.is)
-      val zoned = Maintenance.manifestZones(root, v).map(_._1).distinct.size
-      val parent =
-        if (versions.contains(v - 1)) Some(Maintenance.manifestPaths(root, v - 1))
-        else None
-      val (pDv, pData) = parent.getOrElse(Seq.empty).partition(Maintenance.DvLine.is)
-      val addedData = data.filterNot(pData.contains)
-      val removedData = pData.filterNot(data.contains)
-      val addedDv = dv.filterNot(pDv.contains)
-      val removedDv = pDv.filterNot(dv.contains)
-      val op = parent match {
-        case None => "create"
-        case _ if addedData.isEmpty && removedData.isEmpty &&
-          addedDv.isEmpty && removedDv.isEmpty => "metadata"
-        case _ if addedDv.nonEmpty && addedData.nonEmpty => "merge"
-        case _ if addedDv.nonEmpty => "delete"
+    Maintenance.manifestDeltas(root, Maintenance.manifestVersions(root).sorted).map { d =>
+      val op = d match {
+        case _ if !d.hasParent => "create"
+        case _ if d.addedData.isEmpty && d.removedData.isEmpty &&
+          d.addedDv.isEmpty && d.removedDv.isEmpty => "metadata"
+        case _ if d.addedDv.nonEmpty && d.addedData.nonEmpty => "merge"
+        case _ if d.addedDv.nonEmpty => "delete"
         // full replacement is checked BEFORE the compact shape (r16
         // ADVICE): a truncating overwrite of a store that carried dv
         // lines removes every live line — dvs included — and would
-        // otherwise read as "compact"
-        case _ if removedData.nonEmpty && removedData.size == pData.size => "overwrite"
-        case _ if removedDv.nonEmpty && removedData.nonEmpty => "compact"
-        case _ if removedData.nonEmpty => "rewrite"
+        // otherwise read as "compact". Every parent group is gone
+        // exactly when no live group is an old one.
+        case _ if d.removedData.nonEmpty && d.addedData.size == d.data.size => "overwrite"
+        case _ if d.removedDv.nonEmpty && d.removedData.nonEmpty => "compact"
+        case _ if d.removedData.nonEmpty => "rewrite"
         case _ => "append"
       }
-      Row(v, epochs.get(v), op, op == "append",
-        addedData.size, removedData.size, data.size, dv.size, zoned)
-    }
+      Row(d.version, epochs.get(d.version), op, op == "append",
+        d.addedData.size, d.removedData.size, d.data.size, d.dv.size,
+        d.zones.map(_._1).distinct.size)
+    }.toSeq
   }
 }
 
