@@ -1,8 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, GlobFilter, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, graftshim}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DataType, DecimalType, StructType}
 
 /** One engine capability exposed through the driver contract.
   *
@@ -17,14 +23,95 @@ final case class QueryDef(
     fn: (SparkSession, String) => DataFrame,
     oracle: Option[String])
 
-/** Loaders for the driver-generated test tables (TESTDATA.md). */
+/** Loaders for the driver-generated test tables (TESTDATA.md), and
+  * [[Tables.parquet]], the binder every parquet read in the engine
+  * goes through: it takes the schema from the footer of the file
+  * Spark's inference would pick (the lexicographically first data file
+  * by full path, hidden names skipped) instead of running a Spark job
+  * for it. */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** The engine's one parquet reader: binds
+    * `spark.read.options(options).schema(s).parquet(paths*)` with `s`
+    * read on the driver from ONE footer, where a bare
+    * `spark.read.parquet` first runs a Spark job (a 1-task
+    * `parallelize(..).collect()`) just to learn the schema.
+    *
+    * File choice is Spark's own non-merging inference rule: the
+    * lexicographically first data file by full path among everything
+    * the read would scan, i.e. every root path (globs expanded) walked
+    * recursively after Spark's hidden-file filter (names starting with
+    * `.`, names starting with `_` that contain no `=`, names ending in
+    * `._COPYING_`), with a `pathGlobFilter` option applied to file
+    * names. Summary files (`_metadata`, `_common_metadata`) are not
+    * consulted: the engine never writes them. A streaming sink's dir is
+    * walked like any other, not through its `_spark_metadata` log: one
+    * sink writes one schema, so any of its files gives it.
+    *
+    * The footer opens on `newHadoopConfWithOptions(options)`, so a
+    * modular-encryption (PME) footer decrypts with the read's own
+    * options. Its schema converts as Spark converts it: the
+    * `org.apache.spark.sql.parquet.row.metadata` JSON when the file
+    * carries one, else [[ParquetToSparkSchemaConverter]] on the session
+    * conf (which is how `nanosAsLong` events come out as int64).
+    * Partition columns (`k=v` dirs) are still inferred by the bind.
+    * A missing path or a read with no data file fails with Spark's own
+    * errors (`PATH_NOT_FOUND`, `UNABLE_TO_INFER_SCHEMA`).
+    *
+    * `mergeSchema` reads keep Spark's merged inference: it reads every
+    * footer, which is not what this helper does. */
+  def parquet(spark: SparkSession, paths: Seq[String], options: Map[String, String]): DataFrame = {
+    require(!options.keys.exists(_.equalsIgnoreCase("mergeSchema")),
+      "mergeSchema reads need Spark's merged inference: use spark.read directly")
+    spark.read.options(options).schema(footerSchema(spark, paths, options)).parquet(paths: _*)
+  }
+
+  def parquet(spark: SparkSession, paths: String*): DataFrame =
+    parquet(spark, paths, Map.empty[String, String])
+
+  private def footerSchema(spark: SparkSession, paths: Seq[String],
+      options: Map[String, String]): StructType = {
+    val conf = spark.sessionState.newHadoopConfWithOptions(options)
+    val glob = options.collectFirst { case (k, v) if k.equalsIgnoreCase("pathGlobFilter") => new GlobFilter(v) }
+    def hidden(name: String): Boolean =
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") || name.endsWith("._COPYING_")
+    // Spark's listing: listStatus of a dir gives its children, of a file
+    // the file itself; both pass the name filter
+    def dataFiles(fs: FileSystem, p: Path): Seq[FileStatus] =
+      fs.listStatus(p).toSeq.filterNot(st => hidden(st.getPath.getName)).flatMap { st =>
+        if (st.isDirectory) dataFiles(fs, st.getPath)
+        else if (glob.forall(_.accept(st.getPath))) Seq(st)
+        else Nil
+      }
+    val files = paths.flatMap { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(conf)
+      Option(fs.globStatus(path)).filter(_.nonEmpty)
+        .getOrElse(throw graftshim.pathNotFound(fs.makeQualified(path).toString))
+        .toSeq.flatMap(root => dataFiles(fs, root.getPath))
+    }
+    val first = files.minByOption(_.getPath.toString)
+      .getOrElse(throw graftshim.unableToInferSchema("Parquet"))
+    val reader = openFooter(first, conf)
+    val meta = try reader.getFooter.getFileMetaData finally reader.close()
+    Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+      .collect { case st: StructType => st }
+      .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(meta.getSchema))
+  }
+
+  /** Open one parquet file's footer reader on `conf`. The options
+    * builder loads the conf's decryption factory, so PME footers (and
+    * encrypted column chunks) open with the read's own options. */
+  private[graft] def openFooter(file: FileStatus, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf),
+      HadoopReadOptions.builder(conf, file.getPath).build())
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")
@@ -134,19 +221,27 @@ object Staging {
   val Base = "/tmp/graft_q"
   /** Prefixes of the stage-once dirs; both entry points refuse any
     * other, so a new site cannot leak dirs [[vacuum]] never reaps.
+    * A kind or [[scratch]] name that no code writes any more moves to
+    * [[Retired]], so its old dirs are reaped too.
     * private[graft]: the crypto-parity spec walks the same list. */
   private[graft] val Kinds = Seq("ann_", "annb_", "annr_", "lex_", "index_", "mm_", "pairs_",
     "epairs_", "nbrs_", "ssink_", "rbdata_", "mordata_", "srestart_", "hyb_", "cpdata_",
     "pidata_", "occdata_", "bpe_", "gsink_", "cardstore_", "gsnap_", "gsrc_", "txnsink_",
     "zonestore_", "pestore_")
+  /** Prefixes of retired staging and scratch dirs: [[vacuum]] deletes
+    * every dir that starts with one. Nothing else without a source
+    * record is touched — [[Base]] is also the `graft` catalog's base. */
+  private[graft] val Retired = Seq("zonemap_", "partevo_")
   private val SourceFile = "staging_source.txt"
   private val FormatFile = "staging_format.txt"
   private val LockFile = ".staging.lock"
 
   /** Per-query scratch dir, keyed on the dataset's basename: rewritten
     * by every call, outside the stage-once lifecycle. */
-  def scratch(name: String, d: String): String =
+  def scratch(name: String, d: String): String = {
+    require(!Retired.exists(name.startsWith), s"scratch name '$name' is retired: vacuum reaps it")
     s"$Base/${name}_${new java.io.File(d).getName}"
+  }
 
   /** True iff `root` carries the format marker `fmt`. */
   def isCurrent(root: String, fmt: String): Boolean = {
@@ -264,8 +359,9 @@ object Staging {
   /** Delete staged dirs that can never be served again: their recorded
     * dataset no longer exists, or its current content fingerprint no
     * longer matches the one staged. Dirs without a source record (older
-    * layouts, foreign dirs, half-built in-place roots) are left alone.
-    * Also reaps crashed temp builds older than an hour. */
+    * layouts, foreign dirs, half-built in-place roots) are left alone,
+    * except [[Retired]] ones. Also reaps crashed temp builds older than
+    * an hour. */
   def vacuum(): Int = exclusive {
     val dirs = Option(new java.io.File(Base).listFiles()).getOrElse(Array.empty)
     var removed = 0
@@ -275,6 +371,8 @@ object Staging {
         if (System.currentTimeMillis - dir.lastModified > 3600L * 1000) {
           rmTree(dir); removed += 1
         }
+      } else if (Retired.exists(name.startsWith)) {
+        rmTree(dir); removed += 1
       } else if (Kinds.exists(name.startsWith)) {
         val src = new java.io.File(dir, SourceFile)
         if (src.exists()) {

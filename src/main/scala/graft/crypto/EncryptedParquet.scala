@@ -3,6 +3,7 @@ package graft.crypto
 import java.nio.charset.StandardCharsets
 import java.util.Base64
 
+import graft.Tables
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -144,9 +145,20 @@ object EncryptedParquet {
     * all other encrypted columns surface as `[ENCRYPTED]`.
     */
   def read(spark: SparkSession, dir: String, request: Seq[String],
-      config: CryptoConfig): DataFrame = {
+      config: CryptoConfig): DataFrame =
+    readWith(spark, dir, readManifest(spark, dir, config.masterKeyId, config.resolver),
+      request, config)
+
+  /** Decrypt every encrypted column (full round-trip read). */
+  def readAll(spark: SparkSession, dir: String, config: CryptoConfig): DataFrame = {
     val manifest = readManifest(spark, dir, config.masterKeyId, config.resolver)
-    val raw = spark.read.parquet(dir)
+    readWith(spark, dir, manifest, manifest.columns.map(_.name), config)
+  }
+
+  /** [[read]] over an already decrypted and parsed manifest. */
+  private def readWith(spark: SparkSession, dir: String, manifest: Manifest,
+      request: Seq[String], config: CryptoConfig): DataFrame = {
+    val raw = Tables.parquet(spark, dir)
     val byName = manifest.columns.map(c => c.name -> c).toMap
     val projected = raw.columns.toSeq.map { name =>
       byName.get(name).filter(_.mode != "plaintext") match {
@@ -158,12 +170,6 @@ object EncryptedParquet {
       }
     }
     raw.select(projected: _*)
-  }
-
-  /** Decrypt every encrypted column (full round-trip read). */
-  def readAll(spark: SparkSession, dir: String, config: CryptoConfig): DataFrame = {
-    val manifest = readManifest(spark, dir, config.masterKeyId, config.resolver)
-    read(spark, dir, manifest.columns.map(_.name), config)
   }
 
   /** Rotate the dataset's master key WITHOUT touching the data files —

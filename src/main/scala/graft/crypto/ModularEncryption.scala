@@ -66,8 +66,7 @@ object ModularEncryption {
     }.parquet(dir)
 
   def readEncrypted(spark: SparkSession, dir: String): DataFrame =
-    spark.read
-      .option("parquet.crypto.factory.class", FactoryClass)
-      .option("parquet.encryption.kms.client.class", classOf[GraftKmsClient].getName)
-      .parquet(dir)
+    graft.Tables.parquet(spark, Seq(dir), Map(
+      "parquet.crypto.factory.class" -> FactoryClass,
+      "parquet.encryption.kms.client.class" -> classOf[GraftKmsClient].getName))
 }

@@ -1,5 +1,6 @@
 package graft.crypto
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -66,7 +67,7 @@ object TenantShred {
     * arithmetic — no data file is read, written, or touched. */
   def shred(s: SparkSession, root: String, tenant: Long): Unit = {
     import s.implicits._
-    val kept = s.read.parquet(s"$root/keystore")
+    val kept = Tables.parquet(s, s"$root/keystore")
       .filter(col("tenant_id") =!= tenant)
       .as[(Long, String)].collect().toSeq // O(tenants); frees the source for overwrite
     kept.toDF("tenant_id", "wrapped_dek")
@@ -79,11 +80,11 @@ object TenantShred {
   def read(s: SparkSession, root: String, sensitive: String,
       resolver: MasterKeyResolver = DemoMasterKeyResolver): DataFrame = {
     import s.implicits._
-    val keyDf = s.read.parquet(s"$root/keystore")
+    val keyDf = Tables.parquet(s, s"$root/keystore")
       .as[(Long, String)].collect().toSeq
       .map { case (t, w) => (t, Kms.unwrapFromBase64(w, MasterId, resolver)) }
       .toDF("tenant_id", "dek") // O(tenants) driver-side unwrap
-    s.read.parquet(s"$root/data")
+    Tables.parquet(s, s"$root/data")
       .join(broadcast(keyDf), Seq("tenant_id"), "left")
       .withColumn(sensitive,
         when($"dek".isNotNull,

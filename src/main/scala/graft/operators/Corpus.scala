@@ -457,8 +457,8 @@ object Corpus {
   private def indexIncremental(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val root = indexRoot(s, d)
-    val p1 = s.read.parquet(s"$root/postings")
-    val df1 = s.read.parquet(s"$root/df")
+    val p1 = Tables.parquet(s, s"$root/postings")
+    val df1 = Tables.parquet(s, s"$root/df")
     val base = Tables.documents(s, d)
     // the CDC feed: deterministic churn so the oracle can replay it
     val deletes = base.filter($"doc_id" % ChurnMod === 3).select($"doc_id")
@@ -618,14 +618,14 @@ object Corpus {
     }
   }
 
-  /** Staged-model accessors: (merge table, final per-word segmentation).
-    * The final state doubles as the ENCODER's dictionary —
+  /** Staged-model accessors: the merge table, and the final per-word
+    * segmentation. The final state doubles as the ENCODER's dictionary —
     * `text_bpe_encode` joins it back onto the corpus. No training job
     * runs on a warm call. */
-  private def bpeCore(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val root = bpeModelRoot(s, d)
-    (s.read.parquet(s"$root/merges"), s.read.parquet(s"$root/state"))
-  }
+  private def bpeMerges(s: SparkSession, d: String): DataFrame =
+    Tables.parquet(s, s"${bpeModelRoot(s, d)}/merges")
+  private def bpeState(s: SparkSession, d: String): DataFrame =
+    Tables.parquet(s, s"${bpeModelRoot(s, d)}/state")
 
   /** The training loop proper — only [[bpeModelRoot]] calls it, once
     * per corpus fingerprint. */
@@ -671,7 +671,7 @@ object Corpus {
 
   private def bpeTrain(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    bpeCore(s, d)._1.orderBy($"merge_rank")
+    bpeMerges(s, d).orderBy($"merge_rank")
   }
 
   // -- text_bpe_encode: the trained tokenizer applied at corpus scale ------
@@ -685,7 +685,7 @@ object Corpus {
   // back to the character segmentation via a left join + coalesce.
   private def bpeEncode(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (_, state) = bpeCore(s, d)
+    val state = bpeState(s, d)
     val dict = state.select($"word", size($"syms").cast("long").as("n_sub"))
     Tables.documents(s, d)
       .select($"doc_id", explode(TextPrep.words($"text")).as("word"))
@@ -773,7 +773,7 @@ object Corpus {
   // are IEEE divisions of exact integer sums rounded at 6.
   private def bpeFertility(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (_, state) = bpeCore(s, d)
+    val state = bpeState(s, d)
     val dict = state.select($"word", size($"syms").cast("long").as("n_sub"))
     Tables.documents(s, d)
       .select($"source", explode(TextPrep.words($"text")).as("word"))

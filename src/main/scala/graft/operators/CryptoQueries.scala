@@ -22,7 +22,7 @@ object CryptoQueries {
     Tables.lineitem(s, d)
       .select($"l_orderkey", $"l_linenumber", $"l_extendedprice", $"l_returnflag")
       .write.mode("overwrite").parquet(out)
-    s.read.parquet(out)
+    Tables.parquet(s, out)
       .groupBy($"l_returnflag")
       .agg(count(lit(1)).as("n"), dsum($"l_extendedprice").as("sum_price"))
       .orderBy($"l_returnflag")
@@ -261,7 +261,7 @@ object CryptoQueries {
       .select($"c_custkey", $"c_nationkey",
         ColumnCrypto.encryptBound($"c_name", "c_name", key, $"c_custkey").as("name_ct"))
       .write.mode("overwrite").parquet(out)
-    s.read.parquet(out)
+    Tables.parquet(s, out)
       .select($"c_nationkey",
         ColumnCrypto.decryptBound($"name_ct", "c_name", key, $"c_custkey").as("c_name"))
       .groupBy($"c_nationkey")

@@ -610,7 +610,7 @@ object Dedup {
   /** The verified J ≥ 0.8 pair set served from the staged parquet —
     * what every graph/split consumer reads instead of re-running LSH. */
   private[graft] def verifiedPairs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${pairsRoot(s, d)}/pairs")
+    Tables.parquet(s, s"${pairsRoot(s, d)}/pairs")
 
   private def minhashLsh(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

@@ -45,7 +45,7 @@ object Maintenance {
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"), sum(dec).as("s"))
       .write.mode("overwrite").parquet(out) // the stored aggregate table
-    val stored = s.read.parquet(out)
+    val stored = Tables.parquet(s, out)
     val delta = ev.filter($"event_id" % 11 === 7)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"), sum(dec).as("s"))
@@ -94,7 +94,7 @@ object Maintenance {
       .agg(count(lit(1)).as("n"), sum($"cents").as("c"))
     leg(o.filter(!$"da"), l.filter(!$"db"))
       .write.mode("overwrite").parquet(out) // the stored join view
-    val stored = s.read.parquet(out)
+    val stored = Tables.parquet(s, out)
     stored
       .unionByName(leg(o.filter($"da"), l.filter(!$"db")))
       .unionByName(leg(o.filter(!$"da"), l.filter($"db")))
@@ -173,7 +173,7 @@ object Maintenance {
   // random row placement and destroy data-skipping value.
   def compact(s: SparkSession, inDir: String, outDir: String,
       files: Int, sortKey: String): Unit = {
-    val df = s.read.parquet(inDir)
+    val df = Tables.parquet(s, inDir)
     df.repartitionByRange(files, col(sortKey))
       .sortWithinPartitions(col(sortKey))
       .write.mode("overwrite").parquet(outDir)
@@ -205,7 +205,7 @@ object Maintenance {
   private def qCompaction(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val (_, compacted) = compactionDirs(s, d)
-    s.read.parquet(compacted)
+    Tables.parquet(s, compacted)
       .groupBy($"l_returnflag")
       .agg(count(lit(1)).as("n"), dsum($"l_extendedprice").as("sum_price"),
         countDistinct($"l_orderkey").as("n_orders"))
@@ -368,7 +368,7 @@ object Maintenance {
     * bit-identical to the footer-inference path it short-circuits. */
   private def recordFileSchema(s: SparkSession, dir: java.io.File, group: String): Unit =
     java.nio.file.Files.write(dir.toPath.resolve(StagedSchemaFile),
-      s.read.parquet(group).schema.json.getBytes("UTF-8"))
+      Tables.parquet(s, group).schema.json.getBytes("UTF-8"))
 
   /** The schema-log entry serving snapshot `version`, if any. A
     * malformed entry reads as None (fail open: footer inference). */
@@ -857,7 +857,7 @@ object Maintenance {
     val base = Tables.orders(s, d).withColumn("g", ($"o_orderkey" % 4).cast("int"))
     base.write.mode("overwrite").partitionBy("g").parquet(s"$root/base")
     // copy-on-write: only group 0 contains keys hit by the update
-    s.read.parquet(s"$root/base/g=0")
+    Tables.parquet(s, s"$root/base/g=0")
       .withColumn("o_totalprice",
         when($"o_orderkey" % 40 === 0, bumpedPrice($"o_totalprice"))
           .otherwise($"o_totalprice"))
@@ -870,7 +870,7 @@ object Maintenance {
   }
   /** Time-travel read: the snapshot a version's manifest pins. */
   def readSnapshot(s: SparkSession, root: String, version: Int): DataFrame =
-    s.read.parquet(manifestPaths(root, version): _*)
+    Tables.parquet(s, manifestPaths(root, version): _*)
 
   // -- optimistic-concurrency commits (r6) ---------------------------------
   // What makes the manifest store safe for CONCURRENT writers — the
@@ -1140,7 +1140,7 @@ object Maintenance {
     val crypto = dataPlaneOptions(root)
     val annotated = legacy.map { l =>
       val sc = DvLine.sidecar(l)
-      val tails = s.read.options(crypto).parquet(sc)
+      val tails = Tables.parquet(s, Seq(sc), crypto)
         .select($"file_key").distinct().collect().map(_.getString(0))
         .map(DvLine.keyGroup).toSet
       val unknown = tails.filterNot(byTail.contains)
@@ -1175,7 +1175,7 @@ object Maintenance {
       Tables.orders(s, d).withColumn("g", ($"o_orderkey" % 4).cast("int"))
         .write.mode("overwrite").partitionBy("g").parquet(s"$tmpDir/base")
       def rewrite(g: Int, mod: Int, out: String): Unit =
-        s.read.parquet(s"$tmpDir/base/g=$g")
+        Tables.parquet(s, s"$tmpDir/base/g=$g")
           .withColumn("o_totalprice",
             when($"o_orderkey" % 40 === mod, bumpedPrice($"o_totalprice"))
               .otherwise($"o_totalprice"))
@@ -1591,7 +1591,7 @@ object Maintenance {
         math.ceil(gs.map(rowsOf).sum.toDouble / smallRows).toInt)
       removed ++= gs
       added ++= writeGroups(root,
-        s.read.options(crypto).parquet(gs: _*).coalesce(nFiles), dst)
+        Tables.parquet(s, gs, crypto).coalesce(nFiles), dst)
     }
     commitGroups(root, cur, removed.result(), added.result(), Seq(out))
   }
@@ -1693,7 +1693,7 @@ object Maintenance {
     // keys — O(files with deletes), never O(positions) — with the same
     // path-tail identity readSnapshotMoR uses
     val crypto = dataPlaneOptions(root)
-    val refKeys = s.read.options(crypto).parquet(dvPaths: _*)
+    val refKeys = Tables.parquet(s, dvPaths, crypto)
       .select($"file_key").distinct().collect().map(_.getString(0))
       .map(DvLine.keyGroup).toSet
     // compared in the file keys' escaped rendering, or a dv on a group
@@ -1706,12 +1706,12 @@ object Maintenance {
     val touchedTails = touched.map(DvLine.groupTail).toSet
     require(refKeys.subsetOf(touchedTails),
       s"dv positions reference groups not in the manifest: ${refKeys -- touchedTails}")
-    val dv = s.read.options(crypto).parquet(dvPaths: _*)
+    val dv = Tables.parquet(s, dvPaths, crypto)
     // the anti-join is deliberately UNHINTED: the DV side of a large
     // accumulated pile can be billions of positions — broadcasting it
     // is the 8-GB-driver-ceiling shape (r15 verdict #2). Spark/AQE
     // picks broadcast when the pile is actually small.
-    val rewritten = s.read.options(crypto).parquet(touched: _*)
+    val rewritten = Tables.parquet(s, touched, crypto)
       .withColumn("file_key", DvLine.fileKeyCol)
       .withColumn("row_index", col("_metadata.row_index"))
       .join(dv.select($"file_key", $"row_index"),
@@ -2677,9 +2677,9 @@ object Maintenance {
     val v2 = manifestDeltas(root, Seq(2)).next()
     val removed = v2.removedData.sorted // file groups only in v1
     val added = v2.addedData.sorted     // their rewritten replacements
-    val before = s.read.parquet(removed: _*)
+    val before = Tables.parquet(s, removed: _*)
       .select($"o_orderkey", $"o_totalprice".as("old_price"))
-    val after = s.read.parquet(added: _*)
+    val after = Tables.parquet(s, added: _*)
       .select($"o_orderkey", $"o_totalprice".as("new_price"))
     before.join(after, Seq("o_orderkey"), "full_outer")
       .withColumn("op",
@@ -2790,7 +2790,7 @@ object Maintenance {
       writeManifest(root, 1, groups ++ stats.zip(groups).map { case (r, g) =>
         ZoneLine.render(g, "o_orderdate", r.getString(1), r.getString(2), r.getLong(3)) })
       // the groups' file schema, so a resolve infers no footer
-      writeSchemaLog(root, 1, s.read.parquet(groups.head).schema)
+      writeSchemaLog(root, 1, Tables.parquet(s, groups.head).schema)
     }
 
   private val ZoneLo = "1995-03-01"
@@ -2818,7 +2818,7 @@ object Maintenance {
     val store = graft.sources.GraftStore.at(zonemapRoot(s, d))
     val (paths, _) = graft.sources.GraftStore.zonePrune(store,
       dayWindow(store, "o_orderdate", ZoneLo, ZoneHi))
-    s.read.parquet(paths: _*)
+    Tables.parquet(s, paths: _*)
       .filter(year($"o_orderdate") === 1995 &&
         month($"o_orderdate").between(3, 9))
       .agg(lit(paths.length.toLong).as("n_groups_read"),
@@ -2877,6 +2877,7 @@ object Maintenance {
         when($"o_totalprice" > 200000.0, lit("high")).otherwise(lit("normal"))
           .as("o_priority"))
       .write.mode("overwrite").parquet(s"$out/epoch=2")
+    // the one read that keeps Spark's inference: merging reads every footer
     s.read.option("mergeSchema", "true").parquet(out)
       .groupBy(coalesce($"o_priority", lit("legacy")).as("priority"))
       .agg(count(lit(1)).as("n"), dsum($"o_totalprice").as("sum_price"))
@@ -2913,7 +2914,7 @@ object Maintenance {
       version: Int): DataFrame = {
     val mapping = mappingAt(root, version).getOrElse(throw new IllegalArgumentException(
       s"$root has no column mapping at or below v$version"))
-    s.read.parquet((0 to 3).map(g => s"$data/base/g=$g"): _*)
+    Tables.parquet(s, (0 to 3).map(g => s"$data/base/g=$g"): _*)
       .select(mapping.map { case (lg, ph) => col(ph).as(lg) }: _*)
   }
 
@@ -2988,7 +2989,7 @@ object Maintenance {
       .repartition(4)
       .write.mode("overwrite").parquet(s"$root/base")
     // the "DELETE WHERE": scan base, record positions only
-    s.read.parquet(s"$root/base")
+    Tables.parquet(s, s"$root/base")
       .filter(expr(DvDeletePred))
       .select(col("_metadata.file_path").as("file_path"),
         col("_metadata.row_index").as("row_index"))
@@ -2999,10 +3000,10 @@ object Maintenance {
 
   /** MoR read: base minus DV positions (broadcast anti-join). */
   def readWithDv(s: SparkSession, root: String): DataFrame = {
-    val base = s.read.parquet(s"$root/base")
+    val base = Tables.parquet(s, s"$root/base")
       .withColumn("file_path", col("_metadata.file_path"))
       .withColumn("row_index", col("_metadata.row_index"))
-    base.join(broadcast(s.read.parquet(s"$root/dv")),
+    base.join(broadcast(Tables.parquet(s, s"$root/dv")),
         Seq("file_path", "row_index"), "left_anti")
       .drop("file_path", "row_index")
   }
@@ -3071,7 +3072,7 @@ object Maintenance {
       // hits — ONE metadata-projected scan of the base, no data rewrite.
       // The file key stays valid across Staging.publish's directory move
       def writeDv(hit: org.apache.spark.sql.Column, out: String): Unit =
-        s.read.parquet((0 to 3).map(g => s"$tmpDir/base/g=$g"): _*)
+        Tables.parquet(s, (0 to 3).map(g => s"$tmpDir/base/g=$g"): _*)
           .filter(hit)
           .select(DvLine.fileKeyCol.as("file_key"),
             col("_metadata.row_index").as("row_index"))
@@ -3111,10 +3112,10 @@ object Maintenance {
   def readSnapshotMoR(s: SparkSession, root: String, version: Int): DataFrame = {
     val (dvLines, dataPaths) = manifestPaths(root, version).partition(DvLine.is)
     val crypto = dataPlaneOptions(root)
-    val base = s.read.options(crypto).parquet(dataPaths: _*)
+    val base = Tables.parquet(s, dataPaths, crypto)
     if (dvLines.isEmpty) base
     else {
-      val dv = s.read.options(crypto).parquet(dvLines.map(DvLine.path): _*)
+      val dv = Tables.parquet(s, dvLines.map(DvLine.path), crypto)
       base
         .withColumn("file_key", DvLine.fileKeyCol)
         .withColumn("row_index", col("_metadata.row_index"))
@@ -3365,7 +3366,7 @@ object Maintenance {
 
   private def qDynamicOverwrite(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(dynamicOverwriteRoot(s, d))
+    Tables.parquet(s, dynamicOverwriteRoot(s, d))
       .groupBy($"o_orderpriority")
       .agg(count(lit(1)).as("n"), dsum($"o_totalprice").as("sum_price"))
       .orderBy($"o_orderpriority")
@@ -3402,7 +3403,7 @@ object Maintenance {
       t.write.partitionBy("g").parquet(s"$tmpDir/base")
       // churn: copy-on-write rewrite of g=0, the only group whose keys
       // the update predicate hits (% 20 == 0 ⇒ even ⇒ g = 0)
-      s.read.parquet(s"$tmpDir/base/g=0")
+      Tables.parquet(s, s"$tmpDir/base/g=0")
         .withColumn("o_totalprice",
           when($"o_orderkey" % 20 === 0, bumpedPrice($"o_totalprice"))
             .otherwise($"o_totalprice"))
@@ -3497,7 +3498,7 @@ object Maintenance {
     // touching main's files — branching is a pointer write, zero data IO
     writeBranch(root, "wap", manifestPaths(root, cur) :+ s"$data/wap_batch")
     // audit runs on the BRANCH view; the constraint must hold there
-    val branchView = s.read.parquet(branchPaths(root, "wap"): _*)
+    val branchView = Tables.parquet(s, branchPaths(root, "wap"): _*)
     val bad = branchView.filter($"o_totalprice" <= 0.0).count()
     val published = if (bad == 0) publishBranch(root, "wap", cur) else -1
     Seq(("1_main_before", readSnapshot(s, root, cur)),
@@ -3579,7 +3580,7 @@ object Maintenance {
       i < 0 || org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .unescapePathName(p.substring(i + 4)) == PeWanted
     }
-    s.read.parquet(selected: _*)
+    Tables.parquet(s, selected: _*)
       .filter($"o_orderpriority" === PeWanted)
       .agg(count(lit(1)).as("n_rows"), dsum($"o_totalprice").as("sum_price"))
       .select(lit(paths.size.toLong).as("n_groups_total"),
@@ -3623,7 +3624,7 @@ object Maintenance {
     // diverge the clone: copy-on-write the one group the update hits,
     // committed on the CLONE's OCC chain — the source never sees it
     val g0 = manifestPaths(dst, 1).find(_.contains("rewrite_g0")).get
-    s.read.parquet(g0)
+    Tables.parquet(s, g0)
       .withColumn("o_totalprice",
         when($"o_orderkey" % 80 === 0, bumpedPrice($"o_totalprice"))
           .otherwise($"o_totalprice"))

@@ -372,7 +372,7 @@ object Multimodal {
     // scale you would lower spark.sql.files.maxPartitionBytes on the
     // scan instead — re-splitting at the source beats shuffling payload
     // bytes once the payload column dominates the row
-    s.read.parquet(s"${mediaRoot(s, d)}/media").as[MediaRow]
+    Tables.parquet(s, s"${mediaRoot(s, d)}/media").as[MediaRow]
       .repartition(s.sparkContext.defaultParallelism)
   }
 

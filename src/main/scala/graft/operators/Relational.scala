@@ -992,7 +992,7 @@ object Relational {
       nbrStageRuns.incrementAndGet()
       buildNeighbors(oiRaw).write.mode("overwrite").parquet(s"$tmp/nbrs")
     }
-    s.read.parquet(s"$root/nbrs")
+    Tables.parquet(s, s"$root/nbrs")
   }
 
   /** The neighbor-list BUILD (queries read [[stagedNeighbors]]). */

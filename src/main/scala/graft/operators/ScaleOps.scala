@@ -29,7 +29,7 @@ object ScaleOps {
   private def partitionPruning(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val out = partitionedOrders(s, d)
-    s.read.parquet(out)
+    Tables.parquet(s, out)
       .filter($"o_orderpriority" === "1-URGENT")
       .agg(count(lit(1)).as("n"), dsum($"o_totalprice").as("sum_price"))
   }
@@ -60,8 +60,8 @@ object ScaleOps {
   /** The partitioned-fact ⋈ filtered-dim join alone (for PlanSpec). */
   def dppJoinOnly(s: SparkSession, fact: String, dim: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(fact)
-      .join(s.read.parquet(dim).filter($"urgency" <= 2), "o_orderpriority")
+    Tables.parquet(s, fact)
+      .join(Tables.parquet(s, dim).filter($"urgency" <= 2), "o_orderpriority")
   }
 
   private def dppJoin(s: SparkSession, d: String): DataFrame = {
@@ -114,7 +114,7 @@ object ScaleOps {
 
   private def parquetBloom(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(bloomTable(s, d))
+    Tables.parquet(s, bloomTable(s, d))
       .filter($"l_orderkey" === 40)
       .agg(count(lit(1)).as("n"), dsum($"l_extendedprice").as("sum_price"))
   }
@@ -161,7 +161,7 @@ object ScaleOps {
 
   private def pageIndex(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"${pageIndexTable(s, d)}/data")
+    Tables.parquet(s, s"${pageIndexTable(s, d)}/data")
       .filter($"l_orderkey".between(1000L, 1200L))
       .groupBy($"l_returnflag")
       .agg(count(lit(1)).as("n"), dsum($"l_extendedprice").as("sum_price"))
@@ -194,7 +194,7 @@ object ScaleOps {
   private def zstdRoundtrip(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val (zstd, _) = zstdDirs(s, d)
-    s.read.parquet(zstd)
+    Tables.parquet(s, zstd)
       .groupBy($"l_returnflag")
       .agg(count(lit(1)).as("n"), dsum($"l_extendedprice").as("sum_price"),
         max($"l_shipdate").as("max_ship"))
@@ -399,7 +399,7 @@ object ScaleOps {
     import s.implicits._
     val zord = zorderDir(s, d)
     val (sMax, pMax) = zorderBox(s, d)
-    s.read.parquet(zord)
+    Tables.parquet(s, zord)
       .filter($"l_suppkey" <= sMax && $"l_partkey" <= pMax)
       .agg(count(lit(1)).as("n"), dsum($"l_extendedprice").as("sum_price"),
         dsum($"l_quantity").as("sum_qty"))
@@ -694,11 +694,11 @@ object ScaleOps {
     import s.implicits._
     val root = dailySketchTable(s, d)
     // lossless merge: weekly registers = max over the daily shards
-    val weekRegs = s.read.parquet(s"$root/registers")
+    val weekRegs = Tables.parquet(s, s"$root/registers")
       .groupBy(date_trunc("week", $"day").as("week"), $"bucket")
       .agg(max($"m").as("m"))
     val est = DetHll.estimate(weekRegs, Seq("week"), "approx_users")
-    val wk = s.read.parquet(s"$root/days")
+    val wk = Tables.parquet(s, s"$root/days")
       .groupBy(date_trunc("week", $"day").as("week"))
       .agg(count(lit(1)).as("n_days"), sum($"n_events").as("n_events"))
     wk.join(est, "week")

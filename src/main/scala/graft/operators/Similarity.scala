@@ -345,7 +345,7 @@ object Similarity {
 
   /** The verified cos ≥ 0.4 pair set served from the staged parquet. */
   private[graft] def verifiedEmbPairs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${embPairsRoot(s, d)}/pairs")
+    Tables.parquet(s, s"${embPairsRoot(s, d)}/pairs")
 
   private def embeddingDedup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -754,8 +754,8 @@ object Similarity {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val root = annRawRoot(s, d)
-    val c1 = s.read.parquet(s"$root/pqcodebook")
-    val codes = s.read.parquet(s"$root/codes")
+    val c1 = Tables.parquet(s, s"$root/pqcodebook")
+    val codes = Tables.parquet(s, s"$root/codes")
     // ADC via DISTANCE TABLES: l2 computed once per (query, subspace,
     // centroid) — queries × M × K rows — packed per query as tab[m][j]
     // and broadcast. The exhaustive scan is then ONE row per
@@ -938,9 +938,9 @@ object Similarity {
       queryMod: Int): DataFrame = {
     import s.implicits._
     val root = annIndexRoot(s, d)
-    val coarse = s.read.parquet(s"$root/coarse")
-    val c1 = s.read.parquet(s"$root/pqcodebook")
-    val codes = s.read.parquet(s"$root/codes")
+    val coarse = Tables.parquet(s, s"$root/coarse")
+    val c1 = Tables.parquet(s, s"$root/pqcodebook")
+    val codes = Tables.parquet(s, s"$root/codes")
     val emb = Tables.embeddings(s, d)
     val qsubs = pqSubsM(emb.filter($"vec_id" % queryMod === 0), 1, Dims)
     val probed = ivfpqProbeCells(qsubs, coarse)
@@ -1081,8 +1081,8 @@ object Similarity {
     // why the oracle can keep replaying training from scratch); no
     // training job runs on the query path
     val root = annIndexRoot(s, d)
-    val coarse = s.read.parquet(s"$root/coarse")
-    val cells = s.read.parquet(s"$root/codes").select($"vec_id", $"cell_id")
+    val coarse = Tables.parquet(s, s"$root/coarse")
+    val cells = Tables.parquet(s, s"$root/codes").select($"vec_id", $"cell_id")
     val csubs = pqSubsM(Tables.embeddings(s, d), 1, Dims)
     val cc = coarse.select($"cell_id", $"ce".as("cce"))
     cells
@@ -1262,8 +1262,8 @@ object Similarity {
     // stats aggregate and the final outlier join); without it the whole
     // assignment pipeline executed twice per call.
     val root = annIndexRoot(s, d)
-    val coarse = s.read.parquet(s"$root/coarse")
-    val cells = s.read.parquet(s"$root/codes").select($"vec_id", $"cell_id")
+    val coarse = Tables.parquet(s, s"$root/coarse")
+    val cells = Tables.parquet(s, s"$root/codes").select($"vec_id", $"cell_id")
     val csubs = pqSubsM(Tables.embeddings(s, d), 1, Dims)
     val cc = coarse.select($"cell_id", $"ce".as("cce"))
     val d2s = cells
@@ -1349,14 +1349,14 @@ object Similarity {
   private def annIncremental(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val root = annIncRoot(s, d)
-    val coarse = s.read.parquet(s"$root/coarse")
-    val c1 = s.read.parquet(s"$root/pqcodebook")
+    val coarse = Tables.parquet(s, s"$root/coarse")
+    val c1 = Tables.parquet(s, s"$root/pqcodebook")
     val emb = Tables.embeddings(s, d)
     // the arriving batch: encoded against the STORED codebooks — cell
     // assignment + residual codes are per-row map work, O(batch), no
     // training job — and unioned with the stored base code rows
     val delta = emb.filter($"vec_id" % IncMod === 3)
-    val codes = s.read.parquet(s"$root/codes")
+    val codes = Tables.parquet(s, s"$root/codes")
       .unionByName(ivfpqEncode(delta, coarse, c1))
     val probed = ivfpqProbeCells(
       pqSubsM(emb.filter($"vec_id" % 50 === 0), 1, Dims), coarse)
@@ -1697,7 +1697,7 @@ object Similarity {
     val (root, tfT, dfT) = lexIndexRoot(s, d)
     val tf = s.table(tfT)     // (tok, doc_id, tf, dl), bucketed by tok
     val dfa = s.table(dfT)    // (tok, df), bucketed by tok
-    val stats = s.read.parquet(s"$root/stats")
+    val stats = Tables.parquet(s, s"$root/stats")
     // more-like-this queries keep only the QTerms most DISTINCTIVE
     // terms of the query doc (lowest corpus df, tie on token) — the
     // standard bound that keeps the scoring join O(queries × docs ×
@@ -1945,7 +1945,7 @@ object Similarity {
     // the candidate list (queries × HybridTopK rows — tiny) is read
     // from the staged artifact; the hybrid pipeline runs only on a
     // staging miss, never on the warm path
-    val fused = s.read.parquet(s"${hybridFusedRoot(s, d)}/fused")
+    val fused = Tables.parquet(s, s"${hybridFusedRoot(s, d)}/fused")
       .select($"query_id", $"doc_id", $"rank".as("rrf_rank"))
     val (_, _, dfTname) = lexIndexRoot(s, d)
     val dfa = s.table(dfTname) // (tok, df), staged + bucketed

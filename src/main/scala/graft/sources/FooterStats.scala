@@ -4,8 +4,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.types._
@@ -142,20 +140,6 @@ private[graft] object ZoneOrder {
 private[graft] object FooterStats {
   private val MaxStringStat = 256 // longer bounds: skip, not truncate
 
-  /** Open a footer reader honoring any configured parquet decryption
-    * factory — encrypted-data stores (r16) carry PME footers, and the
-    * bare `open(InputFile)` overload never loads the factory. */
-  private def openReader(st: org.apache.hadoop.fs.FileStatus,
-      conf: Configuration): ParquetFileReader = {
-    val builder = org.apache.parquet.HadoopReadOptions.builder(conf, st.getPath)
-    val fact = org.apache.parquet.crypto.DecryptionPropertiesFactory.loadFactory(conf)
-    if (fact != null) {
-      val props = fact.getFileDecryptionProperties(conf, st.getPath)
-      if (props != null) builder.withDecryption(props)
-    }
-    ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf), builder.build())
-  }
-
   /** (total rows, column -> (lo, hi) rendered for `zone:` lines) over
     * every `*.parquet` under `dir`. */
   def harvest(dir: String, schema: StructType, conf: Configuration)
@@ -169,7 +153,7 @@ private[graft] object FooterStats {
     val acc = scala.collection.mutable.Map.empty[String, Option[(String, String)]]
     val types = schema.fields.map(f => f.name -> f.dataType).toMap
     for (st <- files) {
-      val reader = openReader(st, conf)
+      val reader = graft.Tables.openFooter(st, conf)
       try {
         val footer = reader.getFooter
         for (block <- footer.getBlocks.asScala) {
@@ -221,7 +205,7 @@ private[graft] object FooterStats {
       val fs = p.getFileSystem(conf)
       for (st <- fs.listStatus(p)
           if st.isFile && st.getPath.getName.endsWith(".parquet")) {
-        val reader = openReader(st, conf)
+        val reader = graft.Tables.openFooter(st, conf)
         try rows += reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
         finally reader.close()
       }

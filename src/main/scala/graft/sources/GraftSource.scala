@@ -2,6 +2,7 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
+import graft.Tables
 import org.apache.hadoop.fs.Path
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
@@ -199,7 +200,7 @@ private[graft] object GraftStore {
     // the data schema even for partitioned stores
     val cryptoOpts = Maintenance.dataPlaneOptions(root)
     val physicalSchema = Maintenance.schemaAt(root, version).getOrElse(
-      SparkSession.active.read.options(cryptoOpts).parquet(dataPaths: _*).schema)
+      Tables.parquet(SparkSession.active, dataPaths, cryptoOpts).schema)
     Resolved(root, version, dataPaths, dvLines.map(DvLine.path),
       mapping, groupZones, changeFeed, vOpt.isDefined || tOpt.isDefined,
       startingVersion,
@@ -471,7 +472,7 @@ private[graft] object GraftStore {
     val (candidates, _) = zonePrune(store, physFilters)
     if (candidates.isEmpty) return
     val cond = physFilters.map(toColumn).reduceOption(_ && _).getOrElse(lit(true))
-    val hit = spark.read.options(store.cryptoOpts).parquet(candidates: _*)
+    val hit = Tables.parquet(spark, candidates, store.cryptoOpts)
       .withColumn("file_key", DvLine.fileKeyCol)
       .withColumn("row_index", col("_metadata.row_index"))
       .filter(cond)
@@ -482,7 +483,7 @@ private[graft] object GraftStore {
     val fresh =
       if (store.dvPaths.isEmpty) hit
       else hit.join(
-        spark.read.options(store.cryptoOpts).parquet(store.dvPaths: _*)
+        Tables.parquet(spark, store.dvPaths, store.cryptoOpts)
           .select(col("file_key"), col("row_index")),
         Seq("file_key", "row_index"), "left_anti")
     val dvDir = s"${store.root}/dv_${java.util.UUID.randomUUID().toString.take(12)}"
@@ -905,7 +906,7 @@ private[sources] class GraftScan(store: GraftStore.Resolved,
     if (paths.isEmpty) Map.empty
     else {
       import org.apache.spark.sql.functions.col
-      val rows = spark.read.options(store.cryptoOpts).parquet(paths: _*)
+      val rows = Tables.parquet(spark, paths, store.cryptoOpts)
         .select(col("file_key"), col("_metadata.file_path").as("sidecar_file"))
         .distinct().collect()
       GraftScanCounters.driverDvIndexRows.addAndGet(rows.length)

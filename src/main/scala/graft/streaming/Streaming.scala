@@ -27,7 +27,7 @@ object Streaming {
       glob: String = "events.parquet"): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // static pass defines the schema (whatever type ts arrives as)
-    val schema = s.read.option("pathGlobFilter", glob).parquet(d).schema
+    val schema = Tables.parquet(s, Seq(d), Map("pathGlobFilter" -> glob)).schema
     Tables.withEventTime(
       s.readStream.schema(schema)
         .option("pathGlobFilter", glob) // stream only the events file(s)
@@ -77,7 +77,7 @@ object Streaming {
       catch { case _: Exception =>
         Files.copy(src, tmp.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
       }
-      val ev = s.read.parquet(src.toString)
+      val ev = Tables.parquet(s, src.toString)
       val maxNs = Tables.withEventTime(ev)
         .agg(max(col("ts_ns"))).head().getLong(0)
       val hbNs = maxNs + 3L * 3600 * 1000 * 1000 * 1000
@@ -535,7 +535,7 @@ object Streaming {
   private def dedupStream(s: SparkSession, d: String): DataFrame = withStateParts(s, 8) {
     import s.implicits._
     import graft.operators.TextPrep
-    val schema = s.read.option("pathGlobFilter", "documents.parquet").parquet(d).schema
+    val schema = Tables.parquet(s, Seq(d), Map("pathGlobFilter" -> "documents.parquet")).schema
     val docs = s.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet").parquet(d)
       .select($"doc_id",
@@ -563,13 +563,13 @@ object Streaming {
     import graft.operators.TextPrep
     val C = graft.operators.Corpus.ChunkSize
     val S = graft.operators.Corpus.ChunkStride
-    val schema = s.read.option("pathGlobFilter", "documents.parquet").parquet(d).schema
+    val schema = Tables.parquet(s, Seq(d), Map("pathGlobFilter" -> "documents.parquet")).schema
     val docs = s.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet").parquet(d)
       .select($"doc_id",
         graft.functions.GraftFunctions.fingerprint128(TextPrep.norm($"text")).as("fp"))
       .select($"doc_id", $"fp.h0", $"fp.h1").as[Doc]
-    val store = broadcast(s.read.option("pathGlobFilter", "documents.parquet").parquet(d)
+    val store = broadcast(Tables.parquet(s, Seq(d), Map("pathGlobFilter" -> "documents.parquet"))
       .select($"doc_id".as("keep_id"), TextPrep.words($"text").as("words")))
     val chunked = dedupDs(docs)
       .join(store, Seq("keep_id"))
@@ -1190,7 +1190,7 @@ object Streaming {
       val root = Staging.inPlace("ssink_", d, Seq("events"), "v1-parquet-sink",
         onHit = drain)(drain)
       // listed via the _spark_metadata log
-      sinkSummary(s.read.parquet(s"$root/data"))
+      sinkSummary(Tables.parquet(s, s"$root/data"))
     }
 
   /** The readout all three event sinks end in: per event_type, the row
@@ -1362,7 +1362,7 @@ object Streaming {
           Seq(s"$data/newfile2", Maintenance.morDvLine(data, "dv2")))
         drain(root)
       }
-      s.read.parquet(s"$root/out")
+      Tables.parquet(s, s"$root/out")
         .groupBy($"op", $"commit_version",
           date_format(date_trunc("month", $"o_orderdate"), "yyyy-MM").as("month"))
         .agg(count(lit(1)).as("n"), OracleMath.dsum($"o_totalprice").as("sum_price"))
@@ -1447,7 +1447,7 @@ object Streaming {
           .write.format("graft").mode("append").save(root) // -> v4
         drain(root) // the SAME checkpoint continues with only v4's delta
       }
-      s.read.parquet(s"$root/out")
+      Tables.parquet(s, s"$root/out")
         .groupBy($"o_orderpriority")
         .agg(count(lit(1)).as("n"), OracleMath.dsum($"o_totalprice").as("sum_price"))
         .orderBy($"o_orderpriority")
@@ -1544,7 +1544,7 @@ object Streaming {
           "chunk2")
         runOnce(root) // run 2: restart — restores state, heartbeat closes all
       }
-      s.read.parquet(s"$root/data").orderBy($"win_start", $"event_type")
+      Tables.parquet(s, s"$root/data").orderBy($"win_start", $"event_type")
     }
   private val restartExactlyOnceSql =
     s"""SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS win_start,

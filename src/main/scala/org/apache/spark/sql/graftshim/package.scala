@@ -17,4 +17,12 @@ package object graftshim {
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Spark's own errors for a file-source bind that finds no path
+    * (`PATH_NOT_FOUND`) or no data file to take a schema from
+    * (`UNABLE_TO_INFER_SCHEMA`), for binders that skip inference. */
+  def pathNotFound(path: String): Throwable =
+    errors.QueryCompilationErrors.dataPathNotExistError(path)
+  def unableToInferSchema(format: String): Throwable =
+    errors.QueryCompilationErrors.dataSchemaNotSpecifiedError(format)
 }

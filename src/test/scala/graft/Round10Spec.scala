@@ -256,6 +256,26 @@ class Round10Spec extends AnyFunSuite {
       s"encrypt and decrypt through GcmKernel instead of: ${offenders.mkString("; ")}")
   }
 
+  test("parquet reads bind through Tables.parquet (no schema-inference job outside core.scala)") {
+    // `.read` then any option calls then `.parquet(`, over code with the
+    // comments stripped; `.readStream` chains pass their schema already
+    val chain = """\.read\b(?:\s*\.\w+\((?:[^()]|\([^()]*\))*\))*\s*\.parquet\(""".r
+    val comments = """(?s)/\*.*?\*/|//[^\n]*""".r
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
+    val main = walk(new java.io.File("src/main/scala")).filter(_.getName.endsWith(".scala"))
+    assert(main.exists(_.getName == "core.scala"), "core.scala not found under src/main/scala")
+    val offenders = for {
+      f <- main if f.getName != "core.scala"
+      code = comments.replaceAllIn(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"), "")
+      m <- chain.findAllIn(code).toSeq
+      // io_schema_evolution's merged read: every footer, on purpose
+      if !(f.getName == "Maintenance.scala" && m.contains("\"mergeSchema\""))
+    } yield s"${f.getPath}: $m"
+    assert(offenders.isEmpty,
+      s"bind parquet reads with Tables.parquet instead of: ${offenders.mkString("; ")}")
+  }
+
   test("q_hybrid_rrf: exchange budget is fixed") {
     val df = SparkEntry.queries("q_hybrid_rrf")(spark, sf)
     df.count()

@@ -106,4 +106,23 @@ class StagingSpec extends AnyFunSuite {
       Staging.inPlace("nope_", d, Seq("documents"), "v1")(_ => ()))
     Staging.rmTree(new java.io.File(d))
   }
+
+  test("vacuum reaps retired scratch dirs and never an unknown one") {
+    assert(Staging.Retired.forall(r => !Staging.Kinds.exists(k => k.startsWith(r) || r.startsWith(k))),
+      "a retired prefix must not shadow a live kind")
+    val tag = s"spec${System.nanoTime}"
+    val retired = Staging.Retired.map(r => s"${Staging.Base}/$r$tag")
+    // no source record: an unknown dir (the catalog base shares the
+    // root) and a live kind's half-built root must both survive
+    val kept = Seq(s"${Staging.Base}/unknown_$tag", s"${Staging.Base}/pairs_$tag")
+    (retired ++ kept).foreach { r =>
+      new java.io.File(r).mkdirs()
+      Files.write(Paths.get(r, "part"), Array[Byte](1))
+    }
+    Staging.vacuum()
+    retired.foreach(r => assert(gone(r), s"vacuum left the retired dir $r"))
+    kept.foreach(r => assert(!gone(r), s"vacuum reaped $r, which it does not own"))
+    kept.foreach(r => Staging.rmTree(new java.io.File(r)))
+    intercept[IllegalArgumentException](Staging.scratch(s"${Staging.Retired.head}x", "/d"))
+  }
 }
